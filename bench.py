@@ -66,11 +66,12 @@ TIER2 = [
 # queries outside the two fixed tiers, so a silent regression anywhere
 # in the registry surfaces within a bounded number of rounds instead of
 # never. Selection is mechanical from the BENCH_r*.json history in the
-# repo root: never-benched queries first, then oldest last-recorded
-# round — the same stalest-first discipline tools/rotate_sweep.py
-# applies to the correctness sweep. Reported under "tier3" (names vary
-# per round by design, so no cross-round total series; per-query values
-# compare against that query's own last recording).
+# repo root (read through registry.round_records): never-benched queries
+# first, then oldest last-recorded round — the same stalest-first
+# discipline registry.sweep_order applies to the correctness sweep.
+# Reported under "tier3" (names vary per round by design, so no
+# cross-round total series; per-query values compare against that
+# query's own last recording).
 TIER3_CAP = 15
 
 # Declared train-once/apply-many queries (artifacts.py lifecycle): their
@@ -85,30 +86,11 @@ WARM_PATH_QUERIES = ("bpe_encode", "ann_ivfpq_apply")
 
 
 def tier3_names(qs: dict, cap: int = TIER3_CAP, repo: str | None = None) -> list[str]:
-    import re
-
     recorded: dict[str, int] = {}
-    repo = repo or os.path.dirname(os.path.abspath(__file__))
-    for fname in sorted(os.listdir(repo)):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", fname)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(os.path.join(repo, fname)) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        # The driver wraps bench.py's JSON line under "parsed" (with its
-        # own n/rc/cpus envelope); bench.py's own output is flat. Accept
-        # both — without the unwrap the rotation read EMPTY history from
-        # every driver record and degenerated to fixed pool order
-        # (found r13; tier3 now genuinely rotates stalest-first).
-        if isinstance(data.get("parsed"), dict):
-            data = data["parsed"]
+    for rnd, data in registry.round_records("BENCH", repo):
         for key in ("queries", "tier2", "tier3"):
             for q in data.get(key) or {}:
-                recorded[q] = max(recorded.get(q, 0), rnd)
+                recorded[q] = rnd
     fixed = set(HEADLINE) | set(TIER2)
     pool = [n for n in qs if n not in fixed]
     pos = {n: i for i, n in enumerate(pool)}
@@ -134,24 +116,12 @@ def ambient_stats(timings: dict[str, float], repo: str | None = None) -> dict:
     this scale. Threshold 1.5: ~15% above the clean band, ~35% below
     the ambient signature.
     """
-    import re
     import statistics
 
-    repo = repo or os.path.dirname(os.path.abspath(__file__))
     best: dict[str, float] = {}
     rounds = []
-    for fname in sorted(os.listdir(repo)):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", fname)
-        if not m:
-            continue
-        try:
-            with open(os.path.join(repo, fname)) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(data.get("parsed"), dict):
-            data = data["parsed"]  # driver envelope (see tier3_names)
-        rounds.append(int(m.group(1)))
+    for rnd, data in registry.round_records("BENCH", repo):
+        rounds.append(rnd)
         for key in ("queries", "tier2", "tier3"):
             for q, v in (data.get(key) or {}).items():
                 if isinstance(v, (int, float)) and v > 0:
@@ -185,24 +155,8 @@ def stream_best_recorded(repo: str | None = None) -> float | None:
     """Best stream_msgs_per_sec across all BENCH_r*.json — the stream
     figure's own ambient reference (a single number, so the comparator
     is best-ever rather than a median of ratios)."""
-    import re
-
-    repo = repo or os.path.dirname(os.path.abspath(__file__))
     best = None
-    try:
-        entries = sorted(os.listdir(repo))
-    except FileNotFoundError:
-        return None
-    for fname in entries:
-        if not re.fullmatch(r"BENCH_r(\d+)\.json", fname):
-            continue
-        try:
-            with open(os.path.join(repo, fname)) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(data.get("parsed"), dict):
-            data = data["parsed"]
+    for _, data in registry.round_records("BENCH", repo):
         v = data.get("stream_msgs_per_sec")
         if isinstance(v, (int, float)):
             best = v if best is None else max(best, v)

@@ -21,7 +21,10 @@ matches DuckDB bit-for-bit):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import os
+import re
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,245 +55,61 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
     return deco
 
 
-# The driver's per-round correctness sweep caps at 50 queries, taken in
-# registration order (confirmed: CORRECTNESS_r01.json holds exactly the
-# first 50 registered names). This priority list is rotated each round so
-# that (a) queries whose implementation or oracle changed this round and
-# queries new this round land in slots 1-50, then (b) queries whose most
-# recent driver row is oldest. Everything else keeps registration order
-# after the priority block — nothing is dropped from `queries()`, only
-# reordered. Names not yet registered are skipped gracefully.
-#
-# Round-5 window (mechanical output of `python tools/rotate_sweep.py`
-# against the r1–r4 CORRECTNESS history): the 14 queries registered after
-# the r4 window closed (all local-oracle verified in r4, queued at slot
-# 51+ there), then the 36 stalest r3-row queries. After this sweep max
-# driver-row staleness across the registry is 2 rounds, the sustainable
-# bound for 114 queries under a 50-slot cap being ceil(114/50) = 3.
-# tests/test_registry_rotation.py asserts, from the CORRECTNESS_r*.json
-# history, that no query exceeds that bound (computed from the live
-# registry size, not hardcoded) — so rotation debt fails pytest instead
-# of living in the builder's head. In the inter-round state (a new
-# CORRECTNESS file landed but this tuple not yet re-rotated) the gate
-# SKIPS with "rotation pending for r{N+1}" keyed off
-# _SWEEP_ROTATED_FOR_ROUND below, per the r4 verdict. (The driver row is
-# the external evidence cadence; every query is still locally verified
-# EVERY round by the full tools/check.py sweep.)
-#
-# The upcoming driver sweep this rotation targets. When the newest
-# CORRECTNESS_r{N}.json has N >= this value, the window below has been
-# consumed and the rotation gate reports "rotation pending" instead of
-# failing; run `python tools/rotate_sweep.py`, paste, and bump this.
-# r15 window (slots 1-50, refreshed mid-round by the optimization pass:
-# the plan-changed queries in _SWEEP_CHANGED lead); history through r14.
-_SWEEP_ROTATED_FOR_ROUND = 15
+# The driver's per-round correctness sweep checks the first 50 names of
+# `queries()`. `all_specs()` orders the registry so that window rotates
+# by itself: the queries in _SWEEP_CHANGED first (their old driver rows
+# predate a change to their implementation or oracle), then queries the
+# driver never swept, then ascending last CORRECTNESS_r*.json round, with
+# ties in registration order. The order is a pure function of the
+# registry and the recorded history, so it is deterministic for a given
+# checkout. _SWEEP_CHANGED is the one hand input: list a query when its
+# implementation or oracle changes, and reset it to () once the driver
+# has swept it again.
+_SWEEP_CHANGED: tuple[str, ...] = ()
 
-_SWEEP_CHANGED: tuple[str, ...] = (
-    "ann_ivf_topk",
-    "ann_ivfpq_topk",
-    "ann_ivfpq_apply",
-    "equi_depth_histogram",
-    "composite_regional_revenue",
-    "agg_multi",
-    "win_rank_topk_depth",
-    "shared_run_audit",
-    "winnow_fingerprint",
-    "winnow_dedup",
-    "pagerank_docs",
-    "triangle_count",
-    "market_correlation",
-    "anomaly_zscore",
-    "ccnet_buckets",
-    "knn_label_eval",
-    "pairwise_cosine_histogram",
-    "agg_stats",
-    "agg_grouping_sets",
-    "agg_cube",
-    "agg_grouping_id",
-    "agg_weighted_avg",
-    "char_entropy",
-    "ann_lsh_topk",
-    "dedup_components",
-    "dedup_survivorship",
-    "semdedup",
-    "ann_pq_topk",
-    "embed_cosine_dedup",
-    "bigram_logprob",
-    "pmi_collocations",
-    "repetition_battery",
-    "bm25_search",
-    "heavy_hitters",
-    "tfidf_topterms",
-    "bpe_encode",
-    "embedding_drift",
-    "share_of_total",
-)
+# Round records (BENCH_r*.json, CORRECTNESS_r*.json) live at the
+# checkout root, one level above this package.
+_HISTORY_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_SWEEP_PRIORITY: tuple[str, ...] = (
-    "bigram_logprob",  # changed
-    "semdedup",  # changed
-    "ann_pq_topk",  # changed
-    "equi_depth_histogram",  # changed
-    "market_correlation",  # changed
-    "anomaly_zscore",  # changed
-    "ccnet_buckets",  # changed
-    "char_entropy",  # changed
-    "heavy_hitters",  # changed
-    "pmi_collocations",  # changed
-    "share_of_total",  # changed
-    "pagerank_docs",  # changed
-    "triangle_count",  # changed
-    "pairwise_cosine_histogram",  # changed
-    "knn_label_eval",  # changed
-    "repetition_battery",  # changed
-    "embedding_drift",  # changed
-    "dedup_components",  # changed
-    "embed_cosine_dedup",  # changed
-    "ann_ivf_topk",  # changed
-    "composite_regional_revenue",  # changed
-    "win_rank_topk_depth",  # changed
-    "agg_grouping_sets",  # changed
-    "ann_lsh_topk",  # changed
-    "bm25_search",  # changed
-    "tfidf_topterms",  # changed
-    "bpe_encode",  # changed
-    "dedup_survivorship",  # changed
-    "ann_ivfpq_topk",  # changed
-    "ann_ivfpq_apply",  # changed
-    "agg_multi",  # changed
-    "winnow_fingerprint",  # changed
-    "winnow_dedup",  # changed
-    "shared_run_audit",  # changed
-    "agg_stats",  # changed
-    "agg_weighted_avg",  # changed
-    "agg_cube",  # changed
-    "agg_grouping_id",  # changed
-    "redact_pii",  # last r10
-    "unigram_logprob",  # last r10
-    "corpus_filter_funnel",  # last r10
-    "domain_kl_divergence",  # last r10
-    "subword_token_count",  # last r10
-    "length_profile_by_source",  # last r10
-    "udf_scalar_pandas",  # last r10
-    "udtf_explode_custom",  # last r10
-    "table_profile",  # last r11
-    "moments_profile",  # last r11
-    "composite_large_orders",  # last r11
-    "funnel_conversion",  # last r11
-    # ---- slot 51+: next-round queue ----
-    "retention_cohorts",  # last r11
-    "event_heatmap",  # last r11
-    "benford_audit",  # last r11
-    "realized_volatility",  # last r11
-    "max_drawdown",  # last r11
-    "interarrival_stats",  # last r11
-    "hypertable_rollup",  # last r11
-    "roll_spread",  # last r11
-    "order_flow_imbalance",  # last r11
-    "hhi_concentration",  # last r11
-    "cusum_drift",  # last r11
-    "dollar_bars",  # last r11
-    "amihud_illiquidity",  # last r11
-    "kyle_lambda",  # last r11
-    "vpin",  # last r11
-    "ohlc_volatility",  # last r11
-    "autocorr_returns",  # last r11
-    "effective_spread",  # last r11
-    "resample_ffill",  # last r11
-    "ohlc_bars",  # last r11
-    "bpe_merges",  # last r11
-    "dsir_weights",  # last r11
-    "ngram_novelty",  # last r11
-    "delta_dedup",  # last r11
-    "prefix_dedup",  # last r11
-    "compression_ratio",  # last r11
-    "embed_centroid_stats",  # last r11
-    "ann_filtered_topk",  # last r11
-    "zipf_fit",  # last r11
-    "approx_quantile_audit",  # last r11
-    "lang_id_confusion",  # last r11
-    "equi_depth_histogram_approx",  # last r12
-    "referential_integrity_audit",  # last r12
-    "uniqueness_audit",  # last r12
-    "split_leakage_audit",  # last r12
-    "label_balance",  # last r12
-    "winsorize_stats",  # last r12
-    "winsorize_stats_approx",  # last r12
-    "table_diff",  # last r12
-    "table_diff_summary",  # last r12
-    "composite_returned_items",  # last r12
-    "composite_promo_revenue",  # last r12
-    "composite_top_supplier",  # last r12
-    "composite_small_qty_revenue",  # last r12
-    "composite_nation_trade",  # last r12
-    "composite_brand_disjunction",  # last r12
-    "composite_idle_customers",  # last r12
-    "markov_transitions",  # last r12
-    "attribution_last_touch",  # last r12
-    "scd2_intervals",  # last r12
-    "interarrival_stats_approx",  # last r12
-    "twap",  # last r12
-    "gini_concentration",  # last r12
-    "rolling_features",  # last r12
-    "overnight_gap",  # last r12
-    "seq_gap_check",  # last r12
-    "win_lag_lead",  # last r12
-    "win_moving_avg",  # last r12
-    "win_range_frame",  # last r12
-    "win_first_last",  # last r12
-    "session_islands",  # last r12
-    "win_cume_dist",  # last r12
-    "paragraph_dedup",  # last r12
-    "sample_split",  # last r12
-    "bloom_filter_dedup",  # last r12
-    "cross_source_dup",  # last r12
-    "minhash_eval",  # last r12
-    "graph_reachability",  # last r12
-    "dup_cluster_stats",  # last r12
-    "rag_chunk",  # last r12
-    "topk_ngrams",  # last r12
-    "repetition_stats",  # last r12
-    "license_tag",  # last r12
-    "agg_groupby_sum",  # last r13
-    "book_reconstruct",  # last r13
-    "join_inner_hash",  # last r13
-    "join_asof",  # last r13
-    "join_interval",  # last r13
-    "set_union_all",  # last r13
-    "dedup_exact",  # last r13
-    "scan_parquet",  # last r13
-    "win_running_sum",  # last r13
-    "win_ntile",  # last r13
-    "best_bid_ask",  # last r13
-    "dedup_exact_docs",  # last r13
-    "minhash_dedup",  # last r13
-    "simhash_dedup",  # last r13
-    "ngram_jaccard",  # last r13
-    "decontaminate_ngram",  # last r13
-    "stratified_sample",  # last r13
-    "multimodal_meta",  # last r13
-    "multimodal_features",  # last r13
-    "seq_pack",  # last r13
-    "domain_mix",  # last r13
-    "fn_string",  # last r13
-    "fn_date",  # last r13
-    "fn_math",  # last r13
-    "fn_array",  # last r13
-    "fn_map_json",  # last r13
-    "fn_map_ops",  # last r13
-    "fn_bitwise",  # last r13
-    "fn_null_safe_eq",  # last r13
-    "fn_conditional",  # last r13
-    "cosine_topk",  # last r13
-    "embed_norm_stats",  # last r13
-    "text_stats",  # last r13
-    "tokenize_tf",  # last r13
-    "source_vocab_overlap",  # last r13
-    "ngram_coverage_curve",  # last r13
-    "lexical_complexity",  # last r13
-    "typo_pairs",  # last r13
-    "udaf_grouped",  # last r13
-)
+
+def round_records(kind: str, repo: str | None = None) -> Iterator[tuple[int, dict]]:
+    """Yield ``(round, record)`` for each ``{kind}_r<N>.json`` in ``repo``
+    (default: the checkout root), in ascending round order.
+
+    The driver wraps bench.py's JSON line under ``"parsed"``; that
+    envelope is unwrapped, and a record whose ``parsed`` is null (the
+    driver could not parse the line) reads as ``{}``. Unreadable or
+    non-object files are skipped, and a missing directory yields nothing.
+    """
+    repo = repo or _HISTORY_DIR
+    pattern = re.compile(rf"{re.escape(kind)}_r(\d+)\.json")
+    try:
+        names = os.listdir(repo)
+    except OSError:
+        return
+    rounds = sorted((int(m.group(1)), m.group(0)) for m in map(pattern.fullmatch, names) if m)
+    for rnd, fname in rounds:
+        try:
+            with open(os.path.join(repo, fname)) as fh:
+                data = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        if not isinstance(data, dict):
+            continue
+        if "parsed" in data:
+            data = data["parsed"] if isinstance(data["parsed"], dict) else {}
+        yield rnd, data
+
+
+def sweep_order(
+    names: Iterable[str], changed: Iterable[str] = _SWEEP_CHANGED, repo: str | None = None
+) -> list[str]:
+    """``names`` (in registration order) in driver-sweep priority order;
+    see the comment above _SWEEP_CHANGED."""
+    last_swept = {q: rnd for rnd, record in round_records("CORRECTNESS", repo) for q in record}
+    changed = set(changed)
+    # sorted() is stable, so ties keep registration order.
+    return sorted(names, key=lambda n: (n not in changed, last_swept.get(n, -1)))
 
 
 def all_specs() -> dict[str, QuerySpec]:
@@ -323,15 +142,7 @@ def all_specs() -> dict[str, QuerySpec]:
         udfs,
     )
 
-    ordered: dict[str, QuerySpec] = {}
-    for name in _SWEEP_PRIORITY:
-        spec = _REGISTRY.get(name)
-        if spec is not None:
-            ordered[name] = spec
-    for name, spec in _REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = spec
-    return ordered
+    return {name: _REGISTRY[name] for name in sweep_order(_REGISTRY)}
 
 
 def queries() -> dict[str, QueryFn]:

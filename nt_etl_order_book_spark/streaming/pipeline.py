@@ -22,8 +22,6 @@ by market_ticker for parallel consumption.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -60,17 +58,9 @@ def stateful_shuffle_partitions(spark: SparkSession, expected_state_rows: int) -
     Stateful operators pin ``spark.sql.shuffle.partitions`` into the
     checkpoint at first batch, so this must be decided at query start —
     there is no AQE coalescing for state stores (Spark disables AQE in
-    stateful workloads). ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``
-    overrides for deployments that size the store count directly.
+    stateful workloads). A deployment that sizes the store count
+    directly passes ``state_partitions=`` to ``deltas_query`` instead.
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env is not None:
-        val = int(env)
-        if val < 1:
-            raise ValueError(
-                f"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be >= 1, got {val}"
-            )
-        return val
     dp = spark.sparkContext.defaultParallelism
     return max(1, min(dp, -(-int(expected_state_rows) // STATE_ROWS_PER_PARTITION)))
 
@@ -171,8 +161,9 @@ def deltas_query(
     ``stamp_ingest_ts``: as in snapshots_query — wall-clock stamp for
     rows whose source bypassed the durable buffer.
 
-    ``state_partitions`` (dedup runs only) right-sizes the stateful
-    stage: stateful operators take their shuffle-partition count — one
+    ``state_partitions`` right-sizes the stateful stage of a dedup run
+    (it must be >= 1 on every call, and is unused when dedup is off):
+    stateful operators take their shuffle-partition count — one
     state-store instance each — from ``spark.sql.shuffle.partitions``
     at query start (pinned into the checkpoint; AQE is disabled in
     stateful workloads, so nothing coalesces tiny state stores the way
@@ -182,7 +173,14 @@ def deltas_query(
     ``start()`` — the stream captures its conf into a cloned session at
     start, so the session value is restored before this returns
     (verified stable across repeated runs in the r16 probe).
+
+    An ``available_now`` dedup run skips the trailing no-data batch (see
+    the comment in the body). Its rows are unchanged; the watermark
+    eviction that batch would have done is deferred to the next run on
+    the same checkpoint.
     """
+    if state_partitions is not None and state_partitions < 1:
+        raise ValueError(f"state_partitions must be >= 1, got {state_partitions}")
     flat = flatten_deltas(msgs, stamp_ingest_ts=stamp_ingest_ts)
     dedup_armed = bool(dedup_within) and "redis_stream_id" in flat.columns
     if dedup_armed:
@@ -209,8 +207,6 @@ def deltas_query(
     spark = msgs.sparkSession
     pinned: dict[str, tuple[str, str]] = {}  # key -> (query value, session value)
     if dedup_armed and state_partitions is not None:
-        if state_partitions < 1:
-            raise ValueError(f"state_partitions must be >= 1, got {state_partitions}")
         pinned["spark.sql.shuffle.partitions"] = (
             str(state_partitions),
             spark.conf.get("spark.sql.shuffle.partitions"),
@@ -218,7 +214,11 @@ def deltas_query(
     if dedup_armed and available_now:
         # An availableNow run is a drain-and-stop: after the last data
         # batch the engine schedules one no-data batch purely to advance
-        # the watermark and evict state that the stop then discards.
+        # the watermark and evict expired state. Skipping it defers that
+        # eviction rather than discarding it: the expired rows stay in
+        # the checkpointed state store, and a caller that reuses the
+        # checkpoint has them evicted by its next run once that run's
+        # watermark passes them (a discarded checkpoint needs none).
         # dropDuplicatesWithinWatermark emits rows immediately (never
         # holds output for the watermark), so the sink's rows are
         # IDENTICAL without that batch — skipping it removes a full

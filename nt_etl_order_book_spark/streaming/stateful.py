@@ -72,67 +72,6 @@ def detect_seq_gaps(keyed: DataFrame, *, key_col: str = "market_ticker", seq_col
     )
 
 
-def detect_seq_gaps_tws(
-    keyed: DataFrame, *, key_col: str = "market_ticker", seq_col: str = "seq"
-) -> DataFrame:
-    """Same gap detector on the newer transformWithStateInPandas API
-    (Spark 4.x). SURVEY §known-hard #4: the stateful APIs differ across
-    Spark versions, so both are provided and the tests gate on import —
-    deployments pick whichever their runtime has.
-
-    TWS advantages at scale: typed value state, state TTL, and timers —
-    none needed for a single long per key, but the operator shape is the
-    template for richer per-key state (the book ladder, rate limits).
-    """
-    try:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-        import google.protobuf.descriptor  # noqa: F401  (TWS state protocol needs protobuf)
-    except ImportError as exc:  # pragma: no cover - older PySpark / no protobuf
-        raise NotImplementedError(
-            "transformWithStateInPandas requires PySpark >= 4.0 with the "
-            "protobuf package; use detect_seq_gaps (applyInPandasWithState) instead"
-        ) from exc
-
-    class GapProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_seq", "last BIGINT")
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            last = self._last.get()[0] if self._last.exists() else None
-            out: list[tuple] = []
-            # Gather every Arrow chunk before sorting (same as
-            # detect_seq_gaps): a large per-key batch arrives as multiple
-            # chunks, and per-chunk sorting reports spurious gaps when a
-            # later chunk holds lower seqs.
-            seqs: list[int] = []
-            for pdf in rows:
-                seqs.extend(int(s) for s in pdf[seq_col].dropna().astype("int64"))
-            for seq in sorted(seqs):
-                if last is not None and seq - last > 1:
-                    out.append((key[0], int(seq), int(last), int(seq - last)))
-                if last is None or seq > last:
-                    last = int(seq)
-            self._last.update((last,))
-            yield pd.DataFrame(out, columns=["key", "seq", "prev_seq", "gap"])
-
-        def close(self) -> None:
-            pass
-
-    return (
-        keyed.select(key_col, seq_col)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            GapProcessor(),
-            outputStructType=GAP_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
 # --------------------------------------------------------------------------
 # Streaming Misra-Gries heavy hitters: the live twin of the batch
 # heavy_hitters query (functions/sketches.py). Per key, MG_K counters

@@ -375,12 +375,17 @@ def test_gini_matches_mean_absolute_difference(spark_prop, vols):
         g = registry.all_specs()["gini_concentration"].fn(spark, "_").collect()[0]
     finally:
         tsmod.load_table = orig
+    from fractions import Fraction
+
     n = len(vols)
-    mu = sum(vols) / n
-    mad = sum(abs(a - b) for a in vols for b in vols) / (n * n)
-    want = round(mad / (2 * mu), 6)
+    # Gini = mean absolute difference / (2 * mean) = S / (2 n T), exact.
+    # The query rounds its double result to 6 dp, so it sits within half
+    # a unit of the 6th place of the exact value. (Comparing against
+    # Python's round() instead fails on exact ties such as 33/128:
+    # round() goes to even, Spark's ROUND goes half-up.)
+    want = Fraction(sum(abs(a - b) for a in vols for b in vols), 2 * n * sum(vols))
     assert g.n_markets == n
-    assert abs(g.gini - want) <= 1e-6
+    assert abs(Fraction(g.gini) - want) <= Fraction(1, 2 * 10**6) + Fraction(1, 10**12)
 
 
 WORDS = ["aa", "bb", "cc", "dd"]

@@ -1,27 +1,6 @@
-"""Sweep-rotation debt gate.
-
-The driver's per-round correctness sweep caps at the first 50 registered
-queries (see registry._SWEEP_PRIORITY). With N registered queries the
-tightest achievable guarantee is a fresh driver row every
-ceil(N / 50) rounds — the sustainable bound, reached only if every
-round's window is exactly the stalest 50 (the second test). This test
-computes each query's most recent driver-swept round from the
-CORRECTNESS_r*.json history and fails if, under the CURRENT priority
-order, any query would exceed that bound after the upcoming sweep — so
-rotation debt shows up in pytest instead of in the builder's head
-(VERDICT r3, next-round item 3). The driver row is the EXTERNAL
-evidence cadence; every registered query is still locally verified
-every round via the full `tools/check.py` sweep.
-
-Inter-round state (r4 verdict, "What's wrong" item 1): once the driver
-lands CORRECTNESS_r{N}.json for the round this priority was rotated for,
-the window is consumed and these invariants are EXPECTED to be violated
-until `tools/rotate_sweep.py` is re-run and pasted. That is the alarm
-working, not a product bug — so in that state both tests SKIP with an
-explicit "rotation pending for r{N+1}" message (keyed off
-registry._SWEEP_ROTATED_FOR_ROUND) instead of failing, and fail only if
-the rotation marker itself is stale by MORE than one round (i.e. the
-builder ignored the alarm for a full round).
+"""Round-history orderings: the driver-sweep order of ``queries()`` and
+the bench's rotating tier3, both derived from recorded BENCH_r*.json /
+CORRECTNESS_r*.json history through ``registry.round_records``.
 
 No SparkSession needed: registry import only registers query specs.
 """
@@ -29,135 +8,30 @@ No SparkSession needed: registry import only registers query specs.
 from __future__ import annotations
 
 import json
-import re
-from pathlib import Path
 
-import pytest
-
-from nt_etl_order_book_spark.registry import (
-    _SWEEP_CHANGED,
-    _SWEEP_PRIORITY,
-    _SWEEP_ROTATED_FOR_ROUND,
-    all_specs,
-)
-
-REPO = Path(__file__).resolve().parent.parent
-SWEEP_CAP = 50
+import bench
+from nt_etl_order_book_spark import registry
 
 
-def _skip_if_rotation_pending(latest: int) -> None:
-    """Self-describing inter-round state: the sweep this priority targeted
-    has already landed. One pending round is the normal alarm window;
-    more than one means the alarm was ignored — fail loudly then."""
-    if latest >= _SWEEP_ROTATED_FOR_ROUND + 1:
-        pytest.fail(
-            f"sweep rotation ignored: priority targets r{_SWEEP_ROTATED_FOR_ROUND} "
-            f"but CORRECTNESS_r{latest:02d}.json exists — rotation is "
-            f"{latest - _SWEEP_ROTATED_FOR_ROUND + 1} rounds overdue; run "
-            "`python tools/rotate_sweep.py`, paste into registry._SWEEP_PRIORITY, "
-            "and bump _SWEEP_ROTATED_FOR_ROUND"
-        )
-    if latest >= _SWEEP_ROTATED_FOR_ROUND:
-        pytest.skip(
-            f"rotation pending for r{latest + 1}: CORRECTNESS_r{latest:02d}.json "
-            f"landed for the r{_SWEEP_ROTATED_FOR_ROUND} window this priority "
-            "targets; run `python tools/rotate_sweep.py` at round start "
-            "(alarm armed, not rotation debt)"
-        )
-
-
-def _driver_rows() -> tuple[dict[str, int], int]:
-    """Map query name -> latest round with a driver row, plus latest round seen."""
-    last: dict[str, int] = {}
-    latest = 0
-    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        latest = max(latest, rnd)
-        for name in json.loads(path.read_text()):
-            last[name] = max(last.get(name, 0), rnd)
-    return last, latest
-
-
-def test_no_query_exceeds_sustainable_sweep_staleness():
-    last, latest = _driver_rows()
-    assert latest >= 1, "no CORRECTNESS_r*.json history found"
-    _skip_if_rotation_pending(latest)
-    upcoming = latest + 1
-    specs = all_specs()
-    window = set(list(specs)[:SWEEP_CAP])
-    # Sustainable bound: with N queries and a 50-slot sweep, the stalest
-    # query is re-swept every ceil(N/50) rounds under perfect rotation.
-    allowed = -(-len(specs) // SWEEP_CAP)
-
-    # Documented policy exception (rotate_sweep.py changed-query args):
-    # promoting _SWEEP_CHANGED semantic changes into the window can push
-    # an equal number of stalest queries one round past the bound — legal
-    # ONLY if each displaced query sits at the head of the slot-51+ queue
-    # (so it is mechanically first in the NEXT window, debt repaid in one
-    # round) and the overshoot is exactly one round.
-    queue_head = set(_SWEEP_PRIORITY[SWEEP_CAP : SWEEP_CAP + len(_SWEEP_CHANGED)])
-
-    violations: list[str] = []
-    for name in specs:
-        if name in window:
-            continue  # gets a fresh row in the upcoming sweep
-        prev = last.get(name)
-        if prev is None:
-            # Never driver-swept and not in the upcoming window: must at
-            # least be explicitly queued in _SWEEP_PRIORITY so the next
-            # rotation is mechanical, not remembered.
-            if name not in _SWEEP_PRIORITY:
-                violations.append(f"{name}: never swept and not queued in _SWEEP_PRIORITY")
-            continue
-        staleness = upcoming - prev
-        if staleness > allowed:
-            if staleness == allowed + 1 and name in queue_head:
-                continue  # bounded displacement by _SWEEP_CHANGED, queued next
-            violations.append(
-                f"{name}: last driver row r{prev}, would be {staleness} rounds stale "
-                f"after r{upcoming} (sustainable bound {allowed})"
-            )
-        elif staleness == allowed and name not in _SWEEP_PRIORITY:
-            violations.append(
-                f"{name}: hits the {allowed}-round staleness bound after r{upcoming} "
-                "and is not queued in _SWEEP_PRIORITY"
-            )
-    assert not violations, "sweep rotation debt:\n" + "\n".join(violations)
-
-
-def test_window_is_exactly_the_stalest_fifty():
-    """The first SWEEP_CAP queries must be precisely the 50 with the
-    oldest (or missing) driver rows — the rotation the r3 verdict
-    prescribed. Queries ADDED mid-round are the policy exception: they
-    are local-oracle verified on registration and explicitly queued past
-    slot 50 for the NEXT round's window (registry comment), so a
-    never-swept query outside the window is legal iff it sits in
-    _SWEEP_PRIORITY (the first test enforces that). _SWEEP_CHANGED is
-    the second policy exception: a query whose semantics (impl + oracle)
-    changed this round MUST lead the window regardless of how fresh its
-    old-semantics row is (the old row no longer evidences the current
-    code) — those names are excluded from the stalest-fifty comparison,
-    and the first test bounds the displacement they cause. If a future
-    round legitimately changes the windowing policy, update this test
-    alongside _SWEEP_PRIORITY."""
-    last, latest = _driver_rows()
-    _skip_if_rotation_pending(latest)
-    names = list(all_specs())
-    window = names[:SWEEP_CAP]
-    # The window must cover every PREVIOUSLY-SWEPT query at least as
-    # stale as the freshest in-window query (never-swept rest queries
-    # are the queued-for-next-round additions handled above; changed
-    # queries carry rows for superseded semantics, so their recency is
-    # meaningless here).
-    worst_in_rest = min((last[n] for n in names[SWEEP_CAP:] if n in last), default=99)
-    best_in_window = max(last.get(n, 0) for n in window if n not in _SWEEP_CHANGED)
-    assert best_in_window <= worst_in_rest, (
-        f"window contains a query with row r{best_in_window} while a staler "
-        f"query (r{worst_in_rest}) sits outside it"
-    )
+def test_sweep_order_from_synthetic_history(tmp_path):
+    # Changed queries lead (their old rows predate the change), then
+    # never-swept queries, then stalest last round first; ties keep
+    # registration order. The driver sweeps the first 50 of this order.
+    names = [f"q{i}" for i in range(7)]
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({"q0": {}, "q1": {}, "q5": {}}))
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"q1": {}, "q2": {}, "q6": {}}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps({"q5": {}}))
+    order = registry.sweep_order(names, changed=("q6", "q2"), repo=str(tmp_path))
+    # changed q2/q6 first (registration order among themselves, both r2);
+    # never-swept q3, q4; then q0 (r1), q1 (r2), q5 (r10: round 10 sorts
+    # after round 2 numerically, not by file name)
+    assert order == ["q2", "q6", "q3", "q4", "q0", "q1", "q5"]
+    # no history at all: registration order, changed first
+    assert registry.sweep_order(names, changed=("q4",), repo=str(tmp_path / "none")) == [
+        "q4", "q0", "q1", "q2", "q3", "q5", "q6",
+    ]
+    # the one hand input must name registered queries
+    assert set(registry._SWEEP_CHANGED) <= set(registry.all_specs())
 
 
 def test_bench_tier3_rotation_is_stalest_first(tmp_path):
@@ -165,10 +39,6 @@ def test_bench_tier3_rotation_is_stalest_first(tmp_path):
     # benched queries lead, then oldest last-recorded round; fixed-tier
     # (HEADLINE/TIER2) queries never occupy rotating slots; and a query
     # recorded under ANY tier key counts as benched.
-    import json
-
-    import bench
-
     qs = {f"q{i}": None for i in range(8)}
     qs.update({bench.HEADLINE[0]: None, bench.TIER2[0]: None})
     (tmp_path / "BENCH_r01.json").write_text(
@@ -177,6 +47,8 @@ def test_bench_tier3_rotation_is_stalest_first(tmp_path):
     (tmp_path / "BENCH_r02.json").write_text(
         json.dumps({"queries": {}, "tier3": {"q2": 1.0, "q0": 1.0}})
     )
+    # an unreadable record is skipped, not fatal
+    (tmp_path / "BENCH_r03.json").write_text('{"queries": {"q3": 1.0')
     sel = bench.tier3_names(qs, cap=5, repo=str(tmp_path))
     # never-benched q3..q7 lead in pool order; cap trims to 5
     assert sel == ["q3", "q4", "q5", "q6", "q7"]
@@ -184,6 +56,9 @@ def test_bench_tier3_rotation_is_stalest_first(tmp_path):
     # then staleness: q1 (r1) before q0/q2 (r2); fixed tiers excluded
     assert sel_all == ["q3", "q4", "q5", "q6", "q7", "q1", "q0", "q2"]
     assert bench.HEADLINE[0] not in sel_all and bench.TIER2[0] not in sel_all
+    # a missing history directory reads as "nothing benched yet"
+    missing = bench.tier3_names(qs, cap=3, repo=str(tmp_path / "missing"))
+    assert missing == ["q0", "q1", "q2"]
 
 
 def test_bench_tier3_reads_driver_parsed_envelope(tmp_path):
@@ -191,27 +66,25 @@ def test_bench_tier3_reads_driver_parsed_envelope(tmp_path):
     # n/rc/cpus envelope; the rotation must read THAT history too —
     # before r13 it read {} from every driver record and the "rotation"
     # was a fixed pool-order prefix.
-    import json
-
-    import bench
-
     qs = {f"q{i}": None for i in range(4)}
     (tmp_path / "BENCH_r01.json").write_text(
         json.dumps({"n": 1, "rc": 0, "parsed": {"queries": {"q0": 1.0}, "tier3": {"q1": 2.0}}})
     )
+    # BENCH_r14's shape: the driver could not parse bench.py's final
+    # line, so the round carries no query history
+    (tmp_path / "BENCH_r02.json").write_text(
+        json.dumps({"n": 1, "rc": 0, "tail": '{"queries": {"q2"', "parsed": None})
+    )
     sel = bench.tier3_names(qs, cap=4, repo=str(tmp_path))
     # q2/q3 never benched → lead; q0/q1 recorded in r1 → trail
     assert sel == ["q2", "q3", "q0", "q1"]
+    assert [rnd for rnd, _ in registry.round_records("BENCH", str(tmp_path))] == [1, 2]
 
 
 def test_bench_ambient_discriminator(tmp_path):
     # r12 verdict item 2: a uniform per-query shift vs the cleanest
     # recorded values flags ambient_suspect; a clean recording (and a
     # single-query regression) does not.
-    import json
-
-    import bench
-
     hist = {"qa": 1.0, "qb": 2.0, "qc": 3.0, "qd": 0.5, "qe": 4.0}
     (tmp_path / "BENCH_r01.json").write_text(json.dumps({"parsed": {"queries": hist}}))
     (tmp_path / "BENCH_r02.json").write_text(

@@ -372,7 +372,7 @@ def test_idempotent_sink_watermark_horizon(spark, tmp_path):
     assert counts == {"old-1": 2, "new-1": 1, "new-2": 1}
 
 
-def test_stateful_shuffle_partitions_sizing(spark, monkeypatch):
+def test_stateful_shuffle_partitions_sizing(spark):
     from nt_etl_order_book_spark.streaming.pipeline import (
         STATE_ROWS_PER_PARTITION,
         stateful_shuffle_partitions,
@@ -388,12 +388,6 @@ def test_stateful_shuffle_partitions_sizing(spark, monkeypatch):
     # saturates at defaultParallelism — a production-sized state keeps
     # every core, i.e. the session default (scale-safety of the rule)
     assert stateful_shuffle_partitions(spark, 10_000_000) == dp
-    # env override wins; invalid values fail loudly
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "6")
-    assert stateful_shuffle_partitions(spark, 10_000_000) == 6
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "0")
-    with pytest.raises(ValueError):
-        stateful_shuffle_partitions(spark, 1)
 
 
 def test_deltas_query_state_partitions_pinned_and_restored(spark, msg_dir, tmp_path):
@@ -426,10 +420,16 @@ def test_deltas_query_state_partitions_pinned_and_restored(spark, msg_dir, tmp_p
     got = sorted(map(tuple, spark.read.parquet(str(tmp_path / "sp_out")).collect()))
     ref = sorted(map(tuple, spark.read.parquet(str(tmp_path / "ref_out")).collect()))
     assert got == ref
-    with pytest.raises(ValueError):
-        deltas_query(
-            msgs, str(tmp_path / "bad_out"), str(tmp_path / "bad_cp"), state_partitions=0
-        )
+    # a bad count raises whether or not dedup is armed
+    for dedup_within in ("10 minutes", None):
+        with pytest.raises(ValueError, match="state_partitions"):
+            deltas_query(
+                msgs,
+                str(tmp_path / "bad_out"),
+                str(tmp_path / "bad_cp"),
+                dedup_within=dedup_within,
+                state_partitions=0,
+            )
 
 
 # The 0-row bound below is ARMED ON PURPOSE to prove the alarm fires;
@@ -511,22 +511,16 @@ def test_stateful_seq_gap_stream(spark, tmp_path):
     assert [(g.key, g.seq, g.prev_seq, g.gap) for g in got] == [("KXM-A", 7, 3, 4)]
 
 
-@pytest.mark.parametrize("variant", ["applyInPandasWithState", "transformWithState"])
-def test_stateful_ops_survive_multi_chunk_batches(spark, tmp_path, variant):
+def test_stateful_ops_survive_multi_chunk_batches(spark, tmp_path):
     # A key's micro-batch arrives as MULTIPLE pandas chunks when it
     # exceeds arrow.maxRecordsPerBatch; per-chunk sorting would emit
     # spurious gaps / wipe deltas. Force 2-row chunks and shuffle input.
-    # Covers BOTH stateful APIs: the TWS variant had this exact bug
-    # (chunks sorted independently) while detect_seq_gaps was fixed.
-    from nt_etl_order_book_spark.streaming.stateful import (
-        detect_seq_gaps,
-        detect_seq_gaps_tws,
-    )
+    from nt_etl_order_book_spark.streaming.stateful import detect_seq_gaps
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     try:
-        p = tmp_path / f"chunky_{variant[:3]}"
+        p = tmp_path / "chunky"
         p.mkdir()
         seqs = [9, 1, 8, 2, 7, 3, 12, 4, 6, 5]  # shuffled 1..9 + 12 (gap 9→12)
         msgs = []
@@ -537,86 +531,20 @@ def test_stateful_ops_survive_multi_chunk_batches(spark, tmp_path, variant):
             msgs.append(json.dumps(m))
         (p / "b0.json").write_text("\n".join(msgs))
         stream = read_json_stream(spark, str(p))
-        detector = detect_seq_gaps if variant == "applyInPandasWithState" else detect_seq_gaps_tws
-        try:
-            gaps = detector(stream, key_col="market_ticker", seq_col="seq")
-        except NotImplementedError:
-            pytest.skip("TWS API unavailable (no protobuf)")
+        gaps = detect_seq_gaps(stream, key_col="market_ticker", seq_col="seq")
         q = (
             gaps.writeStream.format("memory")
-            .queryName(f"chunk_gaps_{variant[:3]}")
+            .queryName("chunk_gaps")
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination(60)
-        got = spark.sql(f"select * from chunk_gaps_{variant[:3]}").collect()
+        got = spark.sql("select * from chunk_gaps").collect()
         # only the true 9→12 gap; per-chunk sorting would report extras
         assert [(g.seq, g.prev_seq, g.gap) for g in got] == [(12, 9, 3)]
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
-def test_tws_gate_tracks_dependency_presence(spark):
-    # CI-style activation check: the NotImplementedError gate on
-    # detect_seq_gaps_tws must open exactly when its dependencies exist.
-    # If protobuf ever lands in the image, this test forces the gated
-    # path (and the TWS parametrizations above) to actually run.
-    import importlib.util
-
-    from nt_etl_order_book_spark.streaming.stateful import detect_seq_gaps_tws
-
-    try:
-        # find_spec raises (not returns None) when the parent package
-        # "google" itself is absent
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    has_tws_api = importlib.util.find_spec("pyspark.sql.streaming.stateful_processor") is not None
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-        .selectExpr("CAST(value AS STRING) AS market_ticker", "value AS seq")
-    )
-    if has_protobuf and has_tws_api:
-        detect_seq_gaps_tws(stream)  # must not raise — gate is open
-    else:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            detect_seq_gaps_tws(stream)
-
-
-def test_stateful_seq_gap_tws_variant(spark, tmp_path):
-    # Same detector on transformWithStateInPandas (Spark 4.x API);
-    # skipped automatically on runtimes without it.
-    try:
-        from nt_etl_order_book_spark.streaming.stateful import detect_seq_gaps_tws
-    except ImportError:
-        pytest.skip("TWS API unavailable")
-
-    p = tmp_path / "seqmsgs2"
-    p.mkdir()
-    msgs = []
-    for seq in [10, 11, 15]:  # gap 11→15
-        m = dict(DELTA)
-        m["seq"] = seq
-        m["redis_stream_id"] = f"18000-{seq}"
-        msgs.append(json.dumps(m))
-    (p / "b0.json").write_text("\n".join(msgs))
-
-    stream = read_json_stream(spark, str(p))
-    try:
-        gaps = detect_seq_gaps_tws(stream, key_col="market_ticker", seq_col="seq")
-    except NotImplementedError:
-        pytest.skip("TWS API unavailable")
-    q = (
-        gaps.writeStream.format("memory")
-        .queryName("gaps_tws_tbl")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = spark.sql("select * from gaps_tws_tbl").collect()
-    assert [(g.key, g.seq, g.prev_seq, g.gap) for g in got] == [("KXM-A", 15, 11, 4)]
 
 
 def test_transactional_sink_merge_spec_mapping(spark):
