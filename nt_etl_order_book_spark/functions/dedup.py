@@ -95,9 +95,8 @@ def shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Dat
     shingles, ~3e-5 at sf0.1's ~3M — so pair/size counts match the
     string-shingle oracle exactly in any run that matters. At extreme
     corpus scale (D ~ 1e12) collisions become real but perturb a
-    vanishing fraction of pair counts; a deployment that needs
-    bit-exact truth at that scale should swap :func:`shingles` (string
-    grain) back in and pay the width.
+    vanishing fraction of pair counts; the pair statistics accept that
+    bound rather than keep a second, string-grain index.
     """
     toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     m = F.lit(SHINGLE_HASH_MOD)
@@ -155,9 +154,7 @@ def rolling_gram_expr(th: Column, n: int) -> Column:
     return F.transform(F.sequence(F.lit(0), F.size(th) - n), gram_at)
 
 
-def shingle_pair_stats(
-    docs: DataFrame, *, n: int = 3, cap: int = MAX_SHINGLE_DF, exact_strings: bool = False
-) -> DataFrame:
+def shingle_pair_stats(docs: DataFrame, *, n: int = 3, cap: int = MAX_SHINGLE_DF) -> DataFrame:
     """(a, b, inter, sz_a, sz_b) for every doc pair sharing a surviving shingle.
 
     One materialized pass over the inverted index instead of three: the
@@ -178,12 +175,8 @@ def shingle_pair_stats(
     not gram strings: nothing downstream reads the shingle value, only
     compares and counts it, so the narrow identity halves-plus the
     exchange width and skips the per-gram string allocation entirely
-    (r8: truth-side build 5.6 s → measured below in PERF.md).
-    ``exact_strings=True`` swaps the string-shingle index
-    (:func:`shingles`) back in for runs that need bit-exact truth with
-    zero collision odds (the ~D²/2⁵⁸ birthday bound on the hashed
-    identity) at the cost of wide-string shuffles — the knob the
-    hashed default's exactness note points at.
+    (r8: truth-side build 5.6 s → measured below in PERF.md). The
+    collision bound is documented in :func:`shingle_hashes`.
 
     Size lookups join WITHOUT a broadcast hint (r9): `sizes` is
     doc-grain — one row per surviving doc — so a forced broadcast is a
@@ -194,10 +187,7 @@ def shingle_pair_stats(
     """
     from nt_etl_order_book_spark.session import checkpoint_frame
 
-    if exact_strings:
-        sh = shingles(docs, "doc_id", "text", n=n)
-    else:
-        sh = shingle_hashes(docs, "doc_id", "text", n=n)
+    sh = shingle_hashes(docs, "doc_id", "text", n=n)
     w = Window.partitionBy("shingle")
     capped = checkpoint_frame(
         sh.withColumn("_df", F.count(F.lit(1)).over(w))

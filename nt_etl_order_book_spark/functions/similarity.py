@@ -92,8 +92,8 @@ def topk_per_query(scored: DataFrame, k: int = TOP_K, *, pruned: bool = False) -
         return scored.withColumn("rn", F.row_number().over(w2)).filter(F.col("rn") <= k)
     clash = {"_tk_salt", "_tk_rn1"}.intersection(scored.columns)
     if clash:
-        # Mirrors the salted_join guard: silently overwriting (then
-        # dropping) a caller column of the same name corrupts the result.
+        # Silently overwriting (then dropping) a caller column of the
+        # same name would corrupt the result.
         raise ValueError(f"topk_per_query: input already has reserved column(s) {sorted(clash)}")
     salted = scored.withColumn("_tk_salt", F.pmod(F.col("vec_id"), F.lit(TOPK_SALTS)))
     w1 = Window.partitionBy("qid", "_tk_salt").orderBy(*order)
@@ -786,14 +786,10 @@ def q_embed_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("vb"), F.col("nrm").alias("nb"),
     )
     cos = dot(F.col("va"), F.col("vb")) / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-    # r15 optimization round, examined and left as the plain label join:
-    # salting it via operators/skew.salted_join (b side replicated 16×)
-    # was measured WORSE at sf0.1 (1.76 → 2.06 s interleaved) — the
-    # replication exchange outweighs the extra parallelism while blocks
-    # stay under MAX_BLOCK. A deployment whose label blocks approach the
-    # cap (quadratic pair mass per reducer) should switch to
-    # salted_join(a, b, "label"); it is row-identical by the pinned
-    # skew-join contract.
+    # A plain label join: salting it (b side replicated 16×) was measured
+    # WORSE at sf0.1 (1.76 → 2.06 s interleaved) — the replication
+    # exchange outweighs the extra parallelism while blocks stay under
+    # MAX_BLOCK.
     return (
         a.join(b, "label")
         .filter(F.col("a") < F.col("b"))

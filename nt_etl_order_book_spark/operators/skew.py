@@ -90,41 +90,3 @@ def _register_query() -> None:
 
 _register_query()
 
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    *,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-proof shuffle join: replicate the SMALL side ``n_salts``
-    times (one copy per salt) and scatter each fact row to one salt, so
-    a hot join key spreads over ``n_salts`` reducers instead of
-    concentrating one.
-
-    This is the manual fix for the case AQE's skew-join splitting can't
-    reach (e.g. a skewed key feeding a downstream stage that must keep
-    the join's partitioning, or an engine/config where AQE is off) and
-    the dim side is too big to broadcast outright but cheap to
-    replicate n_salts times. The fact salt is ``xxhash64`` of the whole
-    row — deterministic under retries (no rand()), uniform enough to
-    spread a hot key. Results are row-identical to the plain join
-    (tests assert equality) for inner/left joins; right/full would
-    multiply unmatched dim rows across salts and are rejected.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    # The working column would silently shadow (and then drop) a caller
-    # column of the same name — corrupting data instead of failing.
-    for side, df in (("fact", fact), ("dim", dim)):
-        if "_salt" in df.columns:
-            raise ValueError(f"salted_join: {side} side already has a '_salt' column")
-    salt_values = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    dim_rep = dim.withColumn("_salt", salt_values)
-    fact_s = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(n_salts))
-    )
-    out = fact_s.join(dim_rep, [key, "_salt"], how)
-    return out.drop("_salt")

@@ -15,6 +15,24 @@ from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# Runtime-settable SQL confs: get_spark builds its session with them and
+# tune_session applies them to a session built elsewhere.
+SESSION_CONFS = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    # Respect the advisory partition byte size when coalescing instead
+    # of padding partition count up to defaultParallelism: the many
+    # KB-sized internal shuffles (codebook training, blocklists, probe
+    # frames) otherwise launch cpu-count tasks each, pure dispatch
+    # overhead here and on a 1000-executor cluster alike. Spark's own
+    # tuning guide recommends false; a small advisory size keeps
+    # genuinely large shuffles parallel.
+    ("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"),
+    ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+)
+
 
 def get_spark(app_name: str = "nt-etl-order-book-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -23,19 +41,6 @@ def get_spark(app_name: str = "nt-etl-order-book-spark", *, shuffle_partitions: 
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Respect the advisory partition byte size when coalescing instead
-        # of padding partition count up to defaultParallelism: the many
-        # KB-sized internal shuffles (codebook training, blocklists,
-        # probe frames) otherwise launch cpu-count tasks each, pure
-        # dispatch overhead here and on a 1000-executor cluster alike.
-        # Spark's own tuning guide recommends false; a small advisory
-        # size keeps genuinely large shuffles parallel.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # GC reliable checkpoint files once their RDDs go out of scope:
@@ -55,6 +60,8 @@ def get_spark(app_name: str = "nt-etl-order-book-spark", *, shuffle_partitions: 
             else "false",
         )
     )
+    for key, value in SESSION_CONFS:
+        builder = builder.config(key, value)
     return builder.getOrCreate()
 
 
@@ -105,69 +112,43 @@ def checkpoint_frame(df: DataFrame, *, eager: bool = True) -> DataFrame:
 
 
 def _scan_split_estimate(df: DataFrame) -> int | None:
-    """Estimated scan-task count for a (narrow pipeline over a) file
-    source, from file metadata alone — Spark's own split-packing
-    arithmetic (FilePartition.maxSplitBytes: each file charged
-    openCostInBytes, split size min(maxPartitionBytes,
-    max(openCost, total/defaultParallelism))) without converting the
-    plan to an RDD. None when the frame isn't file-backed (constructed
-    frames, RDD scans) or the files aren't locally statable — callers
-    fall back to the materialized-partition probe."""
-    try:
-        files = df.inputFiles()
-    except Exception:
+    """Scan-task count Spark would plan for ``df``, from its source's
+    already-listed FileIndex: FilePartition.maxSplitBytes packing, each
+    file charged openCostInBytes, split size min(maxPartitionBytes,
+    max(openCost, padded bytes / defaultParallelism)). None unless the
+    optimized plan is Project/Filter nodes over exactly one file
+    relation."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    while plan.nodeName() in ("Project", "Filter"):
+        plan = plan.child()
+    relation = plan.relation() if plan.nodeName() == "LogicalRelation" else None
+    if relation is None or relation.getClass().getSimpleName() != "HadoopFsRelation":
         return None
-    if not files:
-        return None
-    from urllib.parse import urlparse
-
-    total = 0
-    for f in files:
-        p = urlparse(f).path or f
-        try:
-            total += os.stat(p).st_size
-        except OSError:
-            return None
-    spark = df.sparkSession
-    try:
-        utils = spark.sparkContext._jvm.org.apache.spark.util.Utils
-        max_pb = utils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        open_cost = utils.byteStringAsBytes(spark.conf.get("spark.sql.files.openCostInBytes"))
-    except Exception:
-        max_pb, open_cost = 128 * 1024 * 1024, 4 * 1024 * 1024
-    dp = spark.sparkContext.defaultParallelism
-    padded = total + open_cost * len(files)
+    index = relation.location()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    max_pb, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
+    dp = df.sparkSession.sparkContext.defaultParallelism
+    padded = index.sizeInBytes() + open_cost * len(index.inputFiles())
     max_split = max(1, min(max_pb, max(open_cost, padded // dp)))
     return max(1, -(-padded // max_split))
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Exchange narrow rows across the workers before CPU-bound per-row
-    work when the scan's own split count can't feed every core.
+    """Repartition ``df`` to defaultParallelism by ``cols`` when it is
+    too narrow to feed every core, so CPU-bound per-row work on top of a
+    single-split input does not run on one core.
 
-    Single-file/single-row-group inputs (the sandbox fixtures) scan as
-    ONE task, so a narrow CPU pipeline on top (HOF folds, dot products,
-    heavy aggregation) runs on one core of the whole box — the same
-    single-split starvation minhash_signature_col repartitions away
-    (guide §2.5 "input skew": one unsplittable input). Conditional, not
-    unconditional: when the source already yields at least
-    defaultParallelism splits (any real deployment — maxPartitionBytes
-    splits large inputs into many tasks), this is a NO-OP and adds no
-    exchange, so the at-scale plan shape is unchanged. Callers should
-    project to the needed columns first so the conditional exchange
-    stays narrow.
+    Contract: on a frame that is already at least defaultParallelism
+    wide this is a strict no-op (returns ``df`` itself, adds no
+    exchange), which keeps every call site invisible in at-scale plans.
+    Callers project to the needed columns first so the exchange, when it
+    fires, stays narrow.
 
-    The decision reads the scan's FILE METADATA (r16, VERDICT r15 item
-    5): ``df.rdd`` forced full analysis + physical planning of the
-    frame per call site just to count partitions, and the materialized
-    count also under-reports a many-small-files source that Spark would
-    happily run wide (files pack by maxPartitionBytes/openCost, so the
-    byte estimate is what the scan ACTUALLY keys on). Non-file frames
-    (constructed test frames, RDD-backed inputs) keep the
-    materialized-partition probe as the fallback. Failure mode either
-    way is perf-only: an over-estimate skips the repartition and the
-    pipeline runs at the scan's real width; an under-estimate adds one
-    narrow exchange that at-scale inputs never trigger."""
+    Decision: the width is the file-split estimate above when the
+    optimized plan is a narrow pipeline over one file relation, and the
+    frame's materialized partition count for any other plan
+    (repartitioned, coalesced, joined, aggregated, unioned or non-file
+    frames)."""
     sc = df.sparkSession.sparkContext
     est = _scan_split_estimate(df)
     if est is None:
@@ -188,12 +169,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """
     if getattr(spark, "_ntspark_tuned", False):
         return spark  # per-session memo: the harness calls this per query
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    for key, value in SESSION_CONFS:
+        spark.conf.set(key, value)
     _ship_package(spark)
     spark._ntspark_tuned = True
     return spark

@@ -172,7 +172,9 @@ def deltas_query(
     the session default untouched. The conf is set only around
     ``start()`` — the stream captures its conf into a cloned session at
     start, so the session value is restored before this returns
-    (verified stable across repeated runs in the r16 probe).
+    (verified stable across repeated runs in the r16 probe). Because
+    the pin briefly sets the shared session conf, streaming queries on
+    one session must be started from one thread.
 
     An ``available_now`` dedup run skips the trailing no-data batch (see
     the comment in the body). Its rows are unchanged; the watermark

@@ -441,14 +441,6 @@ def test_shingle_pair_stats_matches_bruteforce(spark_prop, texts):
         assert got == {}
         return
     assert got == want
-    # The exact_strings escape hatch (bit-exact string shingles, zero
-    # collision odds) must agree with both the hashed default and the
-    # oracle on every generated corpus.
-    got_exact = {
-        (r.a, r.b): (r.inter, r.sz_a, r.sz_b)
-        for r in shingle_pair_stats(docs, cap=CAP, exact_strings=True).collect()
-    }
-    assert got_exact == want
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 @given(texts=doc_texts)

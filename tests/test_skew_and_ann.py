@@ -774,33 +774,6 @@ def test_skew_timeseries_family_bounded_on_hot_market(spark, hot_market_dir):
     assert wall < 120, f"time-series family took {wall:.0f}s on the hot-market corpus"
 
 
-def test_salted_join_equals_plain_join_on_hot_key(spark):
-    import pyspark.sql.functions as F
-
-    from nt_etl_order_book_spark.operators.skew import salted_join
-
-    # 90% of fact rows hit key 0
-    fact = spark.range(5000).select(
-        F.when(F.col("id") % 10 != 0, F.lit(0)).otherwise(F.col("id") % 7).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    dim = spark.createDataFrame([(i, f"d{i}") for i in range(7)], "k long, label string")
-    plain = fact.join(dim, "k").select("k", "payload", "label")
-    salted = salted_join(fact, dim, "k").select("k", "payload", "label")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    # left join keeps unmatched fact rows exactly once
-    fact2 = fact.unionAll(spark.createDataFrame([(99, -1)], "k long, payload long"))
-    plain_l = fact2.join(dim, "k", "left").select("k", "payload", "label")
-    salted_l = salted_join(fact2, dim, "k", how="left").select("k", "payload", "label")
-    assert sorted(map(tuple, plain_l.collect()), key=str) == sorted(
-        map(tuple, salted_l.collect()), key=str
-    )
-    import pytest
-
-    with pytest.raises(ValueError):
-        salted_join(fact, dim, "k", how="full")
-
-
 def test_knn_label_eval_separable_corpus_is_perfect(spark):
     # Two well-separated label clusters: every held-out query's
     # neighbors share its label -> accuracy exactly 1.0.
@@ -848,10 +821,10 @@ def test_embedding_drift_detects_planted_rotation(spark):
 
 
 def test_topk_per_query_guard_and_pruned_parity(spark):
-    # Reserved-column guard (mirrors salted_join's): feeding a frame that
-    # already carries _tk_salt / _tk_rn1 must raise, not silently
-    # overwrite-and-drop. And the pruned=True single-window path must
-    # return exactly the two-phase result on the same input.
+    # Reserved-column guard: feeding a frame that already carries
+    # _tk_salt / _tk_rn1 must raise, not silently overwrite-and-drop.
+    # And the pruned=True single-window path must return exactly the
+    # two-phase result on the same input.
     import pytest
     from pyspark.sql import functions as F
 
