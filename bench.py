@@ -18,6 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nt_etl_order_book_spark import registry
+from nt_etl_order_book_spark.plans.profile import consume
 from nt_etl_order_book_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -177,8 +178,6 @@ def stream_throughput(spark, n_msgs: int = 20000, dedup_within: str | None = Non
     via stateful_shuffle_partitions — the DEPLOY.md §4 bound every
     deployment already computes (r16: 32 one-size stores at a 20k-row
     state were the dominant dedup-path cost)."""
-    import json as _json
-    import shutil
     import tempfile
 
     from nt_etl_order_book_spark.streaming.pipeline import (
@@ -186,49 +185,27 @@ def stream_throughput(spark, n_msgs: int = 20000, dedup_within: str | None = Non
         read_json_stream,
         stateful_shuffle_partitions,
     )
+    from tools.probe import delta_msg, replay
 
-    root = tempfile.mkdtemp(prefix="bench_stream_")
-    msg_dir = os.path.join(root, "msgs")
-    os.makedirs(msg_dir)
     per_file = n_msgs // 4
-    for f in range(4):
-        lines = []
-        for i in range(f * per_file, (f + 1) * per_file):
-            lines.append(
-                _json.dumps(
-                    {
-                        "type": "orderbook_delta",
-                        "sid": 1,
-                        "seq": i,
-                        "market_ticker": f"KXB-{i % 50}",
-                        "market_id": f"m{i % 50}",
-                        "price": 40 + i % 20,
-                        "price_dollars": (40 + i % 20) / 100.0,
-                        "delta": (i % 41) - 20,
-                        "side": "yes" if i % 2 else "no",
-                        "ts": 1_700_000_000_000 + i,
-                        "ingestion_ts": 1_700_000_000_000 + i,
-                        "redis_stream_id": f"170-{i}",
-                    }
-                )
-            )
-        with open(os.path.join(msg_dir, f"part{f}.json"), "w") as fh:
-            fh.write("\n".join(lines))
-    t0 = time.time()
-    msgs = read_json_stream(spark, msg_dir)
-    q = deltas_query(
-        msgs,
-        os.path.join(root, "out"),
-        os.path.join(root, "cp"),
-        dedup_within=dedup_within,
-        state_partitions=(
-            stateful_shuffle_partitions(spark, n_msgs) if dedup_within else None
-        ),
-    )
-    q.awaitTermination(300)
-    wrote = spark.read.parquet(os.path.join(root, "out")).count()
-    elapsed = time.time() - t0
-    shutil.rmtree(root, ignore_errors=True)
+    with (
+        tempfile.TemporaryDirectory(prefix="bench_stream_", ignore_cleanup_errors=True) as root,
+        replay(n_msgs, delta_msg, n_files=4) as msg_dir,
+    ):
+        t0 = time.time()
+        msgs = read_json_stream(spark, msg_dir)
+        q = deltas_query(
+            msgs,
+            os.path.join(root, "out"),
+            os.path.join(root, "cp"),
+            dedup_within=dedup_within,
+            state_partitions=(
+                stateful_shuffle_partitions(spark, n_msgs) if dedup_within else None
+            ),
+        )
+        q.awaitTermination(300)
+        wrote = spark.read.parquet(os.path.join(root, "out")).count()
+        elapsed = time.time() - t0
     assert wrote == 4 * per_file, f"stream sink wrote {wrote}, expected {4 * per_file}"
     return round(wrote / elapsed, 1)
 
@@ -348,22 +325,6 @@ def main() -> None:
         load_table(spark, SF_DIR, t).count()
 
     qs = registry.queries()
-
-    def consume(df) -> int:
-        # Force FULL evaluation: a bare count() lets ColumnPruning
-        # delete any computed column nothing downstream references —
-        # including whole Window operators (verified: win_running_sum's
-        # optimized count plan contains no windowspecdefinition), so a
-        # pure-projection query would be timed against a gutted plan.
-        # xxhash64 over the full row struct makes every output column
-        # load-bearing at ~one hash per row of overhead, JVM-side.
-        from pyspark.sql import functions as F
-
-        row = df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64(F.struct(*df.columns))).alias("chk"),
-        ).collect()[0]
-        return row["n"]
 
     # Pre-compile each headline query at the smallest sf: Catalyst +
     # whole-stage-codegen compilation is per-plan and charges ~2 s to the

@@ -1406,7 +1406,7 @@ def ivf_residuals_arrow(emb: DataFrame, cent_rows: list) -> DataFrame:
     registered IVF-PQ paths only above ARROW_CELLS_THRESHOLD via
     ivf_residuals_auto (the fixture's 16-cell codebook keeps the
     JVM-only plan; tests/test_plans.py gates that boundary); also
-    driven directly by tools/measure_ann_cells.py for the √N-cell
+    driven directly by `tools/probe.py ann-cells` for the √N-cell
     scale probe.
     """
     import numpy as np

@@ -53,11 +53,3 @@ def count_shuffles(df: DataFrame) -> int:
     # Count the per-node detail headers "(3) Exchange", not the tree echo.
     return len(re.findall(r"\(\d+\) Exchange", formatted_plan(df)))
 
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    """Distinct whole-stage-codegen regions (simple explain mode)."""
-    plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "simple"
-    )
-    ids = set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))
-    return len(ids)

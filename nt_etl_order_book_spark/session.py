@@ -49,16 +49,9 @@ def get_spark(app_name: str = "nt-etl-order-book-spark", *, shuffle_partitions: 
         # storage for the app lifetime.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # UI off by default (test/batch hygiene); SPARK_GRAFT_UI=1/true
-        # turns it on for the perf tools that read stage-level byte
-        # metrics from the status API (tools/measure_dedup_1000x.py).
-        # Explicit value set, not raw truthiness: =0/=false mean OFF.
-        .config(
-            "spark.ui.enabled",
-            "true"
-            if os.environ.get("SPARK_GRAFT_UI", "").lower() in ("1", "true", "yes", "on")
-            else "false",
-        )
+        # No code path reads the Spark UI: plans.profile takes stage
+        # metrics from the driver's in-process status store.
+        .config("spark.ui.enabled", "false")
     )
     for key, value in SESSION_CONFS:
         builder = builder.config(key, value)

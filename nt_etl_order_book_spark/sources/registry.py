@@ -2,8 +2,7 @@
 
 Reference → Spark:
 - Postgres ADBC bulk append (postgres_client.py:53-67) →
-  `write_table_append` (parquet/Delta-style path append; JDBC variant
-  gated on driver availability — no database in this container).
+  `write_table_append` (parquet/Delta-style path append).
 - golden-CSV append with header-on-create (kalshi_ws_client.py:32-75) →
   `write_csv_append`.
 - CREATE TABLE IF NOT EXISTS DDL (postgres_client.py:24-51) →
@@ -23,26 +22,6 @@ def write_table_append(df: DataFrame, path: str) -> None:
     """Relational append sink: columnar, atomic per job (the Arrow bulk
     insert analog). Append mode == the reference's if_table_exists='append'."""
     df.write.mode("append").parquet(path)
-
-
-def write_jdbc_append(df: DataFrame, url: str, table: str, **options: str) -> None:
-    """JDBC append (the literal Postgres sink). Gated: no JDBC driver or
-    database exists in this container, so this raises with a clear
-    message rather than failing obscurely mid-job."""
-    try:
-        (
-            df.write.format("jdbc")
-            .option("url", url)
-            .option("dbtable", table)
-            .options(**options)
-            .mode("append")
-            .save()
-        )
-    except Exception as exc:  # pragma: no cover - no JDBC driver in container
-        raise RuntimeError(
-            "JDBC sink requires a database + driver jar on the classpath "
-            "(none in this environment); use write_table_append for files"
-        ) from exc
 
 
 def write_csv_append(df: DataFrame, path: str, *, header: bool = True) -> None:

@@ -91,7 +91,7 @@ class BookPipelineListener(StreamingQueryListener):
     ``warnings`` module). At 100 TB a mis-sized watermark horizon is
     the #1 way a stateful pipeline dies — state grows with rate ×
     horizon (measured across three decades in the r13 scale probe,
-    tools/stream_scale_probe.py), so size the bound as
+    `tools/probe.py stream --third-decade`), so size the bound as
     expected_rate × horizon × safety_factor and treat any alarm as
     "the horizon or the rate estimate is wrong", per DEPLOY.md §4."""
 

@@ -8,6 +8,8 @@ combine, or a metadata query starts reading payload columns.
 
 from __future__ import annotations
 
+import pytest
+
 from nt_etl_order_book_spark import registry
 from nt_etl_order_book_spark.plans.explain import (
     count_shuffles,
@@ -555,3 +557,24 @@ def test_registry_wide_python_boundary_and_no_cartesian(spark, sf_dir):
         if problems:
             bad[name] = problems
     assert not bad, f"plan-boundary violations: {bad}"
+
+
+@pytest.mark.parametrize(
+    "name,max_jobs",
+    [("bpe_merges", 21), ("dedup_components", 19), ("semdedup", 20), ("ann_ivf_topk", 12)],
+)
+def test_profile_pins_iterative_job_counts(spark, sf_dir, name, max_jobs):
+    # The iterative families run eager jobs while the frame is built
+    # (merge rounds, propagation rounds, codebook training); profile()
+    # counts those with the consume's. Upper bounds: a change that adds
+    # rounds or re-runs a lineage fails here.
+    from nt_etl_order_book_spark.plans.profile import profile
+
+    fn = registry.queries()[name]
+    p = profile(lambda: fn(spark, sf_dir))
+    assert p.rows > 0
+    assert 0 < p.jobs <= max_jobs, p
+    assert p.tasks >= p.jobs, p
+    assert {"analysis", "optimization", "planning"} <= set(p.phases_ms), p
+    if name == "dedup_components":
+        assert p.shuffle_write_bytes > 0, p
