@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nt_etl_order_book_spark import registry
-from nt_etl_order_book_spark.plans.profile import consume
+from nt_etl_order_book_spark.plans.profile import consume, profile
 from nt_etl_order_book_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -261,6 +261,13 @@ DETAIL_ONLY_KEYS = (
     # tier3_warm_path and the worst-case draw crossed RECORD_LINE_MAX;
     # no cross-round reader consumes this scalar from history).
     "headline_cold_minus_warm_sec",
+    # The cores and master the record ran on joined the final line; the
+    # fixed best-of-3 protocol constant and the tier2 sum (derivable from
+    # tier2 itself) moved here to pay for them. No history reader
+    # consumes either.
+    "runs_per_query",
+    "tier2_total_sec",
+    "profile",
     "load_avg_start",
     "load_avg_end",
     "stream_load_avg_start",
@@ -362,6 +369,10 @@ def main() -> None:
     # (and the reader) separate ~2 s compile tails from execution.
     first_run: dict[str, float] = {}
     best_of_rest: dict[str, float] = {}
+    # Per-query planning ms (analysis + optimization + physical planning)
+    # and job count of the last timed run, from plans.profile: locates a
+    # regression in query planning or the job chain from the record alone.
+    profiles: dict[str, dict] = {}
 
     def timed(names: list[str], strict: bool = True) -> dict[str, float]:
         # Best-of-N per query: the r6 recording was ambient-noise
@@ -377,9 +388,8 @@ def main() -> None:
             runs = []
             try:
                 for _ in range(n_runs):
-                    t0 = time.time()
-                    n = consume(fn(spark, SF_DIR))
-                    runs.append(round(time.time() - t0, 3))
+                    p = profile(lambda: fn(spark, SF_DIR))
+                    runs.append(round(p.wall_s, 3))
             except Exception:
                 # Fixed tiers must fail loudly (their totals are the
                 # cross-round series); the rotating tier records what it
@@ -395,7 +405,8 @@ def main() -> None:
             out[name] = min(runs)
             first_run[name] = runs[0]
             best_of_rest[name] = min(runs[1:]) if len(runs) > 1 else runs[0]
-            print(f"# {name}: {n} rows in {out[name]}s (runs: {runs})", file=sys.stderr)
+            profiles[name] = {"plan_ms": sum(p.phases_ms.values()), "jobs": p.jobs}
+            print(f"# {name}: {p.rows} rows in {out[name]}s (runs: {runs}, {profiles[name]})", file=sys.stderr)
             # Release the dropped frames' localCheckpoint RDD blocks:
             # they're freed by the ContextCleaner only after the driver
             # GCs the DataFrames, and letting them accumulate squeezes
@@ -425,6 +436,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf else None,
+        "cpus": len(os.sched_getaffinity(0)),
+        "master": spark.sparkContext.master,
         "stream_msgs_per_sec": msgs_per_sec,
         # Streaming state HWM (r14 verdict item 4): the rows/bytes the
         # watermarked dedup operator held at the bench's rate×volume —
@@ -462,6 +475,7 @@ def main() -> None:
         "headline_cold_minus_warm_sec": round(
             sum(max(0.0, first_run[q] - best_of_rest[q]) for q in timings), 3
         ),
+        "profile": profiles,
     }
     # Self-labeling ambient discriminator (r12 verdict item 2): median
     # per-query ratio vs the cleanest recorded value for each query —

@@ -10,26 +10,17 @@ Reconstruction invariant (SURVEY §1.4): book state at time T =
 last snapshot ≤ T, plus the sum of deltas in (snapshot_ts, T], per
 (ticker, side, price). Levels at or below zero contracts are gone.
 
-Scale: every step is a keyed shuffle on `ticker` (or a prefix of it) —
-co-partitioned, linear, no range join.
+Scale: `current_book` (so `compact_book`, and `quotes` over it) and
+`vwap` plan ONE exchange: the tagged union of snapshot and delta rows,
+hash-partitioned on `ticker`. The replay dedup, the latest-snapshot
+window and the final aggregate all reuse it — linear, no join. This
+assumes a `redis_stream_id` names one message, and so one ticker.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dedup_by_id(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Drop duplicate rows by id columns, but ONLY among rows where the
-    ids are present: dropDuplicates treats NULLs as equal, so an all-null
-    id column (sources without a buffer id) would collapse the whole
-    table to one arbitrary row."""
-    present = None
-    for k in keys:
-        c = F.col(k).isNotNull()
-        present = c if present is None else (present | c)
-    return df.filter(present).dropDuplicates(keys).unionByName(df.filter(~present))
 
 
 def _sid_sort_key(sid):  # Column -> Column
@@ -54,6 +45,44 @@ def _sid_sort_key(sid):  # Column -> Column
     )
 
 
+def _history(snapshots: DataFrame | None, deltas: DataFrame, *, as_of_ms: int | None = None) -> DataFrame:
+    """Snapshot and delta rows as ONE frame hash-partitioned on `ticker`:
+    (ticker, side, price_dollars, timestamp, qty, is_snap, sidk, latest),
+    qty being a level's contracts or a delta's size, sidk the parsed
+    stream id and `latest` the ticker's max (timestamp, sidk) snapshot.
+    A replayed delta is kept once; replayed snapshot rows are copies of
+    one level, which `current_book`'s level pick collapses. Later windows
+    and aggregates on ticker reuse this one exchange."""
+
+    def tagged(df: DataFrame, qty: str, is_snap: bool) -> DataFrame:
+        sid = F.col("redis_stream_id") if "redis_stream_id" in df.columns else F.lit(None).cast("string")
+        cols = ["ticker", "side", "price_dollars", "timestamp", F.col(qty).alias("qty"), sid.alias("sid")]
+        return df.select(*cols, F.lit(is_snap).alias("is_snap"))
+
+    rows = tagged(deltas, "delta", False)
+    if snapshots is not None:
+        rows = tagged(snapshots, "contracts", True).unionByName(rows)
+    if as_of_ms is not None:
+        rows = rows.filter(F.col("timestamp") <= as_of_ms)
+    snap = F.col("is_snap")
+    replays = Window.partitionBy("ticker", "is_snap", "sid").orderBy("timestamp", "side", "price_dollars", "qty")
+    latest = F.max(F.when(snap, F.struct("timestamp", "sidk"))).over(Window.partitionBy("ticker"))
+    return (
+        rows.repartition("ticker")
+        .withColumn("_rn", F.row_number().over(replays))
+        .filter(snap | F.col("sid").isNull() | (F.col("_rn") == 1))
+        .withColumn("sidk", _sid_sort_key(F.col("sid")))
+        .withColumn("latest", latest)
+    )
+
+
+def _later_delta():  # -> Column
+    """Delta rows strictly after the ticker's latest snapshot (every
+    delta of a ticker that has none)."""
+    snap_ts = F.col("latest.timestamp")
+    return ~F.col("is_snap") & (snap_ts.isNull() | (F.col("timestamp") > snap_ts))
+
+
 def current_book(
     snapshots: DataFrame,
     deltas: DataFrame,
@@ -73,90 +102,33 @@ def current_book(
     rule applied at the END of history, not a state reduction; dropping
     a negative net at time T loses information later deltas may revive.
 
-    At-least-once hygiene: replayed messages (duplicate redis_stream_id)
-    are deduped here — snapshot rows per (stream id, side, price) level
-    (one message explodes to many level rows sharing the id), delta rows
-    per stream id — among rows that carry an id.
+    One exchange (`_history`, which also drops replayed deltas), then:
+    - the latest snapshot message per ticker: max timestamp (a message's
+      levels share its ts, consumer.py:58-81), ties broken by the
+      greatest stream id as a parsed (ms, seq) key (`_sid_sort_key`);
+      NULL-id rows at that ts cannot join the contest and stay eligible;
+    - per level, the base is one eligible row: identified above NULL-id,
+      then most contracts — the same book on any partitioning;
+    - deltas strictly after that snapshot are summed per level; a ticker
+      with no snapshot starts from an empty book.
+
+    Precondition: a `redis_stream_id` names one message, and so one
+    ticker; replays are deduped per (ticker, stream id).
     """
-    if "redis_stream_id" in snapshots.columns:
-        sid = F.col("redis_stream_id")
-        snapshots = (
-            snapshots.filter(sid.isNotNull())
-            .dropDuplicates(["redis_stream_id", "side", "price_dollars"])
-            .unionByName(snapshots.filter(sid.isNull()))
-        )
-    if "redis_stream_id" in deltas.columns:
-        deltas = dedup_by_id(deltas, ["redis_stream_id"])
-    if as_of_ms is not None:
-        snapshots = snapshots.filter(F.col("timestamp") <= as_of_ms)
-        deltas = deltas.filter(F.col("timestamp") <= as_of_ms)
-
-    # Latest snapshot time per ticker (a snapshot message is atomic: all
-    # its levels share one timestamp — consumer.py:58-81 carries msg ts).
-    w = Window.partitionBy("ticker")
-    snap_latest = snapshots.withColumn("_max_ts", F.max("timestamp").over(w)).filter(
-        F.col("timestamp") == F.col("_max_ts")
-    )
-    # Two snapshot MESSAGES for one ticker can share the max timestamp
-    # (millisecond wall clock, plausible under replay); keeping both
-    # double-counts contracts. Tie-break: keep the message with the
-    # greatest stream id. Redis ids are '<ms>-<seq>' and do NOT order
-    # lexicographically ('5000-9' > '5000-10' as strings), so compare a
-    # parsed (ms, seq) struct; ids not in that shape rank below every
-    # parseable id but stay comparable among themselves via the raw
-    # string. NULL-id rows can't join the contest — they pass through
-    # and the level-level dedup below resolves any remaining mix.
-    #
-    # The level dedup must pick DETERMINISTICALLY when a NULL-sid row
-    # and an identified row share a level with different contracts
-    # (dropDuplicates keeps an arbitrary row): rank identified rows
-    # above NULL-sid rows, then break any remaining tie (two NULL-sid
-    # rows, or no-sid-column input) by contracts so the same input
-    # always yields the same book, on any partitioning.
-    w_lvl = Window.partitionBy("ticker", "side", "price_dollars")
-    if "redis_stream_id" in snapshots.columns:
-        snap_latest = (
-            snap_latest.withColumn("_sidk", _sid_sort_key(F.col("redis_stream_id")))
-            .withColumn("_max_sidk", F.max("_sidk").over(w))
-            .filter(F.col("_sidk").isNull() | (F.col("_sidk") == F.col("_max_sidk")))
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    w_lvl.orderBy(
-                        F.col("_sidk").desc_nulls_last(), F.col("contracts").desc()
-                    )
-                ),
-            )
-            .filter(F.col("_rn") == 1)
-        )
-    else:
-        snap_latest = snap_latest.withColumn(
-            "_rn", F.row_number().over(w_lvl.orderBy(F.col("contracts").desc()))
-        ).filter(F.col("_rn") == 1)
-    snap_latest = snap_latest.select(
-        "ticker", "side", "price_dollars", "contracts", F.col("timestamp").alias("snap_ts")
-    )
-    snap_ts_per_ticker = snap_latest.groupBy("ticker").agg(F.max("snap_ts").alias("snap_ts"))
-
-    # Deltas strictly after the ticker's snapshot (tickers with no
-    # snapshot start from an empty book: left join keeps their deltas).
-    d = (
-        deltas.join(snap_ts_per_ticker, on="ticker", how="left")
-        .filter(F.col("snap_ts").isNull() | (F.col("timestamp") > F.col("snap_ts")))
+    rows = _history(snapshots, deltas, as_of_ms=as_of_ms)
+    snap, sidk = F.col("is_snap"), F.col("sidk")
+    at_latest = (F.col("timestamp") == F.col("latest.timestamp")) & (sidk.isNull() | (sidk == F.col("latest.sidk")))
+    base = F.max_by("qty", F.when(snap, F.struct(sidk.isNotNull(), sidk, "qty")))
+    book = (
+        rows.filter((snap & at_latest) | _later_delta())
         .groupBy("ticker", "side", "price_dollars")
-        .agg(F.sum("delta").alias("net_delta"))
+        .agg(
+            (F.coalesce(base, F.lit(0)) + F.coalesce(F.sum(F.when(~snap, F.col("qty"))), F.lit(0)))
+            .cast("int")
+            .alias("contracts")
+        )
     )
-
-    base = snap_latest.select("ticker", "side", "price_dollars", "contracts")
-    merged = base.join(d, on=["ticker", "side", "price_dollars"], how="full").select(
-        "ticker",
-        "side",
-        "price_dollars",
-        (F.coalesce(F.col("contracts"), F.lit(0)) + F.coalesce(F.col("net_delta"), F.lit(0)))
-        .cast("int")
-        .alias("contracts"),
-    )
-    return merged.filter(F.col("contracts") > 0) if clamp else merged
+    return book.filter(F.col("contracts") > 0) if clamp else book
 
 
 def book_top(book: DataFrame, k: int = 5) -> DataFrame:
@@ -218,24 +190,22 @@ def vwap(deltas: DataFrame, snapshots: DataFrame | None = None) -> DataFrame:
     delta flow (the executed-volume analog in the delta stream). DECIMAL
     accumulation end to end.
 
-    Flow hygiene mirrors reconstruction: at-least-once replays are
-    deduped on redis_stream_id, and — when `snapshots` is given — deltas
-    at or before the ticker's latest snapshot are excluded (that flow is
-    already baked into the snapshot; counting it double-counts volume).
+    Flow hygiene mirrors reconstruction, on its one-exchange plan:
+    replays are deduped per (ticker, redis_stream_id), and — when
+    `snapshots` is given — deltas at or before the ticker's latest
+    snapshot are excluded (that flow is already baked into the snapshot;
+    counting it double-counts volume).
     """
-    adds = deltas.filter(F.col("delta") > 0)
-    if "redis_stream_id" in adds.columns:
-        adds = dedup_by_id(adds, ["redis_stream_id"])
-    if snapshots is not None:
-        snap_ts = snapshots.groupBy("ticker").agg(F.max("timestamp").alias("snap_ts"))
-        adds = adds.join(snap_ts, on="ticker", how="left").filter(
-            F.col("snap_ts").isNull() | (F.col("timestamp") > F.col("snap_ts"))
+    notional = F.sum(F.col("price_dollars") * F.col("qty"))
+    volume = F.sum(F.col("qty"))
+    return (
+        _history(snapshots, deltas.filter(F.col("delta") > 0))
+        .filter(_later_delta())
+        .groupBy("ticker", "side")
+        .agg(
+            (notional / F.nullif(volume, F.lit(0))).cast("decimal(9,6)").alias("vwap"),
+            volume.alias("volume"),
         )
-    notional = F.sum(F.col("price_dollars") * F.col("delta"))
-    volume = F.sum(F.col("delta"))
-    return adds.groupBy("ticker", "side").agg(
-        (notional / F.nullif(volume, F.lit(0))).cast("decimal(9,6)").alias("vwap"),
-        volume.alias("volume"),
     )
 
 

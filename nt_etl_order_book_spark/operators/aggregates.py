@@ -387,38 +387,38 @@ def q_book_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def book_reconstruct(snapshots: DataFrame, deltas: DataFrame, key: str) -> DataFrame:
-    """Library form of the flagship reconstruction.
+    """Library form of the flagship reconstruction: the scalar case of
+    `analytics.current_book`.
 
     snapshots: (key, ts, event_id, value) — absolute levels;
     deltas:    (key, ts, value)           — increments.
-    Returns (key, book_value, n_deltas): latest snapshot value plus the
-    sum of strictly-later deltas; keys with no snapshot start at 0.
-
-    Plan shape: one window shuffle on `key` for latest-snapshot, one
-    hash-agg shuffle on `key` for the delta sum, then a key-equi join of
-    two already-aggregated (small) sides — AQE will broadcast the
-    smaller. No row-level join of the raw tables.
+    Returns (key, book_value, n_deltas): the latest snapshot's value by
+    (ts, event_id) plus the sum of strictly-later deltas; keys with no
+    snapshot start at 0. One exchange: the tagged union of both inputs
+    on `key`, which the snap_ts window and the aggregate reuse. No join.
     """
-    w = Window.partitionBy(key).orderBy(F.desc("ts"), F.desc("event_id"))
-    latest = (
-        snapshots.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(key, F.col("ts").alias("snap_ts"), F.col("value").alias("base"))
+    snap = F.col("_snap")
+    rows = snapshots.select(key, "ts", "event_id", "value", F.lit(True).alias("_snap")).unionByName(
+        deltas.select(key, "ts", "value", F.lit(False).alias("_snap")), allowMissingColumns=True
     )
-    d = (
-        deltas.join(latest.select(key, "snap_ts"), on=key, how="left")
-        .filter(F.col("snap_ts").isNull() | (F.col("ts") > F.col("snap_ts")))
-        .groupBy(key)
-        .agg(dsum("value").alias("delta_sum"), F.count(F.lit(1)).alias("n_deltas"))
-    )
+    snap_ts = F.max(F.when(snap, F.col("ts"))).over(Window.partitionBy(key))
+    later = ~snap & (F.col("_snap_ts").isNull() | (F.col("ts") > F.col("_snap_ts")))
     return (
-        latest.join(d, on=key, how="full")
+        rows.repartition(key)
+        .withColumn("_snap_ts", snap_ts)
+        .filter(snap | later)
+        .groupBy(key)
+        .agg(
+            F.max_by("value", F.when(snap, F.struct("ts", "event_id"))).alias("base"),
+            dsum(F.when(~snap, F.col("value"))).alias("delta_sum"),
+            F.count(F.when(~snap, F.lit(1))).alias("n_deltas"),
+        )
         .select(
             key,
             (F.coalesce(F.col("base"), F.lit(0.0)) + F.coalesce(F.col("delta_sum"), F.lit(0.0)))
             .cast("double")
             .alias("book_value"),
-            F.coalesce(F.col("n_deltas"), F.lit(0)).alias("n_deltas"),
+            "n_deltas",
         )
     )
 

@@ -52,6 +52,10 @@ def get_spark(app_name: str = "nt-etl-order-book-spark", *, shuffle_partitions: 
         # No code path reads the Spark UI: plans.profile takes stage
         # metrics from the driver's in-process status store.
         .config("spark.ui.enabled", "false")
+        # JVM-wide codegen cache: a round of read-side queries compiles a
+        # few hundred classes, and at Spark's default 100 entries every
+        # round recompiled them all. Static: tune_session cannot set it.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for key, value in SESSION_CONFS:
         builder = builder.config(key, value)

@@ -35,6 +35,8 @@ def _worst_case_out() -> dict:
         "unit": "sec",
         "queries": queries,
         "sf": 0.1,
+        "cpus": 8888,
+        "master": "local[8888]",
         "stream_msgs_per_sec": 888888.8,
         "stream_state_peak_rows": 88888888,
         "stream_state_peak_bytes": 8888888888,
@@ -52,6 +54,7 @@ def _worst_case_out() -> dict:
         "first_run": dict(timed),
         "best_of_rest": dict(timed),
         "headline_cold_minus_warm_sec": 888.888,
+        "profile": {n: {"plan_ms": 88888, "jobs": 8888} for n in timed},
         "ambient_ratio_median": 8.888,
         "ambient_suspect": False,
         "ambient_band": "suspect",
@@ -89,6 +92,10 @@ def test_final_record_line_parses_and_fits_tail_capture():
     assert back["ambient_band"] == out["ambient_band"]
     assert back["tier3_warm_path"] == out["tier3_warm_path"]
     assert "headline_cold_minus_warm_sec" not in back
+    # The record names the machine it ran on; the per-query profile
+    # summary (planning ms, jobs) rides on the detail line.
+    assert (back["cpus"], back["master"]) == (out["cpus"], out["master"])
+    assert "profile" not in back
 
 
 def test_realistic_record_keeps_rotation_history_intact():

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from nt_etl_order_book_spark.analytics import book_top, current_book, quotes
 from nt_etl_order_book_spark.sources.orderbook import (
     flatten_deltas,
@@ -178,3 +180,41 @@ def test_book_as_of_time_travel(spark, tmp_path):
     assert ("yes", "0.4500") not in levels
     assert ("yes", "0.4700") not in levels
     assert levels[("yes", "0.4000")] == 50
+
+
+def _fixture_sinks(spark, tmp_path):
+    p = tmp_path / "msgsP"
+    p.mkdir()
+    (p / "m.json").write_text("\n".join(json.dumps(m) for m in _messages()))
+    msgs = parse_messages(spark.read.text(str(p)))
+    return flatten_snapshots(msgs), flatten_deltas(msgs)
+
+
+@pytest.mark.parametrize(
+    "name,max_jobs",
+    [("current_book", 3), ("as_of_unclamped", 3), ("quotes", 3), ("book_reconstruct", 4)],
+)
+def test_book_kernels_plan_one_shuffle(spark, sf_dir, tmp_path, name, max_jobs):
+    # The reconstruction kernel hash-partitions the tagged union of
+    # snapshots and deltas on ticker (key) ONCE; the replay dedup, the
+    # latest-snapshot window, the per-level aggregate and quotes' per-
+    # ticker aggregate all reuse that partitioning. No join, so no
+    # broadcast either. Job counts are upper bounds measured on this
+    # fixture: a change that adds a stage or re-runs a lineage fails.
+    from nt_etl_order_book_spark import registry
+    from nt_etl_order_book_spark.plans.explain import count_shuffles, formatted_plan
+    from nt_etl_order_book_spark.plans.profile import profile
+
+    snaps, deltas = _fixture_sinks(spark, tmp_path)
+    build = {
+        "current_book": lambda: current_book(snaps, deltas),
+        "as_of_unclamped": lambda: current_book(snaps, deltas, as_of_ms=2500, clamp=False),
+        "quotes": lambda: quotes(current_book(snaps, deltas)),
+        "book_reconstruct": lambda: registry.queries()["book_reconstruct"](spark, sf_dir),
+    }[name]
+    df = build()
+    assert count_shuffles(df) == 1
+    assert "BroadcastExchange" not in formatted_plan(df)
+    p = profile(build)
+    assert p.rows > 0
+    assert 0 < p.jobs <= max_jobs, p

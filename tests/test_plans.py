@@ -578,3 +578,21 @@ def test_profile_pins_iterative_job_counts(spark, sf_dir, name, max_jobs):
     assert {"analysis", "optimization", "planning"} <= set(p.phases_ms), p
     if name == "dedup_components":
         assert p.shuffle_write_bytes > 0, p
+
+
+def test_codegen_cache_holds_a_working_set_past_spark_default(spark):
+    # get_spark sizes the JVM-wide codegen cache past Spark's default 100
+    # entries: a round of queries that compiles more classes than that
+    # compiles nothing when it runs again. Under the default LRU cache
+    # the second run would evict and recompile every class in turn.
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_round() -> int:
+        before = metric.getCount()
+        for k in range(120):
+            # a distinct inlined literal per query: one fresh class each
+            spark.range(2).selectExpr(f"id * {7_919_000 + k} AS v").collect()
+        return metric.getCount() - before
+
+    assert run_round() > 100
+    assert run_round() == 0

@@ -7,12 +7,13 @@ patterns, interleavings, empty sides, all-negative books.
 
 from __future__ import annotations
 
+import re
 from collections import defaultdict
 
 import pytest
 
 hypothesis = pytest.importorskip("hypothesis")
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 from pyspark.sql import functions as F  # noqa: E402
@@ -601,3 +602,113 @@ def test_table_diff_matches_multiset_bruteforce(spark_prop, before, after):
         else:
             expected[k] = "changed"
     assert got == expected
+
+
+# current_book: snapshot messages (ladders of distinct levels) and delta
+# messages, each carrying one stream id from a pool that mixes '5000-9'
+# vs '5000-10', '999-0' vs '5000-0' and non-conforming ids, or none.
+# A sid names one message (the kernel's precondition), so ids are drawn
+# without replacement; replays are exact copies of drawn messages.
+SID_POOL = ["5000-9", "5000-10", "999-0", "5000-0", "5000-1", "7-3", "abc", "5000-x", "", "12", "1-2-3", "3-4"]
+LEVELS = st.tuples(st.sampled_from(["yes", "no"]), st.integers(min_value=1, max_value=3))
+snap_msgs = st.lists(
+    st.tuples(
+        st.sampled_from(KEYS),
+        st.integers(min_value=0, max_value=4),  # few ts: same-ts snapshot messages are common
+        st.booleans(),  # carries a sid
+        st.dictionaries(LEVELS, st.integers(min_value=0, max_value=5), min_size=1, max_size=3),
+    ),
+    max_size=4,
+)
+delta_msgs = st.lists(
+    st.tuples(st.sampled_from(KEYS), st.integers(min_value=0, max_value=6), st.booleans(), LEVELS, VAL),
+    max_size=8,
+)
+book_history = st.fixed_dictionaries(
+    {
+        "snaps": snap_msgs,
+        "deltas": delta_msgs,
+        "sids": st.permutations(SID_POOL),
+        "replays": st.lists(st.integers(min_value=0, max_value=11), max_size=4),
+        "as_of_ms": st.one_of(st.none(), st.integers(min_value=0, max_value=6)),
+        "clamp": st.booleans(),
+    }
+)
+
+
+def _sidk(sid):
+    if sid is None:
+        return None
+    return (int(sid.split("-")[0]), int(sid.split("-")[1]), sid) if re.fullmatch(r"\d+-\d+", sid) else (-1, -1, sid)
+
+
+def _book_bruteforce(snap_rows, delta_rows, as_of_ms, clamp):
+    if as_of_ms is not None:
+        snap_rows = [r for r in snap_rows if r[0] <= as_of_ms]
+        delta_rows = [r for r in delta_rows if r[0] <= as_of_ms]
+    seen, deduped = set(), []
+    for r in delta_rows:
+        if r[5] is None or r[5] not in seen:
+            deduped.append(r)
+            seen.add(r[5])
+    book: dict[tuple, int] = {}
+    snap_ts: dict[str, int] = {}
+    for k in KEYS:
+        mine = [r for r in snap_rows if r[1] == k]
+        if not mine:
+            continue
+        snap_ts[k] = ts = max(r[0] for r in mine)
+        at_ts = [r for r in mine if r[0] == ts]
+        sidks = [_sidk(r[5]) for r in at_ts if r[5] is not None]
+        best: dict[tuple, tuple] = {}
+        for ts_, _k, side, p, c, sid in at_ts:
+            sk = _sidk(sid)
+            if sk is not None and sk != max(sidks):
+                continue
+            rank = (sk is not None, sk or (), c)
+            if (k, side, p) not in best or rank > best[(k, side, p)]:
+                best[(k, side, p)] = rank
+        book.update({lvl: rank[2] for lvl, rank in best.items()})
+    for ts, k, side, p, d, _sid in deduped:
+        if k not in snap_ts or ts > snap_ts[k]:
+            book[(k, side, p)] = book.get((k, side, p), 0) + d
+    return {lvl: c for lvl, c in book.items() if c > 0 or not clamp}
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(h=book_history)
+@example(
+    h={  # two snapshot messages at one ts, '5000-10' > '5000-9', a NULL-sid level, a replay
+        "snaps": [("A", 3, True, {("yes", 1): 4}), ("A", 3, True, {("yes", 1): 2, ("no", 2): 1}), ("A", 3, False, {("no", 2): 5})],
+        "deltas": [("A", 4, True, ("yes", 1), 3), ("A", 2, True, ("yes", 1), 9), ("B", 1, False, ("no", 3), -2)],
+        "sids": ["5000-10", "5000-9", "abc"] + SID_POOL[3:],
+        "replays": [3, 3, 5, 1],
+        "as_of_ms": None,
+        "clamp": False,
+    }
+)
+def test_current_book_matches_bruteforce(spark_prop, h):
+    from decimal import Decimal
+
+    from nt_etl_order_book_spark.analytics import current_book
+
+    sids = iter(h["sids"])
+    snap_msgs_ = [[(ts, k, side, p, c, next(sids) if has else None) for (side, p), c in lv.items()] for k, ts, has, lv in h["snaps"]]
+    delta_msgs_ = [[(ts, k, side, p, d, next(sids) if has else None)] for k, ts, has, (side, p), d in h["deltas"]]
+    msgs = snap_msgs_ + delta_msgs_
+    for i in h["replays"]:  # an at-least-once replay re-sends a whole message
+        if i < len(msgs):
+            (snap_msgs_ if i < len(snap_msgs_) else delta_msgs_).append(msgs[i])
+    snap_rows = [r for m in snap_msgs_ for r in m]
+    delta_rows = [r for m in delta_msgs_ for r in m]
+
+    def frame(rows, qty):
+        return spark_prop.createDataFrame(
+            [(ts, k, side, Decimal(p) / 100, q, sid) for ts, k, side, p, q, sid in rows],
+            f"timestamp long, ticker string, side string, price_dollars decimal(5,4), {qty} int, redis_stream_id string",
+        )
+
+    out = current_book(frame(snap_rows, "contracts"), frame(delta_rows, "delta"), as_of_ms=h["as_of_ms"], clamp=h["clamp"])
+    got = [((r.ticker, r.side, int(r.price_dollars * 100)), r.contracts) for r in out.collect()]
+    assert len(got) == len(dict(got)), "one row per level"
+    assert dict(got) == _book_bruteforce(snap_rows, delta_rows, h["as_of_ms"], h["clamp"])
