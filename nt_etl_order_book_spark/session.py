@@ -56,6 +56,15 @@ def get_spark(app_name: str = "nt-etl-order-book-spark", *, shuffle_partitions: 
         # few hundred classes, and at Spark's default 100 entries every
         # round recompiled them all. Static: tune_session cannot set it.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # Streaming checkpoint files renamed with FileSystem.rename: the
+        # default FileContext manager stats both ends of every rename via
+        # getFileLinkStatus, which without libhadoop forks `readlink` per
+        # call. Not in SESSION_CONFS: a session built elsewhere keeps
+        # Spark's default checkpoint semantics (DEPLOY.md §1).
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+        )
     )
     for key, value in SESSION_CONFS:
         builder = builder.config(key, value)

@@ -15,6 +15,18 @@ from dataclasses import dataclass, field
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+# The phases of a micro-batch's progress ``durationMs`` the listener
+# keeps: where the batch's wall time went (sink write, offset/commit log
+# writes, source listing, planning, and the whole trigger).
+DURATION_KEYS = (
+    "addBatch",
+    "walCommit",
+    "commitOffsets",
+    "latestOffset",
+    "queryPlanning",
+    "triggerExecution",
+)
+
 
 @dataclass
 class BatchMetric:
@@ -24,6 +36,12 @@ class BatchMetric:
     watermark: str | None
     state_rows: int | None
     state_bytes: int | None = None  # stateOperators memoryUsedBytes sum
+    # DURATION_KEYS phases the progress event reported, in ms.
+    duration_ms: dict[str, int] = field(default_factory=dict)
+    # Sums over stateOperators; None for a query with no stateful operator.
+    state_commit_ms: int | None = None  # commitTimeMs
+    state_update_ms: int | None = None  # allUpdatesTimeMs
+    state_rows_removed: int | None = None  # numRowsRemoved
 
 
 @dataclass
@@ -80,9 +98,10 @@ class MetricsCollector:
 
 class BookPipelineListener(StreamingQueryListener):
     """Collects micro-batch progress for every streaming query on the
-    session: input rows, event-time watermark, and stateful-operator row
-    counts (the number of keys currently held — ladder size for the book
-    operator, seen-keys for dedup).
+    session: input rows, event-time watermark, the batch's ``durationMs``
+    split, and stateful-operator health — row counts (the number of keys
+    currently held: ladder size for the book operator, seen-keys for
+    dedup), state-store commit and update time, and rows evicted.
 
     ``state_bound_rows`` / ``state_bound_bytes`` (optional) arm a
     state-pressure alarm: any progress event whose summed
@@ -112,8 +131,13 @@ class BookPipelineListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: D102
         p = json.loads(event.progress.json)
         state = p.get("stateOperators") or []
-        state_rows = sum(s.get("numRowsTotal", 0) for s in state) if state else None
-        state_bytes = sum(s.get("memoryUsedBytes", 0) for s in state) if state else None
+
+        def state_sum(key: str) -> int | None:
+            return sum(s.get(key, 0) for s in state) if state else None
+
+        state_rows = state_sum("numRowsTotal")
+        state_bytes = state_sum("memoryUsedBytes")
+        durations = p.get("durationMs") or {}
         name = p.get("name") or p.get("id", "?")
         batch_id = p.get("batchId", -1)
         self.collector.batches.append(
@@ -124,6 +148,10 @@ class BookPipelineListener(StreamingQueryListener):
                 watermark=(p.get("eventTime") or {}).get("watermark"),
                 state_rows=state_rows,
                 state_bytes=state_bytes,
+                duration_ms={k: int(durations[k]) for k in DURATION_KEYS if k in durations},
+                state_commit_ms=state_sum("commitTimeMs"),
+                state_update_ms=state_sum("allUpdatesTimeMs"),
+                state_rows_removed=state_sum("numRowsRemoved"),
             )
         )
         over_rows = (

@@ -37,9 +37,12 @@ BUFFER_TOPICS = ("orderbook-snapshots", "orderbook-deltas")
 
 # Rows of dedup state per state-store instance below which adding more
 # stores costs more than it parallelizes (HDFS-backed provider: each
-# store pays a fixed per-batch open/commit — checkpoint delta file +
-# fsync — measured ~40 ms/store/batch on this box; r16 A/B: at a
-# 20k-row state, 4 and 8 partitions tie at ~2x the throughput of 32).
+# store pays a fixed per-batch open/commit — write and rename of its
+# checkpoint delta file — ~7 ms/store/batch on 4 vCPU with get_spark's
+# FileSystem checkpoint manager, ~85 ms under Spark's default FileContext
+# manager without libhadoop, where each rename forks `readlink`
+# (DEPLOY.md §1); r16 A/B, under that default: at a 20k-row state, 4 and
+# 8 partitions tie at ~2x the throughput of 32).
 # The sizing rule below GROWS the partition count linearly with the
 # expected state and saturates at defaultParallelism, so a production
 # state (millions of rows) gets every core exactly as before — this

@@ -438,7 +438,7 @@ def test_deltas_query_state_partitions_pinned_and_restored(spark, msg_dir, tmp_p
 # alarm/StateAlarm contract stays asserted below.
 @pytest.mark.filterwarnings("ignore:streaming state bound exceeded")
 def test_streaming_metrics_listener(spark, msg_dir, tmp_path):
-    from nt_etl_order_book_spark.streaming.metrics import BookPipelineListener
+    from nt_etl_order_book_spark.streaming.metrics import DURATION_KEYS, BookPipelineListener
 
     listener = BookPipelineListener()
     # Same replay drives the state-pressure alarm both ways (r13
@@ -478,10 +478,83 @@ def test_streaming_metrics_listener(spark, msg_dir, tmp_path):
         assert alarm.bound_rows == 0
         assert listener.collector.alarms == []  # bounds not armed
         assert loose.collector.alarms == []  # bounds armed but generous
+        # Every batch carries its durationMs split and the dedup store's
+        # commit/update time and evictions.
+        for b in listener.collector.batches:
+            assert set(b.duration_ms) == set(DURATION_KEYS), b.duration_ms
+            assert min(b.duration_ms.values()) >= 0
+            assert b.state_commit_ms >= 0 and b.state_update_ms >= 0
+            assert b.state_rows_removed >= 0
     finally:
         spark.streams.removeListener(listener)
         spark.streams.removeListener(tight)
         spark.streams.removeListener(loose)
+
+    # A stateless query reports the split but no state fields.
+    plain = BookPipelineListener()
+    spark.streams.addListener(plain)
+    try:
+        q = deltas_query(msgs, str(tmp_path / "p_out"), str(tmp_path / "p_cp"), dedup_within=None)
+        q.awaitTermination(60)
+        deadline = time.time() + 15
+        while time.time() < deadline and plain.collector.total_rows() < 4:
+            time.sleep(0.2)
+        assert plain.collector.total_rows() >= 4
+        for b in plain.collector.batches:
+            assert set(b.duration_ms) == set(DURATION_KEYS), b.duration_ms
+            assert (b.state_rows, b.state_commit_ms, b.state_update_ms, b.state_rows_removed) == (
+                None, None, None, None,
+            )
+    finally:
+        spark.streams.removeListener(plain)
+
+
+CFM = "org.apache.spark.sql.execution.streaming.checkpointing."
+CFM_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_file_manager(session, path: str):
+    """The manager a streaming query on ``session`` writes ``path`` with."""
+    jvm = session._jvm
+    conf = session._jsparkSession.sessionState().newHadoopConf()
+    return getattr(jvm, CFM + "CheckpointFileManager").create(jvm.org.apache.hadoop.fs.Path(path), conf)
+
+
+def test_get_spark_checkpoints_through_filesystem_api(spark, tmp_path):
+    # get_spark's sessions rename checkpoint files with FileSystem.rename
+    # (no readlink fork per rename without libhadoop); a non-overwrite
+    # write still fails if the file exists, so the metadata log keeps
+    # detecting a second writer of the same batch.
+    from py4j.protocol import Py4JJavaError
+
+    fm = _checkpoint_file_manager(spark, f"file:{tmp_path}")
+    assert fm.getClass().getName() == CFM + "FileSystemBasedCheckpointFileManager"
+    target = spark._jvm.org.apache.hadoop.fs.Path(f"file:{tmp_path / '0'}")
+    first = fm.createAtomic(target, False)
+    first.write(1)
+    first.close()
+    second = fm.createAtomic(target, False)
+    second.write(2)
+    with pytest.raises(Py4JJavaError) as exc:
+        second.close()
+    exists = spark._jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists.isInstance(exc.value.java_exception)
+    assert (tmp_path / "0").read_bytes() == bytes([1])  # the first writer's file stands
+
+
+def test_tune_session_leaves_callers_checkpoint_manager(spark, tmp_path):
+    # The manager is a get_spark builder constant, not a SESSION_CONFS
+    # entry: tune_session must not change the checkpoint semantics of a
+    # session a caller built with its own (here Spark's default) manager.
+    from nt_etl_order_book_spark.session import SESSION_CONFS, tune_session
+
+    assert CFM_KEY not in dict(SESSION_CONFS)
+    caller = spark.newSession()
+    caller.conf.set(CFM_KEY, CFM + "FileContextBasedCheckpointFileManager")
+    tune_session(caller)
+    assert caller.conf.get(CFM_KEY) == CFM + "FileContextBasedCheckpointFileManager"
+    fm = _checkpoint_file_manager(caller, f"file:{tmp_path}")
+    assert fm.getClass().getName() == CFM + "FileContextBasedCheckpointFileManager"
 
 
 def test_stateful_seq_gap_stream(spark, tmp_path):

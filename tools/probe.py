@@ -15,6 +15,7 @@ import gc
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -385,6 +386,10 @@ def drain(spark, op: str, shape: str, n_msgs: int, start, expect_rows: int | Non
     if wrote != expect_rows:
         raise RuntimeError(f"{op} sink wrote {wrote}, expected {expect_rows}")
     batches = [b for b in collector.batches if b.num_input_rows > 0]
+
+    def med(xs: list) -> float | None:
+        return statistics.median(xs) if xs else None
+
     row = {
         "op": op,
         "volume_msgs": n_msgs,
@@ -394,6 +399,8 @@ def drain(spark, op: str, shape: str, n_msgs: int, start, expect_rows: int | Non
         "msgs_per_sec": round(n_msgs / elapsed, 1),
         "peak_state_rows": max((b.state_rows or 0 for b in batches), default=0),
         "peak_state_mib": round(max((b.state_bytes or 0 for b in batches), default=0) / MB, 2),
+        "median_add_batch_ms": med([b.duration_ms["addBatch"] for b in batches if "addBatch" in b.duration_ms]),
+        "median_state_commit_ms": med([b.state_commit_ms for b in batches if b.state_commit_ms is not None]),
     }
     print(f"# {row}", file=sys.stderr)
     return row
@@ -455,12 +462,13 @@ def cmd_stream(args) -> int:
     for n_msgs in volumes:
         with replay(n_msgs, delta_msg) as msg_dir:
             rows += [run_deltas(spark, msg_dir, n_msgs, t) for t in triggers]
-    print("| op | volume | shape | batches | wall s | msg/s | peak state rows | peak state MiB |")
-    print("|---|---|---|---|---|---|---|---|")
+    print("| op | volume | shape | batches | wall s | msg/s | peak state rows | peak state MiB "
+          "| addBatch ms (median) | state commit ms (median) |")
+    print("|---|---|---|---|---|---|---|---|---|---|")
     for r in rows:
         print(f"| {r['op']} | {r['volume_msgs']:,} | {r['shape']} | {r['n_batches']} | "
               f"{r['elapsed_sec']} | {r['msgs_per_sec']:,} | {r['peak_state_rows']:,} | "
-              f"{r['peak_state_mib']} |")
+              f"{r['peak_state_mib']} | {r['median_add_batch_ms']} | {r['median_state_commit_ms']} |")
     print(json.dumps({"metric": "stream_third_decade" if args.third_decade else "stream_scale_probe", "rows": rows}))
     return 0
 
