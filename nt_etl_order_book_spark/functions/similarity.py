@@ -2,7 +2,8 @@
 
 `embeddings.embedding` is array<float> (64-dim). Dot products and norms
 are higher-order-function expressions (zip_with + aggregate) — fully
-JVM-side, no Python in the scoring loop.
+JVM-side, no Python in the scoring loop. The one Python step is the IVF
+cell assignment (ivf_assign): an Arrow-batched numpy matmul.
 
 Scale design: brute-force top-k broadcasts the (small) query set and
 scans the corpus once — the right baseline. The LSH variant buckets by
@@ -13,6 +14,7 @@ matching buckets (the classic IVF/LSH trade: recall vs pruning).
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -307,110 +309,6 @@ KMEANS_ITERS = 1
 TRAIN_MOD = 10  # k-means trains on ~1/TRAIN_MOD of the corpus (hash-sampled)
 
 
-def unit_vector(vec: Column) -> Column:
-    """L2-normalize (zero vectors → null elements, never a divide error)."""
-    n = norm(vec)
-    return F.transform(vec, lambda v: v.cast("double") / F.nullif(n, F.lit(0.0)))
-
-
-def nearest_cell(vec: Column, cents: Column) -> Column:
-    """Argmin over a UNIT-NORM centroid array — one HOF fold per row,
-    ZERO shuffle.
-
-    `cents` is an array<struct<cell,cvec>> attached to every row via a
-    broadcast of a single-row frame; the fold keeps the (cell, dot) pair
-    with the highest dot product (ties → lowest cell id). Centroids are
-    unit vectors (spherical k-means), and the row's own norm scales all
-    cells equally, so argmax(dot) ≡ argmax(cosine) with neither norm
-    computed — a third of the fold work. Replaces the round-1
-    broadcast-join×N_CELLS + Window.partitionBy(vec_id) ranking, which
-    shuffled corpus×N_CELLS expanded rows just to pick a max.
-
-    Delegates to _nearest_cell_sim (defined with semdedup, which also
-    needs the winning dot) so the tiebreak/init sentinel lives in ONE
-    fold — a divergence there would silently disagree on cell
-    boundaries between IVF assignment and the SemDeDup census.
-    """
-    return _nearest_cell_sim(vec, cents)["cell"]
-
-
-def kmeans_refine(train: DataFrame, cents_arr: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
-    """Spherical-k-means Lloyd iterations, fully distributed, no driver
-    collect.
-
-    Assignment: HOF argmin over the broadcast centroid array (narrow).
-    Update: posexplode to (cell, pos, x) then groupBy(cell, pos).avg —
-    map-side partial aggregation collapses each partition to ≤
-    N_CELLS×dim rows before the shuffle, so the exchange carries KBs
-    regardless of corpus size. New centroids are re-normalized
-    (spherical k-means: the mean direction is the cosine-metric
-    centroid) and re-collapse to a single-row array frame.
-
-    Each iteration ends in a checkpoint (reliable when the session has a
-    checkpoint dir, local otherwise — session.checkpoint_frame): the
-    codebook is one row of KBs, but its lineage grows a full Lloyd pass
-    per iteration — truncating it keeps Catalyst from re-optimizing (and
-    re-running) the whole nested training plan under every downstream
-    consumer (measured 2-3× on the end-to-end query). The checkpoint is
-    LAZY (eager=False): building the query plan must run no jobs —
-    training executes once, on the first downstream action, and later
-    consumers reuse the materialized blocks.
-    """
-    for _ in range(iters):
-        assigned = train.crossJoin(F.broadcast(cents_arr)).select(
-            F.col("embedding"),
-            nearest_cell(F.col("embedding"), F.col("cents")).alias("cell"),
-        )
-        cents_arr = (
-            assigned.select("cell", F.posexplode("embedding").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg(F.col("x").cast("double")).alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cell", unit_vector(F.transform(F.col("pm"), lambda s: s["m"])).alias("cvec"))
-            .agg(F.collect_list(F.struct("cell", "cvec")).alias("cents"))
-        )
-        cents_arr = checkpoint_frame(cents_arr, eager=False)
-    return cents_arr
-
-
-def ivf_codebook(emb: DataFrame, n_cells: int = N_CELLS) -> DataFrame:
-    """Trained IVF coarse quantizer as a 1-row array<struct<cell,cvec>>
-    frame (checkpointed — see kmeans_refine).
-
-    Seed centroids are the first ``n_cells`` vectors, collapsed to ONE
-    row — broadcasting this single row attaches the whole codebook to
-    every corpus row with no expansion. Refinement runs on a
-    deterministic 1/TRAIN_MOD hash-sample: k-means quality needs a
-    representative sample, not the full corpus — at 100 TB that is the
-    difference between cheap sample passes and full-corpus passes, with
-    identical codebook quality.
-    """
-    seed = (
-        emb.filter(F.col("vec_id") < n_cells)
-        .select(
-            F.struct(
-                F.col("vec_id").alias("cell"), unit_vector(F.col("embedding")).alias("cvec")
-            ).alias("c")
-        )
-        .agg(F.collect_list("c").alias("cents"))
-    )
-    train = emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(TRAIN_MOD)) == 0).select("embedding")
-    return kmeans_refine(train, seed)
-
-
-# Above this codebook size the IVF-PQ training paths auto-select the
-# Arrow-batched numpy assignment (ivf_codebook_rows +
-# ivf_residuals_arrow): the HOF argmin fold is O(C·D) INTERPRETED per
-# row — free at the 16-cell fixture (and it keeps the registered plans
-# 100% JVM, which tests/test_plans.py gates), but ~hours over a
-# 2M-vector encode at the measured-optimal √N ≈ 1414 cells (PERF.md
-# r13). 64 sits comfortably between the two regimes: the fixture and
-# every registered query stay JVM-side, while any DEPLOY.md §2-sized
-# codebook gets the BLAS matmul form faiss uses.
-ARROW_CELLS_THRESHOLD = 64
-
-
 def ivf_cells() -> int:
     """Effective coarse-quantizer size for the IVF-PQ train/apply
     lifecycle: ``SPARK_GRAFT_IVF_CELLS`` if set — DEPLOY.md §2's
@@ -452,44 +350,55 @@ def ivf_probe() -> int:
 
 
 def cents_frame(spark: SparkSession, cent_rows: list) -> DataFrame:
-    """The 1-row broadcastable codebook frame (ivf_codebook's schema)
-    rebuilt from driver-side [(cell, cvec), ...] rows — the bridge from
-    the Arrow-trained codebook back to the JVM query side, which
-    broadcasts the same single row either way."""
-    return (
-        spark.createDataFrame(cent_rows, "cell long, cvec array<double>")
-        .agg(F.collect_list(F.struct("cell", "cvec")).alias("cents"))
+    """The codebook as a 1-row broadcastable frame, built directly from
+    driver-side ``[(cell, cvec), ...]`` rows; the probe side and the
+    persisted ``cents.parquet`` read it. An aggregate here would plan an
+    extra Exchange SinglePartition. A list passed to createDataFrame
+    becomes a parallelized RDD whose defaultParallelism slices run
+    through Python workers on every broadcast (measured 2.5 s per use
+    at local[32] on 4 vCPU); one pandas row converts through Arrow to a
+    LocalRelation instead (0.3 s)."""
+    import pandas as pd
+
+    cents = [{"cell": int(c), "cvec": [float(v) for v in vec]} for c, vec in cent_rows]
+    return spark.createDataFrame(
+        pd.DataFrame({"cents": [cents]}), "cents array<struct<cell:long,cvec:array<double>>>"
     )
 
 
-def ivf_codebook_rows(emb: DataFrame, n_cells: int) -> list:
-    """Large-codebook spherical k-means, returning the codebook as
-    driver-side ``[(cell, cvec), ...]`` rows.
+def _unit(vec) -> list:
+    """L2-normalized driver-side vector, summed left to right in double
+    like norm(); a zero vector stays zero."""
+    acc = 0.0
+    for v in vec:
+        acc += float(v) * float(v)
+    n = math.sqrt(acc) or 1.0
+    return [float(v) / n for v in vec]
 
-    Same conventions as ivf_codebook — seeds are the first ``n_cells``
-    vec_ids (unit-normalized), KMEANS_ITERS Lloyd passes over the
-    deterministic 1/TRAIN_MOD hash-sample — with the per-row argmin run
-    as Arrow-batched numpy matmul (mapInPandas) instead of the
-    interpreted HOF fold, which is O(C·D) per row and impractical past
-    a few dozen cells. Per-cell partial sums reduce map-side (each
-    partition emits ≤ cells rows), the (cell, pos) shuffle carries
-    C×D doubles regardless of corpus size, and the centroid UPDATE
-    finishes at the driver — C×D ≈ 700 KB at 1414×64, the same
-    "query-side state" the 1-row codebook frame carries; never
-    corpus-sized. Two deviations from the JVM path, both deliberate:
 
-    - Empty cells keep their previous centroid (kmeans_refine's
-      collect_list silently drops them — harmless at 16 fixture cells,
-      but at √N cells a dropped cell would shrink the codebook).
-    - Not bit-identical: BLAS partial sums accumulate in a different
-      order than the JVM aggregation, so centroids can differ in the
-      last ulps and near-tie assignments can flip. The consumers are
-      recall-floored (tools/check.py --recall), not hash-matched, by
-      contract.
+def ivf_codebook(emb: DataFrame, n_cells: int = N_CELLS) -> tuple:
+    """Train the spherical-k-means IVF coarse quantizer once and return
+    it in both forms its consumers need: ``(cents_arr, cent_rows)`` —
+    the 1-row broadcastable frame (cents_frame: probes, cents.parquet)
+    and the same codebook as driver-side ``[(cell, cvec), ...]`` rows
+    (ivf_assign's numpy matmul).
+
+    Seeds are the first ``n_cells`` vec_ids, unit-normalized. KMEANS_ITERS
+    Lloyd passes run over a deterministic 1/TRAIN_MOD hash-sample: k-means
+    quality needs a representative sample, not the full corpus. Each pass
+    assigns with ivf_assign — the argmax the corpus itself gets — and
+    averages per (cell, pos) in Spark: map-side partial aggregation
+    collapses each partition to ≤ cells×dim rows, so the shuffle and the
+    collect carry C×D doubles at any corpus size (≈700 KB at 1414×64).
+    The new centroids are re-normalized at the driver.
+
+    A cell that no training vector reaches leaves the codebook, and the
+    surviving cells keep their seed ids. Every consumer reads the ids off
+    the codebook itself, so a sparse id set is served as-is. Keeping the
+    stale seed instead measured recall@5 0.940 → 0.900 (ann_ivf_topk) and
+    0.920 → 0.860 (ann_ivfpq_topk) at sf0.01, whose 45-vector sample
+    leaves one of 16 cells empty.
     """
-    import numpy as np
-    import pandas as pd
-
     seed_rows = emb.filter(F.col("vec_id") < n_cells).select("vec_id", "embedding").collect()
     if not seed_rows:
         raise ValueError(f"no seed vectors with vec_id < {n_cells}")
@@ -498,88 +407,78 @@ def ivf_codebook_rows(emb: DataFrame, n_cells: int) -> list:
         # a sparse vec_id space below n_cells) would silently train a
         # SMALLER codebook while the artifact cache key still claims
         # ivfpq_c{n_cells} — self-consistent results under a mislabeled
-        # geometry (r14 ADVICE). Fail loudly, mirroring the empty-seed
-        # check: the caller sizes cells to the corpus, not vice versa.
+        # geometry. Fail loudly: the caller sizes cells to the corpus.
         raise ValueError(
-            f"ivf_codebook_rows: {len(seed_rows)} seed vectors with "
+            f"ivf_codebook: {len(seed_rows)} seed vectors with "
             f"vec_id < {n_cells}, need exactly {n_cells} — is "
             "SPARK_GRAFT_IVF_CELLS larger than the corpus (or the "
             "vec_id space sparse below n_cells)?"
         )
-    cents = np.array(
-        [r["embedding"] for r in sorted(seed_rows, key=lambda r: r["vec_id"])],
-        dtype=np.float64,
-    )
-    norms = np.linalg.norm(cents, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    cents = cents / norms
-    train = emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(TRAIN_MOD)) == 0).select(
-        "embedding"
+    rows = sorted((int(r["vec_id"]), _unit(r["embedding"])) for r in seed_rows)
+    dim = len(rows[0][1])
+    # The sample is 1/TRAIN_MOD of every split, so TRAIN_MOD splits per
+    # training task hold as many rows as one corpus task. Each mapInPandas
+    # task pays a fixed Python round trip (measured ~0.35 s CPU per task
+    # on 4 vCPU), which would otherwise dominate training on small splits.
+    train = emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(TRAIN_MOD)) == 0).coalesce(
+        max(1, emb.rdd.getNumPartitions() // TRAIN_MOD)
     )
     for _ in range(KMEANS_ITERS):
-        c_bc = cents  # closure snapshot for this pass
-
-        def partials(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue  # np.stack raises on an empty Arrow batch
-                x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                idx = np.argmax(x @ c_bc.T, axis=1)
-                cells, inv = np.unique(idx, return_inverse=True)
-                sums = np.zeros((len(cells), x.shape[1]))
-                np.add.at(sums, inv, x)
-                yield pd.DataFrame({"cell": cells, "cnt": np.bincount(inv), "s": list(sums)})
-
-        agg = (
-            train.mapInPandas(partials, "cell long, cnt long, s array<double>")
-            .select("cell", "cnt", F.posexplode("s").alias("pos", "x"))
+        means = (
+            ivf_assign(train, rows)
+            .select("cell", F.posexplode("embedding").alias("pos", "x"))
             .groupBy("cell", "pos")
-            .agg(F.sum("cnt").alias("cnt"), F.sum("x").alias("sx"))
+            .agg(F.avg(F.col("x").cast("double")).alias("m"))
             .collect()
         )
-        sums = np.zeros_like(cents)
-        cnts = np.zeros(len(cents))
-        for r in agg:
-            sums[r["cell"], r["pos"]] = r["sx"]
-            cnts[r["cell"]] = r["cnt"]  # same per-cell total on every pos row
-        nonempty = cnts > 0
-        new = cents.copy()
-        new[nonempty] = sums[nonempty] / cnts[nonempty, None]
-        norms = np.linalg.norm(new, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        cents = new / norms
-    return [(int(i), [float(v) for v in row]) for i, row in enumerate(cents)]
-
-
-def ivf_codebook_state(emb: DataFrame, n_cells: int | None = None) -> tuple:
-    """(cents_arr frame, cent_rows-or-None): the auto-selected codebook
-    for the IVF-PQ training paths (r13 verdict item 2). At or below
-    ARROW_CELLS_THRESHOLD the JVM HOF path trains (rows is None — the
-    plan stays 100% whole-stage codegen and nothing is collected);
-    above it the Arrow k-means trains and the driver-side rows ride
-    along so ivf_residuals_auto can take the matmul assignment without
-    re-collecting the frame."""
-    n = ivf_cells() if n_cells is None else n_cells
-    if n <= ARROW_CELLS_THRESHOLD:
-        return ivf_codebook(emb, n), None
-    rows = ivf_codebook_rows(emb, n)
+        by_cell: dict = {}
+        for r in means:
+            by_cell.setdefault(int(r["cell"]), [0.0] * dim)[r["pos"]] = r["m"]
+        rows = [(c, _unit(v)) for c, v in sorted(by_cell.items())]
     return cents_frame(emb.sparkSession, rows), rows
 
 
-def ivf_assign(emb: DataFrame, cents_arr: DataFrame) -> DataFrame:
-    """Full-corpus cell assignment: one narrow projection, zero shuffle.
-    The row norm is per-vector, not per-pair — computed once here so
-    downstream per-candidate scoring is a single dot fold, not
-    dot + 2 norms."""
-    return emb.crossJoin(F.broadcast(cents_arr)).select(
-        "vec_id",
-        "embedding",
-        norm(F.col("embedding")).alias("enorm"),
-        nearest_cell(F.col("embedding"), F.col("cents")).alias("cell"),
+def ivf_assign(emb: DataFrame, cent_rows: list, *, residual: bool = False) -> DataFrame:
+    """(vec_id, embedding, enorm, cell): each vector's nearest cell, as
+    one Arrow-batched numpy matmul — X @ C.T and a row argmax, faiss
+    IndexIVF's assignment — narrow and shuffle-free. Centroids are unit
+    vectors and the row's own norm scales every cell equally, so
+    argmax(dot) ≡ argmax(cosine); ties go to the lowest cell id (rows
+    sorted by cell, np.argmax returns the first maximum). BLAS sums the
+    dots in its own order, so only a vector whose top two cells tie to
+    the last ulps can land in either.
+
+    enorm is norm() of the original vector, computed before the Python
+    step, and the embedding passes through unchanged — the cosines
+    downstream match the exact-scan queries bit for bit. With
+    ``residual=True`` the embedding is replaced by the IVF-PQ residual
+    (vector − its centroid, in double) in the same pass: the PQ
+    training/encode input.
+    """
+    import numpy as np
+
+    rows = sorted(cent_rows, key=lambda r: int(r[0]))
+    cells = np.array([int(c) for c, _ in rows], dtype=np.int64)
+    cents = np.array([v for _, v in rows], dtype=np.float64)
+
+    def assign(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue  # np.stack raises on an empty Arrow batch
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            idx = np.argmax(x @ cents.T, axis=1)
+            pdf["cell"] = cells[idx]
+            if residual:
+                pdf["embedding"] = list(x - cents[idx])
+            yield pdf
+
+    etype = "array<double>" if residual else emb.schema["embedding"].dataType.simpleString()
+    return emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("enorm")).mapInPandas(
+        assign, f"vec_id long, embedding {etype}, enorm double, cell long"
     )
 
 
-def write_ivf_index(emb: DataFrame, cents_arr: DataFrame, path: str) -> None:
+def write_ivf_index(emb: DataFrame, cent_rows: list, path: str) -> None:
     """Persist the corpus as an on-disk IVF index: assignment rows
     written `partitionBy("cell")`, one parquet directory per cell.
 
@@ -599,7 +498,7 @@ def write_ivf_index(emb: DataFrame, cents_arr: DataFrame, path: str) -> None:
     build. Incremental upserts belong to a table format with deletes
     (Delta/Iceberg), not raw parquet."""
     (
-        ivf_assign(emb, cents_arr)
+        ivf_assign(emb, cent_rows)
         # Keyed on cell so each task writes whole cell directories —
         # the narrow assignment keeps the scan partitioning, so an
         # unkeyed partitionBy write sprays tasks×cells tiny files (see
@@ -618,9 +517,10 @@ def write_ivf_index(emb: DataFrame, cents_arr: DataFrame, path: str) -> None:
     doc=(
         f"ANN via IVF (inverted file): k-means-refined coarse quantizer "
         f"({N_CELLS} cells, {KMEANS_ITERS} Lloyd iterations on a "
-        f"deterministic 1/{TRAIN_MOD} hash-sample); corpus assigned to its "
-        "nearest cell by a zero-shuffle HOF argmin over the broadcast "
-        f"centroid array; each query scores only its {N_PROBE} nearest "
+        f"deterministic 1/{TRAIN_MOD} hash-sample; a cell no sample vector "
+        "reaches leaves the codebook); corpus assigned to its nearest cell "
+        "by a zero-shuffle Arrow-batched numpy matmul argmax (mapInPandas); "
+        f"each query scores only its {N_PROBE} nearest "
         "cells. At 100 TB you persist the corpus bucketed by cell "
         "(write_ivf_index: partitionBy('cell'); partition pruning on "
         "probe reads is plan-asserted in tests) and probing prunes the "
@@ -629,19 +529,22 @@ def write_ivf_index(emb: DataFrame, cents_arr: DataFrame, path: str) -> None:
 )
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cents_arr = ivf_codebook(emb)
-    # spread ONLY the assignment input: the argmin fold and the
-    # per-candidate dot products downstream of the cell join are the
-    # query's CPU, and on the single-row-group fixture they otherwise
-    # run as ONE task (measured: an 0.8 s single-task stage inside the
-    # 2.0 s wall, r15 optimization round). The training/query branches
-    # stay on the raw scan so the exchange isn't duplicated under every
-    # consumer of `emb`.
-    assigned = ivf_assign(spread(emb, "vec_id"), cents_arr)
+    cents_arr, cent_rows = ivf_codebook(emb)
+    # spread ONLY the assignment output: the per-candidate dot products
+    # downstream of the cell join are the query's CPU, and on the
+    # single-row-group fixture they otherwise run as ONE task (measured:
+    # an 0.8 s single-task stage inside the 2.0 s wall, r15 optimization
+    # round). The assignment itself runs before the exchange, on the
+    # scan's own splits: each mapInPandas task pays a Python round trip
+    # (measured at local[32] on 4 vCPU: 32 tasks 2.2-2.8 s vs 1 task
+    # 0.4 s for the same 500 rows). The training/query
+    # branches stay on the raw scan so the exchange isn't duplicated
+    # under every consumer of `emb`.
+    assigned = spread(ivf_assign(emb, cent_rows), "vec_id")
     # Each query probes its N_PROBE nearest refined cells. Probe selection
-    # is a HOF over the SAME broadcast codebook array the assignment uses:
-    # sort (−dot, cell) ascending ≡ (dot desc, cell asc) and slice the
-    # head — replaces the earlier crossJoin(cent_rows) + Window rank,
+    # is a HOF over the broadcast 1-row form of the SAME codebook the
+    # assignment uses: sort (−dot, cell) ascending ≡ (dot desc, cell asc)
+    # and slice the head — replaces the earlier crossJoin + Window rank,
     # which cost an extra broadcast exchange and a window shuffle just to
     # pick 4 of 16 cells per query.
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
@@ -992,7 +895,7 @@ def _subvecs(vec: Column) -> Column:
 
 def _nearest_pos(sv: Column, cents: Column) -> Column:
     """0-based ARRAY POSITION of the L2-nearest centroid — one HOF fold,
-    zero shuffle (the PQ twin of nearest_cell).
+    zero shuffle.
 
     Positions, not centroid labels: codes index straight into the
     query-side lookup table built from the SAME cents array, so the two
@@ -1036,7 +939,7 @@ def pq_codebook(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     1/TRAIN_MOD hash-sample, all PQ_M subspaces trained in ONE grouped
     pass (keys (sub, pos, dim) — the update exchange carries at most
     PQ_M×PQ_K×PQ_DSUB rows per partition, KBs at any corpus size).
-    Checkpointed per iteration like the IVF codebook (lineage cut).
+    Checkpointed per iteration (lineage cut).
     """
     seed = emb.filter(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").cast("int").alias("pos"),
@@ -1200,17 +1103,9 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_TAU = DEDUP_COS_TAU  # same fixture calibration as embed_cosine_dedup
 
 
-def _nearest_cell_sim(vec: Column, cents: Column) -> Column:
-    """(cell, sim) of the best unit-norm centroid — nearest_cell's fold,
-    keeping the winning dot product (sim = ‖vec‖·cos_to_centroid)."""
-    init = F.struct(F.lit(-1).cast("long").alias("cell"), F.lit(-1e300).alias("sim"))
-
-    def step(acc: Column, c: Column) -> Column:
-        s = dot(vec, c["cvec"])
-        better = (s > acc["sim"]) | ((s == acc["sim"]) & (c["cell"] < acc["cell"]))
-        return F.when(better, F.struct(c["cell"].alias("cell"), s.alias("sim"))).otherwise(acc)
-
-    return F.aggregate(cents, init, step)
+def _cell_cvec(cents: Column, cell: Column) -> Column:
+    """Centroid vector for a cell id out of the broadcast codebook array."""
+    return F.element_at(F.filter(cents, lambda c: c["cell"] == cell), 1)["cvec"]
 
 
 @register(
@@ -1220,8 +1115,8 @@ def _nearest_cell_sim(vec: Column, cents: Column) -> Column:
     doc=(
         "SemDeDup (Abbas et al. 2023): per-k-means-cell semantic-dup "
         f"audit. Vectors assigned to {N_CELLS} spherical-k-means cells "
-        "by the zero-shuffle HOF argmin (ivf_codebook reused); within a "
-        f"cell, pairs with cosine ≥ {SEMDEDUP_TAU} are semantic dups "
+        "by ivf_assign's zero-shuffle numpy argmax (ivf_codebook reused); "
+        f"within a cell, pairs with cosine ≥ {SEMDEDUP_TAU} are semantic dups "
         "and the member FARTHEST from the centroid survives (the "
         "paper's diversity rule; vec_id tiebreak). Returns per-cell "
         "(n_vecs, n_dup_pruned, n_kept). Within-cell cost is cell² — "
@@ -1235,30 +1130,30 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nt_etl_order_book_spark.session import checkpoint_frame
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents_arr = ivf_codebook(emb)
-    # spread (r15 optimization round): the corpus-sized HOF argmin below
-    # otherwise runs in the single-row-group scan's one task (measured:
-    # a 0.5-0.6 s single-task checkpoint-materialization stage); the
-    # codebook training branch stays on the raw scan. No-op at scale.
-    scored = spread(emb, "vec_id").crossJoin(F.broadcast(cents_arr)).select(
-        "vec_id",
-        "embedding",
-        norm(F.col("embedding")).alias("enorm"),
-        _nearest_cell_sim(F.col("embedding"), F.col("cents")).alias("best"),
-    )
-    # cos to own centroid: centroids are unit vectors, so best.sim is
-    # ‖v‖·cos — one division, no second fold. Checkpointed (r9): FOUR
+    cents_arr, cent_rows = ivf_codebook(emb)
+    # spread (r15 optimization round): the centroid dots below otherwise
+    # run in the single-row-group scan's one task (measured: a 0.5-0.6 s
+    # single-task checkpoint-materialization stage); it follows the
+    # assignment so mapInPandas runs on the scan's splits (see
+    # ann_ivf_topk). No-op at scale.
+    # cos to own centroid: centroids are unit vectors, so dot(v, c) is
+    # ‖v‖·cos — one dot and one division per row. Checkpointed (r9): FOUR
     # consumers (cell census, both pair sides, final inventory join)
-    # otherwise each re-run the corpus-sized HOF-argmin assignment —
-    # measured 4.0-4.5 s → 2.8-3.6 s at sf0.1 (the remainder is the
-    # per-call codebook training, shared with every IVF query).
+    # otherwise each re-run the corpus-sized assignment — measured
+    # 4.0-4.5 s → 2.8-3.6 s at sf0.1 (the remainder is the per-call
+    # codebook training, shared with every IVF query).
     assigned = checkpoint_frame(
-        scored.select(
+        spread(ivf_assign(emb, cent_rows), "vec_id")
+        .crossJoin(F.broadcast(cents_arr))
+        .select(
             "vec_id",
             "embedding",
             "enorm",
-            F.col("best.cell").alias("cell"),
-            (F.col("best.sim") / F.nullif(F.col("enorm"), F.lit(0.0))).alias("ccos"),
+            "cell",
+            (
+                dot(F.col("embedding"), _cell_cvec(F.col("cents"), F.col("cell")))
+                / F.nullif(F.col("enorm"), F.lit(0.0))
+            ).alias("ccos"),
         )
     )
     # Quadratic guard: oversized cells are excluded from PAIRING only —
@@ -1354,101 +1249,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVFPQ_CAND = 200
 
 
-def _cell_cvec(cents: Column, cell: Column) -> Column:
-    """Centroid vector for a cell id out of the broadcast codebook array."""
-    return F.element_at(F.filter(cents, lambda c: c["cell"] == cell), 1)["cvec"]
-
-
-def ivfpq_residuals(emb: DataFrame, cents_arr: DataFrame) -> DataFrame:
-    """(vec_id, cell, enorm, embedding=residual): each vector minus its
-    cell centroid — the PQ training/encode input. vec_id rides along so
-    pq_codebook's seed/sample conventions apply unchanged; enorm is the
-    ORIGINAL norm (the cosine denominator downstream)."""
-    assigned = ivf_assign(emb, cents_arr)
-    return assigned.crossJoin(F.broadcast(cents_arr)).select(
-        "vec_id",
-        "cell",
-        "enorm",
-        F.zip_with(
-            F.col("embedding"),
-            _cell_cvec(F.col("cents"), F.col("cell")),
-            lambda x, c: x.cast("double") - c,
-        ).alias("embedding"),
-    )
-
-
-def ivf_residuals_arrow(emb: DataFrame, cent_rows: list) -> DataFrame:
-    """(vec_id, cell, enorm, embedding=residual) — ivfpq_residuals'
-    contract computed the LARGE-CODEBOOK way: Arrow-batched numpy
-    matmul instead of the per-row HOF argmin fold.
-
-    The HOF path above is the right shape for fixture codebooks
-    (N_CELLS=16: O(C·D) interpreted per row is free, and the plan stays
-    100% JVM — the registered queries keep it). Production sizes
-    N_CELLS ~ √N with the corpus (DEPLOY.md §2) — thousands of cells —
-    where an interpreted fold is O(hours) over a 2M-row encode and the
-    industry form is a BLAS matmul: X @ C.T, argmax rows (faiss's
-    IndexIVF assignment). This is that form: one mapInPandas pass
-    (the sanctioned Arrow boundary, same as multimodal decode), numpy
-    doing C·D work per row at matmul throughput. Semantics mirror
-    nearest_cell to floating-point tolerance: argmax(dot) over unit
-    centroids, ties → the LOWEST cell id (cent_rows are sorted by
-    cell; np.argmax returns the first maximum). NOT guaranteed
-    bit-identical: BLAS matmul sums in a different order than the
-    sequential HOF fold, so a near-tie dot can flip the argmax between
-    the two paths — harmless for ANN quality (the flipped vector is
-    equidistant to both cells) and exactly the tolerance level the
-    parity test asserts (tests/test_skew_and_ann.py).
-
-    ``cent_rows`` is the codebook as driver-side [(cell, cvec), ...] —
-    query-side state, C×D doubles (≈700 KB at 1414×64), the same object
-    the HOF path ships as a broadcast 1-row frame. Reached from the
-    registered IVF-PQ paths only above ARROW_CELLS_THRESHOLD via
-    ivf_residuals_auto (the fixture's 16-cell codebook keeps the
-    JVM-only plan; tests/test_plans.py gates that boundary); also
-    driven directly by `tools/probe.py ann-cells` for the √N-cell
-    scale probe.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = sorted(cent_rows, key=lambda r: int(r[0]))
-    cells_np = np.array([int(c) for c, _ in rows], dtype=np.int64)
-    cents_np = np.array([list(map(float, v)) for _, v in rows], dtype=np.float64)
-
-    def assign(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue  # np.stack raises on an empty Arrow batch
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            idx = np.argmax(x @ cents_np.T, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell": cells_np[idx],
-                    "enorm": np.sqrt((x * x).sum(axis=1)),
-                    "embedding": list(x - cents_np[idx]),
-                }
-            )
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        assign, "vec_id long, cell long, enorm double, embedding array<double>"
-    )
-
-
-def ivf_residuals_auto(emb: DataFrame, cents_arr: DataFrame, cent_rows: list | None) -> DataFrame:
-    """Residual-assignment dispatch for the IVF-PQ training paths (r13
-    verdict item 2): the HOF fold (100% JVM plan, zero Python boundary)
-    when ivf_codebook_state stayed on the fixture path (cent_rows is
-    None), the Arrow matmul when it trained the large codebook. The two
-    paths agree to floating-point tolerance (pinned at the switch
-    boundary in tests/test_skew_and_ann.py); consumers are
-    recall-floored, not hash-matched, by contract."""
-    if cent_rows is None:
-        return ivfpq_residuals(emb, cents_arr)
-    return ivf_residuals_arrow(emb, cent_rows)
-
-
 def ivfpq_encode(resid: DataFrame, books: DataFrame) -> DataFrame:
     """(vec_id, cell, enorm, codes): the IVF-PQ index rows — residual
     positional codes behind the same shuffle barrier as pq_encode."""
@@ -1464,7 +1264,7 @@ def ivfpq_encode(resid: DataFrame, books: DataFrame) -> DataFrame:
     return enc.repartition(resid.sparkSession.sparkContext.defaultParallelism, "vec_id")
 
 
-def write_ivfpq_index(emb: DataFrame, cents_arr: DataFrame, books: DataFrame, path: str) -> None:
+def write_ivfpq_index(emb: DataFrame, cent_rows: list, books: DataFrame, path: str) -> None:
     """Persist the IVF-PQ index: residual-code rows `partitionBy("cell")`
     — write_ivf_index's directory layout with PQ_M small ints + one
     norm per vector instead of the raw floats, so a probe read prunes
@@ -1475,7 +1275,7 @@ def write_ivfpq_index(emb: DataFrame, cents_arr: DataFrame, books: DataFrame, pa
     frames the caller persists/broadcasts separately — they are the
     query-side state, not scan data."""
     (
-        ivfpq_encode(ivfpq_residuals(emb, cents_arr), books)
+        ivfpq_encode(ivf_assign(emb, cent_rows, residual=True), books)
         # Keyed on cell so each task writes whole cell directories —
         # see ivfpq_train: the unkeyed write sprays tasks×cells tiny
         # files, which tripled the probe wall at 2M vectors (per-file
@@ -1494,9 +1294,10 @@ def write_ivfpq_index(emb: DataFrame, cents_arr: DataFrame, books: DataFrame, pa
     # quantitative guard = tools/check.py --recall.
     doc=(
         f"ANN via IVF-PQ (faiss IndexIVFPQ shape): spherical-k-means "
-        f"coarse quantizer routes each vector to a cell (zero-shuffle "
-        f"HOF argmin, shared with ann_ivf_topk), PQ codebooks train on "
-        f"the RESIDUALS (vector − centroid) and compress each vector to "
+        f"coarse quantizer routes each vector to a cell (ivf_assign's "
+        f"zero-shuffle numpy argmax, shared with ann_ivf_topk), PQ "
+        f"codebooks train on the RESIDUALS (vector − centroid) and "
+        f"compress each vector to "
         f"{PQ_M * 4} bits; a query probes its {N_PROBE}/{N_CELLS} "
         "nearest cells and scores their codes as dot(q, centroid) + "
         "ADC(residual codes) — cell pruning and byte compression "
@@ -1506,19 +1307,20 @@ def write_ivfpq_index(emb: DataFrame, cents_arr: DataFrame, books: DataFrame, pa
 )
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cents_arr, cent_rows = ivf_codebook_state(emb)
+    cents_arr, cent_rows = ivf_codebook(emb, ivf_cells())
     # Residuals staged once (r9): both consumers — PQ codebook training
     # (sampled collect) and the full encode pass — otherwise re-run the
     # corpus-sized argmin-assignment + centroid-subtract pipeline.
     # Measured 3.7-4.0 s → 3.0-3.2 s at sf0.1, results identical. At
     # index-build scale this is the materialized residual table
     # IndexIVFPQ training reads anyway.
-    # spread (r15 optimization round): the argmin+subtract pipeline and
-    # everything downstream of the checkpoint (encode, ADC scoring)
-    # otherwise run in the single-row-group scan's one task; the
-    # checkpointed RDD keeps the spread partitioning, so the encode and
-    # query stages inherit the parallelism (no-op at scale).
-    resid = checkpoint_frame(ivf_residuals_auto(spread(emb, "vec_id"), cents_arr, cent_rows))
+    # spread (r15 optimization round): everything downstream of the
+    # checkpoint (encode, ADC scoring) otherwise runs in the
+    # single-row-group scan's one task; the checkpointed RDD keeps the
+    # spread partitioning, so the encode and query stages inherit the
+    # parallelism (no-op at scale). It follows the assignment so
+    # mapInPandas runs on the scan's splits (see ann_ivf_topk).
+    resid = checkpoint_frame(spread(ivf_assign(emb, cent_rows, residual=True), "vec_id"))
     books = pq_codebook(resid)
     enc = ivfpq_encode(resid, books)
     return ivfpq_query(emb, cents_arr, books, enc)
@@ -1611,14 +1413,12 @@ def ivfpq_train(emb: DataFrame, path: str) -> None:
     cost (`ann_ivfpq_apply`), never the two k-means trainings.
 
     Codebook size comes from ivf_cells() (SPARK_GRAFT_IVF_CELLS, else
-    the N_CELLS fixture default); above ARROW_CELLS_THRESHOLD the
-    training auto-selects the Arrow assignment path, which is what
-    makes DEPLOY.md §2's √N sizing executable — registered training at
-    the measured-optimal 1414 cells completes in minutes instead of
-    the HOF fold's hours (r13 verdict item 2).
+    the N_CELLS fixture default); the numpy matmul assignment is what
+    makes DEPLOY.md §2's √N sizing executable — training at the
+    measured-optimal 1414 cells completes in minutes.
     """
-    cents_arr, cent_rows = ivf_codebook_state(emb)
-    resid = checkpoint_frame(ivf_residuals_auto(emb, cents_arr, cent_rows))
+    cents_arr, cent_rows = ivf_codebook(emb, ivf_cells())
+    resid = checkpoint_frame(ivf_assign(emb, cent_rows, residual=True))
     books = pq_codebook(resid)
     cents_arr.write.mode("overwrite").parquet(f"{path}/cents.parquet")
     books.write.mode("overwrite").parquet(f"{path}/books.parquet")
@@ -1743,8 +1543,8 @@ def q_ann_ivfpq_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ann_ivfpq_topk composition) instead of raising FileNotFoundError
     # out of corpus_fingerprint.
     if not os.path.exists(os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")):
-        cents_arr, cent_rows = ivf_codebook_state(emb)
-        resid = checkpoint_frame(ivf_residuals_auto(emb, cents_arr, cent_rows))
+        cents_arr, cent_rows = ivf_codebook(emb, ivf_cells())
+        resid = checkpoint_frame(ivf_assign(emb, cent_rows, residual=True))
         books = pq_codebook(resid)
         return ivfpq_query(emb, cents_arr, books, ivfpq_encode(resid, books))
     from pyspark.errors import AnalysisException

@@ -379,7 +379,7 @@ def test_ivf_index_write_prunes_partitions_on_probe_read(spark, sf_dir, tmp_path
     from nt_etl_order_book_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf_codebook(emb)
+    _, cents = ivf_codebook(emb)
     idx = str(tmp_path / "ivf_index")
     write_ivf_index(emb, cents, idx)
 
@@ -420,7 +420,7 @@ def test_ivf_index_rebuild_leaves_no_stale_cells(spark, sf_dir, tmp_path):
     from nt_etl_order_book_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf_codebook(emb)
+    _, cents = ivf_codebook(emb)
     idx = str(tmp_path / "ivf_rebuild")
     write_ivf_index(emb, cents, idx)
 
@@ -446,7 +446,7 @@ def test_ivf_index_rebuild_static_even_under_global_dynamic_mode(spark, sf_dir, 
     from nt_etl_order_book_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf_codebook(emb)
+    _, cents = ivf_codebook(emb)
     idx = str(tmp_path / "ivf_rebuild_dyn")
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
@@ -643,17 +643,17 @@ def test_ivfpq_index_write_prunes_and_round_trips(spark, sf_dir, tmp_path):
 
     from nt_etl_order_book_spark.functions.similarity import (
         N_CELLS,
+        ivf_assign,
         ivf_codebook,
         ivfpq_encode,
-        ivfpq_residuals,
         pq_codebook,
         write_ivfpq_index,
     )
     from nt_etl_order_book_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf_codebook(emb)
-    resid = ivfpq_residuals(emb, cents)
+    _, cents = ivf_codebook(emb)
+    resid = ivf_assign(emb, cents, residual=True)
     books = pq_codebook(resid)
     idx = str(tmp_path / "ivfpq_index")
     write_ivfpq_index(emb, cents, books, idx)
@@ -875,34 +875,94 @@ def test_skew_lifecycle_family_bounded_on_hot_market(spark, hot_market_dir):
     assert wall < 120, f"lifecycle family took {wall:.0f}s on the hot-market corpus"
 
 
-def test_ivf_residuals_arrow_matches_hof_path(spark, sf_dir):
-    # The large-codebook Arrow assignment (ivf_residuals_arrow, r13)
-    # must mirror the HOF argmin EXACTLY — same cell per vector (ties →
-    # lowest cell id), same residuals to float tolerance — or the √N-
-    # cell probe would measure a different index than the one the
-    # registered queries build.
+@pytest.mark.parametrize("n_cells", [16, 100])
+def test_ivf_assign_matches_python_oracle(spark, sf_dir, n_cells):
+    # The one IVF assignment (numpy matmul argmax in ivf_assign) against
+    # a pure-Python oracle: sequential double dot per centroid, argmax,
+    # ties to the lowest cell id. BLAS may sum a dot in another order,
+    # so the cell must match wherever the top-two gap exceeds 1e-12;
+    # enorm and the IVF-PQ residual must match to 1e-9, and the
+    # pass-through embedding must be the stored vector exactly. 100
+    # cells outnumber the fixture's 45-vector training sample, so most
+    # seeds leave the codebook and the surviving ids are sparse.
     from nt_etl_order_book_spark.functions import similarity as sim
     from nt_etl_order_book_spark.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents_arr = sim.ivf_codebook(emb)
-    [crow] = cents_arr.collect()
-    cent_rows = [(c["cell"], list(c["cvec"])) for c in crow["cents"]]
+    def seq_dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += float(x) * float(y)
+        return acc
 
-    hof = {
-        r["vec_id"]: (r["cell"], r["enorm"], list(r["embedding"]))
-        for r in sim.ivfpq_residuals(emb, cents_arr).collect()
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents_arr, rows = sim.ivf_codebook(emb, n_cells)
+    ids = [c for c, _v in rows]
+    assert ids == sorted(set(ids)) and set(ids) <= set(range(n_cells))
+    [frame_row] = cents_arr.collect()
+    assert [(c["cell"], list(c["cvec"])) for c in frame_row["cents"]] == [
+        (c, list(v)) for c, v in rows
+    ]
+    cvec = dict(rows)
+
+    orig = {r["vec_id"]: list(r["embedding"]) for r in emb.select("vec_id", "embedding").collect()}
+    plain = {r["vec_id"]: r for r in sim.ivf_assign(emb, rows).collect()}
+    resid = {r["vec_id"]: r for r in sim.ivf_assign(emb, rows, residual=True).collect()}
+    assert plain.keys() == resid.keys() == orig.keys()
+    decided = 0
+    for vid, x in orig.items():
+        scores = sorted((-seq_dot(x, v), c) for c, v in rows)
+        p, r = plain[vid], resid[vid]
+        assert p["cell"] == r["cell"] and p["cell"] in cvec
+        if len(scores) < 2 or scores[1][0] - scores[0][0] > 1e-12:
+            assert p["cell"] == scores[0][1], f"vec {vid}: {p['cell']} != {scores[0][1]}"
+            decided += 1
+        assert abs(p["enorm"] - seq_dot(x, x) ** 0.5) < 1e-9
+        assert abs(r["enorm"] - p["enorm"]) < 1e-9
+        assert list(p["embedding"]) == x
+        want = [float(a) - b for a, b in zip(x, cvec[p["cell"]])]
+        assert max(abs(a - b) for a, b in zip(r["embedding"], want)) < 1e-9
+    assert decided >= 0.9 * len(orig)
+
+
+def test_ivf_codebook_drops_a_cell_no_training_vector_reaches(spark):
+    # Empty-cell policy: a seed that no training vector reaches leaves
+    # the codebook, and every other cell keeps its seed id. Constructed
+    # so exactly one seed (`lone`, itself outside the hash-sample) sits
+    # in a direction no sampled vector comes near, while every other
+    # cluster gets at least one sampled vector.
+    import numpy as np
+
+    from nt_etl_order_book_spark.functions import similarity as sim
+
+    n = sim.N_CELLS
+    n_vecs = n + 400
+    sampled = {
+        r.id
+        for r in spark.range(n_vecs)
+        .filter(F.pmod(F.xxhash64("id"), F.lit(sim.TRAIN_MOD)) == 0)
+        .collect()
     }
-    arrow = {
-        r["vec_id"]: (r["cell"], r["enorm"], list(r["embedding"]))
-        for r in sim.ivf_residuals_arrow(emb, cent_rows).collect()
-    }
-    assert hof.keys() == arrow.keys()
-    for vid, (cell, enorm, resid) in hof.items():
-        a_cell, a_enorm, a_resid = arrow[vid]
-        assert a_cell == cell, f"vec {vid}: cell {a_cell} != HOF {cell}"
-        assert abs(a_enorm - enorm) < 1e-9
-        assert max(abs(x - y) for x, y in zip(a_resid, resid)) < 1e-9
+    lone = min(set(range(n)) - sampled)
+    others = [c for c in range(n) if c != lone]
+    rng = np.random.default_rng(29)
+    centers = rng.normal(size=(n, 64))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    rows = [(vid, [float(x) for x in centers[vid]]) for vid in range(n)]
+    k_in, k_out = 0, 0
+    for vid in range(n, n_vecs):
+        if vid in sampled:
+            c, k_in = others[k_in % len(others)], k_in + 1
+        else:
+            c, k_out = others[k_out % len(others)], k_out + 1
+        rows.append((vid, [float(x) for x in centers[c] + 0.05 * rng.normal(size=64)]))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    cents_arr, cent_rows = sim.ivf_codebook(emb)
+    assert [c for c, _v in cent_rows] == others
+    [frame_row] = cents_arr.collect()
+    assert [c["cell"] for c in frame_row["cents"]] == others
+    cells = {r.cell for r in sim.ivf_assign(emb, cent_rows).select("cell").distinct().collect()}
+    assert cells == set(others)
 
 
 def test_ivf_cells_env_and_threshold_dispatch(monkeypatch):
@@ -921,42 +981,6 @@ def test_ivf_cells_env_and_threshold_dispatch(monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_IVF_CELLS", bad)
         with pytest.raises(ValueError):
             sim.ivf_cells()
-
-
-def test_ivf_codebook_state_switch_boundary_parity(spark, sf_dir):
-    # The dispatch itself, pinned AT the boundary (r13 verdict item 2):
-    # at ARROW_CELLS_THRESHOLD the JVM HOF path trains (no driver rows,
-    # plan stays whole-stage codegen); one past it the Arrow k-means
-    # trains — and on that SAME large codebook the two assignment forms
-    # (HOF fold vs numpy matmul) agree cell-for-cell to float tolerance,
-    # so flipping the switch can never change which index a deployment
-    # serves beyond last-ulp ties.
-    from nt_etl_order_book_spark.functions import similarity as sim
-    from nt_etl_order_book_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, rows_at = sim.ivf_codebook_state(emb, sim.ARROW_CELLS_THRESHOLD)
-    assert rows_at is None, "threshold itself must stay on the JVM path"
-
-    n = sim.ARROW_CELLS_THRESHOLD + 1
-    ca, rows = sim.ivf_codebook_state(emb, n)
-    assert rows is not None and len(rows) == n
-    assert [c for c, _v in rows] == list(range(n))
-
-    hof = {
-        r["vec_id"]: (r["cell"], r["enorm"], list(r["embedding"]))
-        for r in sim.ivfpq_residuals(emb, ca).collect()
-    }
-    arrow = {
-        r["vec_id"]: (r["cell"], r["enorm"], list(r["embedding"]))
-        for r in sim.ivf_residuals_arrow(emb, rows).collect()
-    }
-    assert hof.keys() == arrow.keys()
-    for vid, (cell, enorm, resid) in hof.items():
-        a_cell, a_enorm, a_resid = arrow[vid]
-        assert a_cell == cell, f"vec {vid}: cell {a_cell} != HOF {cell}"
-        assert abs(a_enorm - enorm) < 1e-9
-        assert max(abs(x - y) for x, y in zip(a_resid, resid)) < 1e-9
 
 
 def test_ivf_probe_env_knob_full_probe_is_exact(spark, sf_dir, monkeypatch):
@@ -997,4 +1021,4 @@ def test_codebook_seed_shortfall_fails_loudly(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     n = int(emb.count())
     with pytest.raises(ValueError, match="need exactly"):
-        sim.ivf_codebook_rows(emb, n + 7)
+        sim.ivf_codebook(emb, n + 7)

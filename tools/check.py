@@ -168,8 +168,8 @@ def dtype_audit(spark, con, qs, oracles, sf_dir: str, only: set[str]) -> int:
 # arithmetic — float32 list_cosine_similarity disagrees with Spark) and
 # recall@k per variant. Floors are corpus-calibrated: LSH multi-probe
 # measures 1.0 at sf0.01/sf0.1; IVF on an ISOTROPIC corpus is bounded by
-# probed mass ≈ N_PROBE/N_CELLS (0.5 at 8/16) plus rank luck — measured
-# 0.76 / 0.90 — the floor guards regressions on the worst-case corpus;
+# probed mass ≈ N_PROBE/N_CELLS (≈0.69 at 11/16) plus rank luck — measured
+# 0.940 / 0.920 — the floor guards regressions on the worst-case corpus;
 # clustering quality is asserted ≥0.9 in tests/test_skew_and_ann.py.
 # PQ on the isotropic corpus: ADC-ordering quality is the analog of
 # IVF's probed-mass bound — with PQ_CAND=200 re-ranked exactly, measured
