@@ -14,7 +14,7 @@ declarative: pair counts via a keyed aggregate, the argmax pair as a
 1-row TakeOrdered frame broadcast onto the word table, the greedy
 left-to-right merge as a per-row HOF fold. No driver-side data — the
 loop is a fixed N_BPE_MERGES rounds with a lineage-cutting checkpoint
-per round (the pq_codebook pattern).
+per round (the dedup.connected_components pattern).
 
 Exactness: the merge table has no SQL oracle by contract (iterative
 algorithm), but tests/test_bpe.py proves the full table EQUAL to a
@@ -156,8 +156,8 @@ def bpe_train(docs: DataFrame, n_merges: int = N_BPE_MERGES) -> DataFrame:
         )
         # Lineage grows a full pair-count + merge pass per round; the
         # checkpoint keeps Catalyst from re-optimizing (and re-running)
-        # the whole history under every later round (pq_codebook
-        # pattern). The frame is |vocab|-sized.
+        # the whole history under every later round (the
+        # dedup.connected_components pattern). The frame is |vocab|-sized.
         words = checkpoint_frame(words, eager=False)
     out = merge_rows[0]
     for m in merge_rows[1:]:

@@ -2,8 +2,9 @@
 
 `embeddings.embedding` is array<float> (64-dim). Dot products and norms
 are higher-order-function expressions (zip_with + aggregate) — fully
-JVM-side, no Python in the scoring loop. The one Python step is the IVF
-cell assignment (ivf_assign): an Arrow-batched numpy matmul.
+JVM-side, no Python in the scoring loop. The Python steps are the two
+nearest-centroid assignments, each an Arrow-batched numpy pass: the IVF
+cell (ivf_assign) and the PQ codes (pq_encode).
 
 Scale design: brute-force top-k broadcasts the (small) query set and
 scans the corpus once — the right baseline. The LSH variant buckets by
@@ -198,11 +199,24 @@ _PLANES: list[list[list[float]]] = [
 ]
 
 
+def one_row_frame(spark: SparkSession, name: str, ddl: str, value) -> DataFrame:
+    """``value`` as a 1-row broadcastable frame with the single column
+    ``name ddl``: the form every codebook and the LSH hyperplanes ship
+    in. One pandas row converts through Arrow to a LocalRelation. A list
+    passed to createDataFrame becomes a parallelized RDD whose
+    defaultParallelism slices run through Python workers on every
+    broadcast (measured 2.5-3.7 s per use at local[32] on 4 vCPU,
+    against 0.3-0.5 s for the pandas row)."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame({name: [value]}), f"{name} {ddl}")
+
+
 def planes_frame(spark: SparkSession) -> DataFrame:
     """The hyperplane tensor as a 1-row broadcastable frame (~20 KB):
     data in a LocalRelation instead of thousands of literal expression
     nodes in every consumer's analyzed plan."""
-    return spark.createDataFrame([(_PLANES,)], "planes array<array<array<double>>>")
+    return one_row_frame(spark, "planes", "array<array<array<double>>>", _PLANES)
 
 
 def rp_signatures(vec: Column, planes: Column) -> Column:
@@ -353,27 +367,38 @@ def cents_frame(spark: SparkSession, cent_rows: list) -> DataFrame:
     """The codebook as a 1-row broadcastable frame, built directly from
     driver-side ``[(cell, cvec), ...]`` rows; the probe side and the
     persisted ``cents.parquet`` read it. An aggregate here would plan an
-    extra Exchange SinglePartition. A list passed to createDataFrame
-    becomes a parallelized RDD whose defaultParallelism slices run
-    through Python workers on every broadcast (measured 2.5 s per use
-    at local[32] on 4 vCPU); one pandas row converts through Arrow to a
-    LocalRelation instead (0.3 s)."""
-    import pandas as pd
-
+    extra Exchange SinglePartition."""
     cents = [{"cell": int(c), "cvec": [float(v) for v in vec]} for c, vec in cent_rows]
-    return spark.createDataFrame(
-        pd.DataFrame({"cents": [cents]}), "cents array<struct<cell:long,cvec:array<double>>>"
-    )
+    return one_row_frame(spark, "cents", "array<struct<cell:long,cvec:array<double>>>", cents)
+
+
+def _sqnorm(vec) -> float:
+    """Σ vᵢ² summed left to right in double: the same operations as
+    norm() and dot(v, v)."""
+    acc = 0.0
+    for v in vec:
+        acc += float(v) * float(v)
+    return acc
 
 
 def _unit(vec) -> list:
     """L2-normalized driver-side vector, summed left to right in double
     like norm(); a zero vector stays zero."""
-    acc = 0.0
-    for v in vec:
-        acc += float(v) * float(v)
-    n = math.sqrt(acc) or 1.0
+    n = math.sqrt(_sqnorm(vec)) or 1.0
     return [float(v) / n for v in vec]
+
+
+def _train_sample(df: DataFrame) -> DataFrame:
+    """The deterministic ~1/TRAIN_MOD hash-sample every codebook trains
+    on: k-means quality needs a representative sample, not the full
+    corpus. The sample is 1/TRAIN_MOD of every split, so TRAIN_MOD splits
+    per training task hold as many rows as one corpus task. Each
+    mapInPandas task pays a fixed Python round trip (measured ~0.35 s
+    CPU per task on 4 vCPU), which would otherwise dominate training on
+    small splits."""
+    return df.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(TRAIN_MOD)) == 0).coalesce(
+        max(1, df.rdd.getNumPartitions() // TRAIN_MOD)
+    )
 
 
 def ivf_codebook(emb: DataFrame, n_cells: int = N_CELLS) -> tuple:
@@ -384,10 +409,9 @@ def ivf_codebook(emb: DataFrame, n_cells: int = N_CELLS) -> tuple:
     (ivf_assign's numpy matmul).
 
     Seeds are the first ``n_cells`` vec_ids, unit-normalized. KMEANS_ITERS
-    Lloyd passes run over a deterministic 1/TRAIN_MOD hash-sample: k-means
-    quality needs a representative sample, not the full corpus. Each pass
-    assigns with ivf_assign — the argmax the corpus itself gets — and
-    averages per (cell, pos) in Spark: map-side partial aggregation
+    Lloyd passes run over _train_sample. Each pass assigns with
+    ivf_assign — the argmax the corpus itself gets — and averages per
+    (cell, pos) in Spark: map-side partial aggregation
     collapses each partition to ≤ cells×dim rows, so the shuffle and the
     collect carry C×D doubles at any corpus size (≈700 KB at 1414×64).
     The new centroids are re-normalized at the driver.
@@ -416,13 +440,7 @@ def ivf_codebook(emb: DataFrame, n_cells: int = N_CELLS) -> tuple:
         )
     rows = sorted((int(r["vec_id"]), _unit(r["embedding"])) for r in seed_rows)
     dim = len(rows[0][1])
-    # The sample is 1/TRAIN_MOD of every split, so TRAIN_MOD splits per
-    # training task hold as many rows as one corpus task. Each mapInPandas
-    # task pays a fixed Python round trip (measured ~0.35 s CPU per task
-    # on 4 vCPU), which would otherwise dominate training on small splits.
-    train = emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(TRAIN_MOD)) == 0).coalesce(
-        max(1, emb.rdd.getNumPartitions() // TRAIN_MOD)
-    )
+    train = _train_sample(emb)
     for _ in range(KMEANS_ITERS):
         means = (
             ivf_assign(train, rows)
@@ -893,103 +911,97 @@ def _subvecs(vec: Column) -> Column:
     )
 
 
-def _nearest_pos(sv: Column, cents: Column) -> Column:
-    """0-based ARRAY POSITION of the L2-nearest centroid — one HOF fold,
-    zero shuffle.
+def books_frame(spark: SparkSession, book_rows: list) -> DataFrame:
+    """The PQ codebooks as a 1-row broadcastable frame, built from
+    pq_codebook's driver-side rows: column ``books``, an array (by
+    subspace) of array of struct<pos, cvec, n2>. The query LUTs and the
+    persisted ``books.parquet`` read it."""
+    books = [[{"pos": p, "cvec": c, "n2": _sqnorm(c)} for p, c in book] for book in book_rows]
+    return one_row_frame(
+        spark, "books", "array<array<struct<pos:int,cvec:array<double>,n2:double>>>", books
+    )
 
-    Positions, not centroid labels: codes index straight into the
-    query-side lookup table built from the SAME cents array, so the two
-    stay aligned by construction even when Lloyd leaves cells empty.
-    argmin ‖sv − c‖² ≡ argmin (‖c‖² − 2·sv·c) with ‖c‖² precomputed per
-    centroid — the row's own norm is constant across cells.
+
+def pq_codebook(emb: DataFrame, iters: int = KMEANS_ITERS) -> tuple:
+    """Train the per-subspace L2 k-means codebooks once and return them
+    in both forms their consumers need: ``(books_arr, book_rows)`` — the
+    1-row broadcastable frame (books_frame) and the same books as
+    driver-side rows, per subspace ``[(pos, cvec), ...]`` (pq_encode).
+
+    Seeds are the first PQ_K vec_ids sliced into PQ_M subspaces (the
+    ivf_codebook convention). Each Lloyd pass encodes _train_sample with
+    pq_encode — the codes the corpus itself gets — and averages per
+    (sub, code, dim) in Spark: map-side partial aggregation keeps the
+    shuffle and the collect at PQ_M×PQ_K×PQ_DSUB rows at any corpus size.
+    A position no training vector reaches leaves that subspace's book;
+    codes are array positions, not ``pos`` labels, so the query-side LUT
+    built from the same arrays stays aligned.
     """
-    indexed = F.transform(cents, lambda c, i: F.struct(i.alias("pos"), c.alias("c")))
-    init = F.struct(F.lit(-1).alias("pos"), F.lit(float("inf")).alias("d"))
-
-    def step(acc: Column, e: Column) -> Column:
-        d = e["c"]["n2"] - F.lit(2.0) * dot(sv, e["c"]["cvec"])
-        better = (d < acc["d"]) | ((d == acc["d"]) & (e["pos"] < acc["pos"]))
-        return F.when(better, F.struct(e["pos"].alias("pos"), d.alias("d"))).otherwise(acc)
-
-    return F.aggregate(indexed, init, step)["pos"]
-
-
-def _pq_collapse(rows: DataFrame) -> DataFrame:
-    """(sub, pos, cvec) rows → 1-row `books` frame:
-    array (by sub) of array of struct<pos, cvec, n2>."""
-    return (
-        rows.select(
-            "sub",
-            F.struct(
-                F.col("pos"), F.col("cvec"), dot(F.col("cvec"), F.col("cvec")).alias("n2")
-            ).alias("c"),
-        )
-        .groupBy("sub")
-        .agg(F.array_sort(F.collect_list("c")).alias("cents"))
-        .agg(F.array_sort(F.collect_list(F.struct("sub", "cents"))).alias("bs"))
-        .select(F.transform(F.col("bs"), lambda b: b["cents"]).alias("books"))
-    )
-
-
-def pq_codebook(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
-    """Per-subspace L2 k-means codebooks as one broadcastable row.
-
-    Seeds = the first PQ_K vectors' sub-slices (same convention as
-    ivf_codebook); Lloyd refinement runs on the deterministic
-    1/TRAIN_MOD hash-sample, all PQ_M subspaces trained in ONE grouped
-    pass (keys (sub, pos, dim) — the update exchange carries at most
-    PQ_M×PQ_K×PQ_DSUB rows per partition, KBs at any corpus size).
-    Checkpointed per iteration (lineage cut).
-    """
-    seed = emb.filter(F.col("vec_id") < PQ_K).select(
-        F.col("vec_id").cast("int").alias("pos"),
-        F.posexplode(_subvecs(F.col("embedding"))).alias("sub", "cvec"),
-    )
-    books = _pq_collapse(seed)
-    train = emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(TRAIN_MOD)) == 0).select(
-        F.posexplode(_subvecs(F.col("embedding"))).alias("sub", "sv")
-    )
+    seed_rows = emb.filter(F.col("vec_id") < PQ_K).select("vec_id", "embedding").collect()
+    if not seed_rows:
+        raise ValueError(f"no seed vectors with vec_id < {PQ_K}")
+    seeds = sorted((int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in seed_rows)
+    books = [[(p, vec[s * PQ_DSUB : (s + 1) * PQ_DSUB]) for p, vec in seeds] for s in range(PQ_M)]
+    train = _train_sample(emb).select("embedding", F.col("embedding").alias("x"))
     for _ in range(iters):
-        assigned = train.crossJoin(F.broadcast(books)).select(
-            "sub",
-            "sv",
-            _nearest_pos(F.col("sv"), F.element_at(F.col("books"), F.col("sub") + 1)).alias("pos"),
-        )
-        rows = (
-            assigned.select("sub", "pos", F.posexplode("sv").alias("dim", "x"))
+        means = (
+            pq_encode(train, books)
+            .select("x", F.posexplode("codes").alias("sub", "pos"))
+            .select(
+                "sub",
+                "pos",
+                F.posexplode(F.slice("x", F.col("sub") * PQ_DSUB + 1, PQ_DSUB)).alias("dim", "v"),
+            )
             .groupBy("sub", "pos", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("sub", "pos")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-            .select("sub", "pos", F.transform("dm", lambda s: s["m"]).alias("cvec"))
+            .agg(F.avg(F.col("v").cast("double")).alias("m"))
+            .collect()
         )
-        books = checkpoint_frame(_pq_collapse(rows), eager=False)
-    return books
+        by_pos: dict = {}
+        for r in means:
+            by_pos.setdefault((r["sub"], r["pos"]), [0.0] * PQ_DSUB)[r["dim"]] = r["m"]
+        books = [[(p, c) for (s, p), c in sorted(by_pos.items()) if s == sub] for sub in range(PQ_M)]
+    return books_frame(emb.sparkSession, books), books
 
 
-def pq_encode(emb: DataFrame, books: DataFrame) -> DataFrame:
-    """(vec_id, enorm, codes): each vector compressed to PQ_M positional
-    codes — the persisted form of a PQ index (PQ_M small ints + one
-    double per vector; at 100 TB THIS is what ADC scans read, not the
-    raw floats).
+def pq_encode(df: DataFrame, book_rows: list) -> DataFrame:
+    """``df`` with ``embedding`` replaced by ``codes``, PQ_M positional
+    codes per vector: the persisted form of a PQ index (PQ_M small ints
+    + one double per vector; at 100 TB THIS is what ADC scans read, not
+    the raw floats). Every other column passes through — vec_id, enorm
+    and, for IVF-PQ, cell. One Arrow-batched numpy pass; a MapInPandas
+    node is never inlined into the ADC fan-out, so the encode runs once
+    per row.
 
-    The trailing repartition is a SHUFFLE BARRIER (same defense as
-    winnow_hashes / minhash signatures): the ADC scan references `codes`
-    once per query in the scoring fan-out, and without a materialization
-    boundary CollapseProject inlines the whole PQ_M×PQ_K argmin encode
-    into every query pair — a per-row cost multiplied by the query-batch
-    size. The shuffled payload IS the compressed representation, exactly
-    what an index build writes.
+    A code is the argmin over positions of ‖c‖² − 2·x·c (the row's own
+    norm is constant across positions), in dot()'s operations: each
+    8-dim dot summed left to right in double, ‖c‖² by _sqnorm, ties to
+    the lowest position.
     """
-    enc = emb.crossJoin(F.broadcast(books)).select(
-        "vec_id",
-        norm(F.col("embedding")).alias("enorm"),
-        F.transform(
-            _subvecs(F.col("embedding")),
-            lambda sv, s: _nearest_pos(sv, F.element_at(F.col("books"), s + 1)),
-        ).alias("codes"),
+    import numpy as np
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+
+    cvecs = [np.array([c for _, c in book], dtype=np.float64) for book in book_rows]
+    n2s = [np.array([_sqnorm(c) for _, c in book]) for book in book_rows]
+
+    def encode(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue  # np.stack raises on an empty Arrow batch
+            x = np.stack(pdf.pop("embedding").to_numpy()).astype(np.float64)
+            codes = np.empty((len(x), PQ_M), dtype=np.int32)
+            for s, (c, n2) in enumerate(zip(cvecs, n2s)):
+                xs = x[:, s * PQ_DSUB : (s + 1) * PQ_DSUB]
+                acc = np.zeros((len(x), len(c)))
+                for j in range(PQ_DSUB):
+                    acc = acc + xs[:, j, None] * c[:, j]
+                codes[:, s] = np.argmin(n2 - 2.0 * acc, axis=1)
+            pdf["codes"] = list(codes)
+            yield pdf
+
+    fields = [f for f in df.schema.fields if f.name != "embedding"]
+    return df.mapInPandas(
+        encode, StructType(fields + [StructField("codes", ArrayType(IntegerType()))])
     )
-    return enc.repartition(emb.sparkSession.sparkContext.defaultParallelism, "vec_id")
 
 
 def _query_lut(vec: Column, books: Column) -> Column:
@@ -1051,8 +1063,9 @@ def _exact_rerank(emb: DataFrame, cands: DataFrame) -> DataFrame:
     doc=(
         f"ANN via product quantization + ADC scan (faiss IndexPQ shape): "
         f"{PQ_M} subspaces × {PQ_K} L2-k-means centroids (4-bit codes, "
-        f"32 bits/vector vs 2048 raw), corpus encoded once behind a "
-        "shuffle barrier, queries build a per-subspace dot-product "
+        f"32 bits/vector vs 2048 raw), corpus encoded once by an "
+        "Arrow-batched numpy argmin (pq_encode, mapInPandas; the same "
+        "pass trains the codebooks), queries build a per-subspace dot-product "
         "lookup table against the SAME broadcast codebook, and the scan "
         f"scores codes by {PQ_M} table lookups per pair (asymmetric "
         f"distance). Top-{PQ_CAND} ADC candidates per query get an "
@@ -1063,12 +1076,16 @@ def _exact_rerank(emb: DataFrame, cands: DataFrame) -> DataFrame:
 )
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_codebook(emb)
-    # spread (r15 optimization round): the PQ_M×PQ_K argmin encode runs
-    # BEFORE its shuffle barrier, i.e. in the single-row-group scan's
-    # one task (measured: a 0.9 s single-task stage); the codebook
-    # training branch stays on the raw scan. No-op at scale.
-    enc = pq_encode(spread(emb, "vec_id"), books)
+    books, book_rows = pq_codebook(emb)
+    # spread ONLY the encode output, as in ann_ivf_topk: the encode runs
+    # on the scan's own splits (one Python round trip per task), and the
+    # ADC scoring fan-out downstream gets every core. No-op at scale.
+    enc = spread(
+        pq_encode(
+            emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("enorm")), book_rows
+        ),
+        "vec_id",
+    )
     # N_QUERIES rows × PQ_M×PQ_K doubles: broadcasts.
     q = emb.filter(F.col("vec_id") < N_QUERIES).crossJoin(F.broadcast(books)).select(
         F.col("vec_id").alias("qid"),
@@ -1249,45 +1266,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVFPQ_CAND = 200
 
 
-def ivfpq_encode(resid: DataFrame, books: DataFrame) -> DataFrame:
-    """(vec_id, cell, enorm, codes): the IVF-PQ index rows — residual
-    positional codes behind the same shuffle barrier as pq_encode."""
-    enc = resid.crossJoin(F.broadcast(books)).select(
-        "vec_id",
-        "cell",
-        "enorm",
-        F.transform(
-            _subvecs(F.col("embedding")),
-            lambda sv, s: _nearest_pos(sv, F.element_at(F.col("books"), s + 1)),
-        ).alias("codes"),
-    )
-    return enc.repartition(resid.sparkSession.sparkContext.defaultParallelism, "vec_id")
-
-
-def write_ivfpq_index(emb: DataFrame, cent_rows: list, books: DataFrame, path: str) -> None:
-    """Persist the IVF-PQ index: residual-code rows `partitionBy("cell")`
-    — write_ivf_index's directory layout with PQ_M small ints + one
-    norm per vector instead of the raw floats, so a probe read prunes
-    at the directory level AND reads ~32× fewer bytes per surviving
-    row. Same deliberately-STATIC overwrite (a rebuild replaces the
-    whole path; dynamic mode would leave stale cell dirs when codebook
-    drift empties a cell). The codebooks themselves are single-row
-    frames the caller persists/broadcasts separately — they are the
-    query-side state, not scan data."""
-    (
-        ivfpq_encode(ivf_assign(emb, cent_rows, residual=True), books)
-        # Keyed on cell so each task writes whole cell directories —
-        # see ivfpq_train: the unkeyed write sprays tasks×cells tiny
-        # files, which tripled the probe wall at 2M vectors (per-file
-        # open/footer overhead on every probed cell).
-        .repartition(emb.sparkSession.sparkContext.defaultParallelism, "cell")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-
-
 @register(
     "ann_ivfpq_topk",
     None,  # codebooks/codes are implementation-specific → rows-only;
@@ -1307,23 +1285,30 @@ def write_ivfpq_index(emb: DataFrame, cent_rows: list, books: DataFrame, path: s
 )
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
+    cents_arr, books, enc = ivfpq_fit(emb)
+    # spread ONLY the encode output (see ann_pq_topk): the ADC scoring
+    # fan-out otherwise runs in the single-row-group scan's one task.
+    return ivfpq_query(emb, cents_arr, books, spread(enc, "vec_id"))
+
+
+def ivfpq_fit(emb: DataFrame) -> tuple:
+    """``(cents_arr, books, enc)``: the IVF-PQ state every entry point
+    shares — the coarse codebook frame, the PQ codebook frame trained on
+    the residuals, and the (lazy) residual-code rows
+    ``(vec_id, enorm, cell, codes)``. ann_ivfpq_topk probes them in
+    memory; ivfpq_train persists them for ann_ivfpq_apply, so both serve
+    the same codebooks.
+
+    Residuals are staged once (r9): both consumers — PQ codebook
+    training (sampled collect) and the full encode pass — otherwise
+    re-run the corpus-sized assignment + centroid-subtract pipeline
+    (measured 3.7-4.0 s → 3.0-3.2 s at sf0.1, results identical). At
+    index-build scale this is the materialized residual table
+    IndexIVFPQ training reads anyway."""
     cents_arr, cent_rows = ivf_codebook(emb, ivf_cells())
-    # Residuals staged once (r9): both consumers — PQ codebook training
-    # (sampled collect) and the full encode pass — otherwise re-run the
-    # corpus-sized argmin-assignment + centroid-subtract pipeline.
-    # Measured 3.7-4.0 s → 3.0-3.2 s at sf0.1, results identical. At
-    # index-build scale this is the materialized residual table
-    # IndexIVFPQ training reads anyway.
-    # spread (r15 optimization round): everything downstream of the
-    # checkpoint (encode, ADC scoring) otherwise runs in the
-    # single-row-group scan's one task; the checkpointed RDD keeps the
-    # spread partitioning, so the encode and query stages inherit the
-    # parallelism (no-op at scale). It follows the assignment so
-    # mapInPandas runs on the scan's splits (see ann_ivf_topk).
-    resid = checkpoint_frame(spread(ivf_assign(emb, cent_rows, residual=True), "vec_id"))
-    books = pq_codebook(resid)
-    enc = ivfpq_encode(resid, books)
-    return ivfpq_query(emb, cents_arr, books, enc)
+    resid = checkpoint_frame(ivf_assign(emb, cent_rows, residual=True))
+    books, book_rows = pq_codebook(resid)
+    return cents_arr, books, pq_encode(resid, book_rows)
 
 
 def ivfpq_query(
@@ -1394,8 +1379,10 @@ def ivfpq_train(emb: DataFrame, path: str) -> None:
     - ``books.parquet`` — the 1-row per-subspace PQ codebook frame
       (query-side state, broadcast at probe time),
     - ``index/`` — the residual-code rows ``partitionBy("cell")``
-      (scan-side state: write_ivfpq_index's layout — PQ_M small ints +
-      one norm per vector, directory per cell, static overwrite),
+      (scan-side state: write_ivf_index's layout with PQ_M small ints +
+      one norm per vector in place of the raw floats, so a probe read
+      prunes at the directory level AND reads ~32× fewer bytes per
+      surviving row; static overwrite),
     Completion marking and atomicity live in artifacts.ensure_published
     (the caller): this function only writes the state tree under
     ``path``, which in the apply lifecycle is a scratch dir that is
@@ -1417,9 +1404,7 @@ def ivfpq_train(emb: DataFrame, path: str) -> None:
     makes DEPLOY.md §2's √N sizing executable — training at the
     measured-optimal 1414 cells completes in minutes.
     """
-    cents_arr, cent_rows = ivf_codebook(emb, ivf_cells())
-    resid = checkpoint_frame(ivf_assign(emb, cent_rows, residual=True))
-    books = pq_codebook(resid)
+    cents_arr, books, enc = ivfpq_fit(emb)
     cents_arr.write.mode("overwrite").parquet(f"{path}/cents.parquet")
     books.write.mode("overwrite").parquet(f"{path}/books.parquet")
     # One shuffle keyed on cell so each task writes whole cell
@@ -1429,11 +1414,9 @@ def ivfpq_train(emb: DataFrame, path: str) -> None:
     # 512-file spray tripled the steady-state probe wall (19.9 s vs
     # 5.8 s against the cell-keyed 16-file layout) purely on per-file
     # open/footer overhead.
-    enc = ivfpq_encode(resid, books).repartition(
-        emb.sparkSession.sparkContext.defaultParallelism, "cell"
-    )
     (
-        enc.write.mode("overwrite")
+        enc.repartition(emb.sparkSession.sparkContext.defaultParallelism, "cell")
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "static")
         .partitionBy("cell")
         .parquet(f"{path}/index")
@@ -1535,19 +1518,17 @@ def _ivfpq_index_path(sf_dir: str) -> str:
     ),
 )
 def q_ann_ivfpq_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
     # Same guard as bpe_merges_cached: the persisted lifecycle is
     # local-FS only (content fingerprint stats the parquet tree), so a
     # corpus that isn't a real local path — remote URI sf_dir, tests
     # monkeypatching load_table — trains inline (the self-contained
-    # ann_ivfpq_topk composition) instead of raising FileNotFoundError
-    # out of corpus_fingerprint.
+    # ann_ivfpq_topk) instead of raising FileNotFoundError out of
+    # corpus_fingerprint.
     if not os.path.exists(os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")):
-        cents_arr, cent_rows = ivf_codebook(emb, ivf_cells())
-        resid = checkpoint_frame(ivf_assign(emb, cent_rows, residual=True))
-        books = pq_codebook(resid)
-        return ivfpq_query(emb, cents_arr, books, ivfpq_encode(resid, books))
+        return q_ann_ivfpq_topk(spark, sf_dir)
     from pyspark.errors import AnalysisException
+
+    emb = load_table(spark, sf_dir, "embeddings")
 
     path = ensure_published(_ivfpq_index_path(sf_dir), lambda p: ivfpq_train(emb, p))
     try:

@@ -45,7 +45,7 @@ def get_spark(app_name: str = "nt-etl-order-book-spark", *, shuffle_partitions: 
         .config("spark.sql.parquet.filterPushdown", "true")
         # GC reliable checkpoint files once their RDDs go out of scope:
         # long-lived sessions running iterative queries (connected
-        # components, IVF training) otherwise leak checkpoint-dir
+        # components, BPE merges) otherwise leak checkpoint-dir
         # storage for the app lifetime.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
@@ -74,10 +74,11 @@ def get_spark(app_name: str = "nt-etl-order-book-spark", *, shuffle_partitions: 
 def checkpoint_frame(df: DataFrame, *, eager: bool = True) -> DataFrame:
     """Truncate lineage with the checkpoint flavor the deployment wants.
 
-    Iterative plans (connected-components label frames, the IVF codebook)
-    must cut their lineage every round or Catalyst re-optimizes — and
-    re-runs — the whole accumulated plan under each consumer. HOW to cut
-    differs by environment:
+    Iterative plans (connected-components label frames, BPE merge
+    rounds) must cut their lineage every round or Catalyst re-optimizes
+    — and re-runs — the whole accumulated plan under each consumer; a
+    frame with several consumers is cut once for the same reason. HOW
+    to cut differs by environment:
 
     - ``sc.setCheckpointDir`` set (cluster reality): reliable
       ``checkpoint()`` to that directory — blocks survive executor loss
@@ -96,8 +97,10 @@ def checkpoint_frame(df: DataFrame, *, eager: bool = True) -> DataFrame:
     persist-before-checkpoint caveat). Eager flavor: the cache is
     dropped synchronously as soon as the checkpoint files exist. Lazy
     flavor: there is no action inside this call to unpersist after, so
-    the cached blocks (KB-scale here — the only lazy caller is the
-    1-row IVF codebook) are released by the ContextCleaner when the
+    the cached blocks (the lazy callers in bpe, graph, text, eventflow,
+    timeseries and aggregates cut frames far narrower than their
+    inputs: vocabulary tables, edge lists, per-group stats, narrow
+    per-document rows) are released by the ContextCleaner when the
     superseded frame is GC'd on the driver; what matters is that the
     first downstream action fills the cache and the deferred checkpoint
     job reads it instead of re-running the lineage. Checkpoint-file

@@ -257,25 +257,33 @@ def test_dsir_weights_single_explode_broadcast_distributions(spark, sf_dir):
 
 
 def test_pq_encode_barrier_bounds_adc_recompute(spark, sf_dir):
-    # pq_encode must end in a shuffle barrier so the PQ_M×PQ_K argmin
-    # encode runs once per corpus row, not once per (row, query) pair
-    # after CollapseProject inlines it into the ADC fan-out (the winnow
-    # O(n²) lesson). The barrier is the hashpartitioning(vec_id)
-    # exchange; the ADC scan and broadcast query side sit above it.
-    from nt_etl_order_book_spark.functions.similarity import pq_codebook, pq_encode
+    # The PQ_M×PQ_K argmin encode must run once per corpus row, not once
+    # per (row, query) pair after CollapseProject inlines it into the
+    # ADC fan-out (the winnow O(n²) lesson). pq_encode is a MapInPandas
+    # node, which no optimizer rule inlines: the final plan holds exactly
+    # one, producing `codes`, on the streamed side of the ADC join.
     from nt_etl_order_book_spark.plans.explain import formatted_plan
-    from nt_etl_order_book_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    enc = pq_encode(emb, pq_codebook(emb))
-    plan = formatted_plan(enc)
-    assert "hashpartitioning(vec_id" in plan, plan[:800]
 
     df = registry.queries()["ann_pq_topk"](spark, sf_dir)
-    full = formatted_plan(df)
-    # The codes column must be produced BELOW the barrier exchange:
-    # exactly one Exchange carries `codes` into the ADC stage.
-    assert "hashpartitioning(vec_id" in full, full[:800]
+    found = []
+
+    def walk(node, ancestors):
+        if node.nodeName() == "MapInPandas":
+            found.append((node, ancestors))
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), ancestors + [(node, i)])
+
+    walk(df._jdf.queryExecution().executedPlan().inputPlan(), [])
+    assert len(found) == 1, [n.toString() for n, _ in found]
+    node, ancestors = found[0]
+    assert "codes" in node.output().toString(), node.toString()
+    streamed = [
+        j for j, side in ancestors
+        if j.nodeName() == "BroadcastNestedLoopJoin"
+        and side == (0 if j.buildSide().toString() == "BuildRight" else 1)
+    ]
+    assert streamed, formatted_plan(df)[:800]
 
 
 def test_pmi_collocations_distributed_topk(spark, sf_dir):
@@ -561,7 +569,14 @@ def test_registry_wide_python_boundary_and_no_cartesian(spark, sf_dir):
 
 @pytest.mark.parametrize(
     "name,max_jobs",
-    [("bpe_merges", 21), ("dedup_components", 19), ("semdedup", 20), ("ann_ivf_topk", 12)],
+    [
+        ("bpe_merges", 21),
+        ("dedup_components", 19),
+        ("semdedup", 20),
+        ("ann_ivf_topk", 12),
+        ("ann_pq_topk", 13),
+        ("ann_ivfpq_topk", 17),
+    ],
 )
 def test_profile_pins_iterative_job_counts(spark, sf_dir, name, max_jobs):
     # The iterative families run eager jobs while the frame is built

@@ -635,28 +635,25 @@ def test_shared_run_audit_planted_runs_measured_exactly(spark, tmp_path):
 
 
 def test_ivfpq_index_write_prunes_and_round_trips(spark, sf_dir, tmp_path):
-    # The composed index persisted: cell-partitioned residual-code rows.
-    # A probe read must prune at the directory level, and the stored
-    # codes must equal the in-memory encode exactly (deterministic
-    # codebooks ⇒ deterministic codes).
+    # The composed index persisted by ivfpq_train: cell-partitioned
+    # residual-code rows. A probe read must prune at the directory
+    # level, and the stored codes must equal the in-memory encode
+    # exactly (deterministic codebooks ⇒ deterministic codes).
     import os
 
     from nt_etl_order_book_spark.functions.similarity import (
         N_CELLS,
         ivf_assign,
         ivf_codebook,
-        ivfpq_encode,
+        ivfpq_train,
         pq_codebook,
-        write_ivfpq_index,
+        pq_encode,
     )
     from nt_etl_order_book_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    _, cents = ivf_codebook(emb)
-    resid = ivf_assign(emb, cents, residual=True)
-    books = pq_codebook(resid)
-    idx = str(tmp_path / "ivfpq_index")
-    write_ivfpq_index(emb, cents, books, idx)
+    ivfpq_train(emb, str(tmp_path))
+    idx = str(tmp_path / "index")
 
     cells = {int(d.split("=")[1]) for d in os.listdir(idx) if d.startswith("cell=")}
     assert cells and all(0 <= c < N_CELLS for c in cells)
@@ -666,14 +663,84 @@ def test_ivfpq_index_write_prunes_and_round_trips(spark, sf_dir, tmp_path):
     plan = rd._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "cell" in plan.split("PartitionFilters")[1][:80]
 
+    _, cents = ivf_codebook(emb)
+    resid = ivf_assign(emb, cents, residual=True)
+    _, book_rows = pq_codebook(resid)
     got = {(r.vec_id, r.cell, tuple(r.codes)) for r in rd.collect()}
     want = {
         (r.vec_id, r.cell, tuple(r.codes))
-        for r in ivfpq_encode(resid, books)
+        for r in pq_encode(resid, book_rows)
         .filter(F.col("cell").isin(probe_cells))
         .collect()
     }
     assert got == want and got
+
+
+def _pq_oracle_codes(vec, book_rows):
+    """Pure-Python PQ encode: per subspace, the dot and the squared norm
+    summed left to right in double, d = n2 - 2·dot, argmin with ties to
+    the lowest position."""
+    from nt_etl_order_book_spark.functions.similarity import PQ_DSUB
+
+    codes = []
+    for s, book in enumerate(book_rows):
+        sv = [float(v) for v in vec[s * PQ_DSUB : (s + 1) * PQ_DSUB]]
+        best, best_d = -1, float("inf")
+        for i, (_, cvec) in enumerate(book):
+            acc = n2 = 0.0
+            for a, b in zip(sv, cvec):
+                acc += a * b
+                n2 += b * b
+            d = n2 - 2.0 * acc
+            if d < best_d:
+                best, best_d = i, d
+        codes.append(best)
+    return codes
+
+
+def test_pq_encode_matches_python_oracle(spark, sf_dir):
+    # pq_encode's numpy argmin gives the oracle's codes exactly, on the
+    # fixture and on a corpus where one seed position draws no training
+    # vector and leaves every book: codes stay array positions (< the
+    # book's length), so the query-side LUT stays aligned.
+    import numpy as np
+
+    from nt_etl_order_book_spark.functions.similarity import (
+        PQ_K,
+        TRAIN_MOD,
+        pq_codebook,
+        pq_encode,
+    )
+    from nt_etl_order_book_spark.tables import load_table
+
+    sampled = {
+        r.id
+        for r in spark.range(PQ_K)
+        .filter(F.pmod(F.xxhash64("id"), F.lit(TRAIN_MOD)) == 0)
+        .collect()
+    }
+    orphan = min(set(range(PQ_K)) - sampled)
+    rng = np.random.default_rng(5)
+    rows = [
+        (vid, [1000.0] * 64 if vid == orphan else [float(x) for x in rng.normal(size=64)])
+        for vid in range(320)
+    ]
+    built = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    for emb, leaves in ((load_table(spark, sf_dir, "embeddings"), None), (built, orphan)):
+        books, book_rows = pq_codebook(emb)
+        assert [[(c.pos, list(c.cvec)) for c in sub] for sub in books.first().books] == [
+            [(p, list(c)) for p, c in sub] for sub in book_rows
+        ]
+        if leaves is not None:
+            assert all(leaves not in [p for p, _ in sub] for sub in book_rows)
+            assert all(len(sub) < PQ_K for sub in book_rows)
+        vecs = {r.vec_id: r.embedding for r in emb.collect()}
+        got = pq_encode(emb, book_rows).collect()
+        assert len(got) == len(vecs)
+        for r in got:
+            assert list(r.codes) == _pq_oracle_codes(vecs[r.vec_id], book_rows), r.vec_id
+            assert all(c < len(sub) for c, sub in zip(r.codes, book_rows)), r.vec_id
 
 
 def test_semdedup_capped_cells_stay_in_inventory(spark):
