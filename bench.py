@@ -1,5 +1,6 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
+(default /root/testdata/sf0.1) on local[N], N = $SPARK_GRAFT_CPUS or else
+the cores this process may run on (session.get_spark), and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 

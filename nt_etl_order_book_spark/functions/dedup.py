@@ -47,6 +47,18 @@ _B = [(7_919 * (i + 7) + 3) % 1_048_573 for i in range(N_PERM)]
 MAX_SHINGLE_DF = 200
 
 
+def string_grams(toks: Column, n: int) -> Column:
+    """Word n-gram strings over a staged token array: one per position
+    0..max(size-n, 0), each the space-joined slice. A doc shorter than
+    n tokens yields ONE clipped gram over the tokens it has (an empty
+    doc's is ""), the rule :func:`partial_grams` mirrors; on an array of
+    size >= n this is exactly the full-width gram list."""
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+    )
+
+
 def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per doc, as one row per shingle.
 
@@ -58,27 +70,103 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     """
     toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     wt = df.select(F.col(id_col), toks.alias("_toks"))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size("_toks") - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i + 1, n)),
-    )
+    grams = string_grams(F.col("_toks"), n)
     return wt.select(F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
-# Modulus/multiplier for the rolling shingle hash below. M = 2^57 is the
-# largest power of two where the ANSI-mode combine stays in long range
-# (acc*37 + h < 2^57·37 + 2^57 < 2^63 — ANSI overflow THROWS, it does
-# not wrap, so the bound is load-bearing). 37 is odd → multiplication
-# mod 2^57 is a bijection and the combine is a proper polynomial hash.
+# Modulus/multiplier of the rolling gram hash (partial_grams,
+# rolling_gram_expr). M = 2^57 is the largest power of two where the
+# ANSI-mode combine stays in long range: acc*37 + h < 2^57·37 + 2^57 <
+# 2^63 for any token hash h < 2^57 (xxhash64 pmod M here, the 32-bit
+# md5-hex8 of text.winnow_hashes) — ANSI overflow THROWS, it does not
+# wrap, so the bound is load-bearing. 37 is odd → multiplication mod
+# 2^57 is a bijection and the combine is a proper polynomial hash.
+#
+# Collision odds over D distinct grams are ~D²/2⁵⁸ — ~1e-6 at the
+# sf0.01 correctness gate's ~300k shingles, ~3e-5 at sf0.1's ~3M — so
+# counts over hashed grams match the string-gram oracle exactly in any
+# run that matters. At extreme corpus scale (D ~ 1e12) collisions
+# become real but perturb a vanishing fraction of counts (or, for
+# winnowing, which gram a window-min selects); the consumers accept
+# that bound rather than keep a second, string-grain index.
 SHINGLE_HASH_MOD = 1 << 57
-_SHINGLE_HASH_MULT = 37
+SHINGLE_HASH_MULT = 37
+
+
+def token_hash_expr(text_col: str = "text", mod: int = SHINGLE_HASH_MOD) -> Column:
+    """Per-token hashes (xxhash64 pmod ``mod``) of the whitespace tokens
+    of ``text_col`` — the hash-once stage every rolling-gram consumer
+    starts from. Engine-local (xxhash64): use it only where gram VALUES
+    never surface in query output."""
+    toks = F.filter(F.split(text_col, " "), lambda t: t != "")
+    return F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(mod)))
+
+
+def partial_grams(th: Column, n: int) -> Column:
+    """n-gram rolling hashes over a token-hash array with the clipped
+    rule of :func:`string_grams`: a doc shorter than n tokens emits ONE
+    gram over the tokens it has — missing positions are skipped via
+    try_element_at, because ANSI element_at THROWS on the short array —
+    and an empty doc's gram is the -1 sentinel (string form: the ""
+    gram), disjoint from real grams, which are pmod-nonnegative.
+
+    Each level of the when-chain repeats the accumulator, so the tree
+    grows exponentially in n: fine at n = 3..4, a codegen stall at
+    n = 16. Wide grams over docs pre-filtered to size >= n take
+    :func:`rolling_gram_expr`, which equals this on those docs."""
+    m = F.lit(SHINGLE_HASH_MOD)
+
+    def gram_at(i):
+        acc = F.try_element_at(th, i + 1)
+        for j in range(1, n):
+            nxt = F.try_element_at(th, i + 1 + j)
+            acc = F.when(nxt.isNull(), acc).otherwise(F.pmod(acc * SHINGLE_HASH_MULT + nxt, m))
+        return F.coalesce(acc, F.lit(-1))
+
+    return F.transform(F.sequence(F.lit(0), F.greatest(F.size(th) - n, F.lit(0))), gram_at)
+
+
+def rolling_gram_expr(
+    th: Column, n: int, *, mod: int = SHINGLE_HASH_MOD, mult: int = SHINGLE_HASH_MULT
+) -> Column:
+    """Full n-gram rolling hashes over a token-hash array: one hash per
+    position 0..size-n, each a LINEAR-size polynomial fold (plain
+    element_at — callers must pre-filter or guard docs to size >= n).
+    See :func:`partial_grams` for the clipped form."""
+    m = F.lit(mod)
+
+    def gram_at(i):
+        acc = F.element_at(th, i + 1)
+        for j in range(1, n):
+            acc = F.pmod(acc * mult + F.element_at(th, i + 1 + j), m)
+        return acc
+
+    return F.transform(F.sequence(F.lit(0), F.size(th) - n), gram_at)
+
+
+def sorted_pairs(ids: Column, left: str, right: str) -> Column:
+    """Every i<j pair of a postings array as ``struct(left, right)``:
+    in-array pair generation per key, bounded by the caller's postings
+    cap, instead of a two-sided self-join (whose alias-differing
+    branches defeat ReusedExchange and shuffle the index twice). On a
+    sorted array i<j is equivalent to left < right."""
+    return F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, F.greatest(F.size(ids) - i - 1, F.lit(0))),
+                lambda y: F.struct(x.alias(left), y.alias(right)),
+            ),
+        )
+    )
 
 
 def shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per doc as 57-bit HASHES, one row
     per shingle — the counting twin of :func:`shingles` for consumers
     that never read the shingle text (pair statistics only compare and
-    count shingles, so the identity can be a hash).
+    count shingles, so the identity can be a hash; collision bound at
+    SHINGLE_HASH_MOD).
 
     Tokens are xxhash64'd ONCE per document, then each gram is a
     rolling polynomial combine of n consecutive token hashes — the
@@ -89,69 +177,12 @@ def shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Dat
     naive per-gram ``xxhash64(tok_i, tok_j, tok_k)`` variant was
     REJECTED at 7.1–7.6 s — three per-gram string hashes cost more
     than the concat they save; PERF.md r8).
-
-    Exactness bound: a birthday collision over D distinct shingles has
-    odds ~D²/2⁵⁸ — ~1e-6 at the sf0.01 correctness gate's ~300k
-    shingles, ~3e-5 at sf0.1's ~3M — so pair/size counts match the
-    string-shingle oracle exactly in any run that matters. At extreme
-    corpus scale (D ~ 1e12) collisions become real but perturb a
-    vanishing fraction of pair counts; the pair statistics accept that
-    bound rather than keep a second, string-grain index.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    m = F.lit(SHINGLE_HASH_MOD)
-    th = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), m))
     # Two-stage projection: the token-hash array is computed once per
     # row, not re-inlined into every gram position.
-    staged = df.select(F.col(id_col), th.alias("_th"))
-
-    def gram_at(arr, i):
-        # Partial-gram parity with the string form: a doc shorter than
-        # n tokens emits ONE gram over the tokens it has (slice+concat
-        # just stops early), so missing positions are skipped, not
-        # errors — try_element_at, because ANSI element_at THROWS on
-        # the short array. An empty doc's gram is the -1 sentinel
-        # (string form: the "" shingle), disjoint from real grams,
-        # which are pmod-nonnegative.
-        acc = F.try_element_at(arr, i + 1)
-        for j in range(1, n):
-            nxt = F.try_element_at(arr, i + 1 + j)
-            acc = F.when(nxt.isNull(), acc).otherwise(
-                F.pmod(acc * _SHINGLE_HASH_MULT + nxt, m)
-            )
-        return F.coalesce(acc, F.lit(-1))
-
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(F.col("_th")) - n, F.lit(0))),
-        lambda i: gram_at(F.col("_th"), i),
-    )
+    staged = df.select(F.col(id_col), token_hash_expr(text_col).alias("_th"))
+    grams = partial_grams(F.col("_th"), n)
     return staged.select(F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle"))
-
-
-def token_hash_expr(text_col: str = "text") -> Column:
-    """Per-token 57-bit hashes (xxhash64 pmod SHINGLE_HASH_MOD) of the
-    whitespace tokens of ``text_col`` — the hash-once stage every
-    rolling-gram consumer starts from. Engine-local (xxhash64): use it
-    only where gram VALUES never surface in query output."""
-    toks = F.filter(F.split(text_col, " "), lambda t: t != "")
-    return F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(SHINGLE_HASH_MOD)))
-
-
-def rolling_gram_expr(th: Column, n: int) -> Column:
-    """Full n-gram rolling hashes over a token-hash array: one hash per
-    position 0..size-n, each a LINEAR-size polynomial fold (plain
-    element_at — callers must pre-filter docs to size >= n; a
-    partial-gram when-chain duplicates the accumulator per level and
-    goes exponential in n, measured as a codegen stall at n=16)."""
-    m = F.lit(SHINGLE_HASH_MOD)
-
-    def gram_at(i):
-        acc = F.element_at(th, i + 1)
-        for j in range(1, n):
-            acc = F.pmod(acc * _SHINGLE_HASH_MULT + F.element_at(th, i + 1 + j), m)
-        return acc
-
-    return F.transform(F.sequence(F.lit(0), F.size(th) - n), gram_at)
 
 
 def shingle_pair_stats(docs: DataFrame, *, n: int = 3, cap: int = MAX_SHINGLE_DF) -> DataFrame:
@@ -176,7 +207,7 @@ def shingle_pair_stats(docs: DataFrame, *, n: int = 3, cap: int = MAX_SHINGLE_DF
     compares and counts it, so the narrow identity halves-plus the
     exchange width and skips the per-gram string allocation entirely
     (r8: truth-side build 5.6 s → measured below in PERF.md). The
-    collision bound is documented in :func:`shingle_hashes`.
+    collision bound is documented at SHINGLE_HASH_MOD.
 
     Size lookups join WITHOUT a broadcast hint (r9): `sizes` is
     doc-grain — one row per surviving doc — so a forced broadcast is a
@@ -198,18 +229,8 @@ def shingle_pair_stats(docs: DataFrame, *, n: int = 3, cap: int = MAX_SHINGLE_DF
     grouped = capped.groupBy("shingle").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ids")
     )
-    ids = F.col("ids")
-    pair_arr = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.greatest(F.size(ids) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     inter = (
-        grouped.select(F.explode(pair_arr).alias("p"))
+        grouped.select(F.explode(sorted_pairs(F.col("ids"), "a", "b")).alias("p"))
         .select("p.a", "p.b")
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("inter"))
@@ -231,15 +252,13 @@ def minhash_signature_col(df: DataFrame, id_col: str, text_col: str, n: int = 3)
     (b) spread the CPU-bound signature work independently of input
     splits. Everything after the exchange stays narrow.
     """
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     # Hash tokens ONCE, then shingle arithmetically (rolling combine of n
     # consecutive token hashes) instead of building n-gram strings —
     # 3.7× faster at sf0.1 (no per-shingle string allocation). Each
     # stage lives in its own projection so Catalyst can't inline the
     # upstream pipeline into every downstream consumer.
     tok_hashed = df.select(
-        F.col(id_col),
-        F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(HASH_BITS))).alias("_th"),
+        F.col(id_col), token_hash_expr(text_col, mod=HASH_BITS).alias("_th")
     )
     # Shuffle barrier: materializes the token-hash stage through an
     # exchange (downstream filters/projections can otherwise push below
@@ -250,12 +269,6 @@ def minhash_signature_col(df: DataFrame, id_col: str, text_col: str, n: int = 3)
         df.sparkSession.sparkContext.defaultParallelism, id_col
     )
 
-    def gram_at(th: Column, i: Column) -> Column:
-        acc = F.element_at(th, i + 1)
-        for j in range(1, n):
-            acc = F.pmod(acc * 131 + F.element_at(th, i + 1 + j), F.lit(HASH_BITS))
-        return acc
-
     # Short documents: fewer than n tokens can't form an n-gram — fall
     # back to unigram shingles rather than indexing past the array end
     # (ANSI mode makes that a hard INVALID_ARRAY_INDEX error). Empty
@@ -263,11 +276,7 @@ def minhash_signature_col(df: DataFrame, id_col: str, text_col: str, n: int = 3)
     # pipeline by callers (exact dedup owns the empty-text case).
     th = F.col("_th")
     grams = F.when(
-        F.size(th) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(th) - n),
-            lambda i: gram_at(th, i),
-        ),
+        F.size(th) >= n, rolling_gram_expr(th, n, mod=HASH_BITS, mult=131)
     ).otherwise(th)
     hashed = tok_hashed.select(
         F.col(id_col),
@@ -733,6 +742,17 @@ BLOOM_M = 1 << 20  # filter bits
 BLOOM_K = 4  # hash functions per item
 
 
+def token_chunks(toks: Column) -> Column:
+    """Non-overlapping PARA_TOKENS-token chunks of a staged token array,
+    each space-joined: ceil(size / PARA_TOKENS) chunks, and one "" chunk
+    for an empty array."""
+    n_chunks = F.ceil(F.size(toks) / F.lit(float(PARA_TOKENS))).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(toks, i * PARA_TOKENS + 1, PARA_TOKENS)),
+    )
+
+
 def paragraphs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -743,10 +763,9 @@ def paragraphs(
     """One row per non-empty paragraph (PARA_TOKENS-token chunk) per doc.
 
     Same narrow HOF shape as `shingles`: tokenize once, chunk via
-    transform over a chunk-index sequence, explode — no Python, no
-    shuffle. ``keep`` carries extra metadata columns (e.g. ``source``)
-    through the explode so consumers don't need a join back to the doc
-    table.
+    :func:`token_chunks`, explode — no Python, no shuffle. ``keep``
+    carries extra metadata columns (e.g. ``source``) through the
+    explode so consumers don't need a join back to the doc table.
 
     The token array is materialized in its OWN projection before the
     chunking lambda references it: HOF lambdas are interpreted, not
@@ -756,13 +775,7 @@ def paragraphs(
     at 100k docs (r12)."""
     toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     wt = df.select(F.col(id_col), *[F.col(c) for c in keep], toks.alias("_toks"))
-    n_chunks = F.ceil(F.size("_toks") / F.lit(float(PARA_TOKENS))).cast("int")
-    pars = F.transform(
-        F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0))),
-        lambda i: F.concat_ws(
-            " ", F.slice(F.col("_toks"), i * PARA_TOKENS + 1, PARA_TOKENS)
-        ),
-    )
+    pars = token_chunks(F.col("_toks"))
     return (
         wt.select(F.col(id_col), *[F.col(c) for c in keep], F.explode(pars).alias("par"))
         .filter(F.col("par") != "")

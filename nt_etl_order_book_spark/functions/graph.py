@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nt_etl_order_book_spark.functions.dedup import _sql_paragraphs, paragraphs
+from nt_etl_order_book_spark.functions.dedup import _sql_paragraphs, paragraphs, sorted_pairs
 from nt_etl_order_book_spark.registry import register
 from nt_etl_order_book_spark.session import checkpoint_frame
 from nt_etl_order_book_spark.tables import load_table
@@ -73,15 +73,7 @@ def paragraph_edges(docs: DataFrame, *, directed: bool) -> DataFrame:
         )
         agg_ids = F.collect_list("doc_id")
     else:
-        pair_arr = F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + 2, F.greatest(F.size(ids) - i - 1, F.lit(0))),
-                    lambda y: F.struct(x.alias("src"), y.alias("dst")),
-                ),
-            )
-        )
+        pair_arr = sorted_pairs(ids, "src", "dst")
         agg_ids = F.array_sort(F.collect_list("doc_id"))
     return (
         capped.groupBy("h")

@@ -12,7 +12,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nt_etl_order_book_spark.functions.dedup import PARA_TOKENS
+from nt_etl_order_book_spark.functions.dedup import (
+    PARA_TOKENS,
+    SHINGLE_HASH_MOD,
+    SHINGLE_HASH_MULT,
+    partial_grams,
+    sorted_pairs,
+    string_grams,
+    token_chunks,
+    token_hash_expr,
+)
 from nt_etl_order_book_spark.operators.aggregates import davg, sql_davg
 from nt_etl_order_book_spark.registry import register
 from nt_etl_order_book_spark.tables import load_table
@@ -416,10 +425,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an embedded tokenize subtree per gram index; a multi-referenced
     # staged column splits once per doc and is never inlined back.
     staged = docs.select("doc_id", toks.alias("_toks"))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size("_toks") - 3, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i + 1, 3)),
-    )
+    grams = string_grams(F.col("_toks"), 3)
     d = staged.select(
         "doc_id",
         F.size(grams).alias("n_grams"),
@@ -623,34 +629,12 @@ def q_corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rolling hash — no per-gram string concat, tokens hashed once in a
     # staged projection (string-oracle counts identical; within-doc
     # collision odds ~windows²/2⁵⁸). Measured 1.9-2.1 s → 0.6-0.8 s at
-    # sf0.1, output identical.
-    from nt_etl_order_book_spark.functions.dedup import (
-        SHINGLE_HASH_MOD,
-        _SHINGLE_HASH_MULT,
-    )
-
-    m = F.lit(SHINGLE_HASH_MOD)
-    th = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), m))
+    # sf0.1, output identical. Partial grams match the oracle's clipped
+    # slice on docs shorter than 3 tokens.
     staged = docs.select(
-        "doc_id", "source", "text", F.size(toks).alias("n_words"), th.alias("_th")
+        "doc_id", "source", "text", F.size(toks).alias("n_words"), token_hash_expr().alias("_th")
     )
-
-    def gram_at(arr, i):
-        # shingle-style partial-gram parity: short docs fold the tokens
-        # they have; empty docs get the -1 sentinel (matches the string
-        # form's clipped slice / "" gram for counting purposes).
-        acc = F.try_element_at(arr, i + 1)
-        for j in range(1, 3):
-            nxt = F.try_element_at(arr, i + 1 + j)
-            acc = F.when(nxt.isNull(), acc).otherwise(
-                F.pmod(acc * _SHINGLE_HASH_MULT + nxt, m)
-            )
-        return F.coalesce(acc, F.lit(-1))
-
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(F.col("_th")) - 3, F.lit(0))),
-        lambda i: gram_at(F.col("_th"), i),
-    )
+    grams = partial_grams(F.col("_th"), 3)
     feats = staged.select(
         "doc_id",
         "source",
@@ -1217,10 +1201,7 @@ def q_repetition_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     def gram_counts(n: int) -> DataFrame:
         from nt_etl_order_book_spark.session import spread
 
-        grams = F.transform(
-            F.sequence(F.lit(0), F.size("_toks") - n),
-            lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i + 1, n)),
-        )
+        grams = string_grams(F.col("_toks"), n)
         # spread (r15 optimization round, guide §2.5): the gram-build +
         # md5 explode pipeline below runs map-side BEFORE the
         # groupBy(doc_id, h, gl) exchange — a single task on the
@@ -1248,15 +1229,7 @@ def q_repetition_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum(F.col("c") * F.col("gl")).cast("bigint").alias("dup_chars"))
     )
-    par_arr = F.transform(
-        F.sequence(
-            F.lit(0),
-            F.greatest(
-                F.ceil(F.size("_toks") / float(PARA_TOKENS)).cast("int") - 1, F.lit(0)
-            ),
-        ),
-        lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i * PARA_TOKENS + 1, PARA_TOKENS)),
-    )
+    par_arr = token_chunks(F.col("_toks"))
     pars = staged.select(
         "doc_id",
         "n_chars",
@@ -1292,21 +1265,6 @@ def q_repetition_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # threshold of the winnowing scheme.
 WINNOW_K = 4
 WINNOW_W = 4
-
-# Rolling-gram combine parameters (r9, mirroring dedup.SHINGLE_HASH_MOD's
-# derivation): token hashes are 32-bit (hex8-Horner of md5 — the portable
-# cross-engine hash, REQUIRED here because fingerprint VALUES surface in
-# winnow_fingerprint's output, unlike the shingle counters where xxhash64
-# suffices), combined per k-gram as acc*37 + h mod 2^57. ANSI bound:
-# acc < 2^57, h < 2^32, so acc*37 + h < 2^57*37 + 2^32 < 2^63 — ANSI
-# overflow THROWS, it does not wrap, so the bound is load-bearing. 37 is
-# odd → multiplication mod 2^57 is a bijection (proper polynomial hash).
-# Collision odds over D distinct grams ~D^2/2^58 (same note as
-# shingle_hashes); a collision merely perturbs which gram a window-min
-# selects — negligible at every tested scale.
-WINNOW_HASH_MOD = 1 << 57
-_WINNOW_HASH_MULT = 37
-
 
 def _sql_hex8_int(expr: str) -> str:
     """First 8 md5 hex chars of `expr` as a BIGINT via the same ascii
@@ -1358,7 +1316,7 @@ _SQL_WINNOW_FPS = f"""
       SELECT doc_id,
              [CASE WHEN len(th) = 0 THEN CAST(-1 AS BIGINT)
                    ELSE list_reduce(th[i:i+{WINNOW_K - 1}],
-                        (acc, h) -> (acc * {_WINNOW_HASH_MULT} + h) % {WINNOW_HASH_MOD}) END
+                        (acc, h) -> (acc * {SHINGLE_HASH_MULT} + h) % {SHINGLE_HASH_MOD}) END
               FOR i IN range(1, GREATEST(len(th) - {WINNOW_K - 1}, 1) + 1)] AS hs
       FROM th
     ),
@@ -1398,7 +1356,6 @@ def winnow_hashes(docs: DataFrame) -> DataFrame:
     from nt_etl_order_book_spark.session import spread
 
     toks = F.filter(F.split("text", " "), lambda t: t != "")
-    m = F.lit(WINNOW_HASH_MOD)
     # spread BEFORE the md5/gram pipeline (r15 optimization round): on
     # the single-row-group fixture the scan is one task, so the per-doc
     # hashing otherwise runs on one core (no-op at scale where the scan
@@ -1410,26 +1367,8 @@ def winnow_hashes(docs: DataFrame) -> DataFrame:
     # the md5 in the fold would 8× the hashing work.
     th = F.transform(F.transform(toks, F.md5), _hex8_of_hex)
     staged = base.select("doc_id", th.alias("_th"))
-
-    def gram_at(arr, i):
-        # Partial-gram parity with the oracle's clipped slice: a doc
-        # shorter than WINNOW_K tokens folds the tokens it has (missing
-        # positions are skipped via try_element_at — ANSI element_at
-        # THROWS on the short array); an empty doc's gram is the -1
-        # sentinel, disjoint from real grams (mod-nonnegative).
-        acc = F.try_element_at(arr, i + 1)
-        for j in range(1, WINNOW_K):
-            nxt = F.try_element_at(arr, i + 1 + j)
-            acc = F.when(nxt.isNull(), acc).otherwise(
-                F.pmod(acc * _WINNOW_HASH_MULT + nxt, m)
-            )
-        return F.coalesce(acc, F.lit(-1).cast("long"))
-
-    hs = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(F.col("_th")) - WINNOW_K, F.lit(0))),
-        lambda i: gram_at(F.col("_th"), i),
-    )
-    hashed = staged.select("doc_id", hs.alias("hs"))
+    # Partial-gram parity with the oracle's clipped slice (partial_grams).
+    hashed = staged.select("doc_id", partial_grams(F.col("_th"), WINNOW_K).alias("hs"))
     return hashed.repartition(
         docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )
@@ -1621,25 +1560,12 @@ def q_shared_run_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_df") <= WINNOW_MAX_FP_DF)
         .drop("_df")
     )
-    # Pair candidates in-array per fingerprint (i<j over the sorted
-    # postings, bounded at WINNOW_MAX_FP_DF by the window cap above)
-    # instead of a two-sided self-join — the alias-differing s1/s2
-    # branches defeat ReusedExchange and shuffle the index twice (same
-    # single-pass lesson as dedup.shingle_pair_stats).
-    fp_ids = F.col("ids")
-    fp_pairs = F.flatten(
-        F.transform(
-            fp_ids,
-            lambda x, i: F.transform(
-                F.slice(fp_ids, i + 2, F.greatest(F.size(fp_ids) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    # Pair candidates in-array per fingerprint (sorted_pairs), bounded
+    # at WINNOW_MAX_FP_DF postings by the window cap above.
     pairs = checkpoint_frame(
         idx.groupBy("f")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .select(F.explode(fp_pairs).alias("p"))
+        .select(F.explode(sorted_pairs(F.col("ids"), "a", "b")).alias("p"))
         .select("p.a", "p.b")
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("_nf"))

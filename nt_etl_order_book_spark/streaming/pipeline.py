@@ -177,7 +177,11 @@ def deltas_query(
     start, so the session value is restored before this returns
     (verified stable across repeated runs in the r16 probe). Because
     the pin briefly sets the shared session conf, streaming queries on
-    one session must be started from one thread.
+    one session must be started from one thread. The pin sits on the
+    caller's session, not a ``newSession()`` clone, so that session's
+    listeners (``BookPipelineListener``'s state-bound alarm) keep
+    seeing the query: a query started on a clone reports to the
+    clone's listeners only.
 
     An ``available_now`` dedup run skips the trailing no-data batch (see
     the comment in the body). Its rows are unchanged; the watermark

@@ -50,17 +50,23 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan table ``name`` of the fixture directory ``sf_dir``.
+
+    Precondition: ``spark`` was built by ``session.get_spark`` or passed
+    through ``session.tune_session``, which set
+    ``spark.sql.legacy.parquet.nanosAsLong`` (SESSION_CONFS) so the
+    events table's TIMESTAMP(NANOS) column is readable. Every entry point
+    does one or the other; this call sets no session conf."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
-        # The driver's events.parquet carries TIMESTAMP(NANOS) which
-        # Spark's parquet reader rejects; read nanos as long and re-derive
-        # a microsecond timestamp (NTZ so semantics match the
-        # timezone-naive oracle). Other writers produce µs timestamps —
-        # detect from the actual read schema rather than assuming.
+        # The driver's events.parquet carries TIMESTAMP(NANOS), read as
+        # long nanos (see the docstring); re-derive a microsecond
+        # timestamp (NTZ so semantics match the timezone-naive oracle).
+        # Other writers produce µs timestamps — detect from the actual
+        # read schema rather than assuming.
         from pyspark.sql.types import LongType, TimestampNTZType
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):  # nanos-as-long path

@@ -455,11 +455,10 @@ def test_winnow_fingerprints_match_bruteforce(spark_prop, texts):
     # gate — the r8 version of which caught the ANSI element_at throw.
     import hashlib
 
+    from nt_etl_order_book_spark.functions.dedup import SHINGLE_HASH_MOD, SHINGLE_HASH_MULT
     from nt_etl_order_book_spark.functions.text import (
-        WINNOW_HASH_MOD,
         WINNOW_K,
         WINNOW_W,
-        _WINNOW_HASH_MULT,
         winnow_fp_expr,
         winnow_hashes,
     )
@@ -480,7 +479,7 @@ def test_winnow_fingerprints_match_bruteforce(spark_prop, texts):
                 acc = th[i]
                 for j in range(1, WINNOW_K):
                     if i + j < len(th):
-                        acc = (acc * _WINNOW_HASH_MULT + th[i + j]) % WINNOW_HASH_MOD
+                        acc = (acc * SHINGLE_HASH_MULT + th[i + j]) % SHINGLE_HASH_MOD
                 hs.append(acc)
         fp = {
             min(hs[i : i + WINNOW_W])
@@ -517,7 +516,9 @@ def test_rolling_gram_expr_matches_bruteforce(spark_prop, texts, n):
     # gram count = size - n + 1, and two positions collide exactly when
     # their token windows are equal (same tokens → same rolling hash;
     # the converse at these sizes is the ~D²/2⁵⁸ collision bound).
+    # The clipped kernel (partial_grams) is checked on the same texts.
     from nt_etl_order_book_spark.functions.dedup import (
+        partial_grams,
         rolling_gram_expr,
         token_hash_expr,
     )
@@ -526,11 +527,12 @@ def test_rolling_gram_expr_matches_bruteforce(spark_prop, texts, n):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    staged = docs.select(
+    hashed = docs.select(
         "doc_id",
         F.size(F.filter(F.split("text", " "), lambda t: t != "")).alias("ntok"),
         token_hash_expr().alias("_th"),
-    ).filter(F.col("ntok") >= n)
+    )
+    staged = hashed.filter(F.col("ntok") >= n)
     got = {
         r.doc_id: list(r.g)
         for r in staged.select(
@@ -551,6 +553,29 @@ def test_rolling_gram_expr_matches_bruteforce(spark_prop, texts, n):
                     assert grams[x] == grams[y], (t, x, y)
                 else:
                     assert grams[x] != grams[y], (t, x, y)
+
+    # partial_grams on every doc: -1 for an empty doc, ONE clipped gram
+    # for a doc of k < n tokens (the full-width fold over all k of them),
+    # and the full-width grams wherever size >= n.
+    th = F.col("_th")
+    whole = F.coalesce(
+        *[F.when(F.col("ntok") == k, rolling_gram_expr(th, k)) for k in range(1, n)]
+    )
+    part = {
+        r.doc_id: (list(r.p), r.w)
+        for r in hashed.select(
+            "doc_id", partial_grams(th, n).alias("p"), whole.alias("w")
+        ).collect()
+    }
+    for i, t in enumerate(texts):
+        toks = [x for x in t.split(" ") if x != ""]
+        p, w = part[i]
+        if not toks:
+            assert p == [-1], t
+        elif len(toks) < n:
+            assert len(w) == 1 and w[0] >= 0 and p == list(w), (t, p, w)
+        else:
+            assert p == got[i], (t, p, got[i])
 
 
 # ---------------------------------------------------------------------------

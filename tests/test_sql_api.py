@@ -56,3 +56,16 @@ def test_spark_sql_text_matches_dataframe_queries(spark, sf_dir):
         FROM events GROUP BY user_id, date_trunc('hour', ts)
     """)
     assert _rows(sql) == _rows(qs["ohlc_bars"](spark, sf_dir))
+
+
+def test_load_events_sets_no_session_conf(spark):
+    # The nanos-as-long read of events.parquet rides on the conf that
+    # get_spark / tune_session set (SESSION_CONFS); load_table itself
+    # must leave the caller's session conf as it found it.
+    from nt_etl_order_book_spark.tables import load_table, sf_path
+
+    before = dict(spark.conf.getAll)
+    df = load_table(spark, sf_path("0.01"), "events")
+    assert df.schema["ts"].dataType.typeName() == "timestamp_ntz"
+    assert df.select("ts").limit(1).collect()[0].ts is not None
+    assert dict(spark.conf.getAll) == before

@@ -2,12 +2,18 @@
 so plan quality (pushdown, pruning, broadcast, partial agg, shuffle
 count) is reviewable without running Spark.
 
+Expression ids, lambda variable names, plan ids and RDD ids are
+renumbered per plan (see `renumber`), so regenerating on an unchanged
+tree rewrites no line and a diff of two regenerations shows only the
+plans that changed.
+
 Usage: python tools/dump_plans.py [sf_dir]
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -15,6 +21,39 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from nt_etl_order_book_spark import registry
 from nt_etl_order_book_spark.plans.explain import count_shuffles, formatted_plan
 from nt_etl_order_book_spark.session import get_spark
+
+# Session-global counters a formatted plan prints. Group 2 holds the
+# counter value, group 3 (when set) the key it is numbered by.
+_COUNTERS = (
+    # Lambda variables are numbered by the variable, i.e. by the
+    # expression id that follows the name: one Python lambda Column used
+    # twice prints one name for two variables.
+    re.compile(r"(lambda [A-Za-z]+_)(\d+)(?=(#\d+))"),
+    # Expression ids: `name#123`, `name#123L`, `...)#123`.
+    re.compile(r"(?<=[\w)])(#)(\d+)()"),
+    re.compile(r"(_common_expr_)(\d+)()"),
+    re.compile(r"(plan_id=)(\d+)()"),
+    re.compile(r"(RDD\[)(\d+)()"),
+)
+
+# A checkpointed RDD's call site reads NativeMethodAccessorImpl.java
+# until the JVM swaps in a generated reflection accessor (`<unknown>`),
+# which happens after a number of calls the session made earlier.
+_CALL_SITE = re.compile(r"(?<= at )NativeMethodAccessorImpl\.java:0")
+
+
+def renumber(plan: str) -> str:
+    """Replace each session-global counter in ``plan`` by a per-plan
+    number in first-seen order, so a plan's text depends on the plan
+    alone, not on what the session planned before it."""
+    plan = _CALL_SITE.sub("<unknown>:0", plan)
+    for pattern in _COUNTERS:
+        seen: dict[str, int] = {}
+        plan = pattern.sub(
+            lambda m: m[1] + str(seen.setdefault(m[3] or m[2], len(seen))), plan
+        )
+    return plan
+
 
 SHOW = [
     "book_reconstruct",
@@ -90,7 +129,7 @@ def main() -> None:
     ]
     for name in SHOW:
         df = qs[name](spark, sf_dir)
-        plan = formatted_plan(df)
+        plan = renumber(formatted_plan(df))
         out.append(f"## {name}")
         out.append("")
         out.append(f"_{specs[name].doc.strip()}_")

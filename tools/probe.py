@@ -14,7 +14,6 @@ import argparse
 import gc
 import json
 import os
-import shutil
 import statistics
 import sys
 import tempfile
@@ -193,6 +192,7 @@ def recall_of(emb, result_df, truth, floors) -> tuple[float, float]:
 
 
 def cmd_ann_cells(args) -> int:
+    from nt_etl_order_book_spark.functions import artifacts
     from nt_etl_order_book_spark.functions import similarity as sim
 
     spark = session("ann-cells")
@@ -203,23 +203,19 @@ def cmd_ann_cells(args) -> int:
     truth, floors = exact_topk(spark, args.corpus)
     print(f"# exact ground truth in {time.time() - t0:.1f}s", file=sys.stderr)
 
-    work = os.path.join(tempfile.gettempdir(), "ann_cells_probe")
-    os.makedirs(work, exist_ok=True)
-    corpus_tag = f"{os.path.basename(args.corpus.rstrip('/'))}_{n_corpus}"
     results = []
     for n_cells, n_probe in args.configs:
-        # Keyed by corpus AND cell count: a cached index from another
-        # corpus served here would probe the wrong vec_ids entirely.
-        path = os.path.join(work, f"ivfpq_{corpus_tag}_c{n_cells}")
-        train_s = None
-        if not os.path.exists(f"{path}/index/_SUCCESS"):
-            shutil.rmtree(path, ignore_errors=True)
-            # Train and persist through the registered path, so the probe
-            # measures what a deployment following DEPLOY.md §2 runs.
-            t0 = time.time()
-            with mock.patch.dict(os.environ, {"SPARK_GRAFT_IVF_CELLS": str(n_cells)}):
-                sim.ivfpq_train(emb, path)
-            train_s = round(time.time() - t0, 1)
+        # The artifact lifecycle ann_ivfpq_apply uses: keyed by corpus
+        # fingerprint and cell count under SPARK_GRAFT_INDEX_DIR, trained
+        # and published through the registered path, so the probe
+        # measures what a deployment following DEPLOY.md §2 runs.
+        path = artifacts.artifact_path(f"ivfpq_c{n_cells}", args.corpus, "embeddings")
+        cached = artifacts.is_published(path)
+        t0 = time.time()
+        with mock.patch.dict(os.environ, {"SPARK_GRAFT_IVF_CELLS": str(n_cells)}):
+            artifacts.ensure_published(path, lambda d: sim.ivfpq_train(emb, d))
+        train_s = None if cached else round(time.time() - t0, 1)
+        if not cached:
             print(f"# c{n_cells}: trained+persisted in {train_s}s", file=sys.stderr)
         ca = spark.read.parquet(f"{path}/cents.parquet")
         books = spark.read.parquet(f"{path}/books.parquet")
@@ -253,7 +249,7 @@ def cmd_ann_cells(args) -> int:
     for r in results:
         print(
             f"| {r['n_cells']} | {r['n_probe']} | {r['probed_fraction']:.2%} "
-            f"| {r['train_s'] if r['train_s'] is not None else 'cached'} s "
+            f"| {'cached' if r['train_s'] is None else str(r['train_s']) + ' s'} "
             f"| {r['probe_best_s']} s | {r['recall_eps']} | {r['recall_exact_id']} |"
         )
     spark.stop()
@@ -497,7 +493,14 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--runs", type=int, default=1, help="best-of-N timed runs per query")
     p.set_defaults(run=cmd_scan)
 
-    p = sub.add_parser("ann-cells", help="IVF-PQ (n_cells, n_probe) sweep with recall")
+    p = sub.add_parser(
+        "ann-cells",
+        help="IVF-PQ (n_cells, n_probe) sweep with recall",
+        description="Indexes are cached in the package's artifact cache under "
+        "SPARK_GRAFT_INDEX_DIR, keyed by corpus content and cell count but not "
+        "by code version: a before/after comparison needs a fresh "
+        "SPARK_GRAFT_INDEX_DIR per checkout.",
+    )
     p.add_argument("corpus", nargs="?", default="/tmp/emb1000x")
     p.add_argument("--configs", type=cells_probe_pairs, default=cells_probe_pairs("16:11,1414:11,1414:32"),
                    help="CELLS:PROBE pairs, comma-separated")
