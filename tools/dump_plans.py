@@ -110,6 +110,12 @@ SHOW = [
     "ngram_coverage_curve",
     "graph_reachability",
     "minhash_eval",
+    "max_drawdown",
+    "win_running_sum",
+    "win_lag_lead",
+    "attribution_last_touch",
+    "interarrival_stats",
+    "seq_gap_check",
 ]
 
 
