@@ -357,17 +357,17 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from nt_etl_order_book_spark.operators.timeseries import chunked_lag
+    from nt_etl_order_book_spark.operators.timeseries import chunked_shift
 
     ev = load_table(spark, sf_dir, "events")
     # the r6 verdict's 4.0×-at-10× lag sort: now day-chunked via
-    # chunked_lag, so a hot market's sequence fans across its days
+    # chunked_shift, so a hot market's sequence fans across its days
     base = ev.select(
         "user_id", "ts", "event_id", "event_type",
         F.date_trunc("day", "ts").alias("chunk"),
     )
     seq = (
-        chunked_lag(base, "user_id", ["ts", "event_id"], "event_type", "prev_type")
+        chunked_shift(base, "user_id", ["ts", "event_id"], "event_type", lag="prev_type")
         .select("event_type", "prev_type")
         .filter(F.col("prev_type").isNotNull())
     )
@@ -415,43 +415,20 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
+    from nt_etl_order_book_spark.operators.timeseries import chunked_prefix
 
     ev = load_table(spark, sf_dir, "events")
-    # Day-chunked running-last carry (the order_flow_imbalance pattern,
-    # with the strictly-before frame): local last-non-purchase within
-    # (user, day) over rows BEFORE the current one, day-grain last per
-    # (user, day) INCLUDING the day's final row (it precedes every row
-    # of later days), carried forward ignore-nulls across prior days.
-    # coalesce(local, carry) == the whole-history 1-PRECEDING carry:
-    # local is NULL iff no qualifying touch earlier in the same day.
+    # Day-chunked last non-purchase type over the strictly-before frame
+    # (chunked_prefix "last", strict): the same row the whole-history
+    # 1-PRECEDING carry picks.
     base = ev.select(
         "user_id", "ts", "event_id", "event_type", "value",
         F.date_trunc("day", "ts").alias("chunk"),
         F.when(F.col("event_type") != "purchase", F.col("event_type")).alias("_t"),
     )
-    wloc = (
-        Window.partitionBy("user_id", "chunk")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    day_last = base.groupBy("user_id", "chunk").agg(
-        F.max_by(
-            "_t", F.when(F.col("_t").isNotNull(), F.struct("ts", "event_id"))
-        ).alias("_dl")
-    )
-    wcarry = (
-        Window.partitionBy("user_id")
-        .orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = day_last.select(
-        "user_id", "chunk", F.last("_dl", ignorenulls=True).over(wcarry).alias("_cs")
-    )
-    touch = F.coalesce(F.last("_t", ignorenulls=True).over(wloc), F.col("_cs"))
-    carried = base.join(carry, ["user_id", "chunk"]).select(
-        "event_type", "value", touch.alias("touch")
-    )
+    carried = chunked_prefix(
+        base, "user_id", ["ts", "event_id"], "_t", "last", "touch", strict=True
+    ).select("event_type", "value", "touch")
     return (
         carried.filter(F.col("event_type") == "purchase")
         .groupBy(F.coalesce(F.col("touch"), F.lit("none")).alias("channel"))

@@ -8,14 +8,14 @@ market dimension from REST discovery (kalshi_rest_client.py:60-74).
 Scale notes per query are inline; the global rules:
 - dims ≤ a few MB → `broadcast()` (no shuffle of the fact side);
 - fact⋈fact equi-joins → sort-merge on the key, AQE handles skew;
-- the as-of join is NOT a range join: it is one union + one window
-  shuffle on the key (see `asof_join`), which stays linear at 100 TB
+- the as-of join is NOT a range join: it is one union + one row-grain
+  window shuffle on (key, day) (see `asof_join`), linear at 100 TB
   where a naive inequality join would be quadratic.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nt_etl_order_book_spark.operators.aggregates import dsum, sql_dsum
@@ -45,11 +45,11 @@ def asof_join(
 
     `right` SHOULD be unique per (key, ts) — that is the well-defined
     as-of contract. When duplicates exist anyway, every ordering
-    (the window sorts and the day-carry ``max_by``) tiebreaks on the
-    right row's own value struct, so the greatest duplicate wins
-    EVERYWHERE: the pick is deterministic across runs and identical
-    between the chunked and unchunked paths (it cannot smear across
-    day boundaries). When the contract holds the tiebreak never fires.
+    (the window sort and the chunk carry's ``max_by``) tiebreaks on
+    the right row's own value struct, so the greatest duplicate wins
+    EVERYWHERE: the pick is deterministic across runs and cannot smear
+    across day boundaries. When the contract holds the tiebreak never
+    fires.
     Because the tiebreak compares the whole value struct, every column
     in ``value_cols`` must have an ORDERABLE type (no map columns) —
     the plan fails at analysis time otherwise. Project a map column to
@@ -61,18 +61,17 @@ def asof_join(
     together with older rows' values, emitting a composite right row
     that never existed.
 
-    When the ts columns are timestamps the running last is DAY-CHUNKED
-    (the max_drawdown carry-in family): local last-ignore-nulls within
-    (key, day) + a chunk-grain carry holding each day's last right row
-    (unique by the (key, ts) contract, so the carry is deterministic),
-    last-ignore-nulls'd over PRIOR days — left-only days get their
-    carry through the union's distinct (key, day) frame. No task ever
-    sorts a hot key's whole tape; the picked row is the same row the
-    global window picks, so consumers stay bit-identical to their
-    native-ASOF oracles. Non-timestamp ts falls back to the single
-    keyed window.
+    The running last is `chunked_prefix`'s ``"last"`` over the union,
+    ordered (ts, tag, row): the union is DAY-CHUNKED when the ts is
+    temporal (one constant chunk otherwise), so no task sorts a hot
+    key's whole tape, and each left row takes the latest right row of
+    its own day before it or else the carried last right row of the
+    prior days. The picked row is the one the global window picks, so
+    consumers stay bit-identical to their native-ASOF oracles.
     """
     from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
+
+    from nt_etl_order_book_spark.operators.timeseries import chunked_prefix
 
     lcols = [c for c in left.columns]
     r_struct_type = "struct<" + ",".join(
@@ -92,47 +91,10 @@ def asof_join(
         *[F.lit(None).cast(left.schema[c].dataType).alias(f"_l_{c}") for c in lcols],
         F.struct(*[F.col(c) for c in value_cols]).alias("_r"),
     )
-    chunkable = isinstance(
-        left.schema[left_ts].dataType, (TimestampType, TimestampNTZType, DateType)
-    ) and isinstance(
-        right.schema[right_ts].dataType, (TimestampType, TimestampNTZType, DateType)
-    )
-    if not chunkable:
-        w = (
-            Window.partitionBy("_k")
-            .orderBy("_ts", "_is_left", "_r")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        matched = l_tagged.unionByName(r_tagged).select(
-            "*", F.last("_r", ignorenulls=True).over(w).alias("_m")
-        )
-    else:
-        u = l_tagged.unionByName(r_tagged).withColumn(
-            "_ch", F.date_trunc("day", F.col("_ts"))
-        )
-        day_last = r_tagged.groupBy(
-            "_k", F.date_trunc("day", F.col("_ts")).alias("_ch")
-        ).agg(F.max_by("_r", F.struct(F.col("_ts"), F.col("_r"))).alias("_day_r"))
-        chunks = u.select("_k", "_ch").distinct()
-        wch = (
-            Window.partitionBy("_k")
-            .orderBy("_ch")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry = chunks.join(day_last, ["_k", "_ch"], "left").select(
-            "_k", "_ch", F.last("_day_r", ignorenulls=True).over(wch).alias("_c_r")
-        )
-        wloc = (
-            Window.partitionBy("_k", "_ch")
-            .orderBy("_ts", "_is_left", "_r")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        matched = u.join(carry, ["_k", "_ch"]).select(
-            "*",
-            F.coalesce(F.last("_r", ignorenulls=True).over(wloc), F.col("_c_r")).alias(
-                "_m"
-            ),
-        )
+    u = l_tagged.unionByName(r_tagged)
+    temporal = isinstance(u.schema["_ts"].dataType, (TimestampType, TimestampNTZType, DateType))
+    u = u.withColumn("_ch", F.date_trunc("day", "_ts") if temporal else F.lit(0))
+    matched = chunked_prefix(u, "_k", ["_ts", "_is_left", "_r"], "_r", "last", "_m", chunk="_ch")
     return matched.filter(F.col("_is_left") == 1).select(
         *[F.col(f"_l_{c}").alias(c) for c in lcols],
         *[F.col("_m")[c].alias(f"asof_{c}") for c in value_cols],

@@ -12,9 +12,10 @@ Scale discipline shared by the family:
   gaps) need a per-key ordered pass — one window shuffle. Every window
   here is keyed as finely as the semantics allow (``(user, day)`` for
   intraday returns, ``(user, event_type)`` for gaps) so a single task
-  never serializes more than one key-slice; only `max_drawdown` is
-  inherently whole-history-per-key (running peak is a prefix scan) and
-  its docstring says so.
+  never serializes more than one key-slice. Whole-history prefix scans
+  (running peaks and sums, last-touch carries) and lags that cross
+  midnight are day-chunked: `chunked_prefix` and `chunked_shift` are
+  the one definition of that decomposition.
 - Aggregation after the window re-shuffles strictly narrower keys
   (grouping columns + one double), never rows.
 - Double sums accumulate in exact DECIMAL (registry discipline) so
@@ -36,81 +37,123 @@ from nt_etl_order_book_spark.tables import load_table
 ROLLING_CHUNK = 4096
 
 
-def chunked_lag(
+def chunked_prefix(
     df: DataFrame,
-    key: str | list[str],
+    keys: str | list[str],
     order_cols: list[str],
     col: str,
+    op: str,
     out: str,
+    *,
+    strict: bool = False,
     chunk: str = "chunk",
 ) -> DataFrame:
-    """``lag(col) over (partitionBy key orderBy order_cols)`` WITHOUT a
-    whole-history window: local lag within (key, chunk) shards plus the
-    chunk-grain boundary carry (each chunk's first row takes the
-    previous chunk's last value; a chunk-keyed lag over the tiny
-    per-chunk frame supplies it). The first row of a key's first chunk
-    gets NULL — exactly the global lag. Result = input columns + `out`.
+    """Running ``op`` of `col` per key in `order_cols` order — ``"sum"``,
+    ``"max"`` or ``"last"`` (last non-null) over the frame ending at the
+    current row, or at the previous row when `strict` — WITHOUT a
+    whole-history window. Result = input columns + `out`.
 
-    This is the lag half of the max_drawdown carry-in family: at scale
-    a hot key's history fans across its chunks instead of sorting in
-    one task, and the only unsharded window runs over |key|×|chunks|
-    rows. The value it returns is the SAME double/decimal the global
-    window would produce (no rearranged arithmetic), so consumers stay
-    bit-identical to their whole-history oracles.
+    The day-chunked carry-in decomposition: (1) the local running op
+    within (keys, chunk) shards, so a hot key's history fans across its
+    chunks instead of sorting in one task; (2) one aggregate per
+    (keys, chunk) — for ``"last"`` the chunk's last non-null value,
+    ``max_by(col, when(col IS NOT NULL, struct(order_cols)))``, so a
+    chunk without one still gets a carry row — and the op over PRIOR
+    chunks, the only unsharded window, over |keys|×|chunks| rows;
+    (3) joined back on (keys, chunk) and combined: carry + local for
+    sum (each NULL read as 0 unless both are), greatest(local, carry)
+    for max, coalesce(local, carry) for last. Decimal and integer sums
+    are associative, max is exact and last picks an existing row, so
+    `out` is bit-identical to the whole-history window the oracles
+    run. `chunk` must be monotone in `order_cols` (a day of the ts, a
+    block of the id).
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    wloc = Window.partitionBy(*keys, chunk).orderBy(*order_cols)
-    okey = F.struct(*order_cols)
-    last = df.groupBy(*keys, chunk).agg(F.max_by(col, okey).alias("_chl_last"))
-    wch = Window.partitionBy(*keys).orderBy(chunk)
-    prev = last.select(
-        *keys, chunk, F.lag("_chl_last").over(wch).alias("_chl_prev")
+    runs = {"sum": F.sum, "max": F.max, "last": lambda c: F.last(c, ignorenulls=True)}
+    if op not in runs:
+        raise ValueError(f"chunked_prefix: op must be sum, max or last, not {op!r}")
+    run = runs[op]
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    wloc = (
+        Window.partitionBy(*keys, chunk)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, -1 if strict else Window.currentRow)
     )
-    return (
-        df.join(prev, [*keys, chunk])
-        .withColumn("_chl_rn", F.row_number().over(wloc))
-        .withColumn(
-            out,
-            F.when(F.col("_chl_rn") == 1, F.col("_chl_prev")).otherwise(
-                F.lag(col).over(wloc)
-            ),
+    per_chunk = (
+        F.max_by(col, F.when(F.col(col).isNotNull(), F.struct(*order_cols)))
+        if op == "last"
+        else run(col)
+    )
+    wcarry = Window.partitionBy(*keys).orderBy(chunk).rowsBetween(Window.unboundedPreceding, -1)
+    chunks = df.groupBy(*keys, chunk).agg(per_chunk.alias("_cp_chunk"))
+    chunks = chunks.select(*keys, chunk, run("_cp_chunk").over(wcarry).alias("_cp_carry"))
+    # The local window runs before the join. Joined first, cusum_drift
+    # planned one more exchange: its per-user aggregate could no longer
+    # reuse the user-partitioned carry side.
+    rows = df.withColumn("_cp_local", run(col).over(wloc)).join(chunks, [*keys, chunk])
+    local, carried = F.col("_cp_local"), F.col("_cp_carry")
+    if op == "sum":
+        # NULL while every value so far is NULL, as the global SUM is.
+        zero = F.lit(0)
+        combined = F.when(local.isNull() & carried.isNull(), None).otherwise(
+            F.coalesce(carried, zero) + F.coalesce(local, zero)
         )
-        .drop("_chl_prev", "_chl_rn")
-    )
+    elif op == "max":
+        combined = F.greatest(local, carried)
+    else:
+        combined = F.coalesce(local, carried)
+    return rows.withColumn(out, combined).drop("_cp_local", "_cp_carry")
 
 
-def chunked_lead(
+def chunked_shift(
     df: DataFrame,
-    key: str | list[str],
+    keys: str | list[str],
     order_cols: list[str],
     col: str,
-    out: str,
+    *,
+    lag: str | None = None,
+    lead: str | None = None,
     chunk: str = "chunk",
 ) -> DataFrame:
-    """Mirror of chunked_lag for ``lead()``: local lead within
-    (key, chunk), each chunk's LAST row takes the NEXT chunk's first
-    value (chunk-grain lag over descending chunk order). The last row
-    of a key's last chunk gets NULL — exactly the global lead."""
-    keys = [key] if isinstance(key, str) else list(key)
-    wloc = Window.partitionBy(*keys, chunk).orderBy(*order_cols)
-    wrev = Window.partitionBy(*keys, chunk).orderBy(*[F.desc(c) for c in order_cols])
+    """``lag(col)`` into column `lag` and/or ``lead(col)`` into column
+    `lead`, over (partitionBy keys orderBy order_cols), WITHOUT a
+    whole-history window: local lag/lead within (keys, chunk) shards,
+    and one chunk-grain frame carrying the previous chunk's last value
+    and the next chunk's first value (``max_by`` / ``min_by`` on the
+    order struct, which keep a NULL value of the picked row). A chunk's
+    first row takes the carried last, its final row the carried first;
+    a key's first (last) row gets NULL — exactly the global lag (lead).
+    The value is the same one the global window picks, so consumers
+    stay bit-identical to their whole-history oracles. The boundary
+    twin of `chunked_prefix`; see it for the decomposition and the
+    `chunk` contract. Result = input columns + the requested outputs.
+    """
+    if lag is None and lead is None:
+        raise ValueError("chunked_shift: pass lag= and/or lead=")
+    keys = [keys] if isinstance(keys, str) else list(keys)
     okey = F.struct(*order_cols)
-    first = df.groupBy(*keys, chunk).agg(F.min_by(col, okey).alias("_chd_first"))
-    wch = Window.partitionBy(*keys).orderBy(F.desc(chunk))
-    nxt = first.select(
-        *keys, chunk, F.lag("_chd_first").over(wch).alias("_chd_next")
-    )
-    return (
-        df.join(nxt, [*keys, chunk])
-        .withColumn("_chd_rn", F.row_number().over(wrev))
-        .withColumn(
-            out,
-            F.when(F.col("_chd_rn") == 1, F.col("_chd_next")).otherwise(
-                F.lead(col).over(wloc)
-            ),
+    wch = Window.partitionBy(*keys).orderBy(chunk)
+    aggs, carries = [], []
+    if lag is not None:
+        aggs.append(F.max_by(col, okey).alias("_chl_last"))
+        carries.append(F.lag("_chl_last").over(wch).alias("_chl_prev"))
+    if lead is not None:
+        aggs.append(F.min_by(col, okey).alias("_chl_first"))
+        carries.append(F.lead("_chl_first").over(wch).alias("_chl_next"))
+    chunks = df.groupBy(*keys, chunk).agg(*aggs).select(*keys, chunk, *carries)
+    wloc = Window.partitionBy(*keys, chunk).orderBy(*order_cols)
+    rows = df.join(chunks, [*keys, chunk])
+    if lag is not None:
+        rows = rows.withColumn("_chl_rn", F.row_number().over(wloc)).withColumn(
+            lag,
+            F.when(F.col("_chl_rn") == 1, F.col("_chl_prev")).otherwise(F.lag(col).over(wloc)),
         )
-        .drop("_chd_next", "_chd_rn")
-    )
+    if lead is not None:
+        wrev = Window.partitionBy(*keys, chunk).orderBy(*[F.desc(c) for c in order_cols])
+        rows = rows.withColumn("_chl_rrn", F.row_number().over(wrev)).withColumn(
+            lead,
+            F.when(F.col("_chl_rrn") == 1, F.col("_chl_next")).otherwise(F.lead(col).over(wloc)),
+        )
+    return rows.drop("_chl_prev", "_chl_rn", "_chl_next", "_chl_rrn")
 
 
 def chunked_tick_rule(base: DataFrame, price, *, vol_offsets: bool = False) -> DataFrame:
@@ -279,7 +322,8 @@ def q_realized_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Maximum drawdown per market: running peak over the (ts, "
         "event_id)-ordered price path, drawdown = (peak - value)/peak, "
         "report the worst. The oracle is the single whole-history "
-        "window; the engine runs the two-pass carry-in decomposition "
+        "window; the engine runs the day-chunked carry-in decomposition "
+        "(chunked_prefix) "
         "so no task ever sees a key's full history: (1) local running "
         "peak within (market, day) shards — the hot market's history "
         "fans across its days, exactly realized_volatility's sharding; "
@@ -298,25 +342,10 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.select(
         "user_id", "ts", "event_id", "value", F.date_trunc("day", "ts").alias("chunk")
     )
-    wloc = (
-        Window.partitionBy("user_id", "chunk")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = base.withColumn("local_peak", F.max("value").over(wloc))
-    cmax = base.groupBy("user_id", "chunk").agg(F.max("value").alias("cmax"))
-    wcarry = (
-        Window.partitionBy("user_id")
-        .orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = cmax.select("user_id", "chunk", F.max("cmax").over(wcarry).alias("carry_peak"))
-    peak = F.when(
-        F.col("carry_peak").isNull(), F.col("local_peak")
-    ).otherwise(F.greatest(F.col("local_peak"), F.col("carry_peak")))
+    peak = F.col("peak")
     dd = (peak - F.col("value")) / peak
     return (
-        local.join(carry, ["user_id", "chunk"])
+        chunked_prefix(base, "user_id", ["ts", "event_id"], "value", "max", "peak")
         .select("user_id", dd.alias("dd"))
         .groupBy("user_id")
         .agg(F.round(F.max("dd"), 6).alias("max_drawdown"), F.count(F.lit(1)).alias("n_events"))
@@ -392,8 +421,8 @@ def _interarrival_gaps(ev: DataFrame) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("tus"),
         F.date_trunc("day", "ts").alias("chunk"),
     )
-    lagged = chunked_lag(
-        base, ["user_id", "event_type"], ["ts", "event_id"], "tus", "prev_tus"
+    lagged = chunked_shift(
+        base, ["user_id", "event_type"], ["ts", "event_id"], "tus", lag="prev_tus"
     )
     return lagged.select(
         "event_type", (F.col("tus") - F.col("prev_tus")).alias("gap_us")
@@ -547,8 +576,9 @@ def q_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window; the oracle's global-window SQL is the equivalence proof).
     # Both lags the estimator needs reduce to lag1/lag2 of the price
     # (d = v - lag1(v), dprev = lag1(v) - lag2(v)), so instead of two
-    # sequential chunked_lag calls — whose second call re-ran the whole
-    # first pipeline for its chunk frame (measured 1.93 s at sf0.1) —
+    # sequential lag-only chunked_shift calls — whose second call re-ran
+    # the whole first pipeline for its chunk frame (measured 1.93 s at
+    # sf0.1) —
     # ONE chunk-grain frame carries each chunk's last TWO prices and
     # the row pass takes lag1/lag2 locally, patching rows 1-2 of each
     # chunk from the carry (1.27 s, values bit-identical: same
@@ -679,8 +709,8 @@ def q_order_flow_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The day-array single-fork machinery now lives in chunked_tick_rule
     # (kyle_lambda and vpin share it); identity price — OFI classifies
-    # on the raw double diff. Measured history: forked chunked_lag
-    # draft 1.29 s at sf0.1, this form 0.98 s.
+    # on the raw double diff. Measured history: a forked lag-only
+    # chunked_shift draft 1.29 s at sf0.1, this form 0.98 s.
     s2 = chunked_tick_rule(base, lambda v: v).select(
         "user_id", F.col("chunk").alias("day"), F.col("sgn").alias("s")
     )
@@ -997,10 +1027,9 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nt_etl_order_book_spark.operators.aggregates import davg
 
-    # Same day-chunked carry-in decomposition as max_drawdown /
-    # dollar_bars — decimal addition is exact and associative, so the
-    # chunked cumulative sum is bit-identical to the whole-history
-    # window the oracle runs, and no task sees a market's full history.
+    # Day-chunked running sum (chunked_prefix): decimal addition is
+    # exact and associative, so it is bit-identical to the
+    # whole-history window the oracle runs.
     ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
     m = ev.groupBy("user_id").agg(davg("value").alias("mean_v"))
     base = ev.join(F.broadcast(m), "user_id").select(
@@ -1010,27 +1039,7 @@ def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value") - F.col("mean_v")).cast("decimal(38,18)").alias("dev"),
         F.date_trunc("day", "ts").alias("chunk"),
     )
-    wloc = (
-        Window.partitionBy("user_id", "chunk")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = base.withColumn("local_cum", F.sum("dev").over(wloc))
-    dsum_day = base.groupBy("user_id", "chunk").agg(F.sum("dev").alias("day_dev"))
-    wcarry = (
-        Window.partitionBy("user_id")
-        .orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    zero_dec = F.lit(0).cast("decimal(38,18)")
-    carry = dsum_day.select(
-        "user_id",
-        "chunk",
-        F.coalesce(F.sum("day_dev").over(wcarry), zero_dec).alias("carry_dev"),
-    )
-    c = local.join(carry, ["user_id", "chunk"]).select(
-        "user_id", (F.col("carry_dev") + F.col("local_cum")).alias("cusum")
-    )
+    c = chunked_prefix(base, "user_id", ["ts", "event_id"], "dev", "sum", "cusum")
     return c.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.max(F.abs(F.col("cusum"))).cast("double"), 6).alias("max_abs_cusum"),
@@ -1088,11 +1097,8 @@ DOLLAR_BAR_CENTS = 100_000
     ),
 )
 def q_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Running notional via the max_drawdown day-chunked carry-in
-    # decomposition (BIGINT sum is associative, so bit-identical to the
-    # whole-history window the oracle runs): local cumsum within
-    # (market, day), day-grain totals give each day's carry-in offset,
-    # join back co-partitioned — no task sees a market's full history.
+    # Running notional via chunked_prefix (BIGINT sum is associative,
+    # so bit-identical to the whole-history window the oracle runs).
     ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
     c = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
     k = F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000) + F.col("event_id")
@@ -1105,26 +1111,7 @@ def q_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         k.alias("k"),
         F.date_trunc("day", "ts").alias("chunk"),
     )
-    wloc = (
-        Window.partitionBy("user_id", "chunk")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = base.withColumn("local_cum", F.sum("c").over(wloc))
-    dsum_day = base.groupBy("user_id", "chunk").agg(F.sum("c").alias("day_c"))
-    wcarry = (
-        Window.partitionBy("user_id")
-        .orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = dsum_day.select(
-        "user_id",
-        "chunk",
-        F.coalesce(F.sum("day_c").over(wcarry), F.lit(0)).cast("bigint").alias("carry_c"),
-    )
-    cum = local.join(carry, ["user_id", "chunk"]).withColumn(
-        "cum_c", F.col("carry_c") + F.col("local_cum")
-    )
+    cum = chunked_prefix(base, "user_id", ["ts", "event_id"], "c", "sum", "cum_c")
     bar = F.expr(f"(cum_c - c) div {DOLLAR_BAR_CENTS}")
     return cum.groupBy("user_id", bar.alias("bar_id")).agg(
         F.min_by("value", "k").alias("open"),

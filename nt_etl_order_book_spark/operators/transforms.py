@@ -244,19 +244,19 @@ def q_notnull_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Monotonic sequence validation: gap detection per key (kalshi_ws_client.py:129-146), batch analog via LAG window.",
 )
 def q_seq_gap_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # chunked_lag on fixed-width id BLOCKS (the day-chunked carry
+    # chunked_shift on fixed-width id BLOCKS (the day-chunked carry
     # family, with floor(event_id / 2^16) as the chunk — any function
     # monotone in the ORDER column partitions it): a key's whole id
     # stream never sorts in one window task, each block's first row
     # takes the previous block's max id from the chunk-grain carry, and
     # the lag value is the same BIGINT the global window yields.
-    from nt_etl_order_book_spark.operators.timeseries import chunked_lag
+    from nt_etl_order_book_spark.operators.timeseries import chunked_shift
 
     events = load_table(spark, sf_dir, "events")
     base = events.select(
         "user_id", "event_id", F.floor(F.col("event_id") / F.lit(65536)).alias("chunk")
     )
-    lagged = chunked_lag(base, "user_id", ["event_id"], "event_id", "prev_id")
+    lagged = chunked_shift(base, "user_id", ["event_id"], "event_id", lag="prev_id")
     return (
         lagged.withColumn("gap", F.col("event_id") - F.col("prev_id"))
         .filter(F.col("prev_id").isNotNull() & (F.col("gap") > 1))

@@ -9,8 +9,11 @@ so results are total-ordered and replay-stable. Running sums over
 doubles are deterministic once the order is total (sequential frame
 evaluation), but framed AVGs still accumulate in DECIMAL for exactness.
 
-Scale: each query is exactly one shuffle (the window partitionBy); no
-query here materializes a global sort.
+Scale: no query here sorts a key's whole history, or the whole input,
+in one task. Prefix and lag/lead windows run day-chunked through
+`timeseries.chunked_prefix` / `chunked_shift` (one row-grain shuffle on
+(key, day) plus small chunk-grain frames); global and keyed ranks go
+through `distributed_rank`'s range partition.
 """
 
 from __future__ import annotations
@@ -83,50 +86,18 @@ def q_win_rank_topk_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Price change vs previous observation (lag/lead over the time-ordered key window).",
 )
 def q_win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Day-chunked lag AND lead from ONE chunk-grain frame (prior day's
-    # last value + next day's first value — the roll_spread single-fork
-    # lesson: two sequential chunked_lag/chunked_lead calls would re-run
-    # the day pass per call): local lag/lead within (user, day), first
-    # row patches from the prior-day carry, last row from the next-day
-    # carry. Same picked rows as the global window — bit-identical
-    # (max_by/min_by keep a NULL value of the picked row, probed).
+    # Day-chunked lag AND lead from ONE chunk-grain frame
+    # (chunked_shift): same picked rows as the global window, so
+    # bit-identical.
+    from nt_etl_order_book_spark.operators.timeseries import chunked_shift
+
     events = load_table(spark, sf_dir, "events")
     base = events.select(
         "user_id", "event_id", "ts", "value", F.date_trunc("day", "ts").alias("chunk")
     )
-    okey = F.struct("ts", "event_id")
-    day = base.groupBy("user_id", "chunk").agg(
-        F.min_by("value", okey).alias("_first_v"),
-        F.max_by("value", okey).alias("_last_v"),
-    )
-    wch = Window.partitionBy("user_id").orderBy("chunk")
-    cf = day.select(
-        "user_id",
-        "chunk",
-        F.lag("_last_v").over(wch).alias("_prior_v"),
-        F.lead("_first_v").over(wch).alias("_next_v"),
-    )
-    wloc = Window.partitionBy("user_id", "chunk").orderBy("ts", "event_id")
-    wrev = Window.partitionBy("user_id", "chunk").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    rows = (
-        base.join(cf, ["user_id", "chunk"])
-        .withColumn("_rn", F.row_number().over(wloc))
-        .withColumn("_rrn", F.row_number().over(wrev))
-    )
-    return rows.select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(F.col("_rn") == 1, F.col("_prior_v"))
-        .otherwise(F.lag("value").over(wloc))
-        .alias("prev_value"),
-        F.when(F.col("_rrn") == 1, F.col("_next_v"))
-        .otherwise(F.lead("value").over(wloc))
-        .alias("next_value"),
-    )
+    return chunked_shift(
+        base, "user_id", ["ts", "event_id"], "value", lag="prev_value", lead="next_value"
+    ).drop("chunk")
 
 
 @register(
@@ -142,12 +113,11 @@ def q_win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Cumulative depth: running sum over the full history per key.",
 )
 def q_win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Day-chunked prefix sum (the dollar_bars/cusum carry-in pattern):
-    # local running DECIMAL sum within (user, day) + day-grain total
-    # offsets over prior days. Scale-6 decimal addition is exact and
-    # associative, so carry + local is bit-identical to the global
-    # window the oracle runs — and a hot key's tape fans across its day
-    # shards instead of sorting in one task.
+    # Day-chunked prefix sum (chunked_prefix): scale-6 decimal addition
+    # is exact and associative, so it is bit-identical to the global
+    # window the oracle runs.
+    from nt_etl_order_book_spark.operators.timeseries import chunked_prefix
+
     events = load_table(spark, sf_dir, "events")
     base = events.select(
         "user_id",
@@ -156,29 +126,8 @@ def q_win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast(DEC).alias("_dv"),
         F.date_trunc("day", "ts").alias("chunk"),
     )
-    wloc = (
-        Window.partitionBy("user_id", "chunk")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    day = base.groupBy("user_id", "chunk").agg(F.sum("_dv").alias("_day_sum"))
-    wcarry = (
-        Window.partitionBy("user_id")
-        .orderBy("chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = day.select(
-        "user_id",
-        "chunk",
-        F.coalesce(
-            F.sum("_day_sum").over(wcarry), F.lit(0).cast("decimal(38,6)")
-        ).alias("_carry"),
-    )
-    return base.join(carry, ["user_id", "chunk"]).select(
-        "user_id",
-        "event_id",
-        "ts",
-        (F.col("_carry") + F.sum("_dv").over(wloc)).cast("double").alias("running_value"),
+    return chunked_prefix(base, "user_id", ["ts", "event_id"], "_dv", "sum", "_run").select(
+        "user_id", "event_id", "ts", F.col("_run").cast("double").alias("running_value")
     )
 
 
@@ -489,54 +438,16 @@ def distributed_ntile(df: DataFrame, n_buckets: int, order_cols: list) -> DataFr
     """ANSI NTILE over a total order WITHOUT the single-partition window.
 
     A bare NTILE(k) OVER (ORDER BY ...) moves the whole input into one
-    window task. Decomposition: range-partition on the sort key
-    (partition p holds strictly higher-ordered rows than p+1; the caller
-    must include a unique tiebreak so the order is total), rank locally
-    per partition, lift to a global rank with broadcast per-partition
-    offsets (the only unkeyed window runs over |partitions| rows), then
-    assign the closed-form bucket: the first n % k buckets get
-    ceil(n/k) rows, the rest floor(n/k) — exactly ANSI NTILE, which the
-    DuckDB oracle runs natively, so the hash match proves the
-    decomposition. Output: input columns + ``ntile``.
-
-    SIDE EFFECT: building the returned DataFrame runs a Spark job — the
-    ranked frame is eagerly checkpointed (see the in-body comment for
-    why the lineage cut is load-bearing), and the checkpoint blocks
-    live until the superseded frame is GC'd on the driver. Callers that
-    construct many plans without executing them hold those blocks for
-    the session's lifetime; see ``distributed_rank`` for the same note.
-
-    Partition count follows ``spark.sql.shuffle.partitions`` so the
-    range fan-out scales with the deployment's configured parallelism
-    instead of a constant.
+    window task. Decomposition: `distributed_rank` with no keys (the
+    caller must include a unique tiebreak so the order is total), then
+    the closed-form bucket: the first n % k buckets get ceil(n/k) rows,
+    the rest floor(n/k) — exactly ANSI NTILE, which the DuckDB oracle
+    runs natively, so the hash match proves the decomposition. Output:
+    input columns + ``ntile``. Building the result runs a Spark job
+    (see `distributed_rank`'s SIDE EFFECT note).
     """
-    from nt_etl_order_book_spark.session import checkpoint_frame
-
-    parts = df.repartitionByRange(
-        _range_parts(df), *order_cols
-    ).withColumn("_pid", F.spark_partition_id())
-    wloc = Window.partitionBy("_pid").orderBy(*order_cols)
-    # Materialized before the counts/probe fork — spark_partition_id is
-    # nondeterministic and range boundaries re-sample per execution; see
-    # distributed_rank below (the keyed generalization) for the row-loss
-    # this prevents.
-    local = checkpoint_frame(parts.withColumn("_lrn", F.row_number().over(wloc)))
-    counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    # BOUNDED-FRAME: the unpartitioned windows below run over the
-    # counts frame — exactly |partitions| rows by construction — so the
-    # single-task WindowExec (and its "No Partition Defined" WARN) is
-    # the intended plan, not an oversight.
-    woff = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(F.sum("_cnt").over(woff), F.lit(0)).alias("_off"),
-        F.sum("_cnt").over(
-            Window.orderBy("_pid").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("_n"),
-    )
-    rnk = F.col("_off") + F.col("_lrn")
+    ranked = distributed_rank(df, [], order_cols)
+    rnk = F.col("_rnk")
     k = F.lit(n_buckets)
     q = F.floor(F.col("_n") / k)
     r = F.col("_n") % k
@@ -546,10 +457,7 @@ def distributed_ntile(df: DataFrame, n_buckets: int, order_cols: list) -> DataFr
         .otherwise(r + F.floor((rnk - 1 - cut) / F.greatest(q, F.lit(1))) + 1)
         .cast("int")
     )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .select(*df.columns, bucket.alias("ntile"))
-    )
+    return ranked.select(*df.columns, bucket.alias("ntile"))
 
 
 def _range_parts(df: DataFrame) -> int:
@@ -575,16 +483,9 @@ def _range_parts(df: DataFrame) -> int:
     return min(conf_parts, max(4 * cores, 32))
 
 
-def distributed_rank(
-    df: DataFrame,
-    keys: list[str],
-    order_cols: list,
-    *,
-    broadcast_offsets: bool = True,
-) -> DataFrame:
+def distributed_rank(df: DataFrame, keys: list[str], order_cols: list) -> DataFrame:
     """Keyed global ROW_NUMBER + per-key count WITHOUT sorting a key's
-    partition in one task — distributed_ntile's decomposition
-    generalized to PARTITION BY keys: range-partition on (keys +
+    partition in one task: range-partition on (keys +
     order_cols) so each key's rows stay order-contiguous across
     partitions, rank locally per (partition, key), lift with per-
     (key, partition) count offsets (the only cross-partition window
@@ -601,12 +502,8 @@ def distributed_rank(
     live until the superseded frame is GC'd on the driver. Callers
     that construct plans without executing them still pay that job.
 
-    The offsets frame is |partitions|×|keys| rows. With the default
-    ``broadcast_offsets=True`` it is broadcast (right for the bounded
-    key counts every registry caller has — markets, days). For
-    high-cardinality keys where partitions×keys would exceed the
-    broadcast threshold, pass ``broadcast_offsets=False`` to let the
-    join shuffle both sides on (_pid, keys) instead.
+    The offsets frame is |partitions|×|keys| rows and is broadcast —
+    right for the bounded key counts every caller has (markets, days).
     """
     from nt_etl_order_book_spark.session import checkpoint_frame
 
@@ -639,8 +536,7 @@ def distributed_rank(
         F.coalesce(F.sum("_cnt").over(woff), F.lit(0)).alias("_off"),
         F.sum("_cnt").over(Window.partitionBy(*keys)).alias("_n"),
     )
-    offsets_side = F.broadcast(offsets) if broadcast_offsets else offsets
-    return local.join(offsets_side, ["_pid", *keys]).select(
+    return local.join(F.broadcast(offsets), ["_pid", *keys]).select(
         *df.columns, (F.col("_off") + F.col("_lrn")).alias("_rnk"), "_n"
     )
 

@@ -1317,10 +1317,8 @@ def test_win_cume_dist_distributed_rank_parity(spark):
 
 
 def test_distributed_rank_shuffled_offsets_and_empty_keys(spark):
-    # The two r8 additions to distributed_rank: (a) broadcast_offsets=
-    # False (the high-cardinality-keys escape hatch) must produce
-    # row-identical output to the broadcast default; (b) keys=[] (the
-    # gini_concentration path) must equal a plain global ROW_NUMBER.
+    # keys=[] (the gini_concentration and distributed_ntile path) must
+    # equal a plain global ROW_NUMBER.
     from pyspark.sql import Window
 
     from nt_etl_order_book_spark.operators.windows import distributed_rank
@@ -1328,13 +1326,6 @@ def test_distributed_rank_shuffled_offsets_and_empty_keys(spark):
     rows = [(i, ["A", "B", "C"][i % 3], float((i * 37) % 50)) for i in range(96)]
     df = spark.createDataFrame(rows, "k long, cls string, v double")
     order = [F.asc("v"), F.asc("k")]
-
-    bc = {(r.k, r._rnk, r._n) for r in distributed_rank(df, ["cls"], order).collect()}
-    sh = {
-        (r.k, r._rnk, r._n)
-        for r in distributed_rank(df, ["cls"], order, broadcast_offsets=False).collect()
-    }
-    assert bc == sh
 
     glob = {
         (r.k, r._rnk)

@@ -810,10 +810,10 @@ def test_skew_timeseries_family_bounded_on_hot_market(spark, hot_market_dir):
     # The hot market (190k ticks) must not break the per-key passes:
     # realized_volatility AND max_drawdown are day-sharded (the hot
     # key's history fans across its ~18 day shards; drawdown's carry-in
-    # peak propagates via the day-grain cumulative-max frame), while
-    # roll/OFI are documented whole-history prefix scans — linear per
-    # key, one task, still fine at this volume. Assert results exist
-    # for the hot key and the day-shard claim holds in the plan
+    # peak propagates via the day-grain cumulative-max frame), and
+    # roll/OFI carry across days too (roll_spread's two-price chunk
+    # frame, order_flow_imbalance's chunked_tick_rule). Assert results
+    # exist for the hot key and the day-shard claim holds in the plan
     # (window keyed by user AND day).
     import time
 
@@ -917,8 +917,9 @@ def test_skew_lifecycle_family_bounded_on_hot_market(spark, hot_market_dir):
     # - twap is (user, day)-sharded: the hot market's 190k ticks split
     #   across ~18 day shards, never one task;
     # - scd2_intervals / rolling_features / attribution_last_touch are
-    #   per-user ordered passes — linear, bounded frames, one task for
-    #   the hot key by design (the max_drawdown argument);
+    #   per-user ordered passes sharded below the user: scd2_intervals
+    #   and attribution_last_touch by day (scd2's chunk frame, the
+    #   chunked_prefix carry), rolling_features by rank chunk;
     # all four must produce non-degenerate hot-key output and stay
     # interactive on 200k skewed rows.
     import time

@@ -1205,15 +1205,11 @@ def test_max_drawdown_cross_day_carry_in(spark):
     assert got[0]["max_drawdown"] == ref
 
 
-def test_chunked_lag_matches_global_lag_on_awkward_chunks(spark):
-    # Single-row chunks, multi-row chunks, and a key appearing in only
-    # one chunk — the chunked decomposition must equal the global lag
-    # row-for-row, including the NULL on each key's first row.
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from nt_etl_order_book_spark.operators.timeseries import chunked_lag
-
+def _awkward_chunk_rows():
+    # Single-row chunks, multi-row chunks, a gap day, and NULL values at
+    # a chunk boundary: day 6 closes on NULL, so day 7's first row must
+    # carry a genuine NULL (max_by keeps the NULL value, it must not
+    # skip back to an earlier non-null).
     rows = []
     i = 0
     for key in (1, 2):
@@ -1221,22 +1217,84 @@ def test_chunked_lag_matches_global_lag_on_awkward_chunks(spark):
             for j in range(n):
                 rows.append((i, dt.datetime(2024, 4, day, 10, 0, j), key, float(10 * key + i)))
                 i += 1
-    # NULL values at a chunk boundary: day-6 closes on NULL, so day-7's
-    # first row must carry a genuine NULL (max_by keeps the NULL value,
-    # it must not skip back to an earlier non-null).
     rows += [
         (i, dt.datetime(2024, 4, 6, 10, 0, 0), 1, 77.0),
         (i + 1, dt.datetime(2024, 4, 6, 10, 0, 1), 1, None),
         (i + 2, dt.datetime(2024, 4, 7, 10, 0, 0), 1, 88.0),
     ]
+    return rows
+
+
+def test_chunked_lag_matches_global_lag_on_awkward_chunks(spark):
+    # Single-row chunks, multi-row chunks, and a key appearing in only
+    # one chunk — the chunked decomposition must equal the global lag
+    # row-for-row, including the NULL on each key's first row.
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    from nt_etl_order_book_spark.operators.timeseries import chunked_shift
+
+    rows = _awkward_chunk_rows()
     ev = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long, value double")
     base = ev.withColumn("chunk", F.date_trunc("day", "ts"))
     got = {
         r.event_id: r.prev
-        for r in chunked_lag(base, "user_id", ["ts", "event_id"], "value", "prev").collect()
+        for r in chunked_shift(base, "user_id", ["ts", "event_id"], "value", lag="prev").collect()
     }
     wg = W.partitionBy("user_id").orderBy("ts", "event_id")
     ref = {r.event_id: r.prev for r in ev.select("event_id", F.lag("value").over(wg).alias("prev")).collect()}
+    assert got == ref
+
+
+@pytest.mark.parametrize(
+    "op,strict",
+    [
+        ("max", False),  # max_drawdown
+        ("sum", False),  # cusum_drift, dollar_bars, win_running_sum
+        ("last", False),  # asof_join
+        ("last", True),  # attribution_last_touch
+    ],
+)
+def test_chunked_prefix_matches_global_window_on_awkward_chunks(spark, op, strict):
+    # The lag test's frame plus keys whose chunks OPEN on NULL (key 3:
+    # a NULL-led day after a valued one, an all-NULL day; key 4: an
+    # all-NULL first day). Each (op, strict) pair a caller uses must
+    # equal the whole-history window row-for-row, NULLs included.
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    from nt_etl_order_book_spark.operators.timeseries import chunked_prefix
+
+    extra = [
+        (3, 1, 0, 10.0), (3, 1, 1, 11.0),
+        (3, 2, 0, None), (3, 2, 1, 12.0),
+        (3, 3, 0, None),
+        (3, 5, 0, None), (3, 5, 1, 13.0),
+        (4, 1, 0, None),
+        (4, 2, 0, None), (4, 2, 1, 5.0),
+    ]
+    rows = _awkward_chunk_rows()
+    rows += [
+        (100 + n, dt.datetime(2024, 4, day, 10, 0, sec), key, v)
+        for n, (key, day, sec, v) in enumerate(extra)
+    ]
+    ev = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, value double"
+    ).withColumn("v", F.col("value").cast("decimal(30,6)"))
+    base = ev.withColumn("chunk", F.date_trunc("day", "ts"))
+    got = {
+        r.event_id: r.run
+        for r in chunked_prefix(
+            base, "user_id", ["ts", "event_id"], "v", op, "run", strict=strict
+        ).collect()
+    }
+    run = {"sum": F.sum, "max": F.max, "last": lambda c: F.last(c, ignorenulls=True)}[op]
+    wg = (
+        W.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(W.unboundedPreceding, -1 if strict else W.currentRow)
+    )
+    ref = {r.event_id: r.run for r in ev.select("event_id", run("v").over(wg).alias("run")).collect()}
     assert got == ref
 
 
@@ -1257,12 +1315,12 @@ def test_attribution_carry_crosses_midnight(spark):
 
 
 def test_chunked_lead_matches_global_lead_on_awkward_chunks(spark):
-    # Mirror of the chunked_lag test: single-row chunks, a chunk gap,
-    # and the NULL on each key's final row.
+    # Mirror of the chunked_lag test for chunked_shift's lead output:
+    # single-row chunks, a chunk gap, and the NULL on each key's final row.
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from nt_etl_order_book_spark.operators.timeseries import chunked_lead
+    from nt_etl_order_book_spark.operators.timeseries import chunked_shift
 
     rows = []
     i = 0
@@ -1275,7 +1333,7 @@ def test_chunked_lead_matches_global_lead_on_awkward_chunks(spark):
     base = ev.withColumn("chunk", F.date_trunc("day", "ts"))
     got = {
         r.event_id: r.nxt
-        for r in chunked_lead(base, "user_id", ["ts", "event_id"], "value", "nxt").collect()
+        for r in chunked_shift(base, "user_id", ["ts", "event_id"], "value", lead="nxt").collect()
     }
     wg = W.partitionBy("user_id").orderBy("ts", "event_id")
     ref = {r.event_id: r.nxt for r in ev.select("event_id", F.lead("value").over(wg).alias("nxt")).collect()}
