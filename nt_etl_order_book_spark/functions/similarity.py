@@ -393,9 +393,8 @@ def _train_sample(df: DataFrame) -> DataFrame:
     on: k-means quality needs a representative sample, not the full
     corpus. The sample is 1/TRAIN_MOD of every split, so TRAIN_MOD splits
     per training task hold as many rows as one corpus task. Each
-    mapInPandas task pays a fixed Python round trip (measured ~0.35 s
-    CPU per task on 4 vCPU), which would otherwise dominate training on
-    small splits."""
+    mapInPandas task pays a fixed Python cost (DEPLOY.md §1), which
+    would otherwise dominate training on small splits."""
     return df.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(TRAIN_MOD)) == 0).coalesce(
         max(1, df.rdd.getNumPartitions() // TRAIN_MOD)
     )
@@ -553,9 +552,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-row-group fixture they otherwise run as ONE task (measured:
     # an 0.8 s single-task stage inside the 2.0 s wall, r15 optimization
     # round). The assignment itself runs before the exchange, on the
-    # scan's own splits: each mapInPandas task pays a Python round trip
-    # (measured at local[32] on 4 vCPU: 32 tasks 2.2-2.8 s vs 1 task
-    # 0.4 s for the same 500 rows). The training/query
+    # scan's own splits: each mapInPandas task pays a fixed Python cost
+    # (DEPLOY.md §1). The training/query
     # branches stay on the raw scan so the exchange isn't duplicated
     # under every consumer of `emb`.
     assigned = spread(ivf_assign(emb, cent_rows), "vec_id")

@@ -40,10 +40,10 @@ SESSION_CONFS = (
 
 def get_spark(app_name: str = "nt-etl-order-book-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     # local[N] defaults to the cores this process may run on: each
-    # Python-boundary task (mapInPandas, pandas UDFs) costs a worker
-    # round trip, so slots beyond the host's cores only add dispatch (a
-    # pass-through mapInPandas over 500 rows: 2.2-2.8 s at local[32] on
-    # 4 vCPU, 0.55 s at local[4]).
+    # Python-boundary task (mapInPandas, pandas UDFs) pays a fixed worker
+    # cost (DEPLOY.md §1), so slots beyond the host's cores only add
+    # dispatch (a pass-through mapInPandas over 500 rows: 2.2-2.8 s at
+    # local[32] on 4 vCPU, 0.55 s at local[4]).
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     sp = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))
     builder = (

@@ -61,12 +61,14 @@ def parse_messages(raw: DataFrame, *, value_col: str = "value") -> DataFrame:
     """
     # Parse with the union of both schemas: snapshot-only fields are null
     # on deltas and vice versa (schema-on-read with .get defaults,
-    # redis_client.py:42-45).
+    # redis_client.py:42-45). The struct is flattened by a Generate, not
+    # by `select("msg.*")`: a filter on `type` cannot cross a Generate, so
+    # each routed query parses every line once. Under a Project the
+    # optimizer pushes the filter below it by inlining a second, pruned
+    # from_json. A NULL or unparsable line still yields one all-NULL row.
     merged = StructTypeUnion()
-    return raw.select(
-        F.from_json(F.col(value_col), merged.schema).alias("msg"),
-        *[c for c in raw.columns if c != value_col],
-    ).select("msg.*", *[c for c in raw.columns if c != value_col])
+    rest = [c for c in raw.columns if c != value_col]
+    return raw.select(F.inline(F.array(F.from_json(F.col(value_col), merged.schema))), *rest)
 
 
 class StructTypeUnion:

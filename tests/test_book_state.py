@@ -5,8 +5,12 @@ batch/stream parity against analytics.current_book + quotes.
 from __future__ import annotations
 
 import json
+import random
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from nt_etl_order_book_spark.analytics import current_book, quotes
 from nt_etl_order_book_spark.sources.orderbook import (
@@ -14,7 +18,7 @@ from nt_etl_order_book_spark.sources.orderbook import (
     flatten_snapshots,
     parse_messages,
 )
-from nt_etl_order_book_spark.streaming.book_state import streaming_quotes
+from nt_etl_order_book_spark.streaming.book_state import BOOK_BUCKETS, QUOTE_SCHEMA, streaming_quotes
 from nt_etl_order_book_spark.streaming.pipeline import read_json_stream
 
 
@@ -136,6 +140,141 @@ def test_streaming_quotes_stateful_across_batches(spark, tmp_path):
         assert last[0].best_bid == 0.47  # ladder carried in state across batches
     finally:
         q.stop()
+
+
+def _shared_bucket_tickers(spark, n: int) -> list[str]:
+    """n tickers that streaming_quotes keys into one bucket."""
+    names = [f"KXB-{i}" for i in range(4 * BOOK_BUCKETS)]
+    rows = (
+        spark.createDataFrame([(t,) for t in names], "market_ticker string")
+        .select("market_ticker", F.pmod(F.xxhash64("market_ticker"), F.lit(BOOK_BUCKETS)).alias("b"))
+        .collect()
+    )
+    by_bucket: dict[int, list[str]] = {}
+    for r in rows:
+        by_bucket.setdefault(r.b, []).append(r.market_ticker)
+    return max(by_bucket.values(), key=len)[:n]
+
+
+def _book_msgs(ticker: str, m: int, t0: int, n_deltas: int) -> list[dict]:
+    """A snapshot at t0 and n_deltas later deltas on a few levels, with
+    ts == ingestion_ts so the stream and batch clocks agree."""
+    out = [
+        {
+            "type": "orderbook_snapshot", "sid": m, "seq": 0,
+            "market_ticker": ticker, "market_id": str(m),
+            "yes_dollars": [[0.40, 100], [0.45, 60]], "no_dollars": [[0.50, 70]],
+            "ingestion_ts": t0, "redis_stream_id": f"{t0}-{m}",
+        }
+    ]
+    for i in range(1, n_deltas + 1):
+        side = "yes" if i % 2 else "no"
+        price = 46 + (i % 3) if side == "yes" else 51 + (i % 2)
+        out.append(
+            {
+                "type": "orderbook_delta", "sid": m, "seq": i,
+                "market_ticker": ticker, "market_id": str(m),
+                "price": price, "price_dollars": price / 100, "delta": -25 if i % 4 == 0 else 10,
+                "side": side, "ts": t0 + i, "ingestion_ts": t0 + i,
+                "redis_stream_id": f"{t0 + i}-{m}",
+            }
+        )
+    return out
+
+
+def test_bucket_state_multi_ticker_multi_chunk(spark, tmp_path):
+    # Several tickers share one bucket's state; their rows arrive in
+    # 2-row Arrow chunks (arrow.maxRecordsPerBatch=2) in shuffled order,
+    # across three micro-batches. The live quotes must equal the batch
+    # reconstruction, and a batch that touches one ticker must emit only
+    # that ticker's row, although the bucket holds all of them.
+    tickers = _shared_bucket_tickers(spark, 3)
+    assert len(tickers) == 3
+    rng = random.Random(7)
+    p = tmp_path / "bucket"
+    p.mkdir()
+    batches = [
+        [m for k, t in enumerate(tickers) for m in _book_msgs(t, k, 1000 + 100 * k, 6)],
+        _book_msgs(tickers[0], 0, 5000, 5)[1:],  # deltas on ticker 0 only
+        _book_msgs(tickers[1], 1, 7000, 4) + _book_msgs(tickers[2], 2, 7000, 3)[1:],
+    ]
+    emitted: dict[int, list] = {}
+
+    def collect(df, batch_id):
+        emitted[batch_id] = df.collect()
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    q = (
+        streaming_quotes(read_json_stream(spark, str(p)))
+        .writeStream.outputMode("update")
+        .foreachBatch(collect)
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .start()
+    )
+    try:
+        for i, msgs in enumerate(batches):
+            rng.shuffle(msgs)
+            (p / f"b{i}.json").write_text("\n".join(json.dumps(m) for m in msgs))
+            q.processAllAvailable()
+    finally:
+        q.stop()
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+    assert len(emitted) == 3
+    assert sorted(r.ticker for r in emitted[1]) == [tickers[0]]
+    assert sorted(r.ticker for r in emitted[2]) == sorted(tickers[1:])
+    live = {}
+    for b in sorted(emitted):
+        live.update({r.ticker: r for r in emitted[b]})
+
+    parsed = parse_messages(spark.read.text(str(p)))
+    batch = {r.ticker: r for r in quotes(current_book(flatten_snapshots(parsed), flatten_deltas(parsed))).collect()}
+    assert sorted(live) == sorted(batch) == sorted(tickers)
+    for t in tickers:
+        assert live[t].best_bid == pytest.approx(float(batch[t].best_bid)), t
+        assert live[t].best_ask == pytest.approx(float(batch[t].best_ask)), t
+
+
+def test_per_ticker_checkpoint_restart_fails_loudly(spark, tmp_path):
+    # A live-book checkpoint written with the per-ticker key must not be
+    # misread as bucket state: the restart fails on the key schema.
+    p = tmp_path / "msgs"
+    p.mkdir()
+    msgs = _replay()
+    (p / "a.json").write_text("\n".join(json.dumps(m) for m in msgs[:2]))
+    cp = str(tmp_path / "cp")
+
+    def per_ticker(key, pdfs, state):
+        for _ in pdfs:
+            pass
+        state.update((1,))
+        yield pd.DataFrame([(key[0], 0, None, None, None, 0)], columns=QUOTE_SCHEMA.fieldNames())
+
+    first = (
+        read_json_stream(spark, str(p))
+        .groupBy("market_ticker")
+        .applyInPandasWithState(per_ticker, QUOTE_SCHEMA, "n long", "update", GroupStateTimeout.NoTimeout)
+        .writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", cp)
+        .trigger(availableNow=True)
+        .start()
+    )
+    first.awaitTermination(120)
+    assert first.exception() is None
+
+    (p / "b.json").write_text("\n".join(json.dumps(m) for m in msgs[2:]))
+    second = (
+        streaming_quotes(read_json_stream(spark, str(p)))
+        .writeStream.format("noop")
+        .outputMode("update")
+        .option("checkpointLocation", cp)
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+        second.awaitTermination(120)
 
 
 def test_current_book_same_ts_snapshot_tiebreak(spark):

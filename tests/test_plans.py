@@ -611,3 +611,22 @@ def test_codegen_cache_holds_a_working_set_past_spark_default(spark):
 
     assert run_round() > 100
     assert run_round() == 0
+
+
+def test_routed_flatten_parses_each_line_once(spark):
+    # parse_messages flattens through a Generate, so the `type` filter of
+    # each routed query cannot be pushed below a second, pruned
+    # from_json: the executed plan parses every line once.
+    import json
+
+    from nt_etl_order_book_spark.sources.orderbook import (
+        flatten_deltas,
+        flatten_snapshots,
+        parse_messages,
+    )
+
+    lines = [json.dumps({"type": "orderbook_delta", "market_ticker": "A", "price": 40, "delta": 1})]
+    msgs = parse_messages(spark.createDataFrame([(v,) for v in lines], "value string"))
+    for flat in (flatten_snapshots(msgs), flatten_deltas(msgs)):
+        plan = flat._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("from_json(") == 1, plan

@@ -718,7 +718,10 @@ def test_current_book_matches_bruteforce(spark_prop, h):
     from nt_etl_order_book_spark.analytics import current_book
 
     sids = iter(h["sids"])
-    snap_msgs_ = [[(ts, k, side, p, c, next(sids) if has else None) for (side, p), c in lv.items()] for k, ts, has, lv in h["snaps"]]
+    snap_msgs_ = []
+    for k, ts, has, lv in h["snaps"]:  # one sid per message, shared by its levels
+        sid = next(sids) if has else None
+        snap_msgs_.append([(ts, k, side, p, c, sid) for (side, p), c in lv.items()])
     delta_msgs_ = [[(ts, k, side, p, d, next(sids) if has else None)] for k, ts, has, (side, p), d in h["deltas"]]
     msgs = snap_msgs_ + delta_msgs_
     for i in h["replays"]:  # an at-least-once replay re-sends a whole message
