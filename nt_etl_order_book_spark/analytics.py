@@ -10,11 +10,11 @@ Reconstruction invariant (SURVEY §1.4): book state at time T =
 last snapshot ≤ T, plus the sum of deltas in (snapshot_ts, T], per
 (ticker, side, price). Levels at or below zero contracts are gone.
 
-Scale: `current_book` (so `compact_book`, and `quotes` over it) and
-`vwap` plan ONE exchange: the tagged union of snapshot and delta rows,
-hash-partitioned on `ticker`. The replay dedup, the latest-snapshot
-window and the final aggregate all reuse it — linear, no join. This
-assumes a `redis_stream_id` names one message, and so one ticker.
+Scale: `current_book` (and `quotes` over it) and `vwap` plan ONE
+exchange: the tagged union of snapshot and delta rows, hash-partitioned
+on `ticker`. The replay dedup, the latest-snapshot window and the final
+aggregate all reuse it — linear, no join. This assumes a
+`redis_stream_id` names one message, and so one ticker.
 """
 
 from __future__ import annotations
@@ -137,51 +137,6 @@ def book_top(book: DataFrame, k: int = 5) -> DataFrame:
     return (
         book.withColumn("depth_rank", F.row_number().over(w))
         .filter(F.col("depth_rank") <= k)
-    )
-
-
-def compact_book(snapshots: DataFrame, deltas: DataFrame, *, as_of_ms: int) -> DataFrame:
-    """Compaction: fold history up to `as_of_ms` into a fresh snapshot.
-
-    The reference's tables grow append-only forever (postgres_client.py
-    append mode, no retention); at 100 TB the standard operational move
-    is periodic compaction — reconstruct the book as of T and write it
-    back as the new snapshot anchor, after which deltas ≤ T can be
-    retired. Returns rows in the snapshots-table shape (A3) stamped at
-    `as_of_ms`, so downstream reconstruction works unchanged:
-    current_book(compacted, deltas>T) ≡ current_book(raw, raw deltas).
-    """
-    from nt_etl_order_book_spark.operators.transforms import cast_to
-    from nt_etl_order_book_spark.schemas import SNAPSHOTS_CAST
-
-    # clamp=False: a level whose NET is ≤0 at T must stay in the anchor
-    # (later deltas may revive it); clamping is an end-of-history display
-    # rule, and applying it mid-history breaks replay equivalence.
-    book = current_book(snapshots, deltas, as_of_ms=as_of_ms, clamp=False).filter(
-        F.col("contracts") != 0  # zero nets carry no information forward
-    )
-    out = book.select(
-        F.lit(as_of_ms).cast("bigint").alias("timestamp"),
-        "ticker",
-        "side",
-        "price_dollars",
-        "contracts",
-        F.lit(None).cast("string").alias("redis_stream_id"),
-    )
-    return cast_to(out, SNAPSHOTS_CAST)  # exact A3 sink-table shape
-
-
-def book_imbalance(book: DataFrame) -> DataFrame:
-    """Order-book imbalance per ticker: (yes_depth − no_depth) /
-    (yes_depth + no_depth) over contract counts — the standard
-    microstructure pressure signal, in [-1, 1]."""
-    yes_depth = F.sum(F.when(F.col("side") == "yes", F.col("contracts")).otherwise(0))
-    no_depth = F.sum(F.when(F.col("side") == "no", F.col("contracts")).otherwise(0))
-    total = yes_depth + no_depth
-    return book.groupBy("ticker").agg(
-        yes_depth.alias("yes_depth"),
-        no_depth.alias("no_depth"),
-        ((yes_depth - no_depth) / F.nullif(total, F.lit(0))).alias("imbalance"),
     )
 
 

@@ -495,39 +495,6 @@ def ivf_assign(emb: DataFrame, cent_rows: list, *, residual: bool = False) -> Da
     )
 
 
-def write_ivf_index(emb: DataFrame, cent_rows: list, path: str) -> None:
-    """Persist the corpus as an on-disk IVF index: assignment rows
-    written `partitionBy("cell")`, one parquet directory per cell.
-
-    This is the 100 TB form of `ann_ivf_topk`'s claim made testable: a
-    probe read with `cell` predicates prunes at the DIRECTORY level
-    (PartitionFilters in the scan, asserted in tests), so each query
-    batch reads ~N_PROBE/N_CELLS of the stored bytes — no job touches
-    the unprobed cells at all.
-
-    The overwrite is deliberately STATIC — pinned per-write below, not
-    inherited from the session (a deployment that sets
-    spark.sql.sources.partitionOverwriteMode=dynamic globally must not
-    change rebuild semantics): an index rebuild replaces the WHOLE
-    path. Dynamic partition overwrite would keep any cell directory the
-    new assignment no longer populates (codebook drift can empty a
-    cell), and probe reads would then return vec_ids from the previous
-    build. Incremental upserts belong to a table format with deletes
-    (Delta/Iceberg), not raw parquet."""
-    (
-        ivf_assign(emb, cent_rows)
-        # Keyed on cell so each task writes whole cell directories —
-        # the narrow assignment keeps the scan partitioning, so an
-        # unkeyed partitionBy write sprays tasks×cells tiny files (see
-        # ivfpq_train: measured 3× probe-wall cost at 2M vectors).
-        .repartition(emb.sparkSession.sparkContext.defaultParallelism, "cell")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-
-
 @register(
     "ann_ivf_topk",
     None,  # centroid assignment is implementation-specific → rows-only.
@@ -539,7 +506,7 @@ def write_ivf_index(emb: DataFrame, cent_rows: list, path: str) -> None:
         "by a zero-shuffle Arrow-batched numpy matmul argmax (mapInPandas); "
         f"each query scores only its {N_PROBE} nearest "
         "cells. At 100 TB you persist the corpus bucketed by cell "
-        "(write_ivf_index: partitionBy('cell'); partition pruning on "
+        "(ivfpq_train's index: partitionBy('cell'); partition pruning on "
         "probe reads is plan-asserted in tests) and probing prunes the "
         "scan to ~N_PROBE/N_CELLS of the data."
     ),
@@ -1251,7 +1218,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RESIDUAL (vector − its cell centroid) so the quantizer spends its
 # 32 bits on the within-cell remainder instead of re-describing the cell.
 # At 100 TB this is the deployed shape: the index is the cell-partitioned
-# residual-code table (write_ivf_index's layout, PQ_M bytes + a norm per
+# residual-code table (partitionBy("cell"), PQ_M bytes + a norm per
 # vector), a query batch touches N_PROBE/N_CELLS of it and reads ~32×
 # fewer bytes per touched row.
 # ---------------------------------------------------------------------------
@@ -1377,10 +1344,9 @@ def ivfpq_train(emb: DataFrame, path: str) -> None:
     - ``books.parquet`` — the 1-row per-subspace PQ codebook frame
       (query-side state, broadcast at probe time),
     - ``index/`` — the residual-code rows ``partitionBy("cell")``
-      (scan-side state: write_ivf_index's layout with PQ_M small ints +
-      one norm per vector in place of the raw floats, so a probe read
-      prunes at the directory level AND reads ~32× fewer bytes per
-      surviving row; static overwrite),
+      (scan-side state: PQ_M small ints + one norm per vector in place
+      of the raw floats, so a probe read prunes at the directory level
+      AND reads ~32× fewer bytes per surviving row),
     Completion marking and atomicity live in artifacts.ensure_published
     (the caller): this function only writes the state tree under
     ``path``, which in the apply lifecycle is a scratch dir that is
@@ -1388,8 +1354,17 @@ def ivfpq_train(emb: DataFrame, path: str) -> None:
     inside — readers can never observe a half-built index, and
     concurrent first-touch builders resolve by rename (the loser
     discards its identical deterministic state). A cluster deployment
-    still makes index builds an explicit, serialized pipeline step —
-    rebuilds replace the whole path, as with write_ivf_index.
+    still makes index builds an explicit, serialized pipeline step.
+
+    The index overwrite is deliberately STATIC — pinned per-write, not
+    inherited from the session (a deployment that sets
+    spark.sql.sources.partitionOverwriteMode=dynamic globally must not
+    change rebuild semantics): a rebuild replaces the WHOLE index.
+    Dynamic partition overwrite would keep any cell directory the new
+    assignment no longer populates (codebook drift can empty a cell),
+    and probe reads would then return vec_ids from the previous build.
+    Incremental upserts belong to a table format with deletes
+    (Delta/Iceberg), not raw parquet.
 
     This is the train-once/apply-many half the registry's
     self-contained-query contract couldn't show (DEPLOY.md §2): at
@@ -1583,7 +1558,7 @@ def q_ann_ivfpq_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "which keeps top-k exact, vs the post-filter-then-hope "
         "recall loss a bucketed index suffers when the filter is "
         "selective; at 100 TB the play is partitioning the index by "
-        "the filter column (write_ivf_index's partitionBy pattern) so "
+        "the filter column (ivfpq_train's partitionBy pattern) so "
         "pre-filtering prunes files, not rows."
     ),
 )

@@ -16,9 +16,9 @@ whose aggregate only ever sees candidate tokens. And because pass 2 is
 exact, the FINAL ANSWER is deterministic and oracle-hashable: the
 sketch prunes, it never decides.
 
-Completes the sketch family: HLL (agg_approx_distinct,
-windowed_market_breadth), GK quantiles (approx_quantile_audit),
-Misra-Gries heavy hitters (here).
+Completes the sketch family: HLL (agg_approx_distinct), GK quantiles
+(approx_quantile_audit), Misra-Gries heavy hitters (here, with
+streaming/stateful.stream_heavy_hitters as its live twin).
 """
 
 from __future__ import annotations

@@ -1288,10 +1288,6 @@ def _hex8_of_hex(h: Column) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
 
 
-def _hex8_int(col: Column) -> Column:
-    return _hex8_of_hex(F.md5(col))
-
-
 # Shared winnowing CTE chain (toks → per-token hashes → per-position
 # rolling k-gram hashes → fingerprint sets) — used by the
 # winnow_fingerprint oracle and the winnow_dedup pair oracle on top of

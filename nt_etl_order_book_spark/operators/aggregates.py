@@ -577,33 +577,26 @@ def ranked_value_counts(df: DataFrame, col: str) -> DataFrame:
     return checkpoint_frame(parts, eager=False)
 
 
-def exact_percentile_boundaries(df: DataFrame, col: str, fracs: list[float]) -> DataFrame:
+def boundaries_from_counts(
+    spark: SparkSession, parts: DataFrame, fracs: list[float]
+) -> DataFrame:
     """Exact interpolated percentiles (Spark/ANSI percentile_cont
-    semantics) as a 1-row frame with columns q1..qk — WITHOUT the
-    builtin ``percentile()``'s single-reducer counts-map merge.
+    semantics) of a ranked_value_counts frame, as a 1-row frame with
+    columns q1..qk — WITHOUT the builtin ``percentile()``'s
+    single-reducer counts-map merge.
 
     Spark's exact Percentile aggregate accumulates a value→count map
     per task and merges ALL of them in one final reducer — ~|distinct|
     entries of state in a single task (measured 3.5-5.6 s alone on 583k
-    distinct doubles at sf0.1; the dominant cost of this query). The
-    distributed form: collapse to a (value, count) table (shuffle
-    carries distinct values once), range-partition by value and lift
-    per-partition cumulative counts to global ranks with broadcast
-    offsets (the distributed_ntile decomposition, operators/windows.py),
-    then each requested fraction f needs only the two values whose
-    0-based index ranges straddle pos = (n-1)*f, interpolated with
-    Spark's own ``lower + (higher - lower) * (pos - floor(pos))``
-    formula. Every stage is bounded: the widest single-task state is
-    one range partition's distinct values.
+    distinct doubles at sf0.1). The distributed form: the (value, count)
+    table arrives range-partitioned by value (the shuffle carried
+    distinct values once); per-partition cumulative counts lift to
+    global ranks with broadcast offsets (the distributed_ntile
+    decomposition, operators/windows.py), then each requested fraction
+    f needs only the two values whose 0-based index ranges straddle
+    pos = (n-1)*f. Every stage is bounded: the widest single-task state
+    is one range partition's distinct values.
     """
-    return boundaries_from_counts(df.sparkSession, ranked_value_counts(df, col), fracs)
-
-
-def boundaries_from_counts(
-    spark: SparkSession, parts: DataFrame, fracs: list[float]
-) -> DataFrame:
-    """Interpolated-percentile tail of exact_percentile_boundaries over
-    an already-materialized ranked_value_counts frame."""
     wloc = Window.partitionBy("_pid").orderBy("v")
     local = parts.withColumn("_lc", F.sum("c").over(wloc))  # incl. current row
     pcnt = local.groupBy("_pid").agg(F.sum("c").alias("_cnt"))
@@ -677,7 +670,7 @@ def grouped_exact_percentile_boundaries(
     ANSI percentile_cont semantics, nulls ignored): one row per group
     with columns group_cols + q1..qk + n_vals + min_val + max_val.
 
-    The grouped twin of exact_percentile_boundaries. Spark's builtin
+    The grouped twin of boundaries_from_counts. Spark's builtin
     per-group percentile() accumulates a value→count HASH MAP per group
     and merges all partial maps in the group's single final reducer —
     unspillable state proportional to the group's distinct values. This
@@ -711,7 +704,7 @@ def grouped_exact_percentile_boundaries(
             [(i + 1, float(f)) for i, f in enumerate(fracs)], "fi int, f double"
         )
     )
-    # Same bit-exact interpolation as exact_percentile_boundaries (see
+    # Same bit-exact interpolation as boundaries_from_counts (see
     # the comment there): position = f * (n - 1), two-sided weighted
     # form, collapse-to-lowerVal when the position is integral.
     pos = F.col("f") * (F.col("_n") - 1).cast("double")
@@ -780,7 +773,7 @@ def grouped_exact_percentile_boundaries(
         "ANALYZE-TABLE statistic a cost-based optimizer keeps per "
         "column, as a query: EXACT interpolated quartile boundaries "
         "from the distributed counts-table decomposition "
-        "(exact_percentile_boundaries — no builtin percentile(), whose "
+        "(boundaries_from_counts — no builtin percentile(), whose "
         "single-reducer counts-map merge was this query's dominant "
         "cost and does not bound at scale), then a second scan assigns "
         "each row its bucket against the broadcast 1-row boundary "

@@ -465,8 +465,7 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per-entity attribute stream to its change points and emit "
         "[valid_from, valid_to) validity intervals with an is_current "
         "flag — the dimension-table temporal pattern every warehouse "
-        "maintains (and the batch shape of the streaming book-state "
-        "compaction in analytics.compact_book). Two stacked windows "
+        "maintains. Two stacked windows "
         "over the SAME (entity, ts, id) order — Spark plans one "
         "exchange and one sort: lag marks change points (first row "
         "kept via prev IS NULL; consecutive duplicates collapse), "

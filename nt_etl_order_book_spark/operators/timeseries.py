@@ -725,87 +725,6 @@ def q_order_flow_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Materialized hourly rollup: the persisted half of hypertable_rollup.
-# At 100 TB nobody re-scans raw events for every dashboard query — the
-# hourly continuous aggregate lives on disk, partitioned by day, new
-# days are appended/refreshed incrementally, and coarser grains
-# re-aggregate the stored partials. These utilities are that lifecycle
-# as tested code (tests/test_timeseries_eventflow.py): build, refresh
-# one day idempotently, read daily, and let partition pruning serve
-# day-scoped reads without touching the rest of the table.
-
-
-def _hourly_partials(ev: DataFrame) -> DataFrame:
-    """Hourly partial-aggregate frame with a day partition key.
-
-    The sum partial stays DECIMAL on disk — re-aggregation must remain
-    exact, and decimal addition is what makes the cascade equal a
-    direct aggregate (see q_hypertable_rollup).
-    """
-    return ev.groupBy(
-        "event_type",
-        F.date_trunc("hour", F.col("ts")).alias("hour"),
-    ).agg(
-        F.sum(F.col("value").cast(DEC)).alias("sum_dec"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("value").alias("min_v"),
-        F.max("value").alias("max_v"),
-    ).withColumn("day_key", F.date_format(F.col("hour"), "yyyy-MM-dd"))
-
-
-def write_hourly_rollup(ev: DataFrame, path: str) -> None:
-    """Materialize the hourly rollup, partitioned by day.
-
-    Keyed on day_key before the partitioned write (r14): the groupBy
-    leaves rows hash-distributed on (event_type, hour), so an unkeyed
-    partitionBy write sprays tasks×days files — over years of days
-    that's 32× the file count, each file a few KB (the same defect
-    measured at 3× probe-wall cost on the IVF index writers). The
-    partial frame is |event_types|×|hours| rows — the keyed shuffle is
-    free."""
-    (
-        _hourly_partials(ev)
-        .repartition(F.col("day_key"))
-        .write.partitionBy("day_key")
-        .mode("overwrite")
-        .parquet(path)
-    )
-
-
-def refresh_rollup_day(ev_one_day: DataFrame, path: str) -> None:
-    """Incrementally (re)build exactly the day partitions present in
-    `ev_one_day` — dynamic partition overwrite, pinned PER-WRITE so a
-    hostile global static mode cannot silently wipe the other days
-    (the inverse of write_ivf_index's static pin, where full replace
-    IS the contract). Re-running the same day is idempotent: the
-    partition is replaced, not appended. Keyed on day_key like
-    write_hourly_rollup (one task writes each day's whole directory)."""
-    (
-        _hourly_partials(ev_one_day)
-        .repartition(F.col("day_key"))
-        .write.partitionBy("day_key")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(path)
-    )
-
-
-def read_rollup_daily(spark: SparkSession, path: str) -> DataFrame:
-    """Daily grain served FROM the materialized hourly partials — the
-    raw table is never touched. Same output contract as
-    q_hypertable_rollup."""
-    hourly = spark.read.parquet(path)
-    return hourly.groupBy(
-        "event_type", F.date_trunc("day", F.col("hour")).alias("day")
-    ).agg(
-        F.sum("sum_dec").cast("double").alias("sum_value"),
-        F.sum("n_events").alias("n_events"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-    )
-
-
 # Correlation matrix scope: the matrix is quadratic in markets, so it
 # is computed for the TOP_N most-active markets only (deterministic
 # tick-count ranking, user_id tiebreak) — the bounded form a dashboard
@@ -1649,7 +1568,7 @@ def q_effective_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Time-weighted average price per (market, day): each print "
         "weighted by its holding interval to the next print — the "
-        "execution benchmark (vs windowed_vwap's volume weighting). "
+        "execution benchmark (vs vwap's volume weighting). "
         "Interval = lead(ts) within the (market, day) window, so the "
         "last print of a day carries no weight and day boundaries "
         "never leak (the realized_volatility sharding). EVERYTHING is "

@@ -28,23 +28,6 @@ def route_by_type(df: DataFrame, type_col: str, value: str) -> DataFrame:
     return df.filter(F.col(type_col) == F.lit(value))
 
 
-def explode_pairs(df: DataFrame, ladder_col: str, keep: list[str], *, price_name: str = "price_dollars",
-                  qty_name: str = "contracts") -> DataFrame:
-    """Unnest a list-of-[price, qty] ladder into one row per level.
-
-    Reference analog: consumer.py:58-81 (the explode loops). Works for
-    both array<struct> and array<array> encodings.
-    """
-    lvl = F.explode(F.col(ladder_col)).alias("_lvl")
-    out = df.select(*keep, lvl)
-    fields = out.schema["_lvl"].dataType
-    if hasattr(fields, "fields"):  # array<struct<...>>
-        names = [f.name for f in fields.fields]
-        return out.select(*keep, F.col(f"_lvl.{names[0]}").alias(price_name),
-                          F.col(f"_lvl.{names[1]}").alias(qty_name))
-    return out.select(*keep, F.col("_lvl")[0].alias(price_name), F.col("_lvl")[1].alias(qty_name))
-
-
 def unpivot_sides(df: DataFrame, keep: list[str], side_cols: dict[str, str], *,
                   side_name: str = "side", value_name: str = "ladder") -> DataFrame:
     """Two parallel per-side columns → one `side` discriminator column.

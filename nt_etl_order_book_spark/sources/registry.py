@@ -30,63 +30,6 @@ def write_csv_append(df: DataFrame, path: str, *, header: bool = True) -> None:
     df.write.mode("append").option("header", str(header).lower()).csv(path)
 
 
-def write_partitioned(df: DataFrame, path: str, *, ts_col: str = "timestamp",
-                      fmt: str = "parquet") -> None:
-    """Append sink partitioned by event date (derived from the epoch-ms
-    column): the layout that makes time-ranged analytics prune at the
-    directory level at 100 TB. Also accepts orc/csv/json formats.
-
-    Deliberately NOT repartitioned on event_date (contrast the IVF
-    index writers and the rollup materializers, r14): an ingest append
-    batch spans 1–2 dates, so the "spray" is tasks×2 files — while
-    keying would funnel the whole batch through 1–2 write tasks and
-    serialize ingest throughput. The file-count/parallelism trade
-    flips when partitions-per-write is large (index/rollup builds) vs
-    small (append batches); compaction of append sinks is a downstream
-    maintenance job in any deployment."""
-    from pyspark.sql import functions as F
-
-    (
-        df.withColumn("event_date", F.to_date(F.timestamp_millis(F.col(ts_col))))
-        .write.mode("append")
-        .partitionBy("event_date")
-        .format(fmt)
-        .save(path)
-    )
-
-
-def read_json_messages(
-    spark: SparkSession, path: str, *, keep_corrupt: bool = False
-) -> DataFrame:
-    """Batch JSON source with the explicit message schema (never
-    inferSchema on the ingest path — SURVEY §1.2).
-
-    With ``keep_corrupt`` the reader runs in PERMISSIVE mode and lands
-    malformed lines in a ``_corrupt_record`` column instead of silently
-    nulling them out: at ingest scale a poisoned line must neither kill
-    the job (FAILFAST) nor vanish (the default's all-null row is
-    indistinguishable from real nulls) — the quarantine column lets a
-    foreachBatch sink route bad rows to a dead-letter table. The
-    reference has no such guard (consumer.py:39-84 assumes clean JSON);
-    this is the production-hardening Spark gives for free."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from nt_etl_order_book_spark.sources.orderbook import StructTypeUnion
-
-    schema = StructTypeUnion().schema
-    if not keep_corrupt:
-        return spark.read.schema(schema).json(path)
-    with_quarantine = StructType(
-        list(schema.fields) + [StructField("_corrupt_record", StringType())]
-    )
-    return (
-        spark.read.schema(with_quarantine)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
 def init_schema(spark: SparkSession, *, location: str | None = None) -> None:
     """CREATE TABLE IF NOT EXISTS for the two sink tables — idempotent,
     exactly like postgres_client.initialize_schema (postgres_client.py:24-51)."""

@@ -445,105 +445,6 @@ def windowed_book_stats(
     )
 
 
-def windowed_vwap(
-    deltas: DataFrame,
-    *,
-    window: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming VWAP per (window, ticker, side) over positive delta flow
-    — the live microstructure twin of analytics.vwap. Exact decimal
-    accumulation inside the windowed aggregate."""
-    adds = deltas.filter(F.col("delta") > 0).withColumn(
-        "event_time", F.timestamp_millis(F.col("timestamp"))
-    )
-    notional = F.sum(F.col("price_dollars") * F.col("delta"))
-    volume = F.sum(F.col("delta"))
-    return (
-        adds.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window).alias("w"), "ticker", "side")
-        .agg(
-            (notional / F.nullif(volume, F.lit(0))).cast("decimal(9,6)").alias("vwap"),
-            volume.alias("volume"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "ticker",
-            "side",
-            "vwap",
-            "volume",
-        )
-    )
-
-
-def windowed_market_breadth(
-    deltas: DataFrame,
-    *,
-    window: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Market breadth per window: approximate distinct active tickers
-    (HLL sketch — bytes of state per window instead of a distinct-set
-    that grows with market count) plus total message volume. The
-    streaming analog of `agg_approx_distinct`; at cluster scale an
-    exact streaming distinct per window would hold every ticker in
-    state forever, while the sketch is O(1) per window and mergeable
-    across partitions.
-    """
-    with_time = deltas.withColumn("event_time", F.timestamp_millis(F.col("timestamp")))
-    return (
-        with_time.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window).alias("w"))
-        .agg(
-            F.approx_count_distinct("ticker").alias("approx_active_tickers"),
-            F.count(F.lit(1)).alias("n_msgs"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "approx_active_tickers",
-            "n_msgs",
-        )
-    )
-
-
-def windowed_distinct_docs(
-    docs: DataFrame,
-    *,
-    window: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming deduped-document counts: per event-time window, the
-    approximate number of DISTINCT document payloads (HLL over the md5
-    content digest) beside the raw arrival count — the ingest-side live
-    twin of `dedup_exact_docs`, surfacing the duplication rate of a
-    crawl AS IT ARRIVES, before the batch dedup stage runs.
-
-    Ties the streaming layer to the corpus-pipeline layer: state per
-    window is one HLL sketch (O(1), mergeable across partitions), never
-    a digest set that grows with crawl size; the digest is computed
-    inline so raw text never enters state. Same sketch, same digest as
-    the batch ops, so stream/batch parity is exact (HLL merge is
-    order-independent — asserted in tests).
-
-    Expects a document stream with ``text`` and an epoch-ms
-    ``ingest_ts`` column (the crawl-arrival clock).
-    """
-    with_time = docs.withColumn("event_time", F.timestamp_millis(F.col("ingest_ts")))
-    return (
-        with_time.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window).alias("w"))
-        .agg(
-            F.approx_count_distinct(F.md5(F.col("text"))).alias("approx_distinct_docs"),
-            F.count(F.lit(1)).alias("n_docs"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "approx_distinct_docs",
-            "n_docs",
-        )
-    )
-
-
 def session_bursts(
     deltas: DataFrame,
     *,
@@ -565,84 +466,6 @@ def session_bursts(
     )
 
 
-def windowed_ohlc(
-    deltas: DataFrame,
-    *,
-    window: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming OHLC bars per (event-time window, ticker): the live
-    twin of the batch `ohlc_bars` downsampler, over delta-message
-    prices. open/close use min_by/max_by on a TOTAL-ORDER key —
-    (ingestion ms, numeric-parsed redis stream id) — so two messages in
-    the same millisecond still pick a deterministic open/close (the
-    lexicographic-sid trap from analytics._sid_sort_key applies here
-    too). min_by/max_by are declarative aggregates, so state per
-    (window, ticker) is four scalars + the count, mergeable across
-    partitions — no per-message state, no custom stateful operator
-    needed, and late data folds in correctly until the watermark
-    closes the window.
-    """
-    from nt_etl_order_book_spark.analytics import _sid_sort_key
-
-    with_time = deltas.withColumn("event_time", F.timestamp_millis(F.col("timestamp")))
-    k = F.struct(
-        F.col("timestamp").alias("ms"),
-        _sid_sort_key(F.col("redis_stream_id")).alias("sid"),
-    )
-    keyed = with_time.withColumn("k", k)
-    return (
-        keyed.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window).alias("w"), "ticker")
-        .agg(
-            F.min_by("price_dollars", "k").alias("open"),
-            F.max("price_dollars").alias("high"),
-            F.min("price_dollars").alias("low"),
-            F.max_by("price_dollars", "k").alias("close"),
-            F.count(F.lit(1)).alias("n_msgs"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "ticker",
-            "open",
-            "high",
-            "low",
-            "close",
-            "n_msgs",
-        )
-    )
-
-
-def stream_anomaly_alerts(
-    deltas: DataFrame,
-    stats: DataFrame,
-    *,
-    k: float = 3.0,
-) -> DataFrame:
-    """Model-apply on the live feed: robust per-ticker stats (median,
-    MAD) computed BATCH-side (the anomaly_zscore query shape) join into
-    the delta stream as a broadcast static side, and prints whose
-    robust z-score exceeds ``k`` emit alert rows. The standard
-    lambda-architecture split: the expensive two-pass exact medians run
-    where they're cheap (batch, against the warehouse), the stream
-    does one broadcast hash join + a filter per micro-batch — no state,
-    no watermark, alert latency = trigger latency.
-
-    ``stats`` must carry (ticker, med, mad). The MAD=0 nullif guard
-    matches the batch twin: a constant-priced market never alerts
-    (ANSI division would otherwise crash the stream mid-flight).
-    """
-    joined = deltas.join(F.broadcast(stats), "ticker")
-    z = F.abs(F.col("price_dollars") - F.col("med")) / F.nullif(
-        F.lit(1.4826) * F.col("mad"), F.lit(0.0)
-    )
-    return (
-        joined.withColumn("abs_z", z)
-        .filter(F.col("abs_z") > k)
-        .select("ticker", "timestamp", "price_dollars", F.round("abs_z", 6).alias("abs_z"))
-    )
-
-
 def dedup_docs_stream(
     docs: DataFrame,
     *,
@@ -652,8 +475,7 @@ def dedup_docs_stream(
     arrival of each content payload (within the watermark horizon)
     passes through — the streaming half of `dedup_exact_docs`, applied
     before anything lands, so the corpus store never ingests the
-    duplicate crawl arrivals at all (windowed_distinct_docs MEASURES
-    the duplication rate; this REMOVES it).
+    duplicate crawl arrivals at all.
 
     State discipline: the key is the 16-byte md5 content digest — raw
     text never enters state — and `dropDuplicatesWithinWatermark`
@@ -661,12 +483,11 @@ def dedup_docs_stream(
     bounded by (arrival rate x horizon), not corpus size. Duplicates
     farther apart than the horizon are the batch layer's job
     (dedup_exact_docs / delta_dedup over the landed table — the
-    standard lambda split, same as stream_anomaly_alerts). The digest
-    column stays on the output so the sink table carries the batch
-    layer's join key for free.
+    standard lambda split). The digest column stays on the output so
+    the sink table carries the batch layer's join key for free.
 
     Expects ``text`` and an epoch-ms ``ingest_ts`` (the crawl-arrival
-    clock, as in windowed_distinct_docs).
+    clock).
     """
     with_time = docs.withColumn("event_time", F.timestamp_millis(F.col("ingest_ts")))
     return (

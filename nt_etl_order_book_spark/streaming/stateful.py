@@ -1,14 +1,15 @@
-"""Stateful streaming: per-key sequence-gap detection.
+"""Stateful streaming: per-key Misra-Gries heavy hitters.
 
-The reference keeps one mutable `expected_seq` per WebSocket connection
-and hard-crashes the process on a gap (kalshi_ws_client.py:129-146).
-The cluster-safe re-expression keeps last-seen seq per key in state and
-EMITS gap records instead of dying — the stream keeps running and gaps
-become data (quarantine + metric, SURVEY §4.1 failure-model row).
+The live twin of the batch heavy_hitters query (functions/sketches.py).
+Per key, MG_K counters ride in GroupState across micro-batches; each
+trigger emits the current candidate set with its lower-bound counts.
+Same guarantee as the batch sketch: any token with true count >
+processed/(K+1) is guaranteed present — the sketch can only over-admit,
+never miss — so the emitted set is a superset to recount, not an answer
+to trust blindly (exactly the batch op's two-pass contract, with the
+recount living downstream of the stream).
 
-Uses applyInPandasWithState (present in PySpark 4.x); the batch analog
-is the `seq_gap_check` window query in operators/transforms.py — both
-produce the same rows on the same input (stream/batch parity test).
+Uses applyInPandasWithState (present in PySpark 4.x).
 """
 
 from __future__ import annotations
@@ -19,71 +20,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-GAP_SCHEMA = StructType(
-    [
-        StructField("key", StringType(), True),
-        StructField("seq", LongType(), True),
-        StructField("prev_seq", LongType(), True),
-        StructField("gap", LongType(), True),
-    ]
-)
-
-STATE_SCHEMA = StructType([StructField("last_seq", LongType(), True)])
-
-
-def detect_seq_gaps(keyed: DataFrame, *, key_col: str = "market_ticker", seq_col: str = "seq") -> DataFrame:
-    """Streaming per-key gap detector: emits one row per gap observed.
-
-    State = last seen seq per key, carried across micro-batches. Within a
-    batch, rows are sorted by seq (the buffer may interleave).
-    """
-
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        last = state.get[0] if state.exists else None
-        out: list[tuple[str, int, int, int]] = []
-        # Gather every Arrow chunk before sorting: a large per-key batch
-        # arrives as multiple chunks, and per-chunk sorting would report
-        # spurious gaps when a later chunk holds lower seqs.
-        seqs: list[int] = []
-        for pdf in pdfs:
-            seqs.extend(int(s) for s in pdf[seq_col].dropna().astype("int64"))
-        for seq in sorted(seqs):
-            if last is not None and seq - last > 1:
-                out.append((key[0], int(seq), int(last), int(seq - last)))
-            if last is None or seq > last:
-                last = int(seq)
-        state.update((last,))
-        yield pd.DataFrame(out, columns=["key", "seq", "prev_seq", "gap"])
-
-    return (
-        keyed.select(key_col, seq_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=GAP_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Streaming Misra-Gries heavy hitters: the live twin of the batch
-# heavy_hitters query (functions/sketches.py). Per key, MG_K counters
-# ride in GroupState across micro-batches; each trigger emits the
-# current candidate set with its lower-bound counts. Same guarantee as
-# the batch sketch: any token with true count > processed/(K+1) is
-# guaranteed present — the sketch can only over-admit, never miss — so
-# the emitted set is a superset to recount, not an answer to trust
-# blindly (exactly the batch op's two-pass contract, with the recount
-# living downstream of the stream).
-
-from pyspark.sql.types import ArrayType  # noqa: E402
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 HH_STATE_SCHEMA = StructType(
     [

@@ -1,39 +1,4 @@
-"""Source/sink format coverage: ORC, JSON-with-schema, partitioned layout."""
-
-from __future__ import annotations
-
-import json
-
-from pyspark.sql import functions as F
-
-from nt_etl_order_book_spark.plans.explain import formatted_plan
-from nt_etl_order_book_spark.sources.orderbook import flatten_deltas
-from nt_etl_order_book_spark.sources.registry import (
-    read_json_messages,
-    write_partitioned,
-)
-
-MSGS = [
-    {
-        "type": "orderbook_delta", "sid": 1, "seq": i,
-        "market_ticker": "KXF-A", "market_id": "m",
-        "price": 40, "price_dollars": 0.40, "delta": 1, "side": "yes",
-        # two distinct days of data for partition pruning
-        "ts": 1_700_000_000_000 + i * 86_400_000, "ingestion_ts": 1_700_000_000_000,
-        "redis_stream_id": f"f-{i}",
-    }
-    for i in range(4)
-]
-
-
-def test_json_source_with_explicit_schema(spark, tmp_path):
-    p = tmp_path / "j"
-    p.mkdir()
-    (p / "m.json").write_text("\n".join(json.dumps(m) for m in MSGS))
-    df = read_json_messages(spark, str(p))
-    assert df.schema["seq"].dataType.simpleString() == "bigint"  # declared, not inferred
-    assert df.count() == 4
-    assert flatten_deltas(df).count() == 4
+"""Source/sink format coverage: ORC round trip and parquet schema evolution."""
 
 
 def test_orc_roundtrip(spark, tmp_path):
@@ -42,44 +7,6 @@ def test_orc_roundtrip(spark, tmp_path):
     df.write.mode("append").orc(out)
     back = spark.read.orc(out)
     assert sorted((r.k, r.v) for r in back.collect()) == [(1, "a"), (2, "b")]
-
-
-def test_partitioned_sink_by_event_date(spark, tmp_path):
-    p = tmp_path / "j2"
-    p.mkdir()
-    (p / "m.json").write_text("\n".join(json.dumps(m) for m in MSGS))
-    flat = flatten_deltas(read_json_messages(spark, str(p)))
-    out = str(tmp_path / "bydate")
-    # delta `timestamp` is ingestion time (reference format); partition
-    # by the EXCHANGE clock carried in event_ts
-    write_partitioned(flat, out, ts_col="event_ts")
-    back = spark.read.parquet(out)
-    assert back.select("event_date").distinct().count() == 4  # one partition per day
-    one_day = back.filter(F.col("event_date") == "2023-11-15")
-    assert "PartitionFilters" in formatted_plan(one_day)
-    assert one_day.count() == 1
-
-
-def test_corrupt_json_quarantined_not_dropped(spark, tmp_path):
-    # A poisoned line must neither kill the read nor vanish: PERMISSIVE
-    # mode with a quarantine column keeps every input line — good rows
-    # parse, the bad line lands whole in _corrupt_record for a
-    # dead-letter sink.
-    p = tmp_path / "jc"
-    p.mkdir()
-    lines = [json.dumps(m) for m in MSGS[:2]]
-    bad = '{"type": "orderbook_delta", "ticker": BROKEN'
-    (p / "m.json").write_text("\n".join(lines + [bad]))
-
-    df = read_json_messages(spark, str(p), keep_corrupt=True)
-    rows = df.collect()
-    assert len(rows) == 3
-    corrupt = [r for r in rows if r._corrupt_record is not None]
-    assert len(corrupt) == 1 and corrupt[0]._corrupt_record == bad
-    good = [r for r in rows if r._corrupt_record is None]
-    assert {r.redis_stream_id for r in good} == {"f-0", "f-1"}
-    # default (strict-schema) path: same file still reads without error
-    assert read_json_messages(spark, str(p)).count() == 3
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

@@ -15,25 +15,9 @@ from nt_etl_order_book_spark.operators.joins import asof_join
 from nt_etl_order_book_spark.operators.setops import dedup_keep_first
 from nt_etl_order_book_spark.operators.transforms import (
     cast_to,
-    explode_pairs,
     route_by_type,
     unpivot_sides,
 )
-
-
-def test_explode_ladder_with_empty_side(spark):
-    df = spark.createDataFrame(
-        [
-            ("M1", [[0.45, 100.0], [0.46, 50.0]]),
-            ("M2", []),  # empty ladder side is legal (redis_client .get default)
-        ],
-        schema="ticker string, yes_dollars array<array<double>>",
-    )
-    out = explode_pairs(df, "yes_dollars", keep=["ticker"]).collect()
-    assert [(r.ticker, r.price_dollars, r.contracts) for r in out] == [
-        ("M1", 0.45, 100.0),
-        ("M1", 0.46, 50.0),
-    ]
 
 
 def test_unpivot_sides_emits_literal_side(spark):
@@ -1225,7 +1209,8 @@ def test_exact_percentile_boundaries_parity_with_builtin(spark):
     # dup-heavy multiset where boundaries fall inside and between runs,
     # and at fracs whose position lands exactly on a value (frac 0/1).
     from nt_etl_order_book_spark.operators.aggregates import (
-        exact_percentile_boundaries,
+        boundaries_from_counts,
+        ranked_value_counts,
     )
 
     fracs = [0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0]
@@ -1236,7 +1221,7 @@ def test_exact_percentile_boundaries_parity_with_builtin(spark):
         .cast("double")
         .alias("x")
     )
-    got = exact_percentile_boundaries(df, "x", fracs).collect()[0]
+    got = boundaries_from_counts(spark, ranked_value_counts(df, "x"), fracs).collect()[0]
     ref = df.agg(
         *[
             F.expr(f"percentile(x, {f})").alias(f"q{i + 1}")

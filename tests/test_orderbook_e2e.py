@@ -92,43 +92,14 @@ def test_full_pipeline_reconstruction_and_quotes(spark, tmp_path):
     assert best[("KXM-A", "yes")] == "0.4700"
 
 
-def test_compaction_preserves_reconstruction(spark, tmp_path):
-    from nt_etl_order_book_spark.analytics import compact_book
-
-    p = tmp_path / "msgsC"
-    p.mkdir()
-    (p / "m.json").write_text("\n".join(json.dumps(m) for m in _messages()))
-    msgs = parse_messages(spark.read.text(str(p)))
-    snaps, deltas = flatten_snapshots(msgs), flatten_deltas(msgs)
-
-    # Compact at t=2500 (after the 0.45 kill, before the 0.47 create),
-    # keep only later deltas, reconstruct — must equal raw reconstruction.
-    compacted = compact_book(snaps, deltas, as_of_ms=2500)
-    later = deltas.filter("timestamp > 2500")
-    from_compacted = current_book(compacted, later)
-    from_raw = current_book(snaps, deltas)
-    a = {(r.ticker, r.side, str(r.price_dollars)): r.contracts for r in from_compacted.collect()}
-    b = {(r.ticker, r.side, str(r.price_dollars)): r.contracts for r in from_raw.collect()}
-    assert a == b
-
-
 def test_imbalance_and_vwap(spark, tmp_path):
-    from nt_etl_order_book_spark.analytics import book_imbalance, vwap
+    from nt_etl_order_book_spark.analytics import vwap
 
     p = tmp_path / "msgsV"
     p.mkdir()
     (p / "m.json").write_text("\n".join(json.dumps(m) for m in _messages()))
     msgs = parse_messages(spark.read.text(str(p)))
     snaps, deltas = flatten_snapshots(msgs), flatten_deltas(msgs)
-
-    book = current_book(snaps, deltas)
-    imb = {r.ticker: r for r in book_imbalance(book).collect()}
-    a = imb["KXM-A"]
-    # KXM-A book: yes 50@0.40 + 30@0.47 = 80; no 80@0.52 → balanced
-    assert (a.yes_depth, a.no_depth) == (80, 80)
-    assert a.imbalance == 0.0
-    # KXM-B: only a yes level → imbalance exactly 1
-    assert imb["KXM-B"].imbalance == 1.0
 
     # With snapshots given, pre-snapshot flow (the stale +9999 replay,
     # already baked into the snapshot) is excluded: only genuine
@@ -141,31 +112,6 @@ def test_imbalance_and_vwap(spark, tmp_path):
     # Raw-flow mode still counts everything (deduped on stream id).
     raw = {(r.ticker, r.side): r.volume for r in vwap(deltas).collect()}
     assert raw[("KXM-A", "yes")] == 10029
-
-
-def test_compaction_preserves_negative_net_levels(spark):
-    # Review scenario: a level whose net is NEGATIVE at compaction time
-    # but revived by later deltas must reconstruct identically. Clamping
-    # at T would lose the -10 and report 15 instead of 5.
-    from decimal import Decimal as D
-
-    from nt_etl_order_book_spark.analytics import compact_book, current_book
-
-    snaps = spark.createDataFrame(
-        [], "timestamp long, ticker string, side string, price_dollars decimal(5,4), contracts int, redis_stream_id string"
-    )
-    deltas = spark.createDataFrame(
-        [(1000, "T", "yes", D("0.5000"), -10, "d1"), (3000, "T", "yes", D("0.5000"), 15, "d2")],
-        "timestamp long, ticker string, side string, price_dollars decimal(5,4), delta int, redis_stream_id string",
-    )
-    compacted = compact_book(snaps, deltas, as_of_ms=2500)
-    later = deltas.filter("timestamp > 2500")
-    a = {(r.side, str(r.price_dollars)): r.contracts for r in current_book(compacted, later).collect()}
-    b = {(r.side, str(r.price_dollars)): r.contracts for r in current_book(snaps, deltas).collect()}
-    assert a == b == {("yes", "0.5000"): 5}
-    # the anchor row itself carries the negative net
-    anchor = compacted.collect()
-    assert [(r.contracts) for r in anchor] == [-10]
 
 
 def test_book_as_of_time_travel(spark, tmp_path):

@@ -57,9 +57,10 @@ def test_asof_join_is_single_key_shuffle_per_input(spark, sf_dir):
     # Day-chunked union + window implementation — NOT a quadratic range
     # join, and no whole-key sort: the row-grain union shuffles ONCE for
     # the (key, day) window; every other exchange carries map-side-
-    # combined chunk-grain frames (day-last rights, the distinct
-    # (key, day) set, the tiny carry window), and the carry attaches to
-    # the row-grain side via BROADCAST, never a row-grain reshuffle.
+    # combined chunk-grain frames (chunked_prefix's per-(key, day) last
+    # right row and its carry window over prior days), and the carry
+    # attaches to the row-grain side via BROADCAST, never a row-grain
+    # reshuffle.
     from nt_etl_order_book_spark.plans.explain import formatted_plan
 
     df = registry.queries()["join_asof"](spark, sf_dir)
@@ -302,7 +303,7 @@ def test_resample_ffill_no_range_join(spark, sf_dir):
     # The as-of semantics must come from the shared asof_join kernel,
     # never a NestedLoop range join; budget = dedup window + bounds
     # aggregate + the kernel's day-chunked shape (row window + the
-    # chunk-grain day-last/distinct/carry frames, which attach back via
+    # chunk-grain per-day last and carry frames, which attach back via
     # BROADCAST — see test_asof_join_is_single_key_shuffle_per_input).
     from nt_etl_order_book_spark.plans.explain import formatted_plan
 

@@ -363,107 +363,58 @@ def test_bloom_filter_flags_shared_paragraph_only(spark):
     assert all(r.n_flagged_pars >= 1 and r.doc_id % REF_MOD != 0 for r in out)
 
 
-def test_ivf_index_write_prunes_partitions_on_probe_read(spark, sf_dir, tmp_path):
-    # The 100 TB claim as tested code: the persisted IVF index is
-    # partitioned by cell, and a probe read with a cell predicate must
-    # prune at the directory level (PartitionFilters on the scan) and
-    # return exactly the in-memory assignment rows for those cells.
+def _rebuild_ivfpq_index(spark, emb, path, monkeypatch):
+    """Train the IVF-PQ index at the default cell count, then rebuild it
+    in place at 2 cells; return (cell dirs on disk, the rebuild's
+    codebook cells). The first build populates cells the second no
+    longer has — a stale cell=k dir would feed old vec_ids to probes."""
     import os
 
-    from nt_etl_order_book_spark.functions.similarity import (
-        N_CELLS,
-        ivf_assign,
-        ivf_codebook,
-        write_ivf_index,
-    )
-    from nt_etl_order_book_spark.tables import load_table
+    from nt_etl_order_book_spark.functions.similarity import ivfpq_train
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, cents = ivf_codebook(emb)
-    idx = str(tmp_path / "ivf_index")
-    write_ivf_index(emb, cents, idx)
-
-    # one directory per non-empty cell, none outside [0, N_CELLS)
-    cells = {
-        int(d.split("=")[1]) for d in os.listdir(idx) if d.startswith("cell=")
-    }
-    assert cells and all(0 <= c < N_CELLS for c in cells)
-
-    probe_cells = sorted(cells)[:2]
-    rd = spark.read.parquet(idx).filter(F.col("cell").isin(probe_cells))
-    plan = rd._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "cell" in plan.split("PartitionFilters")[1][:80]
-
-    got = {(r.vec_id, r.cell) for r in rd.select("vec_id", "cell").collect()}
-    want = {
-        (r.vec_id, r.cell)
-        for r in ivf_assign(emb, cents)
-        .filter(F.col("cell").isin(probe_cells))
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert got == want
+    ivfpq_train(emb, path)
+    monkeypatch.setenv("SPARK_GRAFT_IVF_CELLS", "2")
+    ivfpq_train(emb, path)
+    idx = os.path.join(path, "index")
+    dirs = {int(d.split("=")[1]) for d in os.listdir(idx) if d.startswith("cell=")}
+    cents = spark.read.parquet(os.path.join(path, "cents.parquet"))
+    cells = {r.cell for r in cents.select(F.explode("cents.cell").alias("cell")).collect()}
+    return dirs, cells
 
 
-def test_ivf_index_rebuild_leaves_no_stale_cells(spark, sf_dir, tmp_path):
+def test_ivf_index_rebuild_leaves_no_stale_cells(spark, sf_dir, tmp_path, monkeypatch):
     # Rebuild semantics: static overwrite must replace the WHOLE index
     # path. If a rebuild's assignment populates fewer cells, directories
-    # from the previous build must be gone — a stale cell=k dir would
-    # feed deleted vec_ids to probe reads.
-    import os
-
-    from nt_etl_order_book_spark.functions.similarity import (
-        ivf_assign,
-        ivf_codebook,
-        write_ivf_index,
-    )
+    # from the previous build must be gone.
     from nt_etl_order_book_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    _, cents = ivf_codebook(emb)
-    idx = str(tmp_path / "ivf_rebuild")
-    write_ivf_index(emb, cents, idx)
-
-    sub = emb.limit(40)
-    write_ivf_index(sub, cents, idx)
-    dirs = {int(d.split("=")[1]) for d in os.listdir(idx) if d.startswith("cell=")}
-    want = {r.cell for r in ivf_assign(sub, cents).select("cell").distinct().collect()}
-    assert dirs == want  # no leftovers from the first, fuller build
-    assert spark.read.parquet(idx).count() == 40
+    path = str(tmp_path / "ivf_rebuild")
+    dirs, cells = _rebuild_ivfpq_index(spark, emb, path, monkeypatch)
+    assert dirs == cells and len(cells) == 2  # no leftovers from the 16-cell build
+    assert spark.read.parquet(f"{path}/index").count() == emb.count()
 
 
-def test_ivf_index_rebuild_static_even_under_global_dynamic_mode(spark, sf_dir, tmp_path):
-    # write_ivf_index pins partitionOverwriteMode=static per-write; a
+def test_ivf_index_rebuild_static_even_under_global_dynamic_mode(spark, sf_dir, tmp_path, monkeypatch):
+    # ivfpq_train pins partitionOverwriteMode=static per-write; a
     # deployment that sets the session default to dynamic must NOT get
     # dynamic rebuild semantics (stale cell dirs feeding probe reads).
-    import os
-
-    from nt_etl_order_book_spark.functions.similarity import (
-        ivf_assign,
-        ivf_codebook,
-        write_ivf_index,
-    )
     from nt_etl_order_book_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    _, cents = ivf_codebook(emb)
-    idx = str(tmp_path / "ivf_rebuild_dyn")
+    path = str(tmp_path / "ivf_rebuild_dyn")
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "dynamic")
     try:
-        write_ivf_index(emb, cents, idx)
-        sub = emb.limit(40)
-        write_ivf_index(sub, cents, idx)
+        dirs, cells = _rebuild_ivfpq_index(spark, emb, path, monkeypatch)
     finally:
         if prev is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-    dirs = {int(d.split("=")[1]) for d in os.listdir(idx) if d.startswith("cell=")}
-    want = {r.cell for r in ivf_assign(sub, cents).select("cell").distinct().collect()}
-    assert dirs == want  # the per-write static pin overrode the global
-    assert spark.read.parquet(idx).count() == 40
+    assert dirs == cells and len(cells) == 2  # the per-write static pin overrode the global
+    assert spark.read.parquet(f"{path}/index").count() == emb.count()
 
 
 # ---------------------------------------------------------------------------

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import time
+from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
@@ -165,28 +166,6 @@ def test_stream_static_join_enrichment(spark, msg_dir):
     assert len(rows) == 2
 
 
-def test_windowed_vwap_stream(spark, msg_dir):
-    from nt_etl_order_book_spark.streaming.pipeline import windowed_vwap
-
-    msgs = read_json_stream(spark, msg_dir)
-    # fixture deltas are negative; synthesize a positive one by unioning a
-    # positive-delta frame through the same flatten path
-    flat = flatten_deltas(msgs)
-    q = (
-        windowed_vwap(flat.withColumn("delta", F.abs(F.col("delta"))))
-        .writeStream.format("memory")
-        .queryName("vwap_tbl")
-        .outputMode("update")  # append emits only after the watermark passes the window
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = spark.sql("select * from vwap_tbl").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r.ticker, r.side, str(r.vwap), r.volume) == ("KXM-A", "yes", "0.450000", 50)
-
-
 def test_update_mode_windowed_agg(spark, msg_dir):
     msgs = read_json_stream(spark, msg_dir)
     stats = windowed_book_stats(flatten_deltas(msgs), window="1 minute")
@@ -202,6 +181,39 @@ def test_update_mode_windowed_agg(spark, msg_dir):
     assert rows and rows[0].ticker == "KXM-A"
 
 
+def test_session_bursts_append_emits_closed_sessions(spark, tmp_path):
+    # Two bursts of one ticker, an hour apart. With a 5-minute gap the
+    # first session is [+0, +2 min + gap) = [+0, +7 min) with 3 deltas;
+    # the watermark (max event time - 10 min) passes its end, so append
+    # mode emits it. The second session is still open and is held back.
+    # Spark rejects update mode for session windows.
+    from nt_etl_order_book_spark.streaming.pipeline import session_bursts
+
+    p = tmp_path / "bursts"
+    p.mkdir()
+    base = 1_700_000_000_000
+    msgs = []
+    for i, minute in enumerate([0, 1, 2, 60, 61]):
+        m = dict(DELTA)
+        m["ts"] = m["ingestion_ts"] = base + minute * 60_000
+        m["redis_stream_id"] = f"sb-{i}"
+        msgs.append(json.dumps(m))
+    (p / "b0.json").write_text("\n".join(msgs))
+    q = (
+        session_bursts(flatten_deltas(read_json_stream(spark, str(p))))
+        .writeStream.format("memory")
+        .queryName("bursts_tbl")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(60)
+    rows = spark.sql("select * from bursts_tbl").collect()
+    got = [(r.ticker, r.session_start, r.session_end, r.n_deltas) for r in rows]
+    start = datetime.fromtimestamp(base / 1000)  # collect() yields local naive datetimes
+    assert got == [("KXM-A", start, start + timedelta(minutes=7), 3)]
+
+
 def test_foreach_batch_idempotent_sink(spark, msg_dir, tmp_path):
     from nt_etl_order_book_spark.streaming.pipeline import foreach_batch_idempotent_sink
 
@@ -214,82 +226,6 @@ def test_foreach_batch_idempotent_sink(spark, msg_dir, tmp_path):
         q.awaitTermination(60)
     sunk = spark.read.parquet(out)
     assert sunk.count() == sunk.select("redis_stream_id").distinct().count() == 1
-
-
-def test_windowed_market_breadth(spark, tmp_path):
-    # Approximate distinct active tickers per window (HLL state, not a
-    # growing distinct set). 3 tickers inside one minute: the sketch at
-    # this cardinality is exact.
-    from nt_etl_order_book_spark.streaming.pipeline import windowed_market_breadth
-
-    p = tmp_path / "breadth"
-    p.mkdir()
-    msgs = []
-    for i, t in enumerate(["KXW-A", "KXW-B", "KXW-C", "KXW-A"]):
-        m = dict(DELTA)
-        m["market_ticker"] = t
-        m["ingestion_ts"] = 1_700_000_000_000 + i * 1000
-        m["redis_stream_id"] = f"br-{i}"
-        msgs.append(json.dumps(m))
-    (p / "b.json").write_text("\n".join(msgs))
-    stream = read_json_stream(spark, str(p))
-    q = (
-        windowed_market_breadth(flatten_deltas(stream))
-        .writeStream.format("memory")
-        .queryName("breadth_tbl")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = spark.sql("select * from breadth_tbl").collect()
-    assert len(rows) == 1
-    assert rows[0].approx_active_tickers == 3 and rows[0].n_msgs == 4
-
-
-def test_windowed_distinct_docs_stream_and_batch_parity(spark, tmp_path):
-    # Streaming deduped-doc counts: HLL over content digests per window,
-    # with exact stream/batch parity (the sketch is order-independent,
-    # so the availableNow replay must equal the same agg run in batch).
-    from nt_etl_order_book_spark.streaming.pipeline import windowed_distinct_docs
-
-    p = tmp_path / "docs"
-    p.mkdir()
-    base = 1_700_000_000_000
-    rows = [
-        # window 1: 4 arrivals, 2 distinct payloads (a crawl re-fetch)
-        {"doc_id": 0, "text": "alpha beta gamma", "ingest_ts": base},
-        {"doc_id": 1, "text": "alpha beta gamma", "ingest_ts": base + 1_000},
-        {"doc_id": 2, "text": "delta epsilon", "ingest_ts": base + 2_000},
-        {"doc_id": 3, "text": "alpha beta gamma", "ingest_ts": base + 3_000},
-        # window 2: 2 arrivals, 2 distinct
-        {"doc_id": 4, "text": "zeta", "ingest_ts": base + 61_000},
-        {"doc_id": 5, "text": "eta theta", "ingest_ts": base + 62_000},
-    ]
-    (p / "docs.json").write_text("\n".join(json.dumps(r) for r in rows))
-    schema = "doc_id long, text string, ingest_ts long"
-    stream = spark.readStream.schema(schema).json(str(p))
-    q = (
-        windowed_distinct_docs(stream)
-        .writeStream.format("memory")
-        .queryName("distinct_docs_tbl")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = {
-        r.window_start: (r.approx_distinct_docs, r.n_docs)
-        for r in spark.sql("select * from distinct_docs_tbl").collect()
-    }
-    batch = {
-        r.window_start: (r.approx_distinct_docs, r.n_docs)
-        for r in windowed_distinct_docs(spark.read.schema(schema).json(str(p))).collect()
-    }
-    assert got == batch  # exact parity: same sketch, same digests
-    assert len(got) == 2
-    counts = sorted(got.values())
-    assert counts == [(2, 2), (2, 4)]  # HLL exact at this cardinality
 
 
 def test_kafka_reader_option_mapping():
@@ -557,69 +493,6 @@ def test_tune_session_leaves_callers_checkpoint_manager(spark, tmp_path):
     assert fm.getClass().getName() == CFM + "FileContextBasedCheckpointFileManager"
 
 
-def test_stateful_seq_gap_stream(spark, tmp_path):
-    from nt_etl_order_book_spark.streaming.stateful import detect_seq_gaps
-
-    p = tmp_path / "seqmsgs"
-    p.mkdir()
-    msgs = []
-    for seq in [1, 2, 3, 7, 8]:  # gap 3→7
-        m = dict(DELTA)
-        m["seq"] = seq
-        m["redis_stream_id"] = f"17000-{seq}"
-        msgs.append(json.dumps(m))
-    (p / "b0.json").write_text("\n".join(msgs))
-
-    stream = read_json_stream(spark, str(p))
-    gaps = detect_seq_gaps(stream, key_col="market_ticker", seq_col="seq")
-    q = (
-        gaps.writeStream.format("memory")
-        .queryName("gaps_tbl")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = spark.sql("select * from gaps_tbl").collect()
-    assert [(g.key, g.seq, g.prev_seq, g.gap) for g in got] == [("KXM-A", 7, 3, 4)]
-
-
-def test_stateful_ops_survive_multi_chunk_batches(spark, tmp_path):
-    # A key's micro-batch arrives as MULTIPLE pandas chunks when it
-    # exceeds arrow.maxRecordsPerBatch; per-chunk sorting would emit
-    # spurious gaps / wipe deltas. Force 2-row chunks and shuffle input.
-    from nt_etl_order_book_spark.streaming.stateful import detect_seq_gaps
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
-    try:
-        p = tmp_path / "chunky"
-        p.mkdir()
-        seqs = [9, 1, 8, 2, 7, 3, 12, 4, 6, 5]  # shuffled 1..9 + 12 (gap 9→12)
-        msgs = []
-        for seq in seqs:
-            m = dict(DELTA)
-            m["seq"] = seq
-            m["redis_stream_id"] = f"ck-{seq}"
-            msgs.append(json.dumps(m))
-        (p / "b0.json").write_text("\n".join(msgs))
-        stream = read_json_stream(spark, str(p))
-        gaps = detect_seq_gaps(stream, key_col="market_ticker", seq_col="seq")
-        q = (
-            gaps.writeStream.format("memory")
-            .queryName("chunk_gaps")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(60)
-        got = spark.sql("select * from chunk_gaps").collect()
-        # only the true 9→12 gap; per-chunk sorting would report extras
-        assert [(g.seq, g.prev_seq, g.gap) for g in got] == [(12, 9, 3)]
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
 def test_transactional_sink_merge_spec_mapping(spark):
     # The exactly-once story's table-format swap as tested config (r4
     # verdict item 8, same contract as the Kafka reader mapping): the
@@ -720,98 +593,6 @@ def test_rocksdb_state_store_config_swap(spark, tmp_path):
     ), "RocksDB provider did not engage"
 
 
-def test_windowed_ohlc_stream_and_batch_parity(spark, tmp_path):
-    # Streaming OHLC bars: same-millisecond messages must pick
-    # open/close by the numeric redis-stream-id order ('-9' < '-10'),
-    # and the availableNow replay must equal the batch run exactly
-    # (min_by/max_by on a total-order key is order-independent).
-    from nt_etl_order_book_spark.streaming.pipeline import windowed_ohlc
-
-    p = tmp_path / "ticks"
-    p.mkdir()
-    base = 1_700_000_000_000
-    rows = [
-        # window 1, KXM-A: open 0.40 (sid -9 beats -10 numerically at
-        # the same ms), high 0.60, low 0.30, close 0.30
-        {"timestamp": base, "ticker": "KXM-A", "price_dollars": 0.40,
-         "redis_stream_id": "5000-9"},
-        {"timestamp": base, "ticker": "KXM-A", "price_dollars": 0.60,
-         "redis_stream_id": "5000-10"},
-        {"timestamp": base + 30_000, "ticker": "KXM-A", "price_dollars": 0.30,
-         "redis_stream_id": "5001-0"},
-        # window 2 opens fresh
-        {"timestamp": base + 61_000, "ticker": "KXM-A", "price_dollars": 0.55,
-         "redis_stream_id": "5002-0"},
-    ]
-    (p / "ticks.json").write_text("\n".join(json.dumps(r) for r in rows))
-    schema = "timestamp long, ticker string, price_dollars double, redis_stream_id string"
-    stream = spark.readStream.schema(schema).json(str(p))
-    q = (
-        windowed_ohlc(stream)
-        .writeStream.format("memory")
-        .queryName("ohlc_tbl")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    key = lambda r: (r.window_start, r.ticker)  # noqa: E731
-    val = lambda r: (r.open, r.high, r.low, r.close, r.n_msgs)  # noqa: E731
-    got = {key(r): val(r) for r in spark.sql("select * from ohlc_tbl").collect()}
-    batch = {key(r): val(r)
-             for r in windowed_ohlc(spark.read.schema(schema).json(str(p))).collect()}
-    assert got == batch  # exact stream/batch parity
-    assert len(got) == 2
-    bars = sorted(got.items())
-    assert bars[0][1] == (0.40, 0.60, 0.30, 0.30, 3)
-    assert bars[1][1] == (0.55, 0.55, 0.55, 0.55, 1)
-
-
-def test_stream_anomaly_alerts_model_apply(spark, tmp_path):
-    # Batch-side robust stats broadcast into the stream; exactly the
-    # planted outlier print alerts, the constant-priced ticker never
-    # does (MAD=0 guard), and normal jitter stays silent.
-    from nt_etl_order_book_spark.streaming.pipeline import stream_anomaly_alerts
-
-    p = tmp_path / "prints"
-    p.mkdir()
-    base = 1_700_000_000_000
-    prices = [0.50, 0.51, 0.49, 0.50, 0.52, 0.48, 0.50, 0.51, 0.49, 0.50]
-    rows = [{"timestamp": base + i * 1000, "ticker": "KXM-A", "price_dollars": v}
-            for i, v in enumerate(prices)]
-    rows.append({"timestamp": base + 99_000, "ticker": "KXM-A", "price_dollars": 5.0})
-    rows += [{"timestamp": base + i * 1000, "ticker": "KXM-B", "price_dollars": 0.30}
-             for i in range(5)]  # constant-priced: MAD 0, must never alert
-    (p / "prints.json").write_text("\n".join(json.dumps(r) for r in rows))
-    schema = "timestamp long, ticker string, price_dollars double"
-
-    batch = spark.read.schema(schema).json(str(p))
-    stats = batch.groupBy("ticker").agg(
-        F.expr("percentile(price_dollars, 0.5)").alias("med")
-    )
-    stats = (
-        batch.join(stats, "ticker")
-        .withColumn("adev", F.abs(F.col("price_dollars") - F.col("med")))
-        .groupBy("ticker", "med")
-        .agg(F.expr("percentile(adev, 0.5)").alias("mad"))
-    )
-
-    stream = spark.readStream.schema(schema).json(str(p))
-    q = (
-        stream_anomaly_alerts(stream, stats)
-        .writeStream.format("memory")
-        .queryName("alerts_tbl")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    alerts = spark.sql("select * from alerts_tbl").collect()
-    assert len(alerts) == 1
-    assert (alerts[0].ticker, alerts[0].price_dollars) == ("KXM-A", 5.0)
-    assert alerts[0].abs_z > 3.0
-
-
 def test_stream_heavy_hitters_state_bounded_and_superset(spark, tmp_path):
     # Two micro-batches of a skewed token stream (checkpointed restart
     # between them): the planted heavy token must survive in state with
@@ -871,55 +652,6 @@ def test_stream_heavy_hitters_state_bounded_and_superset(spark, tmp_path):
     assert true_heavy - latest // (k + 1) <= final["heavy"] <= true_heavy
 
 
-def test_windowed_ohlc_parity_with_batch_ohlc_bars_oracle(spark, tmp_path, sf_dir):
-    # r7 verdict item 5: the streaming OHLC twin verified against the
-    # REGISTERED batch oracle (`ohlc_bars`), not just against a batch
-    # run of itself. The events table is replayed as delta-shaped JSON
-    # whose redis_stream_id encodes (unix_micros, event_id) — the sid
-    # sort key then orders identically to ohlc_bars' µs*1000+event_id
-    # composite — and windowed_ohlc at a 1-hour window must reproduce
-    # every hourly bar bit-for-bit: same open/close picks, same counts.
-    from nt_etl_order_book_spark import registry
-    from nt_etl_order_book_spark.streaming.pipeline import windowed_ohlc
-    from nt_etl_order_book_spark.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    fixture = ev.select(
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("timestamp"),
-        F.col("user_id").cast("string").alias("ticker"),
-        F.col("value").alias("price_dollars"),
-        F.concat_ws(
-            "-",
-            F.unix_micros(F.col("ts").cast("timestamp")).cast("string"),
-            F.col("event_id").cast("string"),
-        ).alias("redis_stream_id"),
-    )
-    src = tmp_path / "ohlc_src"
-    fixture.coalesce(1).write.json(str(src))  # one file -> one micro-batch
-
-    schema = "timestamp long, ticker string, price_dollars double, redis_stream_id string"
-    stream = spark.readStream.schema(schema).json(str(src))
-    q = (
-        windowed_ohlc(stream, window="1 hour")
-        .writeStream.format("memory")
-        .queryName("ohlc_oracle_tbl")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (int(r.ticker), r.window_start): (r.open, r.high, r.low, r.close, r.n_msgs)
-        for r in spark.sql("select * from ohlc_oracle_tbl").collect()
-    }
-    want = {
-        (r.user_id, r.bar_ts): (r.open, r.high, r.low, r.close, r.n_events)
-        for r in registry.queries()["ohlc_bars"](spark, sf_dir).collect()
-    }
-    assert len(got) == len(want) > 0
-    assert got == want
-
-
 def test_stream_heavy_hitters_parity_with_batch_oracle(spark, tmp_path, sf_dir):
     # r7 verdict item 5: the streaming Misra-Gries state, replayed over
     # the documents corpus, must reproduce the registered batch
@@ -971,67 +703,6 @@ def test_stream_heavy_hitters_parity_with_batch_oracle(spark, tmp_path, sf_dir):
         if r.cnt * HH_DENOM >= n
     }
     assert recount == want
-
-
-def test_windowed_ohlc_late_data_folds_in_across_batches(spark, tmp_path):
-    # The docstring's late-data claim, actually exercised: two
-    # micro-batches (maxFilesPerTrigger=1), where batch 2 delivers rows
-    # OLDER than batch 1's max event time but inside the 10-minute
-    # watermark. min_by/max_by state must fold them in: the late row at
-    # the window's true start becomes the open, and the late high
-    # raises the bar's high. Final bars must equal the single-shot
-    # batch run over the union.
-    from nt_etl_order_book_spark.streaming.pipeline import windowed_ohlc
-
-    p = tmp_path / "late_ticks"
-    p.mkdir()
-    base = 1_700_000_040_000  # minute-aligned so all four rows share one bar
-    batch1 = [
-        {"timestamp": base + 30_000, "ticker": "KXM-A", "price_dollars": 0.50,
-         "redis_stream_id": "6000-1"},
-        {"timestamp": base + 50_000, "ticker": "KXM-A", "price_dollars": 0.45,
-         "redis_stream_id": "6000-2"},
-    ]
-    # 50s older than batch 1's max — late, but far inside the watermark
-    batch2 = [
-        {"timestamp": base, "ticker": "KXM-A", "price_dollars": 0.40,
-         "redis_stream_id": "6000-0"},   # true open of the window
-        {"timestamp": base + 10_000, "ticker": "KXM-A", "price_dollars": 0.70,
-         "redis_stream_id": "6000-0b"},  # late high
-    ]
-    (p / "a_batch1.json").write_text("\n".join(json.dumps(r) for r in batch1))
-    (p / "b_batch2.json").write_text("\n".join(json.dumps(r) for r in batch2))
-    schema = "timestamp long, ticker string, price_dollars double, redis_stream_id string"
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(p))
-    q = (
-        windowed_ohlc(stream)
-        .writeStream.format("memory")
-        .queryName("ohlc_late_tbl")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from ohlc_late_tbl").collect()
-    # update mode re-emits the bar per batch; cross-batch row order from
-    # a memory-sink collect() is NOT contractually guaranteed, so pick
-    # the latest emission per key by its own monotone marker: n_msgs
-    # strictly grows every time a batch folds more rows into the bar.
-    final = {}
-    for r in rows:
-        key = (r.window_start, r.ticker)
-        if key not in final or r.n_msgs > final[key][4]:
-            final[key] = (r.open, r.high, r.low, r.close, r.n_msgs)
-    want = {
-        (r.window_start, r.ticker): (r.open, r.high, r.low, r.close, r.n_msgs)
-        for r in windowed_ohlc(
-            spark.read.schema(schema).json(str(p))
-        ).collect()
-    }
-    assert final == want
-    assert len(final) == 1
-    ((_, bar),) = final.items()
-    assert bar == (0.40, 0.70, 0.40, 0.45, 4)  # late open + late high folded in
 
 
 def test_stamp_ingest_ts_lands_in_sink_schema(spark, tmp_path):

@@ -528,60 +528,6 @@ def test_order_flow_imbalance_day_sharded_no_whole_history_window(spark, sf_dir)
             assert "chunk" in spec or "day" in spec, spec
 
 
-# ------------------------------------------------- materialized rollup MV
-
-
-def test_materialized_rollup_lifecycle(spark, sf_dir, tmp_path):
-    # Build from all days except the last, refresh the last day
-    # incrementally (twice — idempotence), and the daily read from the
-    # materialized partials must equal the oracled one-shot
-    # hypertable_rollup over the full table. Day-scoped reads must
-    # prune partitions.
-    from pyspark.sql import functions as F
-
-    from nt_etl_order_book_spark.operators.timeseries import (
-        read_rollup_daily,
-        refresh_rollup_day,
-        write_hourly_rollup,
-    )
-    from nt_etl_order_book_spark.tables import load_table
-
-    path = str(tmp_path / "rollup_mv")
-    ev = load_table(spark, sf_dir, "events")
-    last_day = ev.agg(F.max(F.date_trunc("day", F.col("ts"))).alias("d")).collect()[0].d
-    hist = ev.filter(F.date_trunc("day", F.col("ts")) < F.lit(last_day))
-    incr = ev.filter(F.date_trunc("day", F.col("ts")) == F.lit(last_day))
-    assert incr.count() > 0 and hist.count() > 0
-
-    write_hourly_rollup(hist, path)
-    refresh_rollup_day(incr, path)
-    refresh_rollup_day(incr, path)  # idempotent: partition replaced, not appended
-
-    got = {(r.event_type, r.day): (r.sum_value, r.n_events, r.min_v, r.max_v)
-           for r in read_rollup_daily(spark, path).collect()}
-    want = {(r.event_type, r.day): (r.sum_value, r.n_events, r.min_v, r.max_v)
-            for r in registry.all_specs()["hypertable_rollup"].fn(spark, sf_dir).collect()}
-    assert got == want
-
-    # day-scoped read prunes partitions at the scan
-    day_key = last_day.strftime("%Y-%m-%d")
-    scoped = spark.read.parquet(path).filter(F.col("day_key") == day_key)
-    plan = formatted_plan(scoped)
-    assert "PartitionFilters" in plan and "day_key" in plan
-
-    # Layout pin (r14): the writers key the shuffle on day_key, so each
-    # day directory holds exactly ONE data file — an unkeyed
-    # partitionBy write sprays tasks×days files (the defect class
-    # measured at 3× probe-wall cost on the IVF index writers).
-    import os
-
-    for entry in os.listdir(path):
-        if not entry.startswith("day_key="):
-            continue
-        parts = [f for f in os.listdir(os.path.join(path, entry)) if f.endswith(".parquet")]
-        assert len(parts) == 1, f"{entry}: {len(parts)} files (spray regression)"
-
-
 def test_prefix_dedup_truncation_variants(spark):
     from nt_etl_order_book_spark.functions import dedup as dedupmod
 
