@@ -161,6 +161,11 @@ def deltas_query(
     The reference is at-least-once (ack-after-write, consumer.py:104-107)
     and carries redis_stream_id precisely so downstream can dedup
     (consumer.py:145,161); dropDuplicatesWithinWatermark does that here.
+    A NULL-id row (its source bypassed the buffer) is keyed on
+    ``"\\0" + uuid()``, which no buffer id can equal, so it is never a
+    duplicate. It holds a row of dedup state until the watermark evicts
+    it, and is dropped as late once older than the watermark, as a keyed
+    row is (DEPLOY.md §4).
     ``stamp_ingest_ts``: as in snapshots_query — wall-clock stamp for
     rows whose source bypassed the durable buffer.
 
@@ -191,19 +196,18 @@ def deltas_query(
     if state_partitions is not None and state_partitions < 1:
         raise ValueError(f"state_partitions must be >= 1, got {state_partitions}")
     flat = flatten_deltas(msgs, stamp_ingest_ts=stamp_ingest_ts)
-    dedup_armed = bool(dedup_within) and "redis_stream_id" in flat.columns
+    dedup_armed = bool(dedup_within)
     if dedup_armed:
-        # NULL ids (sources without a buffer id) must bypass the dedup:
-        # dropDuplicates* treats NULLs as equal and would keep exactly one
-        # row of the entire stream. Split, dedup the keyed part, re-union.
-        timed = flat.withColumn("event_time", F.timestamp_millis(F.col("timestamp")))
-        keyed = (
-            timed.filter(F.col("redis_stream_id").isNotNull())
+        # dropDuplicates* treats NULLs as equal and would keep one NULL-id
+        # row of the whole stream, so a NULL id gets a fresh key that no
+        # buffer id can take (buffer ids never start with "\0").
+        key = F.coalesce(F.col("redis_stream_id"), F.concat(F.lit("\u0000"), F.uuid()))
+        flat = (
+            flat.withColumn("event_time", F.timestamp_millis(F.col("timestamp")))
+            .withColumn("_dedup_key", key)
             .withWatermark("event_time", dedup_within)
-            .dropDuplicatesWithinWatermark(["redis_stream_id"])
-        )
-        flat = keyed.unionByName(timed.filter(F.col("redis_stream_id").isNull())).drop(
-            "event_time"
+            .dropDuplicatesWithinWatermark(["_dedup_key"])
+            .drop("_dedup_key", "event_time")
         )
     writer = (
         flat.writeStream.format("parquet")

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from tools.dump_plans import renumber
+from tools.dump_plans import mask_artifacts, renumber
 
 
 def test_renumber_is_per_plan_in_first_seen_order():
@@ -40,3 +40,14 @@ def test_renumber_is_per_plan_in_first_seen_order():
     # Idempotent, and text that only looks like a counter is kept.
     assert renumber(want) == want
     assert renumber("Condition : (text#3 = a #1 tag)") == "Condition : (text#0 = a #1 tag)"
+    # The artifact cache root and each artifact dir's digest of the
+    # corpus path and mtimes are masked; other paths are kept.
+    for root in ("/srv/idx", "/srv/idx/"):
+        assert mask_artifacts(
+            "Location: InMemoryFileIndex [file:/srv/idx/ivfpq_c16_sf0.01_5b4b701b/index]\n"
+            "Location: InMemoryFileIndex [file:/data/sf0.01_5b4b701b/events.parquet]",
+            root,
+        ) == (
+            "Location: InMemoryFileIndex [file:<artifact_root>/ivfpq_c16_sf0.01_<digest>/index]\n"
+            "Location: InMemoryFileIndex [file:/data/sf0.01_5b4b701b/events.parquet]"
+        )

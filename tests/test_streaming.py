@@ -6,6 +6,7 @@ stream/batch parity on the same transforms.
 from __future__ import annotations
 
 import json
+import os
 import time
 from datetime import datetime, timedelta
 
@@ -108,6 +109,76 @@ def test_stream_batch_parity_and_checkpointed_sinks(spark, msg_dir, tmp_path):
     r = stream_deltas.collect()[0]
     assert (r.ticker, r.side, r.delta, str(r.price_dollars)) == ("KXM-A", "yes", -25, "0.4500")
     assert r.redis_stream_id == "1700000002000-0"  # dedup key must survive the pipeline
+
+
+def _delta(seq: int, ts: int, sid: str | None = None) -> dict:
+    """DELTA with its own seq/delta and ingest time; no id when ``sid`` is None."""
+    m = {k: v for k, v in DELTA.items() if k != "redis_stream_id"}
+    m.update(seq=seq, delta=seq, ingestion_ts=ts)
+    return m if sid is None else {**m, "redis_stream_id": sid}
+
+
+def test_deltas_dedup_keeps_null_ids_in_one_scan(spark, tmp_path):
+    # The batch keep rule of analytics._history: each buffer id once,
+    # every NULL-id row (its source bypassed the buffer) kept. Ids replay
+    # inside file 0 and across files 0 and 1. File 1 holds a NULL-id row
+    # an hour older than file 0's rows; it is kept, as Spark drops a
+    # batch's late rows against the previous batch's watermark, and file
+    # 0's batch had none. File 2's hour-old rows are older than the
+    # watermark file 0 set: late, they are dropped with an id or without.
+    t0, hour = DELTA["ingestion_ts"], 3_600_000
+    files = [
+        [_delta(1, t0, "a"), _delta(1, t0, "a"), _delta(2, t0), _delta(3, t0 + 1, "b")],
+        [_delta(3, t0 + 1, "b"), _delta(4, t0 - hour), _delta(5, t0 + 2, "c"), _delta(6, t0 + 2)],
+        [_delta(7, t0 - hour), _delta(8, t0 - hour, "d"), _delta(9, t0 + 3)],
+    ]
+    (tmp_path / "msgs").mkdir()
+    for i, msgs in enumerate(files):
+        f = tmp_path / "msgs" / f"part{i}.json"
+        f.write_text("\n".join(json.dumps(m) for m in msgs))
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))  # max_files_per_trigger=1 reads by mtime
+    q = deltas_query(
+        read_json_stream(spark, str(tmp_path / "msgs"), max_files_per_trigger=1),
+        str(tmp_path / "out"),
+        str(tmp_path / "cp"),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    kept = sorted((r.delta, r.redis_stream_id) for r in spark.read.parquet(str(tmp_path / "out")).collect())
+    assert kept == [(1, "a"), (2, None), (3, "b"), (4, None), (5, "c"), (6, None), (9, None)]
+    # One stream: every line is read once, one file per batch.
+    progress = q.recentProgress
+    assert len(progress) == len(files)
+    assert sum(p.numInputRows for p in progress) == sum(map(len, files))
+
+
+def test_deltas_split_union_checkpoint_restart_fails_loudly(spark, msg_dir, tmp_path):
+    # Earlier deltas_query plans split the NULL-id rows off the dedup and
+    # unioned them back: two sources in the checkpoint. The one-stream
+    # query must refuse that checkpoint, not misread it (DEPLOY.md §4).
+    cp = str(tmp_path / "cp")
+    timed = flatten_deltas(read_json_stream(spark, msg_dir)).withColumn(
+        "event_time", F.timestamp_millis(F.col("timestamp"))
+    )
+    sid = F.col("redis_stream_id")
+    split_union = (
+        timed.filter(sid.isNotNull())
+        .withWatermark("event_time", "10 minutes")
+        .dropDuplicatesWithinWatermark(["redis_stream_id"])
+        .unionByName(timed.filter(sid.isNull()))
+        .drop("event_time")
+    )
+    first = (
+        split_union.writeStream.format("parquet")
+        .option("path", str(tmp_path / "old_out"))
+        .option("checkpointLocation", cp)
+        .trigger(availableNow=True)
+        .start()
+    )
+    first.awaitTermination(60)
+    assert first.exception() is None
+    with pytest.raises(Exception, match="sources in the checkpoint offsets"):
+        deltas_query(read_json_stream(spark, msg_dir), str(tmp_path / "out"), cp).awaitTermination(60)
 
 
 def test_windowed_book_stats_batch_semantics(spark, msg_dir):
@@ -395,7 +466,7 @@ def test_streaming_metrics_listener(spark, msg_dir, tmp_path):
             listener.collector.total_rows() == 0 or not tight.collector.alarms
         ):
             time.sleep(0.2)
-        assert listener.collector.total_rows() >= 4  # all 4 fixture messages observed
+        assert listener.collector.total_rows() == 4  # all 4 fixture messages observed
         # the dedup operator holds state: at least one batch reports state rows
         assert any((b.state_rows or 0) > 0 for b in listener.collector.batches)
         # peak_state is the horizon-sizing metric: it must equal the max

@@ -3,8 +3,9 @@ so plan quality (pushdown, pruning, broadcast, partial agg, shuffle
 count) is reviewable without running Spark.
 
 Expression ids, lambda variable names, plan ids and RDD ids are
-renumbered per plan (see `renumber`), so regenerating on an unchanged
-tree rewrites no line and a diff of two regenerations shows only the
+renumbered per plan (see `renumber`), and artifact paths are masked
+(see `mask_artifacts`), so regenerating on an unchanged tree rewrites no
+line, on any machine, and a diff of two regenerations shows only the
 plans that changed.
 
 Usage: python tools/dump_plans.py [sf_dir]
@@ -19,6 +20,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nt_etl_order_book_spark import registry
+from nt_etl_order_book_spark.functions.artifacts import artifact_root
 from nt_etl_order_book_spark.plans.explain import count_shuffles, formatted_plan
 from nt_etl_order_book_spark.session import get_spark
 
@@ -53,6 +55,14 @@ def renumber(plan: str) -> str:
             lambda m: m[1] + str(seen.setdefault(m[3] or m[2], len(seen))), plan
         )
     return plan
+
+
+def mask_artifacts(plan: str, root: str) -> str:
+    """Mask the artifact cache ``root`` in ``plan`` and the 8-hex digest
+    that ends each artifact dir's name (artifacts.artifact_path). Both
+    vary with the machine and the testdata's mtimes, not with the plan."""
+    artifact_dir = re.compile(re.escape(root.rstrip("/")) + r"/([^/\s]+)_[0-9a-f]{8}(?=/)")
+    return artifact_dir.sub(r"<artifact_root>/\1_<digest>", plan)
 
 
 SHOW = [
@@ -135,7 +145,7 @@ def main() -> None:
     ]
     for name in SHOW:
         df = qs[name](spark, sf_dir)
-        plan = renumber(formatted_plan(df))
+        plan = mask_artifacts(renumber(formatted_plan(df)), artifact_root())
         out.append(f"## {name}")
         out.append("")
         out.append(f"_{specs[name].doc.strip()}_")
