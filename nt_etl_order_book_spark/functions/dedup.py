@@ -19,7 +19,7 @@ deterministic; no seeded randomness outside the fixed HASH_SEEDS table.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window  # noqa: F401
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F
 
 from nt_etl_order_book_spark.registry import register
@@ -1014,14 +1014,17 @@ def connected_components(pairs: DataFrame, *, max_rounds: int = 25) -> DataFrame
                 "prev",
             )
         )
-        new_labels = checkpoint_frame(new_labels, eager=True)
-        # Convergence reads the prev label carried on the frame the
-        # checkpoint action just materialized — a narrow filter over
-        # the checkpointed blocks instead of the per-round shuffle join
-        # against the previous labels frame.
-        converged = new_labels.filter(F.col("label") != F.col("prev")).isEmpty()
-        labels = new_labels.select("x", "label")
-        if converged:
+        # Convergence is counted by the checkpoint action that
+        # materializes the round: an Observation of sum(label != prev),
+        # no job of its own (NULL on an empty graph).
+        changed = Observation()
+        labels = checkpoint_frame(
+            new_labels.observe(
+                changed, F.sum((F.col("label") != F.col("prev")).cast("long")).alias("n")
+            ),
+            eager=True,
+        ).select("x", "label")
+        if not changed.get["n"]:
             return labels
     # Pointer doubling converges in O(log diameter): 25 rounds cover any
     # graph with diameter ≤ 2^25. Hitting this means the loop was asked

@@ -2,9 +2,11 @@
 
 `embeddings.embedding` is array<float> (64-dim). Dot products and norms
 are higher-order-function expressions (zip_with + aggregate) — fully
-JVM-side, no Python in the scoring loop. The Python steps are the two
-nearest-centroid assignments, each an Arrow-batched numpy pass: the IVF
-cell (ivf_assign) and the PQ codes (pq_encode).
+JVM-side, no Python in the scoring loop. The Python steps are
+Arrow-batched numpy passes: the two nearest-centroid assignments, the
+IVF cell (ivf_assign) and the PQ codes (pq_encode), and the blocked
+all-pairs cosine of the two dedup queries, one grouped-map call per
+block (cosine_tiles, in dot()'s own fold).
 
 Scale design: brute-force top-k broadcasts the (small) query set and
 scans the corpus once — the right baseline. The LSH variant buckets by
@@ -602,6 +604,69 @@ DEDUP_COS_TAU = 0.3  # fixture-calibrated: isotropic 64-dim corpus tops out ≈0
 # approximate path (ann_lsh_topk's banding) — same contract as
 # MAX_SHINGLE_DF / max_bucket in the text-dedup family.
 MAX_BLOCK = 10_000
+# Rows per cosine tile: scoring a tile holds a few TILE × block arrays of
+# doubles, ≈20 MB each for a block at the MAX_BLOCK cap.
+TILE = 256
+
+
+def _fold(x, y):
+    """dot() for every row pair of x (t×D) and y (m×D), in dot()'s own
+    operations: per dimension acc = acc + x_d·y_d in double, left to
+    right. No matmul: BLAS reorders and fuses the sum, which moves a
+    cosine off the oracle at the 6-dp boundary."""
+    import numpy as np
+
+    acc = np.zeros((len(x), len(y)))
+    for d in range(x.shape[1]):
+        acc += x[:, d, None] * y[:, d]
+    return acc
+
+
+def _nullif_div(num, den):
+    """num / den with NaN where den == 0, as ``/ nullif(den, 0)``. NaN
+    compares false, as NULL filters out."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den == 0.0, np.nan, num / den)
+
+
+def size_guard(df: DataFrame, key: str) -> DataFrame:
+    """The quadratic guard, as a Spark-side size census: ``df`` with
+    ``bsz``, the row count of each row's block (the rows sharing
+    ``key``). A block over MAX_BLOCK rows keeps only its lowest vec_id,
+    so no Python worker ever materializes it; block_arrays reads that
+    lone row as the capped block. The census is a window on the key, so
+    the grouped map downstream reuses its exchange."""
+    w = Window.partitionBy(key).orderBy("vec_id")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return (
+        df.select("*", F.count(F.lit(1)).over(whole).alias("bsz"), F.row_number().over(w).alias("rn"))
+        .filter((F.col("bsz") <= MAX_BLOCK) | (F.col("rn") == 1))
+        .drop("rn")
+    )
+
+
+def block_arrays(pdf):
+    """One size_guard block's (vec_id, embedding, enorm) columns as
+    numpy arrays: ids, the embeddings as an m×D double matrix, and their
+    norms. None for a capped block: it arrives as one row of bsz."""
+    import numpy as np
+
+    if len(pdf) < pdf["bsz"].iloc[0]:
+        return None
+    x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    return pdf["vec_id"].to_numpy(), x, pdf["enorm"].to_numpy(dtype=np.float64)
+
+
+def cosine_tiles(x, enorm):
+    """Yield (lo, tile) over one block: tile[i, j] is cosine() of rows
+    lo + i and j, bit for bit — dot()'s fold over norm()'s norms, NaN
+    where na·nb == 0. Each tile has TILE rows, so memory stays at a few
+    TILE × block arrays whatever the block's size."""
+    for lo in range(0, len(x), TILE):
+        hi = lo + TILE
+        yield lo, _nullif_div(_fold(x[lo:hi], x), enorm[lo:hi, None] * enorm)
 
 
 @register(
@@ -630,56 +695,44 @@ MAX_BLOCK = 10_000
     doc=(
         "Embedding-cosine near-dup pairs via BLOCKING: exact all-pairs "
         "cosine within each metadata block (label), threshold "
-        f"{DEDUP_COS_TAU}. The classic record-linkage shape: the join "
-        "shuffles once on the blocking key, so cost is sum of block² — "
-        f"blocks over {MAX_BLOCK} rows are excluded (quadratic guard) "
-        "and belong to the approximate path (ann_lsh_topk's banding); "
-        "production subdivides with finer keys (label × coarse bucket)."
+        f"{DEDUP_COS_TAU}. The classic record-linkage shape: one shuffle "
+        "on the blocking key, then one grouped-map call per block scores "
+        f"its cosine tiles ({TILE} rows × block) in dot()'s fold, so cost "
+        f"is sum of block². Blocks over {MAX_BLOCK} rows are excluded by a "
+        "Spark-side size census (quadratic guard) and belong to the "
+        "approximate path (ann_lsh_topk's banding); production subdivides "
+        "with finer keys (label × coarse bucket)."
     ),
 )
 def q_embed_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pandas as pd
+
     emb = load_table(spark, sf_dir, "embeddings")
-    # Quadratic guard as a broadcast blocklist (same shape as the
-    # decontamination DF cap): the list of OVERSIZED labels is tiny, and
-    # the aggregate shuffles partial counts, never rows.
-    big = (
-        emb.groupBy("label")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter(F.col("bsz") > MAX_BLOCK)
-        .select("label")
+    # The kernel hands Spark every raw cosine that half-up rounding can
+    # lift to τ; Spark rounds to 6 dp and filters the rounded cos_sim.
+    floor = DEDUP_COS_TAU - 1e-6
+
+    def pairs(pdf):
+        block = block_arrays(pdf)
+        if block is None:
+            return pd.DataFrame(columns=["a", "b", "label", "cos"])
+        ids, x, n = block
+        out = []
+        for lo, tile in cosine_tiles(x, n):
+            i, j = ((ids[lo : lo + len(tile), None] < ids) & (tile >= floor)).nonzero()
+            out.append(pd.DataFrame({"a": ids[lo + i], "b": ids[j], "cos": tile[i, j]}))
+        res = pd.concat(out, ignore_index=True)
+        res.insert(2, "label", pdf["label"].iloc[0])
+        return res
+
+    guarded = size_guard(
+        emb.select("vec_id", "label", "embedding", norm(F.col("embedding")).alias("enorm")), "label"
     )
-    emb = emb.join(F.broadcast(big), "label", "left_anti")
-    # Norms once per row, BEFORE the self-join (not per pair).
-    e = emb.select("vec_id", "label", "embedding", norm(F.col("embedding")).alias("nrm"))
-    # Explicit label-keyed repartition of the PROBE side only (r15
-    # optimization round): the planner broadcasts the b side at fixture
-    # size, so the quadratic per-label probe otherwise runs in the
-    # single-row-group scan's one task (measured: a ~1.6 s near-single-
-    # task pair stage). An explicit REPARTITION_BY_COL is exempt from
-    # AQE byte-based coalescing (the exchange carries KBs; the join
-    # OUTPUT is what explodes) and at cluster scale — where b exceeds
-    # the broadcast threshold and the join becomes shuffle-based — it
-    # is exactly the distribution the join needs, so no extra exchange
-    # appears. The b branch stays unpartitioned: repartitioning a
-    # build-side that feeds a broadcast would move the corpus for
-    # nothing.
-    a = e.repartition(spark.sparkContext.defaultParallelism, "label").select(
-        F.col("vec_id").alias("a"), "label",
-        F.col("embedding").alias("va"), F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b"), "label",
-        F.col("embedding").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    cos = dot(F.col("va"), F.col("vb")) / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-    # A plain label join: salting it (b side replicated 16×) was measured
-    # WORSE at sf0.1 (1.76 → 2.06 s interleaved) — the replication
-    # exchange outweighs the extra parallelism while blocks stay under
-    # MAX_BLOCK.
+    label_t = emb.schema["label"].dataType.simpleString()
     return (
-        a.join(b, "label")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "label", F.round(cos, 6).alias("cos_sim"))
+        guarded.groupBy("label")
+        .applyInPandas(pairs, f"a long, b long, label {label_t}, cos double")
+        .select("a", "b", "label", F.round("cos", 6).alias("cos_sim"))
         .filter(F.col("cos_sim") >= DEDUP_COS_TAU)
     )
 
@@ -1085,11 +1138,6 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_TAU = DEDUP_COS_TAU  # same fixture calibration as embed_cosine_dedup
 
 
-def _cell_cvec(cents: Column, cell: Column) -> Column:
-    """Centroid vector for a cell id out of the broadcast codebook array."""
-    return F.element_at(F.filter(cents, lambda c: c["cell"] == cell), 1)["cvec"]
-
-
 @register(
     "semdedup",
     None,  # k-means-cell-dependent → rows-only; the survivor rule is
@@ -1098,115 +1146,58 @@ def _cell_cvec(cents: Column, cell: Column) -> Column:
         "SemDeDup (Abbas et al. 2023): per-k-means-cell semantic-dup "
         f"audit. Vectors assigned to {N_CELLS} spherical-k-means cells "
         "by ivf_assign's zero-shuffle numpy argmax (ivf_codebook reused); "
-        f"within a cell, pairs with cosine ≥ {SEMDEDUP_TAU} are semantic dups "
+        "one grouped-map call per cell scores its cosine tiles in dot()'s "
+        f"fold: pairs with cosine ≥ {SEMDEDUP_TAU} are semantic dups "
         "and the member FARTHEST from the centroid survives (the "
         "paper's diversity rule; vec_id tiebreak). Returns per-cell "
         "(n_vecs, n_dup_pruned, n_kept). Within-cell cost is cell² — "
-        f"cells over {MAX_BLOCK} rows are excluded (same quadratic "
-        "guard as embed_cosine_dedup); production scales N_CELLS with "
+        f"cells over {MAX_BLOCK} rows never reach Python (the same "
+        "Spark-side size census as embed_cosine_dedup) and are reported "
+        "capped with zero prunes; production scales N_CELLS with "
         "the corpus so cells stay bounded, which is also what keeps "
         "k-means assignment the only corpus-sized pass."
     ),
 )
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nt_etl_order_book_spark.session import checkpoint_frame
+    import numpy as np
+    import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents_arr, cent_rows = ivf_codebook(emb)
-    # spread (r15 optimization round): the centroid dots below otherwise
-    # run in the single-row-group scan's one task (measured: a 0.5-0.6 s
-    # single-task checkpoint-materialization stage); it follows the
-    # assignment so mapInPandas runs on the scan's splits (see
-    # ann_ivf_topk). No-op at scale.
-    # cos to own centroid: centroids are unit vectors, so dot(v, c) is
-    # ‖v‖·cos — one dot and one division per row. Checkpointed (r9): FOUR
-    # consumers (cell census, both pair sides, final inventory join)
-    # otherwise each re-run the corpus-sized assignment — measured
-    # 4.0-4.5 s → 2.8-3.6 s at sf0.1 (the remainder is the per-call
-    # codebook training, shared with every IVF query).
-    assigned = checkpoint_frame(
-        spread(ivf_assign(emb, cent_rows), "vec_id")
-        .crossJoin(F.broadcast(cents_arr))
-        .select(
-            "vec_id",
-            "embedding",
-            "enorm",
-            "cell",
-            (
-                dot(F.col("embedding"), _cell_cvec(F.col("cents"), F.col("cell")))
-                / F.nullif(F.col("enorm"), F.lit(0.0))
-            ).alias("ccos"),
+    _, cent_rows = ivf_codebook(emb)
+    cvecs = {int(c): np.array(v, dtype=np.float64) for c, v in cent_rows}
+    tau = SEMDEDUP_TAU
+
+    def pruned(cvec, ids, x, n):
+        # cos to own centroid: centroids are unit vectors, so dot(v, c)
+        # is ‖v‖·cos — the same fold, one division per row.
+        ccos = _nullif_div(_fold(x, cvec[None, :])[:, 0], n)
+        out = np.zeros(len(ids), dtype=bool)
+        for lo, tile in cosine_tiles(x, n):
+            hi = lo + len(tile)
+            ca, ia = ccos[lo:hi, None], ids[lo:hi, None]
+            # Row i is PRUNED when some dup partner j sits farther from
+            # the centroid (j wins the survivor rule); vec_id breaks exact
+            # ccos ties, and the strict order never pairs a row with itself.
+            loses = (ccos < ca) | ((ccos == ca) & (ids < ia))
+            out[lo:hi] = ((tile >= tau) & loses).any(axis=1)
+        return out
+
+    def census(pdf):
+        cell, bsz = int(pdf["cell"].iloc[0]), int(pdf["bsz"].iloc[0])
+        block = block_arrays(pdf)
+        # A capped cell stays in the census with zero prunes, so Σ n_vecs
+        # reconciles with the corpus: the guard suppresses pairing, never rows.
+        k = 0 if block is None else int(pruned(cvecs[cell], *block).sum())
+        return pd.DataFrame(
+            {"cell": [cell], "n_vecs": [bsz], "n_dup_pruned": [k], "n_kept": [bsz - k],
+             "capped": [block is None]}
         )
-    )
-    # Quadratic guard: oversized cells are excluded from PAIRING only —
-    # the inventory below still reports them (capped = true, zero
-    # prunes) so Σ n_vecs always reconciles with the corpus. Dropping
-    # the rows outright (the embed_cosine_dedup shape, whose output IS
-    # pairs) would silently undercount here, where the output is a
-    # per-cell census.
-    big = (
-        assigned.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .filter(F.col("bsz") > MAX_BLOCK)
-        .select("cell")
-    )
-    # Explicit cell-keyed repartition before the pair self-join (r15
-    # optimization round, guide §2.5): the join's shuffle carries KBs
-    # (|corpus| rows of metadata), so AQE's byte-based coalescing
-    # squeezes it to 1-2 tasks — but the join OUTPUT is quadratic per
-    # cell (measured: a 2.2 s near-single-task pair-scoring stage at
-    # sf0.1). An explicit REPARTITION_BY_COL is exempt from AQE
-    # coalescing and is the exact distribution the join needs, so no
-    # extra exchange appears; per-cell work still lands in one task
-    # (the MAX_BLOCK cap bounds it), but distinct cells now score in
-    # parallel. defaultParallelism scales with the cluster.
-    pairable = assigned.join(F.broadcast(big), "cell", "left_anti").repartition(
-        spark.sparkContext.defaultParallelism, "cell"
-    )
-    a = pairable.select(
-        "cell",
-        F.col("vec_id").alias("a"),
-        F.col("embedding").alias("va"),
-        F.col("enorm").alias("na"),
-        F.col("ccos").alias("ca"),
-    )
-    b = pairable.select(
-        "cell",
-        F.col("vec_id").alias("b"),
-        F.col("embedding").alias("vb"),
-        F.col("enorm").alias("nb"),
-        F.col("ccos").alias("cb"),
-    )
-    cos = dot(F.col("va"), F.col("vb")) / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-    # a is PRUNED when some same-cell partner b is a semantic dup and b
-    # sits farther from the centroid (loses the survivor rule to b);
-    # vec_id breaks exact ccos ties deterministically.
-    pruned = (
-        a.join(b, "cell")
-        .filter(F.col("a") != F.col("b"))
-        .filter(cos >= SEMDEDUP_TAU)
-        .filter(
-            (F.col("cb") < F.col("ca"))
-            | ((F.col("cb") == F.col("ca")) & (F.col("b") < F.col("a")))
-        )
-        .select("cell", F.col("a").alias("vec_id"))
-        .distinct()
-    )
+
     return (
-        assigned.join(pruned.select("vec_id", F.lit(1).alias("is_pruned")), "vec_id", "left")
-        .join(F.broadcast(big.select("cell", F.lit(True).alias("capped"))), "cell", "left")
+        size_guard(ivf_assign(emb, cent_rows), "cell")
         .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-            F.sum(F.coalesce(F.col("is_pruned"), F.lit(0))).cast("bigint").alias("n_dup_pruned"),
-            F.coalesce(F.first("capped"), F.lit(False)).alias("capped"),
-        )
-        .select(
-            "cell",
-            "n_vecs",
-            "n_dup_pruned",
-            (F.col("n_vecs") - F.col("n_dup_pruned")).cast("bigint").alias("n_kept"),
-            "capped",
+        .applyInPandas(
+            census, "cell long, n_vecs bigint, n_dup_pruned bigint, n_kept bigint, capped boolean"
         )
     )
 

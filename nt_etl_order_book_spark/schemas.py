@@ -80,33 +80,16 @@ SNAPSHOTS_TABLE = StructType(
 # A4 — flattened deltas sink table (postgres_client.py:41-49).
 DELTAS_TABLE = StructType(
     [
+        # INGESTION time — same clock as snapshots (consumer.py:132).
         StructField("timestamp", LongType(), True),
         StructField("ticker", StringType(), False),
         StructField("side", StringType(), False),
         StructField("price_dollars", PRICE, True),
         StructField("delta", IntegerType(), True),
         StructField("redis_stream_id", StringType(), True),
+        # Additive deviation from the reference's 6-column table: the
+        # exchange event time is kept so event-time streaming (watermarks)
+        # doesn't have to re-parse raw messages. SURVEY §2.9 "both carried".
+        StructField("event_ts", LongType(), True),
     ]
 )
-
-SNAPSHOTS_CAST = {
-    "timestamp": "bigint",
-    "ticker": "string",
-    "side": "string",
-    "price_dollars": "decimal(5,4)",
-    "contracts": "int",
-    "redis_stream_id": "string",
-}
-
-DELTAS_CAST = {
-    "timestamp": "bigint",  # INGESTION time — same clock as snapshots (consumer.py:132)
-    "ticker": "string",
-    "side": "string",
-    "price_dollars": "decimal(5,4)",
-    "delta": "int",
-    "redis_stream_id": "string",
-    # Additive deviation from the reference's 6-column table: the
-    # exchange event time is kept so event-time streaming (watermarks)
-    # doesn't have to re-parse raw messages. SURVEY §2.9 "both carried".
-    "event_ts": "bigint",
-}

@@ -14,17 +14,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from nt_etl_order_book_spark.schemas import (
     DELTA_MSG,
-    DELTAS_CAST,
+    DELTAS_TABLE,
     SNAPSHOT_MSG,
-    SNAPSHOTS_CAST,
+    SNAPSHOTS_TABLE,
 )
 from nt_etl_order_book_spark.operators.transforms import add_ingest_ts, cast_to
 
 SNAPSHOT_TYPE = "orderbook_snapshot"  # producer.py:34
 DELTA_TYPE = "orderbook_delta"  # producer.py:41
+
+# Union of SNAPSHOT_MSG and DELTA_MSG fields (by name, snapshot's first):
+# the one schema every message line parses with.
+MSG_UNION = StructType(
+    SNAPSHOT_MSG.fields + [f for f in DELTA_MSG.fields if f.name not in SNAPSHOT_MSG.fieldNames()]
+)
 
 
 def _stream_id(msgs: DataFrame, stream_id_col: str):
@@ -66,22 +73,13 @@ def parse_messages(raw: DataFrame, *, value_col: str = "value") -> DataFrame:
     # each routed query parses every line once. Under a Project the
     # optimizer pushes the filter below it by inlining a second, pruned
     # from_json. A NULL or unparsable line still yields one all-NULL row.
-    merged = StructTypeUnion()
     rest = [c for c in raw.columns if c != value_col]
-    return raw.select(F.inline(F.array(F.from_json(F.col(value_col), merged.schema))), *rest)
+    return raw.select(F.inline(F.array(F.from_json(F.col(value_col), MSG_UNION))), *rest)
 
 
-class StructTypeUnion:
-    """Union of SNAPSHOT_MSG and DELTA_MSG fields (by name, first wins)."""
-
-    def __init__(self) -> None:
-        seen: dict[str, object] = {}
-        for schema in (SNAPSHOT_MSG, DELTA_MSG):
-            for field in schema.fields:
-                seen.setdefault(field.name, field)
-        from pyspark.sql.types import StructType
-
-        self.schema = StructType(list(seen.values()))
+def _sink_casts(table: StructType) -> dict[str, str]:
+    """cast_to's map for a sink table: its columns, in order, with their types."""
+    return {f.name: f.dataType.simpleString() for f in table.fields}
 
 
 def flatten_snapshots(
@@ -94,7 +92,7 @@ def flatten_snapshots(
 
     The two copy-paste loops of consumer.py:57-81 (differing only in the
     side literal) become stack + explode; the eager Polars cast
-    (consumer.py:87-96) becomes cast_to(SNAPSHOTS_CAST).
+    (consumer.py:87-96) becomes a cast_to to SNAPSHOTS_TABLE.
     ``stamp_ingest_ts`` fills missing buffer stamps with the wall clock
     (_with_ingest_ts) for sources that bypassed the durable buffer.
     """
@@ -124,7 +122,7 @@ def flatten_snapshots(
         F.col("level")[1].alias("contracts"),
         stream_id_col,
     )
-    return cast_to(flat, SNAPSHOTS_CAST)
+    return cast_to(flat, _sink_casts(SNAPSHOTS_TABLE))
 
 
 def flatten_deltas(
@@ -155,4 +153,4 @@ def flatten_deltas(
         sid,
         F.col("ts").alias("event_ts"),
     )
-    return cast_to(flat, DELTAS_CAST)
+    return cast_to(flat, _sink_casts(DELTAS_TABLE))

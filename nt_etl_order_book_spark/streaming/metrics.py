@@ -42,6 +42,8 @@ class BatchMetric:
     state_commit_ms: int | None = None  # commitTimeMs
     state_update_ms: int | None = None  # allUpdatesTimeMs
     state_rows_removed: int | None = None  # numRowsRemoved
+    # Input rows a stateful operator dropped as older than the watermark.
+    rows_dropped_by_watermark: int | None = None  # numRowsDroppedByWatermark
 
 
 @dataclass
@@ -101,7 +103,8 @@ class BookPipelineListener(StreamingQueryListener):
     session: input rows, event-time watermark, the batch's ``durationMs``
     split, and stateful-operator health — row counts (the number of keys
     currently held: ladder size for the book operator, seen-keys for
-    dedup), state-store commit and update time, and rows evicted.
+    dedup), state-store commit and update time, rows evicted, and input
+    rows dropped as late.
 
     ``state_bound_rows`` / ``state_bound_bytes`` (optional) arm a
     state-pressure alarm: any progress event whose summed
@@ -152,6 +155,7 @@ class BookPipelineListener(StreamingQueryListener):
                 state_commit_ms=state_sum("commitTimeMs"),
                 state_update_ms=state_sum("allUpdatesTimeMs"),
                 state_rows_removed=state_sum("numRowsRemoved"),
+                rows_dropped_by_watermark=state_sum("numRowsDroppedByWatermark"),
             )
         )
         over_rows = (

@@ -572,8 +572,8 @@ def test_registry_wide_python_boundary_and_no_cartesian(spark, sf_dir):
     "name,max_jobs",
     [
         ("bpe_merges", 21),
-        ("dedup_components", 19),
-        ("semdedup", 20),
+        ("dedup_components", 18),
+        ("semdedup", 7),
         ("ann_ivf_topk", 12),
         ("ann_pq_topk", 13),
         ("ann_ivfpq_topk", 17),

@@ -41,6 +41,29 @@ def test_init_schema_idempotent(spark):
     spark.sql("DROP TABLE IF EXISTS orderbook_deltas")
 
 
+def test_init_schema_matches_flatten_outputs(spark, tmp_path):
+    # The sink tables take exactly what the flatten functions write:
+    # the same column names, in order, with the same types.
+    from nt_etl_order_book_spark.sources.orderbook import (
+        flatten_deltas,
+        flatten_snapshots,
+        parse_messages,
+    )
+
+    msgs = parse_messages(spark.createDataFrame([], "value string"))
+    init_schema(spark, location=str(tmp_path))
+    try:
+        for table, flat in (
+            ("orderbook_snapshots", flatten_snapshots(msgs)),
+            ("orderbook_deltas", flatten_deltas(msgs)),
+        ):
+            declared = [(f.name, f.dataType) for f in spark.table(table).schema.fields]
+            assert declared == [(f.name, f.dataType) for f in flat.schema.fields], table
+    finally:
+        spark.sql("DROP TABLE IF EXISTS orderbook_snapshots")
+        spark.sql("DROP TABLE IF EXISTS orderbook_deltas")
+
+
 def test_golden_csv_shape_matches_reference(spark, tmp_path):
     # reference golden headers: timestamp,ticker,side,dollar,contracts|delta
     # (kalshi_ws_client.py:47,73)

@@ -713,6 +713,84 @@ def test_semdedup_capped_cells_stay_in_inventory(spark):
     assert all(r.n_dup_pruned == 0 and r.n_kept == r.n_vecs for r in capped)
 
 
+def test_cosine_kernel_bit_parity_with_spark(spark, monkeypatch):
+    # The grouped-map kernel reproduces dot() / norm() / cosine() bit for
+    # bit on float32 vectors: one ulp can move a cosine across a 6-dp
+    # rounding boundary. 21 rows at TILE = 8 span three tiles, the last
+    # one partial; row 5 is a zero vector, whose cosines are NULL (NaN).
+    import numpy as np
+
+    from nt_etl_order_book_spark.functions import similarity as sim
+
+    monkeypatch.setattr(sim, "TILE", 8)
+    vecs = np.random.default_rng(7).normal(size=(21, 64)).astype(np.float32)
+    vecs[5] = 0.0
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in vec]) for i, vec in enumerate(vecs)], "vec_id long, embedding array<float>"
+    ).select("vec_id", "embedding", sim.norm(F.col("embedding")).alias("enorm"))
+    a, b = F.col("a.embedding"), F.col("b.embedding")
+    spark_pairs = (
+        emb.alias("a")
+        .crossJoin(emb.alias("b"))
+        .select(F.col("a.vec_id").alias("i"), F.col("b.vec_id").alias("j"),
+                sim.dot(a, b).alias("dot"), sim.cosine(a, b).alias("cos"))
+        .collect()
+    )
+    pdf = emb.withColumn("bsz", F.lit(len(vecs))).toPandas().sort_values("vec_id")
+    ids, x, n = sim.block_arrays(pdf)
+    dots = sim._fold(x, x)
+    assert np.array_equal(np.sqrt(np.diag(dots)), n)  # norm() is the fold with itself
+    tiles = list(sim.cosine_tiles(x, n))
+    assert [lo for lo, _ in tiles] == [0, 8, 16]
+    cos = np.vstack([t for _, t in tiles])
+    assert len(spark_pairs) == 21 * 21
+    for r in spark_pairs:
+        assert dots[r.i, r.j] == r.dot, (r.i, r.j)
+        if r.cos is None:
+            assert np.isnan(cos[r.i, r.j]) and 5 in (r.i, r.j), (r.i, r.j)
+        else:
+            assert cos[r.i, r.j] == r.cos, (r.i, r.j)
+
+
+def _pair_at_cosine(lo: float, hi: float) -> list:
+    """Two float32 vectors (1, 0) and (c, s) whose cosine, in dot()'s
+    double fold, lies in [lo, hi)."""
+    import math
+
+    import numpy as np
+
+    c = np.float32(lo)
+    while True:
+        s = float(np.float32(math.sqrt(1.0 - float(c) * float(c))))
+        cos = (0.0 + float(c)) / math.sqrt(0.0 + float(c) * float(c) + s * s)
+        if lo <= cos < hi:
+            return [[1.0, 0.0], [float(c), s]]
+        c = np.nextafter(c, np.float32(1.0))
+
+
+def test_embed_cosine_dedup_keeps_a_raw_cosine_that_rounds_up_to_tau(spark, monkeypatch):
+    # cos_sim is rounded half-up to 6 dp before the τ filter, so a raw
+    # cosine in [τ − 5e-7, τ) is reported as τ; the kernel must hand such
+    # a pair to Spark. One just below that band is not reported, nor is
+    # a zero vector's NULL cosine. Under a cap of 2 rows the 3-row label
+    # 0 is dropped before Python, and label 2's copy of the pair stays.
+    from nt_etl_order_book_spark.functions import similarity as sim
+
+    tau = sim.DEDUP_COS_TAU
+    up, down = _pair_at_cosine(tau - 5e-7, tau), _pair_at_cosine(tau - 1.5e-6, tau - 5.5e-7)
+    rows = [(0, up[0], 0), (1, up[1], 0), (2, [0.0, 0.0], 0), (3, down[0], 1), (4, down[1], 1),
+            (5, up[0], 2), (6, up[1], 2)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    monkeypatch.setattr(sim, "load_table", lambda _s, _d, name: emb)
+
+    def run():
+        return sorted(tuple(r) for r in registry.all_specs()["embed_cosine_dedup"].fn(spark, "_").collect())
+
+    assert run() == [(0, 1, 0, tau), (5, 6, 2, tau)]
+    monkeypatch.setattr(sim, "MAX_BLOCK", 2)
+    assert run() == [(5, 6, 2, tau)]
+
+
 @pytest.fixture(scope="module")
 def hot_market_dir(tmp_path_factory):
     """Adversarial events skew: ONE market owns 95% of 200k ticks (multi-

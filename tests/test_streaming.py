@@ -137,12 +137,22 @@ def test_deltas_dedup_keeps_null_ids_in_one_scan(spark, tmp_path):
         f = tmp_path / "msgs" / f"part{i}.json"
         f.write_text("\n".join(json.dumps(m) for m in msgs))
         os.utime(f, (1_000_000 + i, 1_000_000 + i))  # max_files_per_trigger=1 reads by mtime
-    q = deltas_query(
-        read_json_stream(spark, str(tmp_path / "msgs"), max_files_per_trigger=1),
-        str(tmp_path / "out"),
-        str(tmp_path / "cp"),
-    )
-    q.awaitTermination(120)
+    from nt_etl_order_book_spark.streaming.metrics import BookPipelineListener
+
+    listener = BookPipelineListener()
+    spark.streams.addListener(listener)
+    try:
+        q = deltas_query(
+            read_json_stream(spark, str(tmp_path / "msgs"), max_files_per_trigger=1),
+            str(tmp_path / "out"),
+            str(tmp_path / "cp"),
+        )
+        q.awaitTermination(120)
+        deadline = time.time() + 15  # the listener bus is asynchronous
+        while time.time() < deadline and len(listener.collector.batches) < len(files):
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
     assert q.exception() is None
     kept = sorted((r.delta, r.redis_stream_id) for r in spark.read.parquet(str(tmp_path / "out")).collect())
     assert kept == [(1, "a"), (2, None), (3, "b"), (4, None), (5, "c"), (6, None), (9, None)]
@@ -150,6 +160,9 @@ def test_deltas_dedup_keeps_null_ids_in_one_scan(spark, tmp_path):
     progress = q.recentProgress
     assert len(progress) == len(files)
     assert sum(p.numInputRows for p in progress) == sum(map(len, files))
+    # The late drops are counted, not silent: file 2's two hour-old rows,
+    # the NULL-id one included.
+    assert [b.rows_dropped_by_watermark for b in listener.collector.batches] == [0, 0, 2]
 
 
 def test_deltas_split_union_checkpoint_restart_fails_loudly(spark, msg_dir, tmp_path):
@@ -492,6 +505,7 @@ def test_streaming_metrics_listener(spark, msg_dir, tmp_path):
             assert min(b.duration_ms.values()) >= 0
             assert b.state_commit_ms >= 0 and b.state_update_ms >= 0
             assert b.state_rows_removed >= 0
+            assert b.rows_dropped_by_watermark == 0  # no fixture row is late
     finally:
         spark.streams.removeListener(listener)
         spark.streams.removeListener(tight)
@@ -509,9 +523,10 @@ def test_streaming_metrics_listener(spark, msg_dir, tmp_path):
         assert plain.collector.total_rows() >= 4
         for b in plain.collector.batches:
             assert set(b.duration_ms) == set(DURATION_KEYS), b.duration_ms
-            assert (b.state_rows, b.state_commit_ms, b.state_update_ms, b.state_rows_removed) == (
-                None, None, None, None,
-            )
+            assert (
+                b.state_rows, b.state_commit_ms, b.state_update_ms, b.state_rows_removed,
+                b.rows_dropped_by_watermark,
+            ) == (None, None, None, None, None)
     finally:
         spark.streams.removeListener(plain)
 
