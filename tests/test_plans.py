@@ -572,8 +572,8 @@ def test_registry_wide_python_boundary_and_no_cartesian(spark, sf_dir):
     "name,max_jobs",
     [
         ("bpe_merges", 21),
-        ("dedup_components", 18),
-        ("semdedup", 7),
+        ("dedup_components", 19),
+        ("semdedup", 20),
         ("ann_ivf_topk", 12),
         ("ann_pq_topk", 13),
         ("ann_ivfpq_topk", 17),
@@ -594,6 +594,20 @@ def test_profile_pins_iterative_job_counts(spark, sf_dir, name, max_jobs):
     assert {"analysis", "optimization", "planning"} <= set(p.phases_ms), p
     if name == "dedup_components":
         assert p.shuffle_write_bytes > 0, p
+
+
+@pytest.mark.parametrize("name,max_jobs", [("dedup_components", 18), ("semdedup", 7)])
+def test_profile_pins_blocked_dedup_job_counts(spark, sf_dir, name, max_jobs):
+    # Tighter pins for the dedup paths: semdedup scores each k-means cell
+    # in one grouped-map call (no pair self-join, checkpoint or join-back),
+    # and connected_components reads each round's change count from an
+    # Observation instead of a separate isEmpty() job.
+    from nt_etl_order_book_spark.plans.profile import profile
+
+    fn = registry.queries()[name]
+    p = profile(lambda: fn(spark, sf_dir))
+    assert p.rows > 0
+    assert 0 < p.jobs <= max_jobs, p
 
 
 def test_codegen_cache_holds_a_working_set_past_spark_default(spark):
