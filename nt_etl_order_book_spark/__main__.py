@@ -33,12 +33,14 @@ from nt_etl_order_book_spark.streaming.pipeline import (
 )
 
 SERIES = "KXNCAAFGAME"  # the reference's hard-coded series (__main__.py:8)
+N_MARKETS = 4
+N_DELTAS = 400
 
 
-def synth_messages(n_markets: int = 4, n_deltas: int = 400, seed: int = 42) -> list[str]:
-    rng = random.Random(seed)
+def synth_messages() -> list[str]:
+    rng = random.Random(42)
     out = []
-    for m in range(n_markets):
+    for m in range(N_MARKETS):
         out.append(
             json.dumps(
                 {
@@ -58,15 +60,15 @@ def synth_messages(n_markets: int = 4, n_deltas: int = 400, seed: int = 42) -> l
                 }
             )
         )
-    for i in range(n_deltas):
+    for i in range(N_DELTAS):
         out.append(
             json.dumps(
                 {
                     "type": "orderbook_delta",
                     "sid": 1,
                     "seq": 100 + i,
-                    "market_ticker": f"{SERIES}-M{i % n_markets}",
-                    "market_id": str(i % n_markets),
+                    "market_ticker": f"{SERIES}-M{i % N_MARKETS}",
+                    "market_id": str(i % N_MARKETS),
                     "price": 30 + i % 30,
                     "price_dollars": round((30 + i % 30) / 100, 4),
                     "delta": rng.randint(-30, 40),

@@ -97,10 +97,9 @@ def current_book(
     levels (contracts ≤ 0 are dropped, matching an order book's
     semantics of an empty level).
 
-    ``clamp=False`` keeps non-positive NET levels — required when the
-    result re-enters the pipeline (compaction): clamping is a display
-    rule applied at the END of history, not a state reduction; dropping
-    a negative net at time T loses information later deltas may revive.
+    The clamp applies once, to each level's net at the end of history;
+    ``clamp=False`` skips it and returns every level's net, non-positive
+    ones included.
 
     One exchange (`_history`, which also drops replayed deltas), then:
     - the latest snapshot message per ticker: max timestamp (a message's

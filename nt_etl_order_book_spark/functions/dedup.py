@@ -43,8 +43,9 @@ _B = [(7_919 * (i + 7) + 3) % 1_048_573 for i in range(N_PERM)]
 # (license header, nav bar) is a quadratic cliff at corpus scale. Shingles
 # above the cap are dropped from BOTH the index and the per-doc sizes, so
 # jaccard stays internally consistent (computed over the capped shingle
-# universe). Mirrors `max_bucket` in lsh_candidates.
+# universe). Mirrors MAX_BUCKET in lsh_candidates.
 MAX_SHINGLE_DF = 200
+MAX_BUCKET = 200  # lsh_candidates' per-(band, bucket) membership cap
 
 
 def string_grams(toks: Column, n: int) -> Column:
@@ -59,8 +60,8 @@ def string_grams(toks: Column, n: int) -> Column:
     )
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc, as one row per shingle.
+def shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Distinct word 3-gram shingles per doc, as one row per shingle.
 
     Built with higher-order functions (transform over a token-index
     sequence) — stays JVM-side, no Python. The token array is staged in
@@ -70,7 +71,7 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     """
     toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     wt = df.select(F.col(id_col), toks.alias("_toks"))
-    grams = string_grams(F.col("_toks"), n)
+    grams = string_grams(F.col("_toks"), 3)
     return wt.select(F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
@@ -161,15 +162,15 @@ def sorted_pairs(ids: Column, left: str, right: str) -> Column:
     )
 
 
-def shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc as 57-bit HASHES, one row
+def shingle_hashes(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Distinct word 3-gram shingles per doc as 57-bit HASHES, one row
     per shingle — the counting twin of :func:`shingles` for consumers
     that never read the shingle text (pair statistics only compare and
     count shingles, so the identity can be a hash; collision bound at
     SHINGLE_HASH_MOD).
 
     Tokens are xxhash64'd ONCE per document, then each gram is a
-    rolling polynomial combine of n consecutive token hashes — the
+    rolling polynomial combine of 3 consecutive token hashes — the
     minhash_signature_col lesson (hash once, shingle arithmetically):
     no n-gram string is ever allocated and the exploded index shuffles
     8-byte longs instead of ~25-byte strings. Measured 5.0 s → 3.2 s
@@ -181,11 +182,11 @@ def shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Dat
     # Two-stage projection: the token-hash array is computed once per
     # row, not re-inlined into every gram position.
     staged = df.select(F.col(id_col), token_hash_expr(text_col).alias("_th"))
-    grams = partial_grams(F.col("_th"), n)
+    grams = partial_grams(F.col("_th"), 3)
     return staged.select(F.col(id_col), F.explode(F.array_distinct(grams)).alias("shingle"))
 
 
-def shingle_pair_stats(docs: DataFrame, *, n: int = 3, cap: int = MAX_SHINGLE_DF) -> DataFrame:
+def shingle_pair_stats(docs: DataFrame, *, cap: int = MAX_SHINGLE_DF) -> DataFrame:
     """(a, b, inter, sz_a, sz_b) for every doc pair sharing a surviving shingle.
 
     One materialized pass over the inverted index instead of three: the
@@ -218,7 +219,7 @@ def shingle_pair_stats(docs: DataFrame, *, n: int = 3, cap: int = MAX_SHINGLE_DF
     """
     from nt_etl_order_book_spark.session import checkpoint_frame
 
-    sh = shingle_hashes(docs, "doc_id", "text", n=n)
+    sh = shingle_hashes(docs, "doc_id", "text")
     w = Window.partitionBy("shingle")
     capped = checkpoint_frame(
         sh.withColumn("_df", F.count(F.lit(1)).over(w))
@@ -240,7 +241,7 @@ def shingle_pair_stats(docs: DataFrame, *, n: int = 3, cap: int = MAX_SHINGLE_DF
     return inter.join(za, "a").join(zb, "b")
 
 
-def minhash_signature_col(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
+def minhash_signature_col(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One row per doc with its 32-long minhash signature.
 
     Shingles, base hashes, and all 32 permutation minima are
@@ -252,7 +253,7 @@ def minhash_signature_col(df: DataFrame, id_col: str, text_col: str, n: int = 3)
     (b) spread the CPU-bound signature work independently of input
     splits. Everything after the exchange stays narrow.
     """
-    # Hash tokens ONCE, then shingle arithmetically (rolling combine of n
+    # Hash tokens ONCE, then shingle arithmetically (rolling combine of 3
     # consecutive token hashes) instead of building n-gram strings —
     # 3.7× faster at sf0.1 (no per-shingle string allocation). Each
     # stage lives in its own projection so Catalyst can't inline the
@@ -269,14 +270,14 @@ def minhash_signature_col(df: DataFrame, id_col: str, text_col: str, n: int = 3)
         df.sparkSession.sparkContext.defaultParallelism, id_col
     )
 
-    # Short documents: fewer than n tokens can't form an n-gram — fall
+    # Short documents: fewer than 3 tokens can't form a 3-gram — fall
     # back to unigram shingles rather than indexing past the array end
     # (ANSI mode makes that a hard INVALID_ARRAY_INDEX error). Empty
     # documents yield an empty hash set and are excluded from the LSH
     # pipeline by callers (exact dedup owns the empty-text case).
     th = F.col("_th")
     grams = F.when(
-        F.size(th) >= n, rolling_gram_expr(th, n, mod=HASH_BITS, mult=131)
+        F.size(th) >= 3, rolling_gram_expr(th, 3, mod=HASH_BITS, mult=131)
     ).otherwise(th)
     hashed = tok_hashed.select(
         F.col(id_col),
@@ -300,12 +301,12 @@ def minhash_signature_col(df: DataFrame, id_col: str, text_col: str, n: int = 3)
     return hashed.select(F.col(id_col), "hashes", sig.alias("sig"))
 
 
-def lsh_candidates(sigs: DataFrame, id_col: str, *, max_bucket: int = 200) -> DataFrame:
+def lsh_candidates(sigs: DataFrame, id_col: str) -> DataFrame:
     """Band each signature into N_BANDS bucket keys and self-join buckets
     → candidate pairs (a < b). The shuffle key is (band, bucket), so only
     near-identical docs ever meet — never an O(n²) stage.
 
-    `max_bucket` caps per-bucket membership before pairing: a bucket with
+    `MAX_BUCKET` caps per-bucket membership before pairing: a bucket with
     hundreds of docs is a boilerplate/common-pattern collision whose
     pair count grows quadratically while carrying almost no dedup signal
     — the standard web-dedup mitigation. Each skipped bucket costs one
@@ -320,13 +321,12 @@ def lsh_candidates(sigs: DataFrame, id_col: str, *, max_bucket: int = 200) -> Da
         ]
     )
     banded = sigs.select(F.col(id_col), F.posexplode(band_keys).alias("band", "bucket"))
-    if max_bucket:
-        w = Window.partitionBy("band", "bucket")
-        banded = (
-            banded.withColumn("_bsz", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
+    w = Window.partitionBy("band", "bucket")
+    banded = (
+        banded.withColumn("_bsz", F.count(F.lit(1)).over(w))
+        .filter(F.col("_bsz") <= MAX_BUCKET)
+        .drop("_bsz")
+    )
     a = banded.select(F.col(id_col).alias("a"), "band", "bucket")
     b = banded.select(F.col(id_col).alias("b"), "band", "bucket")
     return (
@@ -378,7 +378,7 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides); it is small (id + 32 longs + hash set per doc) and expensive
     # to recompute, so cache it — textbook reused-input caching. (Session
     # storage memory evicts LRU if repeated invocations accumulate.)
-    sigs = minhash_signature_col(docs, "doc_id", "text", n=3).cache()
+    sigs = minhash_signature_col(docs, "doc_id", "text").cache()
     cands = lsh_candidates(sigs.select("doc_id", "sig"), "doc_id")
     # Exact-Jaccard verify on the candidate pairs only, via per-doc
     # shingle-hash SETS and array_intersect — no shuffle of the full
@@ -584,7 +584,7 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # At corpus scale the staged artifact is (doc_id, 8-byte hash)
     # postings on executor storage — the same staged-index shape as
     # shared_run_audit's MOSS stages.
-    sh = checkpoint_frame(shingle_hashes(docs, "doc_id", "text", n=3))
+    sh = checkpoint_frame(shingle_hashes(docs, "doc_id", "text"))
     # DF cap as a HOT-SHINGLE BLOCKLIST anti-join, not a window: the
     # benchmark side broadcasts, so the corpus index never needs a
     # shuffle here — a Window.partitionBy(shingle) cap would introduce
@@ -753,13 +753,7 @@ def token_chunks(toks: Column) -> Column:
     )
 
 
-def paragraphs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
+def paragraphs(df: DataFrame, *, keep: tuple[str, ...] = ()) -> DataFrame:
     """One row per non-empty paragraph (PARA_TOKENS-token chunk) per doc.
 
     Same narrow HOF shape as `shingles`: tokenize once, chunk via
@@ -773,11 +767,11 @@ def paragraphs(
     index (the minhash_signature_col lesson). Staging it makes the
     split run once per document — measured 1.7× on the chunk pipeline
     at 100k docs (r12)."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    wt = df.select(F.col(id_col), *[F.col(c) for c in keep], toks.alias("_toks"))
+    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+    wt = df.select("doc_id", *keep, toks.alias("_toks"))
     pars = token_chunks(F.col("_toks"))
     return (
-        wt.select(F.col(id_col), *[F.col(c) for c in keep], F.explode(pars).alias("par"))
+        wt.select("doc_id", *keep, F.explode(pars).alias("par"))
         .filter(F.col("par") != "")
     )
 
@@ -957,14 +951,17 @@ def q_cross_source_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def connected_components(pairs: DataFrame, *, max_rounds: int = 25) -> DataFrame:
+MAX_CC_ROUNDS = 25  # pointer doubling: covers any diameter ≤ 2^25
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(a, b) undirected pair edges → (x, label) with label = min node id
     in x's component.
 
     Min-label propagation WITH pointer doubling: each round takes the
     min over (own label, neighbors' labels, label-of-label). Doubling
     makes convergence O(log diameter) instead of O(diameter), so
-    `max_rounds` = 25 covers any graph that fits on disk; the loop still
+    MAX_CC_ROUNDS covers any graph that fits on disk; the loop still
     exits at the observed fixpoint (usually 2-4 rounds on near-dup
     graphs). Labels are checkpointed each round so lineage stays flat —
     reliable checkpoint() when the session has a checkpoint dir (cluster:
@@ -981,37 +978,29 @@ def connected_components(pairs: DataFrame, *, max_rounds: int = 25) -> DataFrame
     sym = checkpoint_frame(sym, eager=True)
     labels = sym.groupBy("x").agg(F.least(F.min("y"), F.first("x")).alias("label"))
     labels = checkpoint_frame(labels, eager=True)
-    for _ in range(max_rounds):
-        # Neighbor-label and pointer-chase messages land in ONE (x,
-        # label) stream aggregated by a single min (r15 optimization
-        # round, guide §2.4 "share one exchange"): the earlier form
-        # aggregated them separately and attached each through its own
-        # x-keyed left join, then ran a THIRD x-keyed join just to test
-        # convergence — three extra exchanges per round. Values are
-        # identical: least(prev, coalesce(min(nbr ∪ chase), prev)) ==
-        # least(prev, coalesce(nbr_min, prev), coalesce(chase_min,
-        # prev)).
+    for _ in range(MAX_CC_ROUNDS):
+        # Own-label, neighbor-label and pointer-chase messages land in
+        # ONE (x, label, own) stream under a single x-keyed aggregate:
+        # the min over all three is the new label, and the min over the
+        # own-tagged row is the previous one. Every x has an own row, so
+        # no join back onto `labels` is needed to keep it or to compare.
+        own_msgs = labels.select("x", "label", F.lit(True).alias("own"))
         nbr_msgs = sym.join(
             labels.withColumnRenamed("x", "y2"), F.col("y") == F.col("y2")
-        ).select("x", "label")
+        ).select("x", "label", F.lit(False).alias("own"))
         # pointer doubling: x's label jumps to its label's label —
         # label ids are node ids, so they exist as keys in `labels`
         chase_msgs = labels.join(
             labels.select(F.col("x").alias("lx"), F.col("label").alias("lbl2")),
             F.col("label") == F.col("lx"),
-        ).select("x", F.col("lbl2").alias("label"))
-        mins = (
-            nbr_msgs.unionByName(chase_msgs)
-            .groupBy("x")
-            .agg(F.min("label").alias("cand"))
-        )
+        ).select("x", F.col("lbl2").alias("label"), F.lit(False).alias("own"))
         new_labels = (
-            labels.select("x", F.col("label").alias("prev"))
-            .join(mins, "x", "left")
-            .select(
-                "x",
-                F.least("prev", F.coalesce("cand", "prev")).alias("label"),
-                "prev",
+            own_msgs.unionByName(nbr_msgs)
+            .unionByName(chase_msgs)
+            .groupBy("x")
+            .agg(
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("own"), F.col("label"))).alias("prev"),
             )
         )
         # Convergence is counted by the checkpoint action that
@@ -1026,12 +1015,10 @@ def connected_components(pairs: DataFrame, *, max_rounds: int = 25) -> DataFrame
         ).select("x", "label")
         if not changed.get["n"]:
             return labels
-    # Pointer doubling converges in O(log diameter): 25 rounds cover any
-    # graph with diameter ≤ 2^25. Hitting this means the loop was asked
-    # for something it can't have finished — never return silently-wrong
-    # partial labels.
+    # Hitting the cap means the loop was asked for something it can't
+    # have finished — never return silently-wrong partial labels.
     raise RuntimeError(
-        f"connected_components did not converge within {max_rounds} rounds"
+        f"connected_components did not converge within {MAX_CC_ROUNDS} rounds"
     )
 
 
@@ -1083,10 +1070,11 @@ _SQL_PAIR_CLOSURE = f"""
         "pair graph (jaccard >= 0.8), component id = min doc_id — the "
         "stage that turns pairwise matches into survivor groups (keep "
         "component id, drop the rest). Spark side is min-label "
-        "propagation iterated to convergence, each round one keyed "
-        "aggregate + one join, labels localCheckpoint'ed so lineage "
-        "stays flat; rounds needed = graph diameter (near-dup components "
-        "are tiny and dense, so a handful). The DuckDB oracle computes "
+        "propagation with pointer doubling, iterated to convergence: each "
+        "round is one x-keyed aggregate over the own, neighbour and "
+        "label-of-label messages, labels localCheckpoint'ed so lineage "
+        "stays flat; rounds needed ~ log2(graph diameter) (near-dup "
+        "components are tiny and dense, so a handful). The DuckDB oracle computes "
         "the exact transitive closure recursively — feasible at oracle "
         "scale, and the hash-match proves the distributed propagation "
         "reaches the true fixpoint."

@@ -32,7 +32,6 @@ from nt_etl_order_book_spark.registry import register
 from nt_etl_order_book_spark.session import checkpoint_frame
 from nt_etl_order_book_spark.tables import load_table
 
-DAMP = 0.85
 PR_ITERS = 3
 # Hot-paragraph guard: a boilerplate chunk shared by thousands of docs
 # would contribute O(df^2) edges; cap the digest's doc-frequency the

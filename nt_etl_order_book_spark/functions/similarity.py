@@ -940,7 +940,7 @@ def books_frame(spark: SparkSession, book_rows: list) -> DataFrame:
     )
 
 
-def pq_codebook(emb: DataFrame, iters: int = KMEANS_ITERS) -> tuple:
+def pq_codebook(emb: DataFrame) -> tuple:
     """Train the per-subspace L2 k-means codebooks once and return them
     in both forms their consumers need: ``(books_arr, book_rows)`` — the
     1-row broadcastable frame (books_frame) and the same books as
@@ -961,7 +961,7 @@ def pq_codebook(emb: DataFrame, iters: int = KMEANS_ITERS) -> tuple:
     seeds = sorted((int(r["vec_id"]), [float(v) for v in r["embedding"]]) for r in seed_rows)
     books = [[(p, vec[s * PQ_DSUB : (s + 1) * PQ_DSUB]) for p, vec in seeds] for s in range(PQ_M)]
     train = _train_sample(emb).select("embedding", F.col("embedding").alias("x"))
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         means = (
             pq_encode(train, books)
             .select("x", F.posexplode("codes").alias("sub", "pos"))

@@ -303,7 +303,7 @@ def q_topk_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nt_etl_order_book_spark.functions.dedup import shingles
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = shingles(docs, "doc_id", "text", n=3)
+    sh = shingles(docs, "doc_id", "text")
     return (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("doc_freq"))

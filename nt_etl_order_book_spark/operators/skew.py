@@ -3,10 +3,10 @@
 AQE's skew-join splitting handles join-side skew automatically
 (session.py enables it); aggregation skew on a hot key (one market
 doing 100× the volume — routine in prediction markets near resolution)
-still concentrates a single reducer. `salted_agg_sum` is the classic
+still concentrates a single reducer. `salted_agg` is the classic
 two-phase fix: pre-aggregate on (key, salt), then re-aggregate on key.
-The first shuffle spreads the hot key over `n_salts` reducers; the
-second moves only n_salts rows per key.
+The first shuffle spreads the hot key over `N_SALTS` reducers; the
+second moves only N_SALTS rows per key.
 
 Results are identical to the plain groupBy for any associative
 aggregate (tests assert equality), so callers can switch it on for
@@ -20,13 +20,13 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+N_SALTS = 16
+
 
 def salted_agg(
     df: DataFrame,
     keys: list[str],
     aggs: dict[str, tuple[Column, Callable[[Column], Column]]],
-    *,
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase aggregation over skewed keys.
 
@@ -35,7 +35,7 @@ def salted_agg(
     per-salt partials. E.g. a sum is (sum(x), sum(partial)); a count is
     (count(1), sum(partial)); a max is (max(x), max(partial)).
     """
-    salted = df.withColumn("_salt", F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(n_salts)))
+    salted = df.withColumn("_salt", F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(N_SALTS)))
     partial = salted.groupBy(*keys, "_salt").agg(
         *[expr.alias(f"_p_{name}") for name, (expr, _) in aggs.items()]
     )
@@ -44,7 +44,7 @@ def salted_agg(
     )
 
 
-def salted_sum_count(df: DataFrame, keys: list[str], value: str, *, n_salts: int = 16) -> DataFrame:
+def salted_sum_count(df: DataFrame, keys: list[str], value: str) -> DataFrame:
     """Skew-safe sum+count of a column per key (decimal-exact for doubles)."""
     dec = F.col(value).cast("decimal(30,6)")
     return salted_agg(
@@ -54,7 +54,6 @@ def salted_sum_count(df: DataFrame, keys: list[str], value: str, *, n_salts: int
             "sum_value": (F.sum(dec), F.sum),
             "n_rows": (F.count(F.lit(1)), F.sum),
         },
-        n_salts=n_salts,
     ).select(*keys, F.col("sum_value").cast("double").alias("sum_value"), "n_rows")
 
 

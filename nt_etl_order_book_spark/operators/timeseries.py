@@ -112,7 +112,6 @@ def chunked_shift(
     *,
     lag: str | None = None,
     lead: str | None = None,
-    chunk: str = "chunk",
 ) -> DataFrame:
     """``lag(col)`` into column `lag` and/or ``lead(col)`` into column
     `lead`, over (partitionBy keys orderBy order_cols), WITHOUT a
@@ -125,13 +124,14 @@ def chunked_shift(
     The value is the same one the global window picks, so consumers
     stay bit-identical to their whole-history oracles. The boundary
     twin of `chunked_prefix`; see it for the decomposition and the
-    `chunk` contract. Result = input columns + the requested outputs.
+    `chunk` contract, read here from the ``chunk`` column. Result = input
+    columns + the requested outputs.
     """
     if lag is None and lead is None:
         raise ValueError("chunked_shift: pass lag= and/or lead=")
     keys = [keys] if isinstance(keys, str) else list(keys)
     okey = F.struct(*order_cols)
-    wch = Window.partitionBy(*keys).orderBy(chunk)
+    wch = Window.partitionBy(*keys).orderBy("chunk")
     aggs, carries = [], []
     if lag is not None:
         aggs.append(F.max_by(col, okey).alias("_chl_last"))
@@ -139,16 +139,16 @@ def chunked_shift(
     if lead is not None:
         aggs.append(F.min_by(col, okey).alias("_chl_first"))
         carries.append(F.lead("_chl_first").over(wch).alias("_chl_next"))
-    chunks = df.groupBy(*keys, chunk).agg(*aggs).select(*keys, chunk, *carries)
-    wloc = Window.partitionBy(*keys, chunk).orderBy(*order_cols)
-    rows = df.join(chunks, [*keys, chunk])
+    chunks = df.groupBy(*keys, "chunk").agg(*aggs).select(*keys, "chunk", *carries)
+    wloc = Window.partitionBy(*keys, "chunk").orderBy(*order_cols)
+    rows = df.join(chunks, [*keys, "chunk"])
     if lag is not None:
         rows = rows.withColumn("_chl_rn", F.row_number().over(wloc)).withColumn(
             lag,
             F.when(F.col("_chl_rn") == 1, F.col("_chl_prev")).otherwise(F.lag(col).over(wloc)),
         )
     if lead is not None:
-        wrev = Window.partitionBy(*keys, chunk).orderBy(*[F.desc(c) for c in order_cols])
+        wrev = Window.partitionBy(*keys, "chunk").orderBy(*[F.desc(c) for c in order_cols])
         rows = rows.withColumn("_chl_rrn", F.row_number().over(wrev)).withColumn(
             lead,
             F.when(F.col("_chl_rrn") == 1, F.col("_chl_next")).otherwise(F.lead(col).over(wloc)),

@@ -29,14 +29,14 @@ def route_by_type(df: DataFrame, type_col: str, value: str) -> DataFrame:
 
 
 def unpivot_sides(df: DataFrame, keep: list[str], side_cols: dict[str, str], *,
-                  side_name: str = "side", value_name: str = "ladder") -> DataFrame:
+                  value_name: str = "ladder") -> DataFrame:
     """Two parallel per-side columns → one `side` discriminator column.
 
     Reference analog: the yes/no twin loops in consumer.py:57-81, which
     differ only in the side literal. Expressed as a stack (no shuffle).
     """
     args = ", ".join(f"'{s}', `{c}`" for s, c in side_cols.items())
-    stacked = F.expr(f"stack({len(side_cols)}, {args}) as ({side_name}, {value_name})")
+    stacked = F.expr(f"stack({len(side_cols)}, {args}) as (side, {value_name})")
     return df.select(*keep, stacked)
 
 
@@ -45,7 +45,7 @@ def cast_to(df: DataFrame, schema: dict[str, str]) -> DataFrame:
     return df.select(*[F.col(c).cast(t).alias(c) for c, t in schema.items()])
 
 
-def add_ingest_ts(df: DataFrame, col: str = "ingestion_ts") -> DataFrame:
+def add_ingest_ts(df: DataFrame) -> DataFrame:
     """Stamp wall-clock epoch-ms ingest time (redis_client.py:46,84).
 
     Streaming-path only: non-deterministic, so never inside an
@@ -55,7 +55,7 @@ def add_ingest_ts(df: DataFrame, col: str = "ingestion_ts") -> DataFrame:
     buffer-replayed rows keep the buffer's stamp, rows from sources
     that bypassed the buffer get the micro-batch wall clock.
     """
-    return df.withColumn(col, F.unix_millis(F.current_timestamp()))
+    return df.withColumn("ingestion_ts", F.unix_millis(F.current_timestamp()))
 
 
 # --- oracle-checked queries on the driver testdata ---
@@ -175,7 +175,6 @@ def q_unpivot_sides(spark: SparkSession, sf_dir: str) -> DataFrame:
         li,
         keep=["l_orderkey", "l_linenumber"],
         side_cols={"qty": "l_quantity", "price": "l_extendedprice"},
-        side_name="side",
         value_name="val",
     )
 

@@ -26,6 +26,7 @@ from nt_etl_order_book_spark.operators.transforms import add_ingest_ts, cast_to
 
 SNAPSHOT_TYPE = "orderbook_snapshot"  # producer.py:34
 DELTA_TYPE = "orderbook_delta"  # producer.py:41
+STREAM_ID = "redis_stream_id"  # the durable buffer's message id
 
 # Union of SNAPSHOT_MSG and DELTA_MSG fields (by name, snapshot's first):
 # the one schema every message line parses with.
@@ -34,11 +35,11 @@ MSG_UNION = StructType(
 )
 
 
-def _stream_id(msgs: DataFrame, stream_id_col: str):
+def _stream_id(msgs: DataFrame):
     """The buffer id column if present, else a typed null (sources other
     than the durable buffer don't carry one)."""
-    col = F.col(stream_id_col) if stream_id_col in msgs.columns else F.lit(None).cast("string")
-    return col.alias(stream_id_col)
+    col = F.col(STREAM_ID) if STREAM_ID in msgs.columns else F.lit(None).cast("string")
+    return col.alias(STREAM_ID)
 
 
 def _with_ingest_ts(msgs: DataFrame, stamp: bool) -> DataFrame:
@@ -59,7 +60,7 @@ def _with_ingest_ts(msgs: DataFrame, stamp: bool) -> DataFrame:
     )
 
 
-def parse_messages(raw: DataFrame, *, value_col: str = "value") -> DataFrame:
+def parse_messages(raw: DataFrame) -> DataFrame:
     """JSON text → typed envelope columns, routed by message type.
 
     The producer's dispatch (producer.py:31-50) becomes a parsed `type`
@@ -73,8 +74,8 @@ def parse_messages(raw: DataFrame, *, value_col: str = "value") -> DataFrame:
     # each routed query parses every line once. Under a Project the
     # optimizer pushes the filter below it by inlining a second, pruned
     # from_json. A NULL or unparsable line still yields one all-NULL row.
-    rest = [c for c in raw.columns if c != value_col]
-    return raw.select(F.inline(F.array(F.from_json(F.col(value_col), MSG_UNION))), *rest)
+    rest = [c for c in raw.columns if c != "value"]
+    return raw.select(F.inline(F.array(F.from_json(F.col("value"), MSG_UNION))), *rest)
 
 
 def _sink_casts(table: StructType) -> dict[str, str]:
@@ -82,12 +83,7 @@ def _sink_casts(table: StructType) -> dict[str, str]:
     return {f.name: f.dataType.simpleString() for f in table.fields}
 
 
-def flatten_snapshots(
-    msgs: DataFrame,
-    *,
-    stream_id_col: str = "redis_stream_id",
-    stamp_ingest_ts: bool = False,
-) -> DataFrame:
+def flatten_snapshots(msgs: DataFrame, *, stamp_ingest_ts: bool = False) -> DataFrame:
     """Snapshot messages → one row per (ts, ticker, side, price) level.
 
     The two copy-paste loops of consumer.py:57-81 (differing only in the
@@ -98,7 +94,7 @@ def flatten_snapshots(
     """
     msgs = _with_ingest_ts(msgs, stamp_ingest_ts)
     snaps = msgs.filter(F.col("type") == SNAPSHOT_TYPE)
-    sid = _stream_id(msgs, stream_id_col)
+    sid = _stream_id(msgs)
     sided = snaps.select(
         F.col("ingestion_ts").alias("timestamp"),
         F.col("market_ticker").alias("ticker"),
@@ -111,7 +107,7 @@ def flatten_snapshots(
         "timestamp",
         "ticker",
         "side",
-        stream_id_col,
+        STREAM_ID,
         F.explode("ladder").alias("level"),
     )
     flat = lvl.select(
@@ -120,17 +116,12 @@ def flatten_snapshots(
         "side",
         F.col("level")[0].alias("price_dollars"),
         F.col("level")[1].alias("contracts"),
-        stream_id_col,
+        STREAM_ID,
     )
     return cast_to(flat, _sink_casts(SNAPSHOTS_TABLE))
 
 
-def flatten_deltas(
-    msgs: DataFrame,
-    *,
-    stream_id_col: str = "redis_stream_id",
-    stamp_ingest_ts: bool = False,
-) -> DataFrame:
+def flatten_deltas(msgs: DataFrame, *, stamp_ingest_ts: bool = False) -> DataFrame:
     """Delta messages → 1:1 typed projection (consumer.py:131-150).
 
     `timestamp` is INGESTION time (consumer.py:132 reads
@@ -143,7 +134,7 @@ def flatten_deltas(
     """
     msgs = _with_ingest_ts(msgs, stamp_ingest_ts)
     deltas = msgs.filter(F.col("type") == DELTA_TYPE)
-    sid = _stream_id(msgs, stream_id_col)
+    sid = _stream_id(msgs)
     flat = deltas.select(
         F.col("ingestion_ts").alias("timestamp"),
         F.col("market_ticker").alias("ticker"),

@@ -41,7 +41,7 @@ reference hard-crashes on any disorder (kalshi_ws_client.py:141-144),
 so this is strictly more tolerant. For exact cross-batch replay
 ordering, feed from a buffer that preserves per-key order (Kafka
 partitioned by ticker does). Replays are not deduplicated: an
-at-least-once redelivery of a delta applies twice (ROADMAP item 2).
+at-least-once redelivery of a delta applies twice (ROADMAP item 1).
 
 Scale: a bucket holds about tickers / BOOK_BUCKETS ladders, each bounded
 by the cents price grid, and a touched bucket is rewritten whole, so

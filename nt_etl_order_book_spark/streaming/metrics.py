@@ -70,12 +70,8 @@ class MetricsCollector:
     batches: list[BatchMetric] = field(default_factory=list)
     alarms: list[StateAlarm] = field(default_factory=list)
 
-    def total_rows(self, query_name: str | None = None) -> int:
-        return sum(
-            b.num_input_rows
-            for b in self.batches
-            if query_name is None or b.query_name == query_name
-        )
+    def total_rows(self) -> int:
+        return sum(b.num_input_rows for b in self.batches)
 
     def peak_state(self, query_name: str | None = None) -> tuple[int, int]:
         """(max state rows, max state bytes) seen across progress

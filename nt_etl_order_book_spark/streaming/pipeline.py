@@ -72,7 +72,6 @@ def buffer_reader_options(
     *,
     source: str = "file",
     brokers: str | None = None,
-    topics: tuple[str, ...] = BUFFER_TOPICS,
     max_per_trigger: int | None = None,
 ) -> tuple[str, dict[str, str]]:
     """(format, options) for the durable-buffer stream reader — the
@@ -94,7 +93,7 @@ def buffer_reader_options(
             raise ValueError("kafka source needs brokers")
         opts = {
             "kafka.bootstrap.servers": brokers,
-            "subscribe": ",".join(topics),
+            "subscribe": ",".join(BUFFER_TOPICS),
             "startingOffsets": "earliest",
         }
         if max_per_trigger:
@@ -118,7 +117,7 @@ def read_json_stream(spark: SparkSession, path: str, *, max_files_per_trigger: i
     for k, v in opts.items():
         reader = reader.option(k, v)
     raw = reader.load(path)
-    return parse_messages(raw, value_col="value")
+    return parse_messages(raw)
 
 
 def snapshots_query(

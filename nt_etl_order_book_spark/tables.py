@@ -44,10 +44,6 @@ def sf_path(sf: str) -> str:
     """Fixture directory for scale factor ``sf`` (e.g. ``"0.01"``)."""
     return os.path.join(TESTDATA_ROOT, f"sf{sf}")
 
-# Small dimension tables that should always broadcast in joins: at any
-# realistic scale factor these stay tiny (region=5, nation=25 rows).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan table ``name`` of the fixture directory ``sf_dir``.

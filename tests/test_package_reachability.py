@@ -8,6 +8,11 @@ A definition that nothing reaches must be deleted or named, with its
 reason, in COVERAGE.md's "Kept without a package caller" section; a kept
 name counts as a root. A kept name that no longer exists, or that a root
 has come to reach, fails too, so the list cannot rot.
+
+The second test holds the package's parameters to the same rule: every
+defaulted parameter of a package function or method must be set to a
+value other than its default by some call in the package, the roots or
+``tests/``. One that never is becomes the constant it always held.
 """
 
 from __future__ import annotations
@@ -228,3 +233,69 @@ def test_every_package_definition_is_reachable_or_kept():
         f"kept names now have a package caller; drop them from the list: {now_reached}"
     )
 
+
+def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef, skip: int):
+    """``(name, default source, position or None)`` per defaulted
+    parameter; positions count from the first one after ``skip``."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    for i, default in enumerate(a.defaults, len(pos) - len(a.defaults)):
+        yield pos[i].arg, ast.unparse(default), i - skip
+    for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+        if default is not None:
+            yield arg.arg, ast.unparse(default), None
+
+
+def _sets(call: ast.Call, name: str, default: str, position: int | None) -> bool:
+    """Whether ``call`` passes the parameter a value other than its default."""
+    for kw in call.keywords:
+        if kw.arg is None or (kw.arg == name and ast.unparse(kw.value) != default):
+            return True  # a **kwargs pass may carry it
+    for i, arg in enumerate(call.args):
+        if position is None or i > position:
+            break
+        if isinstance(arg, ast.Starred):
+            return True  # so may a *args pass at or before its position
+        if i == position and ast.unparse(arg) != default:
+            return True
+    return False
+
+
+def test_every_option_is_set_somewhere():
+    kept = kept_names()
+    options = []  # (label, called name, parameter, default, position)
+    for mod in _Index().modules.values():
+        for node in mod.tree.body:
+            if getattr(node, "name", None) in kept:
+                continue
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for opt in _defaulted(node, 0):
+                    options.append((f"{mod.name}.{node.name}", node.name, *opt))
+            elif isinstance(node, ast.ClassDef):
+                for meth in node.body:
+                    if isinstance(meth, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        called = node.name if meth.name == "__init__" else meth.name
+                        for opt in _defaulted(meth, 1):
+                            options.append((f"{mod.name}.{node.name}.{meth.name}", called, *opt))
+    # Calls match on the called name alone, so a same-named call anywhere
+    # counts: the scan can miss an unset option, never invent one.
+    calls: dict[str, list[ast.Call]] = {}
+    paths = [os.path.join(REPO, f) for f in ROOT_FILES]
+    for top in (PACKAGE, *ROOT_DIRS, "tests"):
+        paths += _py_files(top)
+    for path in paths:
+        with open(path, encoding="utf-8") as fh:
+            for node in ast.walk(ast.parse(fh.read(), filename=path)):
+                if isinstance(node, ast.Call):
+                    func = node.func
+                    called = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+                    calls.setdefault(called, []).append(node)
+    unset = [
+        f"{label}({name}={default})"
+        for label, called, name, default, position in options
+        if not any(_sets(c, name, default, position) for c in calls.get(called, ()))
+    ]
+    assert not unset, (
+        "defaulted parameters that no call sets to another value; make each the "
+        "constant it always holds: " + ", ".join(sorted(unset))
+    )

@@ -610,6 +610,26 @@ def test_profile_pins_blocked_dedup_job_counts(spark, sf_dir, name, max_jobs):
     assert 0 < p.jobs <= max_jobs, p
 
 
+@pytest.mark.parametrize("case,max_jobs", [("dedup_components", 16), ("path_graph", 61)])
+def test_profile_pins_one_aggregate_per_components_round(spark, sf_dir, case, max_jobs):
+    # Each connected_components round unions the own, neighbour and
+    # pointer-chase labels into one x-keyed aggregate that yields the new
+    # and the previous label, with no join back onto the labels: one
+    # round of dedup_components, and the 7 rounds of a 60-node path graph.
+    from nt_etl_order_book_spark.functions.dedup import connected_components
+    from nt_etl_order_book_spark.plans.profile import profile
+
+    if case == "dedup_components":
+        fn = registry.queries()[case]
+        p = profile(lambda: fn(spark, sf_dir))
+    else:
+        edges = [(i, i + 1) for i in range(59)] + [(100, 101), (200, 300)]
+        pairs = spark.createDataFrame(edges, "a long, b long")
+        p = profile(lambda: connected_components(pairs))
+    assert p.rows > 0
+    assert 0 < p.jobs <= max_jobs, p
+
+
 def test_codegen_cache_holds_a_working_set_past_spark_default(spark):
     # get_spark sizes the JVM-wide codegen cache past Spark's default 100
     # entries: a round of queries that compiles more classes than that

@@ -91,7 +91,7 @@ def test_ngram_jaccard_hot_shingle_capped(spark):
         [(i, f"common boiler plate unique{i}") for i in range(1000)],
         "doc_id long, text string",
     )
-    sh = shingles(docs, "doc_id", "text", n=3)
+    sh = shingles(docs, "doc_id", "text")
     w = Window.partitionBy("shingle")
     capped = (
         sh.withColumn("_df", F.count(F.lit(1)).over(w))
@@ -301,10 +301,9 @@ def test_connected_components_long_chain(spark):
     extra = [(100, 101), (200, 300)]                  # two separate components
     pairs = spark.createDataFrame(chain + extra, "a long, b long")
     out = connected_components(pairs)
-    # r15 optimization round: each round carries the previous label on
-    # the checkpointed frame so convergence is a narrow filter instead
-    # of a shuffle join — the carrier column must never leak into the
-    # returned schema.
+    # Each round aggregates the previous label beside the new one and
+    # counts the changes with an Observation on the round's checkpoint;
+    # the carrier column must never leak into the returned schema.
     assert out.columns == ["x", "label"]
     got = {r.x: r.label for r in out.collect()}
     assert all(got[i] == 0 for i in range(60))

@@ -75,7 +75,7 @@ def msg_dir(tmp_path):
 
 def _read_batch(spark, msg_dir):
     raw = spark.read.text(msg_dir)
-    return parse_messages(raw, value_col="value")
+    return parse_messages(raw)
 
 
 def test_batch_flatten_snapshots_edge_cases(spark, msg_dir):
@@ -450,6 +450,40 @@ def test_deltas_query_state_partitions_pinned_and_restored(spark, msg_dir, tmp_p
                 dedup_within=dedup_within,
                 state_partitions=0,
             )
+
+
+def test_continuous_queries_keep_session_conf(spark, msg_dir, tmp_path):
+    # available_now=False runs both sinks as long-lived queries: the
+    # snapshot rows match the batch flatten, the replayed delta is
+    # deduplicated on a 2-store state stage, and the session's shuffle
+    # and no-data-batch confs never move, while the queries run or after
+    # they stop (the no-data-batch pin is for availableNow dedup only).
+    confs = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+    before = [spark.conf.get(k, None) for k in confs]
+    msgs = read_json_stream(spark, msg_dir)
+    out_s, out_d = str(tmp_path / "snaps"), str(tmp_path / "deltas")
+    q1 = snapshots_query(msgs, out_s, str(tmp_path / "cp_s"), available_now=False)
+    q2 = deltas_query(msgs, out_d, str(tmp_path / "cp_d"), available_now=False, state_partitions=2)
+    try:
+        q1.processAllAvailable()
+        q2.processAllAvailable()
+        assert q1.isActive and q2.isActive
+        assert [spark.conf.get(k, None) for k in confs] == before
+        stream_snaps = sorted(map(tuple, spark.read.parquet(out_s).collect()))
+        batch_snaps = flatten_snapshots(_read_batch(spark, msg_dir))
+        assert stream_snaps == sorted(map(tuple, batch_snaps.collect()))
+        deltas = spark.read.parquet(out_d).collect()
+        assert [r.redis_stream_id for r in deltas] == [DELTA["redis_stream_id"]]
+        planned = {
+            s.get("numShufflePartitions")
+            for p in q2.recentProgress
+            for s in json.loads(p.json).get("stateOperators") or []
+        }
+        assert planned == {2}
+    finally:
+        q1.stop()
+        q2.stop()
+    assert [spark.conf.get(k, None) for k in confs] == before
 
 
 # The 0-row bound below is ARMED ON PURPOSE to prove the alarm fires;
@@ -832,5 +866,5 @@ def test_stamp_ingest_ts_lands_in_sink_schema(spark, tmp_path):
     assert row.event_ts == DELTA["ts"]  # exchange event time is untouched
 
     # Default path unchanged: no stamping unless asked.
-    plain = flatten_deltas(parse_messages(spark.read.text(str(p)), value_col="value"))
+    plain = flatten_deltas(parse_messages(spark.read.text(str(p))))
     assert [r.timestamp for r in plain.filter(F.col("ticker") == "KXM-A").collect()] == [None]

@@ -62,7 +62,7 @@ FAMILIES = {
     # --sparse --copies 1000). paragraph_dedup and dedup_exact_docs are
     # digest groupBys: ~linear wall, output bounded by the base corpus's
     # distinct content. At 1000 copies every minhash_dedup near-dup group
-    # is 1000-way, so its band buckets exceed the max_bucket=200 cap and
+    # is 1000-way, so its band buckets exceed the MAX_BUCKET=200 cap and
     # are skipped: a 1000-member bucket is boilerplate, not dedup signal,
     # and exact dedup owns identical docs. Found pairs collapse and the
     # wall measures the linear signature scan. The byte columns check
