@@ -1,14 +1,16 @@
 """Similarity search over embeddings — SURVEY §2.10 [X].
 
-`embeddings.embedding` is array<float> (64-dim). Dot products and norms
-are higher-order-function expressions (zip_with + aggregate) — fully
-JVM-side, no Python in the scoring loop. The Python steps are
-Arrow-batched numpy passes: the two nearest-centroid assignments, the
-IVF cell (ivf_assign) and the PQ codes (pq_encode), and the blocked
-all-pairs cosine of the two dedup queries, one grouped-map call per
-block (cosine_tiles, in dot()'s own fold).
+`embeddings.embedding` is array<float> (64-dim). Exact cosines come
+from one numpy kernel (cosine_tiles), dot()'s own left-to-right fold in
+double, so it matches the JVM dot()/norm()/cosine() bit for bit. It runs
+in Arrow-batched Python passes: the exact scans score a collected query
+set against each corpus batch (cosine_scan), and the two dedup queries
+score each block against itself, one grouped-map call per block. The
+ANN re-ranks score their joined candidate pairs with the JVM dot() and
+norm() expressions; the nearest-centroid assignments (ivf_assign) and
+the PQ codes (pq_encode) are numpy passes too.
 
-Scale design: brute-force top-k broadcasts the (small) query set and
+Scale design: brute-force top-k collects the (small) query set and
 scans the corpus once — the right baseline. The LSH variant buckets by
 signed random-projection signature so each query only meets its bucket;
 at 100 TB you shard the corpus by bucket and the scan is pruned to
@@ -64,53 +66,128 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
-# Sub-partitions per query for the two-phase top-k tail. For the
-# exact-scan ops the scored set is |corpus| × |queries| rows; a single
-# Window.partitionBy("qid") funnels that into only |queries| tasks, each
-# sorting a corpus-sized slice — the stage-dominating skew/spill at
-# 100× scale even though the scan parallelizes. Phase 1 ranks within
-# (qid, vec_id % TOPK_SALTS) so each query's scores fan across
-# TOPK_SALTS tasks; any global top-k row is top-k within its own
-# sub-partition under the same total order (cos_sim DESC, vec_id ASC —
-# vec_id is unique per qid), so the ≤ TOPK_SALTS×k survivors provably
-# contain the answer and phase 2's tiny window reproduces the
-# single-window result EXACTLY (the oracle IS the single-window form;
-# the driver hash check is the equivalence proof). Same pattern as
-# stratified_sample (sampling.py).
-TOPK_SALTS = 32
+# Query rows per cosine tile: scoring a tile holds a few TILE × batch
+# arrays of doubles, ≈20 MB each against a 10,000-row block or batch.
+TILE = 256
 
 
-def topk_per_query(scored: DataFrame, k: int = TOP_K, *, pruned: bool = False) -> DataFrame:
-    """Per-query top-k over (qid, vec_id, cos_sim) rows — shared tail of
-    every similarity variant (exact, LSH, IVF, PQ). Extra columns on
-    `scored` ride through untouched.
+def _fold(x, y):
+    """dot() for every row pair of x (t×D) and y (m×D), in dot()'s own
+    operations: per dimension acc = acc + x_d·y_d in double, left to
+    right. No matmul: BLAS reorders and fuses the sum, which moves a
+    cosine off the oracle at the 6-dp boundary."""
+    import numpy as np
 
-    pruned=False (exact-scan callers, |corpus|×|queries| input): two-phase
-    salted ranking so each query's scores fan across TOPK_SALTS tasks.
-    pruned=True (LSH/IVF/PQ candidate sets, already bucketed/probed small
-    per query): single window — the salt phase would add a second
-    shuffle+sort over a set that is bounded by construction, which is
-    pure overhead (measured 1.7–2.0× on the r6 bench)."""
-    order = [F.desc("cos_sim"), F.asc("vec_id")]
-    w2 = Window.partitionBy("qid").orderBy(*order)
-    if pruned:
-        return scored.withColumn("rn", F.row_number().over(w2)).filter(F.col("rn") <= k)
-    clash = {"_tk_salt", "_tk_rn1"}.intersection(scored.columns)
-    if clash:
-        # Silently overwriting (then dropping) a caller column of the
-        # same name would corrupt the result.
-        raise ValueError(f"topk_per_query: input already has reserved column(s) {sorted(clash)}")
-    salted = scored.withColumn("_tk_salt", F.pmod(F.col("vec_id"), F.lit(TOPK_SALTS)))
-    w1 = Window.partitionBy("qid", "_tk_salt").orderBy(*order)
-    survivors = (
-        salted.withColumn("_tk_rn1", F.row_number().over(w1))
-        .filter(F.col("_tk_rn1") <= k)
+    acc = np.zeros((len(x), len(y)))
+    for d in range(x.shape[1]):
+        acc += x[:, d, None] * y[:, d]
+    return acc
+
+
+def _nullif_div(num, den):
+    """num / den with NaN where den == 0, as ``/ nullif(den, 0)``. NaN
+    compares false, as NULL filters out."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den == 0.0, np.nan, num / den)
+
+
+def cosine_tiles(x, xn, y, yn):
+    """Yield (lo, tile) over the rows of x: tile[i, j] is cosine() of x
+    row lo + i and y row j, bit for bit — dot()'s fold over norm()'s
+    norms xn and yn, NaN where the norm product is 0. Each tile has TILE
+    rows, so memory stays at a few TILE × len(y) arrays whatever len(x)."""
+    for lo in range(0, len(x), TILE):
+        hi = lo + TILE
+        yield lo, _nullif_div(_fold(x[lo:hi], y), xn[lo:hi, None] * yn)
+
+
+def _topk_floor(tile, keep, k):
+    """``keep`` narrowed, per row, to the cosines that can still rank in
+    the row's top k once Spark rounds them half-up to 6 dp: those at
+    least the row's k-th best kept cosine minus 1e-6. Rounding moves a
+    value by at most 5e-7, so a cosine below that floor rounds strictly
+    below k others. A row with fewer than k non-NULL kept cosines keeps
+    them all, NULLs too: Spark ranks NULLs last, after every score."""
+    import numpy as np
+
+    ok = keep & ~np.isnan(tile)
+    short = ok.sum(axis=1) < k
+    if short.all():
+        return keep
+    m = tile.shape[1]
+    kth = np.partition(np.where(ok, tile, -np.inf), m - k, axis=1)[:, m - k]
+    return keep & ((tile >= kth[:, None] - 1e-6) | short[:, None])
+
+
+def cosine_scan(q: DataFrame, corpus: DataFrame, mask, k: int | None = None) -> DataFrame:
+    """Exact cosines of a small query frame against a corpus frame, as
+    one mapInPandas pass: ``q`` (qid, qvec, qnorm and any column ``mask``
+    reads) is collected to the driver and scored against each Arrow
+    batch of ``corpus`` (vec_id, embedding, enorm) by cosine_tiles.
+    Rows are q's other columns, then corpus's other columns, then
+    ``cos``: the raw cosine, NULL for a zero-norm vector as cosine()
+    gives. ``mask(qt, batch)`` picks the pairs, a boolean query-tile ×
+    batch matrix over the two pandas frames.
+
+    With ``k``, each batch keeps only the pairs that can still rank in a
+    query's top k after Spark's 6-dp rounding (_topk_floor), so the
+    ranking window downstream meets about k rows per query per batch.
+    Without ``k`` every masked pair is kept."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    qpdf = q.toPandas()
+    qx = np.stack(qpdf.pop("qvec").to_numpy()).astype(np.float64) if len(qpdf) else np.zeros((0, 0))
+    qn = qpdf.pop("qnorm").to_numpy(dtype=np.float64)
+
+    def scan(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue  # np.stack raises on an empty Arrow batch
+            y = np.stack(pdf.pop("embedding").to_numpy()).astype(np.float64)
+            yn = pdf.pop("enorm").to_numpy(dtype=np.float64)
+            for lo, tile in cosine_tiles(qx, qn, y, yn):
+                qt = qpdf.iloc[lo : lo + len(tile)]
+                keep = mask(qt, pdf)
+                if k is not None:
+                    keep = _topk_floor(tile, keep, k)
+                i, j = keep.nonzero()
+                cols = {c: qt[c].to_numpy()[i] for c in qt.columns}
+                cols.update({c: pdf[c].to_numpy()[j] for c in pdf.columns})
+                yield pd.DataFrame({**cols, "cos": tile[i, j]})
+
+    fields = [f for f in q.schema.fields if f.name not in ("qvec", "qnorm")]
+    fields += [f for f in corpus.schema.fields if f.name not in ("embedding", "enorm")]
+    return corpus.mapInPandas(scan, StructType(fields + [StructField("cos", DoubleType())]))
+
+
+def _not_self(qt, batch):
+    """cosine_scan mask: every pair but a query with itself."""
+    return qt["qid"].to_numpy()[:, None] != batch["vec_id"].to_numpy()
+
+
+def query_frame(emb: DataFrame, *extra: Column) -> DataFrame:
+    """(qid, qvec, qnorm, *extra): the N_QUERIES query vectors every
+    top-k search of the corpus answers."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qvec"),
+        norm(F.col("embedding")).alias("qnorm"),
+        *extra,
     )
-    return (
-        survivors.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .drop("_tk_salt", "_tk_rn1")
-    )
+
+
+def topk_per_query(scored: DataFrame, k: int = TOP_K) -> DataFrame:
+    """Per-query top-k over (qid, vec_id, cos_sim) rows, ranked by
+    (cos_sim desc, vec_id asc) in one window — the shared tail of every
+    similarity variant. Each one hands it a bounded set: the exact scans
+    a per-batch top-k floor (cosine_scan), the ANN variants their
+    probed candidates. Extra columns on ``scored`` ride through."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
 @register(
@@ -142,35 +219,18 @@ def topk_per_query(scored: DataFrame, k: int = TOP_K, *, pruned: bool = False) -
     SELECT qid, vec_id, cos_sim, rn FROM ranked WHERE rn <= {TOP_K}
     """,
     doc=(
-        "Brute-force cosine top-k: query set broadcast against the corpus, "
-        "score via zip_with/aggregate HOFs, rank per query. cos rounded to "
-        "6dp (both engines) so accumulation order can't flip the hash."
+        "Brute-force cosine top-k: the query set is collected and scored "
+        "against each Arrow batch of the corpus in one mapInPandas pass "
+        "(cosine_scan, dot()'s fold in numpy), which keeps each batch's "
+        "per-query top-k; Spark rounds cos to 6dp (both engines, so "
+        "accumulation order can't flip the hash) and ranks per query."
     ),
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    # Norms are per-vector, not per-pair: compute each side's norm once in
-    # its own projection instead of re-deriving the corpus norm for every
-    # query it meets (×N_QUERIES waste), and the query norm per corpus row.
     corpus = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("enorm"))
-    q = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qvec"),
-        F.col("enorm").alias("qnorm"),
-    )
-    scored = (
-        corpus.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.round(
-                dot(F.col("qvec"), F.col("embedding"))
-                / F.nullif(F.col("qnorm") * F.col("enorm"), F.lit(0.0)),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    return topk_per_query(scored)
+    scored = cosine_scan(query_frame(emb), corpus, _not_self, k=TOP_K)
+    return topk_per_query(scored.select("qid", "vec_id", F.round("cos", 6).alias("cos_sim")))
 
 
 def _plane_vals(table: int, i: int) -> list[float]:
@@ -297,8 +357,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = cands.select(
         "qid", "vec_id", F.round(cosine(F.col("qvec"), F.col("embedding")), 6).alias("cos_sim")
     )
-    # Candidate set is bounded by the LSH buckets — single-phase tail.
-    return topk_per_query(scored, pruned=True)
+    return topk_per_query(scored)
 
 
 N_CELLS = 16  # IVF partitions (coarse quantizer size)
@@ -325,6 +384,21 @@ KMEANS_ITERS = 1
 TRAIN_MOD = 10  # k-means trains on ~1/TRAIN_MOD of the corpus (hash-sampled)
 
 
+def _env_count(name: str, default: int) -> int:
+    """The integer in env var ``name``, else ``default``; a value that
+    is not an integer >= 1 raises rather than falling back."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        val = int(raw)
+    except ValueError:
+        raise ValueError(f"{name}={raw!r} is not an integer") from None
+    if val < 1:
+        raise ValueError(f"{name} must be >= 1, got {val}")
+    return val
+
+
 def ivf_cells() -> int:
     """Effective coarse-quantizer size for the IVF-PQ train/apply
     lifecycle: ``SPARK_GRAFT_IVF_CELLS`` if set — DEPLOY.md §2's
@@ -332,16 +406,7 @@ def ivf_cells() -> int:
     the N_CELLS fixture default. The artifact cache key folds this in
     (_ivfpq_index_path), so switching cell counts can never serve an
     index built at a different geometry."""
-    raw = os.environ.get("SPARK_GRAFT_IVF_CELLS")
-    if raw is None:
-        return N_CELLS
-    try:
-        val = int(raw)
-    except ValueError:
-        raise ValueError(f"SPARK_GRAFT_IVF_CELLS={raw!r} is not an integer") from None
-    if val < 1:
-        raise ValueError(f"SPARK_GRAFT_IVF_CELLS must be >= 1, got {val}")
-    return val
+    return _env_count("SPARK_GRAFT_IVF_CELLS", N_CELLS)
 
 
 def ivf_probe() -> int:
@@ -350,19 +415,27 @@ def ivf_probe() -> int:
     SPARK_GRAFT_IVF_CELLS (r14 ADVICE): a deployment resizing to √N
     cells tunes probe count WITH the cell count — probed mass is
     probe/cells, and recall at a fixed probe=11 would otherwise depend
-    entirely on how well the corpus clusters. Same validation pattern
-    as ivf_cells; values above the cell count are harmless (F.slice
-    past the array end returns the whole array — full scan)."""
-    raw = os.environ.get("SPARK_GRAFT_IVF_PROBE")
-    if raw is None:
-        return N_PROBE
-    try:
-        val = int(raw)
-    except ValueError:
-        raise ValueError(f"SPARK_GRAFT_IVF_PROBE={raw!r} is not an integer") from None
-    if val < 1:
-        raise ValueError(f"SPARK_GRAFT_IVF_PROBE must be >= 1, got {val}")
-    return val
+    entirely on how well the corpus clusters. Values above the cell
+    count are harmless (F.slice past the array end returns the whole
+    array — full scan)."""
+    return _env_count("SPARK_GRAFT_IVF_PROBE", N_PROBE)
+
+
+def cells_by_sim() -> Column:
+    """Probe order over the broadcast 1-row codebook (``cents``): each
+    cell's (−dot(qvec, cvec), cell), sorted ascending ≡ (dot desc, cell
+    asc), so a slice of the head is a query's nearest cells. A HOF, in
+    place of a crossJoin + Window rank that cost a broadcast exchange
+    and a window shuffle to pick a few cells per query."""
+    return F.array_sort(
+        F.transform(
+            F.col("cents"),
+            lambda c: F.struct(
+                (-dot(F.col("qvec"), c["cvec"])).alias("neg_sim"),
+                c["cell"].alias("cell"),
+            ),
+        )
+    )
 
 
 def cents_frame(spark: SparkSession, cent_rows: list) -> DataFrame:
@@ -526,32 +599,14 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches stay on the raw scan so the exchange isn't duplicated
     # under every consumer of `emb`.
     assigned = spread(ivf_assign(emb, cent_rows), "vec_id")
-    # Each query probes its N_PROBE nearest refined cells. Probe selection
-    # is a HOF over the broadcast 1-row form of the SAME codebook the
-    # assignment uses: sort (−dot, cell) ascending ≡ (dot desc, cell asc)
-    # and slice the head — replaces the earlier crossJoin + Window rank,
-    # which cost an extra broadcast exchange and a window shuffle just to
-    # pick 4 of 16 cells per query.
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qvec"),
-        norm(F.col("embedding")).alias("qnorm"),
-    )
-    by_sim = F.array_sort(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (-dot(F.col("qvec"), c["cvec"])).alias("neg_sim"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    )
-    probes = q.crossJoin(F.broadcast(cents_arr)).select(
+    # Each query probes its N_PROBE nearest cells of the SAME codebook
+    # the assignment uses.
+    probes = query_frame(emb).crossJoin(F.broadcast(cents_arr)).select(
         "qid",
         "qvec",
         "qnorm",
         F.explode(
-            F.transform(F.slice(by_sim, 1, ivf_probe()), lambda s: s["cell"])
+            F.transform(F.slice(cells_by_sim(), 1, ivf_probe()), lambda s: s["cell"])
         ).alias("cell"),
     )
     scored = (
@@ -567,12 +622,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_sim"),
         )
     )
-    # IVF candidates are pruned to the probed cells: at production cell
-    # counts (~sqrt(N) cells, n_probe << cells) each query meets
-    # |corpus|*n_probe/n_cells rows — bounded, so the salted phase-1
-    # window is pure overhead here (it cost +67% on the r6 bench at
-    # sf0.1 where the candidate sets are tiny).
-    return topk_per_query(scored, pruned=True)
+    return topk_per_query(scored)
 
 
 @register(
@@ -604,31 +654,6 @@ DEDUP_COS_TAU = 0.3  # fixture-calibrated: isotropic 64-dim corpus tops out ≈0
 # approximate path (ann_lsh_topk's banding) — same contract as
 # MAX_SHINGLE_DF / max_bucket in the text-dedup family.
 MAX_BLOCK = 10_000
-# Rows per cosine tile: scoring a tile holds a few TILE × block arrays of
-# doubles, ≈20 MB each for a block at the MAX_BLOCK cap.
-TILE = 256
-
-
-def _fold(x, y):
-    """dot() for every row pair of x (t×D) and y (m×D), in dot()'s own
-    operations: per dimension acc = acc + x_d·y_d in double, left to
-    right. No matmul: BLAS reorders and fuses the sum, which moves a
-    cosine off the oracle at the 6-dp boundary."""
-    import numpy as np
-
-    acc = np.zeros((len(x), len(y)))
-    for d in range(x.shape[1]):
-        acc += x[:, d, None] * y[:, d]
-    return acc
-
-
-def _nullif_div(num, den):
-    """num / den with NaN where den == 0, as ``/ nullif(den, 0)``. NaN
-    compares false, as NULL filters out."""
-    import numpy as np
-
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(den == 0.0, np.nan, num / den)
 
 
 def size_guard(df: DataFrame, key: str) -> DataFrame:
@@ -657,16 +682,6 @@ def block_arrays(pdf):
         return None
     x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     return pdf["vec_id"].to_numpy(), x, pdf["enorm"].to_numpy(dtype=np.float64)
-
-
-def cosine_tiles(x, enorm):
-    """Yield (lo, tile) over one block: tile[i, j] is cosine() of rows
-    lo + i and j, bit for bit — dot()'s fold over norm()'s norms, NaN
-    where na·nb == 0. Each tile has TILE rows, so memory stays at a few
-    TILE × block arrays whatever the block's size."""
-    for lo in range(0, len(x), TILE):
-        hi = lo + TILE
-        yield lo, _nullif_div(_fold(x[lo:hi], x), enorm[lo:hi, None] * enorm)
 
 
 @register(
@@ -718,7 +733,7 @@ def q_embed_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             return pd.DataFrame(columns=["a", "b", "label", "cos"])
         ids, x, n = block
         out = []
-        for lo, tile in cosine_tiles(x, n):
+        for lo, tile in cosine_tiles(x, n, x, n):
             i, j = ((ids[lo : lo + len(tile), None] < ids) & (tile >= floor)).nonzero()
             out.append(pd.DataFrame({"a": ids[lo + i], "b": ids[j], "cos": tile[i, j]}))
         res = pd.concat(out, ignore_index=True)
@@ -1069,8 +1084,7 @@ def _exact_rerank(emb: DataFrame, cands: DataFrame) -> DataFrame:
             F.round(cosine(F.col("qvec"), F.col("embedding")), 6).alias("cos_sim"),
         )
     )
-    # ADC survivors are ≤ PQ_RERANK per query by construction.
-    return topk_per_query(rer, pruned=True)
+    return topk_per_query(rer)
 
 
 
@@ -1172,7 +1186,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is ‖v‖·cos — the same fold, one division per row.
         ccos = _nullif_div(_fold(x, cvec[None, :])[:, 0], n)
         out = np.zeros(len(ids), dtype=bool)
-        for lo, tile in cosine_tiles(x, n):
+        for lo, tile in cosine_tiles(x, n, x, n):
             hi = lo + len(tile)
             ca, ia = ccos[lo:hi, None], ids[lo:hi, None]
             # Row i is PRUNED when some dup partner j sits farther from
@@ -1281,27 +1295,14 @@ def ivfpq_query(
     directory-level PartitionFilter on the scan (plan-asserted in
     tests/test_ann_lifecycle.py) — a query batch never reads the
     unprobed cells."""
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qvec"),
-        norm(F.col("embedding")).alias("qnorm"),
-    )
-    by_sim = F.array_sort(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (-dot(F.col("qvec"), c["cvec"])).alias("neg_sim"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    )
     probes = (
-        q.crossJoin(F.broadcast(cents_arr))
+        query_frame(emb)
+        .crossJoin(F.broadcast(cents_arr))
         .crossJoin(F.broadcast(books))
         .select(
             "qid",
             "qnorm",
-            F.explode(F.slice(by_sim, 1, ivf_probe())).alias("probe"),
+            F.explode(F.slice(cells_by_sim(), 1, ivf_probe())).alias("probe"),
             _query_lut(F.col("qvec"), F.col("books")).alias("lut"),
         )
         .select(
@@ -1544,8 +1545,8 @@ def q_ann_ivfpq_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hard-negative-mining query of contrastive training (closest "
         "vectors that are NOT the query's class), and the general "
         "shape every vector store must serve (search within tenant / "
-        "language / date range). The predicate composes into the scan "
-        "as an ordinary Catalyst filter BEFORE scoring — pre-filtering, "
+        "language / date range). The predicate is cosine_scan's pair "
+        "mask, applied BEFORE each batch keeps its top-k — pre-filtering, "
         "which keeps top-k exact, vs the post-filter-then-hope "
         "recall loss a bucketed index suffers when the filter is "
         "selective; at 100 TB the play is partitioning the index by "
@@ -1555,31 +1556,15 @@ def q_ann_ivfpq_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        "vec_id", "label", "embedding", norm(F.col("embedding")).alias("enorm")
-    )
-    q = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qvec"),
-        F.col("enorm").alias("qnorm"),
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(q),
-            (F.col("vec_id") != F.col("qid")) & (F.col("label") != F.col("qlabel")),
-        )
-        .select(
-            "qid",
-            "vec_id",
-            F.round(
-                dot(F.col("qvec"), F.col("embedding"))
-                / F.nullif(F.col("qnorm") * F.col("enorm"), F.lit(0.0)),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    return topk_per_query(scored)
+    corpus = emb.select("vec_id", "label", "embedding", norm(F.col("embedding")).alias("enorm"))
+    q = query_frame(emb, F.col("label").alias("qlabel"))
+
+    def other_label(qt, batch):
+        other = qt["qlabel"].to_numpy()[:, None] != batch["label"].to_numpy()
+        return _not_self(qt, batch) & other
+
+    scored = cosine_scan(q, corpus, other_label, k=TOP_K)
+    return topk_per_query(scored.select("qid", "vec_id", F.round("cos", 6).alias("cos_sim")))
 
 
 # Pairwise-similarity census: sample modulus and histogram width.
@@ -1617,9 +1602,10 @@ HIST_BUCKETS = 20
         "thresholds). Sample by vec_id modulus keeps the quadratic "
         "pair count bounded and REPRODUCIBLE (no rand()): n/MOD "
         "vectors -> ~(n/MOD)^2/2 pairs; at 100 TB the modulus scales "
-        "with corpus size to hold the pair budget constant. Pairs via "
-        "broadcast self-join (a.vec_id < b.vec_id), dot/norm HOFs "
-        "JVM-side, cosine ROUNDED 6 dp BEFORE bucketing so the "
+        "with corpus size to hold the pair budget constant. Pairs "
+        "(a.vec_id < b.vec_id) scored by cosine_scan: the sample is "
+        "collected and scored against each Arrow batch of itself in one "
+        "mapInPandas pass, cosine ROUNDED 6 dp BEFORE bucketing so the "
         "floor-bucket edge cannot sit on a 1-ulp cross-engine "
         "difference (the cosine_topk discipline); bucket k covers "
         "[-1 + k/10, ...), cos=1.0 clamped into the top bucket."
@@ -1628,28 +1614,18 @@ HIST_BUCKETS = 20
 def q_pairwise_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     s = emb.filter(F.col("vec_id") % HIST_SAMPLE_MOD == 0).select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
+        "vec_id", "embedding", norm(F.col("embedding")).alias("enorm")
     )
-    # spread ONLY the a branch (r15 optimization round): the
-    # |sample|²/2 dot products run downstream of it, single-task on the
-    # single-row-group fixture; the broadcast b branch stays on the raw
-    # scan so the exchange is not duplicated (no-op at scale).
-    a = spread(
-        s.select(
-            F.col("vec_id").alias("aid"),
-            F.col("embedding").alias("av"),
-            F.col("nrm").alias("an"),
-        ),
-        "aid",
+    q = s.select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qvec"),
+        F.col("enorm").alias("qnorm"),
     )
-    b = s.select(F.col("vec_id").alias("bid"), F.col("embedding").alias("bv"), F.col("nrm").alias("bn"))
-    cos = F.round(
-        dot(F.col("av"), F.col("bv")) / F.nullif(F.col("an") * F.col("bn"), F.lit(0.0)), 6
-    )
-    scored = (
-        a.join(F.broadcast(b), F.col("aid") < F.col("bid"))
-        .select(cos.alias("cos_sim"))
-    )
+
+    def later(qt, batch):
+        return qt["qid"].to_numpy()[:, None] < batch["vec_id"].to_numpy()
+
+    scored = cosine_scan(q, s, later).select(F.round("cos", 6).alias("cos_sim"))
     bucket = F.least(
         F.floor((F.col("cos_sim") + 1.0) * HIST_BUCKETS / 2.0).cast("bigint"),
         F.lit(HIST_BUCKETS - 1),
@@ -1729,8 +1705,8 @@ KNN_QUERY_CAP = KNN_QUERY_MOD * KNN_EVAL_SAMPLE
         "report accuracy — the standard embedding-quality probe "
         "(labels that k-NN can't recover from the geometry are labels "
         "the embedding doesn't encode; run before trusting semdedup / "
-        "label-blocked dedup). Same broadcast-queries × corpus-scan "
-        "shape as cosine_topk (cos rounded 6 dp before ranking, "
+        "label-blocked dedup). Same collected-queries × corpus-scan "
+        "shape as cosine_topk (cosine_scan; cos rounded 6 dp before ranking, "
         "unique vec_id tiebreak); majority vote = a second ROW_NUMBER "
         "over the ≤k×|labels| vote table with a label tiebreak, so "
         "the prediction is deterministic under vote ties in both "
@@ -1739,31 +1715,20 @@ KNN_QUERY_CAP = KNN_QUERY_MOD * KNN_EVAL_SAMPLE
 )
 def q_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "label", "embedding", norm(F.col("embedding")).alias("nrm"))
-    q = base.filter(
+    q = emb.filter(
         (F.col("vec_id") % KNN_QUERY_MOD == 0) & (F.col("vec_id") < KNN_QUERY_CAP)
     ).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("true_label"),
         F.col("embedding").alias("qvec"),
-        F.col("nrm").alias("qn"),
+        norm(F.col("embedding")).alias("qnorm"),
     )
-    # spread ONLY the corpus side (r15 optimization round): the
-    # |corpus|×|queries| dot products run downstream of this branch,
-    # and on the single-row-group fixture the scan is one task. The
-    # query branch stays on the raw scan so the exchange is not
-    # duplicated under both consumers of `base` (no-op at scale).
-    e = spread(base.filter(F.col("vec_id") % KNN_QUERY_MOD != 0), "vec_id")
-    cos = F.round(
-        dot(F.col("qvec"), F.col("embedding")) / F.nullif(F.col("qn") * F.col("nrm"), F.lit(0.0)),
-        6,
+    corpus = emb.filter(F.col("vec_id") % KNN_QUERY_MOD != 0).select(
+        "vec_id", "label", "embedding", norm(F.col("embedding")).alias("enorm")
     )
-    scored = e.join(F.broadcast(q)).select(
-        "qid", "true_label", "label", cos.alias("cos_sim"), "vec_id"
+    scored = cosine_scan(q, corpus, _not_self, k=KNN_EVAL_K).select(
+        "qid", "true_label", "label", F.round("cos", 6).alias("cos_sim"), "vec_id"
     )
-    # Same two-phase tail as every similarity variant: the scored set is
-    # |corpus| × |queries| rows, so the single-window form would funnel
-    # it into |queries| tasks (see topk_per_query).
     topk = topk_per_query(scored, k=KNN_EVAL_K)
     votes = topk.groupBy("qid", "true_label", "label").agg(F.count(F.lit(1)).alias("v"))
     wv = Window.partitionBy("qid").orderBy(F.desc("v"), F.asc("label"))

@@ -346,23 +346,24 @@ def test_stratified_sample_two_phase_topk(spark, sf_dir):
     assert "WindowGroupLimit" in plan
 
 
-def test_similarity_topk_tail_is_two_phase(spark, sf_dir):
-    # The shared topk_per_query tail (similarity.py) must rank in two
-    # phases: phase 1 keyed FINER than qid — partitionBy(qid, _tk_salt)
-    # — so an exact-scan op's |corpus|×|queries| scored rows fan across
-    # TOPK_SALTS tasks per query, phase 2 over the bounded survivor set.
-    # Gated on the exact-scan consumers, whose window input is unpruned.
+def test_exact_scans_rank_kernel_output_in_one_window(spark, sf_dir):
+    # The exact top-k scans score in one mapInPandas pass over the corpus
+    # (similarity.cosine_scan), which keeps each batch's per-query top-k,
+    # so a single (qid)-keyed window ranks them: no salted phase, and no
+    # broadcast nested-loop join of queries against the corpus.
     from nt_etl_order_book_spark.plans.explain import formatted_plan
 
     import re
 
     for qname in ("cosine_topk", "ann_filtered_topk", "knn_label_eval"):
-        df = registry.queries()[qname](spark, sf_dir)
-        plan = formatted_plan(df)
-        windows = len(re.findall(r"^\(\d+\) Window$", plan, re.MULTILINE))
-        assert windows >= 2, (qname, plan[:800])
-        assert "_tk_salt" in plan, (qname, plan[:800])
-        assert "WindowGroupLimit" in plan, (qname, plan[:800])
+        plan = formatted_plan(registry.queries()[qname](spark, sf_dir))
+        assert re.search(r"^\(\d+\) MapInPandas$", plan, re.MULTILINE), (qname, plan[:800])
+        ranks = re.findall(r"^\(\d+\) Window\n.*\nArguments: (.*)$", plan, re.MULTILINE)
+        assert len([r for r in ranks if "cos_sim" in r]) == 1, (qname, plan[:800])
+        # knn_label_eval's second window ranks the label votes.
+        assert len(ranks) == (2 if qname == "knn_label_eval" else 1), (qname, plan[:800])
+        assert "_tk_salt" not in plan, (qname, plan[:800])
+        assert "BroadcastNestedLoopJoin" not in plan, (qname, plan[:800])
 
 
 def test_win_ntile_is_distributed_not_single_partition(spark, sf_dir):
@@ -606,6 +607,23 @@ def test_profile_pins_blocked_dedup_job_counts(spark, sf_dir, name, max_jobs):
 
     fn = registry.queries()[name]
     p = profile(lambda: fn(spark, sf_dir))
+    assert p.rows > 0
+    assert 0 < p.jobs <= max_jobs, p
+
+
+@pytest.mark.parametrize(
+    "name,max_jobs",
+    [("cosine_topk", 5), ("ann_filtered_topk", 5), ("knn_label_eval", 6), ("pairwise_cosine_histogram", 5)],
+)
+def test_profile_pins_exact_scan_job_counts(spark, name, max_jobs):
+    # The exact scans collect their query set (one job) and score the
+    # corpus in one mapInPandas pass: no broadcast of the queries and no
+    # salted ranking phase. Measured at sf0.01 on 2 and 4 cores.
+    from nt_etl_order_book_spark.plans.profile import profile
+    from nt_etl_order_book_spark.tables import sf_path
+
+    fn = registry.queries()[name]
+    p = profile(lambda: fn(spark, sf_path("0.01")))
     assert p.rows > 0
     assert 0 < p.jobs <= max_jobs, p
 

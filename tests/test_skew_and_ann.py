@@ -739,7 +739,7 @@ def test_cosine_kernel_bit_parity_with_spark(spark, monkeypatch):
     ids, x, n = sim.block_arrays(pdf)
     dots = sim._fold(x, x)
     assert np.array_equal(np.sqrt(np.diag(dots)), n)  # norm() is the fold with itself
-    tiles = list(sim.cosine_tiles(x, n))
+    tiles = list(sim.cosine_tiles(x, n, x, n))
     assert [lo for lo, _ in tiles] == [0, 8, 16]
     cos = np.vstack([t for _, t in tiles])
     assert len(spark_pairs) == 21 * 21
@@ -788,6 +788,69 @@ def test_embed_cosine_dedup_keeps_a_raw_cosine_that_rounds_up_to_tau(spark, monk
     assert run() == [(0, 1, 0, tau), (5, 6, 2, tau)]
     monkeypatch.setattr(sim, "MAX_BLOCK", 2)
     assert run() == [(5, 6, 2, tau)]
+
+
+def test_cosine_scan_batch_floor_matches_single_window_reference(spark):
+    # cosine_scan keeps, per batch and query, the masked rows within 1e-6
+    # of the batch's k-th best raw cosine. Three partitions are three
+    # Arrow batches; the reference scores every pair with the JVM
+    # cosine() and ranks them in one window. k = 2. Query 0: in batch B,
+    # vec 11's raw cosine sits just below vec 20's (the batch's 2nd best)
+    # but rounds up to tie it, and wins on its lower vec_id. Query 1 is
+    # a zero vector: every cosine is NULL and the lowest vec_ids rank.
+    # Query 2 may only meet label 0, a zero vector (vec 3) and vec 41, so
+    # vec 3's NULL must survive its batch. Vec 3 is NULL for every query.
+    from pyspark.sql import Window
+
+    from nt_etl_order_book_spark.functions import similarity as sim
+
+    k = 2
+
+    def vec(lo, hi):
+        return _pair_at_cosine(lo, hi)[1]
+
+    batches = [
+        [(1, vec(0.2, 0.2001), 1), (2, vec(0.1, 0.1001), 1), (3, [0.0, 0.0], 0)],
+        [(11, vec(0.5 - 4e-7, 0.5 - 3e-7), 1), (20, vec(0.5, 0.5 + 1e-7), 1), (30, vec(0.9, 0.9001), 1)],
+        [(40, vec(0.3, 0.3001), 1), (41, vec(0.45, 0.4501), 0)],
+    ]
+    rdd = spark.sparkContext.parallelize(batches, len(batches)).flatMap(lambda b: b)
+    corpus = spark.createDataFrame(rdd, "vec_id long, embedding array<float>, label int").select(
+        "vec_id", "label", "embedding", sim.norm(F.col("embedding")).alias("enorm")
+    )
+    assert corpus.rdd.getNumPartitions() == len(batches)
+    q = spark.createDataFrame(
+        [(0, [1.0, 0.0], 9), (1, [0.0, 0.0], 9), (2, [1.0, 0.0], 1)],
+        "qid long, qvec array<float>, qlabel int",
+    ).select("qid", "qvec", sim.norm(F.col("qvec")).alias("qnorm"), "qlabel")
+
+    def other_label(qt, batch):
+        other = qt["qlabel"].to_numpy()[:, None] != batch["label"].to_numpy()
+        return sim._not_self(qt, batch) & other
+
+    got = sim.topk_per_query(
+        sim.cosine_scan(q, corpus, other_label, k=k).select(
+            "qid", "vec_id", F.round("cos", 6).alias("cos_sim")
+        ),
+        k=k,
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+    ref = (
+        q.crossJoin(corpus)
+        .filter((F.col("qid") != F.col("vec_id")) & (F.col("qlabel") != F.col("label")))
+        .select(
+            "qid", "vec_id", F.round(sim.cosine(F.col("qvec"), F.col("embedding")), 6).alias("cos_sim")
+        )
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+    )
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in ref.collect())
+    assert rows == [
+        (0, 11, 0.5, 2), (0, 30, 0.9, 1),
+        (1, 2, None, 1), (1, 3, None, 2),
+        (2, 3, None, 2), (2, 41, 0.45, 1),
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -913,31 +976,6 @@ def test_embedding_drift_detects_planted_rotation(spark):
     assert out[0].centroid_cos == 1.0
     assert out[1].centroid_cos == 0.0
     assert out[0].n_a == out[0].n_b == 10
-
-
-def test_topk_per_query_guard_and_pruned_parity(spark):
-    # Reserved-column guard: feeding a frame that already carries
-    # _tk_salt / _tk_rn1 must raise, not silently overwrite-and-drop.
-    # And the pruned=True single-window path must return exactly the
-    # two-phase result on the same input.
-    import pytest
-    from pyspark.sql import functions as F
-
-    from nt_etl_order_book_spark.functions.similarity import topk_per_query
-
-    scored = (
-        spark.range(0, 400)
-        .select(
-            (F.col("id") % 4).alias("qid"),
-            F.col("id").alias("vec_id"),
-            (F.pmod(F.col("id") * 37, F.lit(101)) / 101.0).alias("cos_sim"),
-        )
-    )
-    with pytest.raises(ValueError, match="_tk_salt"):
-        topk_per_query(scored.withColumn("_tk_salt", F.lit(1)), k=3)
-    two_phase = sorted(map(tuple, topk_per_query(scored, k=3).collect()))
-    single = sorted(map(tuple, topk_per_query(scored, k=3, pruned=True).collect()))
-    assert two_phase == single and len(single) == 12
 
 
 def test_skew_lifecycle_family_bounded_on_hot_market(spark, hot_market_dir):
